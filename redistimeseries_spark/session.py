@@ -42,11 +42,7 @@ def get_spark(app_name: str = "sparkts", cpus: int | None = None) -> SparkSessio
         # its last task for an hour at zero CPU.  UDS has no window /
         # congestion machinery to wedge; on a multi-host cluster this
         # setting is identical (workers are always host-local).
-        # SPARK_GRAFT_UDS=0 restores TCP for comparison.
-        .config(
-            "spark.python.unix.domain.socket.enabled",
-            os.environ.get("SPARK_GRAFT_UDS", "true"),
-        )
+        .config("spark.python.unix.domain.socket.enabled", "true")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -10,8 +10,11 @@ Batch shape: dest = bucketed aggregation of src restricted to closed
 buckets — one shuffle on (key, bucket).  Incremental maintenance = re-run
 restricted to buckets touched by a micro-batch / delete
 (write/mutate.affected_buckets) and MERGE into the dest table; the
-recompute set is tiny so the MERGE join is broadcast.  The streaming
-variant (structured streaming window agg) lives in streaming/ingest.py.
+recompute set is tiny so the MERGE join is broadcast.
+`materialize_rule` is the one rule aggregation: the engine facade calls it
+over whole series, `streaming/ingest.StreamingStore` over the pruned slice
+behind a micro-batch's touched buckets.  The Structured Streaming
+window-aggregation variant lives in streaming/window_rules.py.
 """
 
 from __future__ import annotations
@@ -33,6 +36,12 @@ from redistimeseries_spark.functions.buckets import bucket_start
 #                              (k < 0 selects the lower band)
 _EWMA_RULE_RE = re.compile(r"^ewma_(\d*\.?\d+)$")
 _EWM_BAND_RULE_RE = re.compile(r"^ewm_band_(\d*\.?\d+)_(-?\d*\.?\d+)$")
+
+# rule aggregators whose bucket value reads samples OUTSIDE the bucket (twa:
+# boundary interpolation, twaAddBucketParams src/module.c:943-958;
+# increase/rate: the step from the previous valid sample) — an incremental
+# recompute must widen its repair set and fetch neighbor samples
+CROSS_BUCKET_AGGS = ("twa", "increase", "rate")
 
 
 def parse_ewm_rule(agg: str):
@@ -67,21 +76,6 @@ class CompactionRule:
     agg: str
     bucket_ms: int
     align_ts: int = 0
-
-
-def emission_filter(agg: str):
-    """Bucket-emission predicate over the (__n_valid, __n_nan) counts a
-    rule aggregation carries: each aggregator finalizes by its OWN
-    validity rule (src/compaction.c:944-978 isValueValid family) —
-    count_nan when it saw NaNs, count_all whenever the bucket holds
-    anything, everything else needs >=1 valid sample.  Shared by the
-    batch materialization and the incremental per-batch recompute so the
-    two can never diverge on all-NaN buckets (the compaction fuzzer
-    caught the batch path applying __n_valid > 0 unconditionally)."""
-    return {
-        "count_nan": F.col("__n_nan") > 0,
-        "count_all": F.lit(True),
-    }.get(agg, F.col("__n_valid") > 0)
 
 
 def closed_buckets(
@@ -185,11 +179,19 @@ def materialize_rule(
             .agg(F.max_by("__metric", "ts").alias("value"))
         )
     else:
+        # each aggregator emits a bucket by its OWN validity rule
+        # (src/compaction.c:944-978 isValueValid family): count_nan when
+        # it saw NaNs, count_all whenever the bucket holds anything,
+        # everything else needs >=1 valid sample
+        emit = {
+            "count_nan": F.col("__n_nan") > 0,
+            "count_all": F.lit(True),
+        }.get(rule.agg, F.col("__n_valid") > 0)
         agg = df.withColumn("__bucket", b).groupBy("key", "__bucket").agg(
             agg_expr(rule.agg, F.col("value"), F.col("ts"), alias="value"),
             F.count(F.when(~F.isnan("value"), 1)).alias("__n_valid"),
             F.count(F.when(F.isnan("value"), 1)).alias("__n_nan"),
-        ).filter(emission_filter(rule.agg))
+        ).filter(emit)
     if not include_open:
         opens = closed_buckets(df, rule.bucket_ms, rule.align_ts)
         agg = agg.join(F.broadcast(opens), "key", "left").filter(

@@ -18,14 +18,18 @@ store also maintains:
     old-latest ∪ batch (tiny: |keys| rows);
   * each compaction rule's dest table, recomputing ONLY the (key, bucket)
     pairs the batch touched (src/tsdb.c:622-660 SeriesCalcRange recompute)
-    — out-of-order and in-bucket upserts repair the right buckets.
+    — out-of-order and in-bucket upserts repair the right buckets.  The
+    recomputed buckets come from `compaction.materialize_rule`, the same
+    aggregation the engine facade runs, applied to the pruned slice behind
+    the touched buckets; only the EWM rules keep their own carried-state
+    forward repair (`_ewm_recompute`).
 
 At 100 TB scale: the log is written partitioned by SAMPLE-TIME day
 (`__day = ts div 86400000`), so every maintenance read is partition-pruned:
 
   * rule recompute reads only the day partitions covering the touched
-    buckets (plus, for twa, single boundary samples found by an
-    exponentially-widening day probe — the Spark analogue of the
+    buckets (plus, for twa/increase/rate, single boundary samples found
+    by an exponentially-widening day probe — the Spark analogue of the
     reference's one-sample reverse/forward iterators,
     src/tsdb.c:1280-1306);
   * duplicate resolution runs only over the pruned slice — per-batch cost
@@ -37,17 +41,18 @@ from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from redistimeseries_spark.functions.buckets import bucket_start
 from redistimeseries_spark.streaming.compaction import (
+    CROSS_BUCKET_AGGS,
     CompactionRule,
+    materialize_rule,
     parse_ewm_rule,
 )
-from redistimeseries_spark.functions.aggs import agg_expr
 from redistimeseries_spark.write.dup_policy import resolve_duplicates
 
 # page size for reads with no explicit max_count — TS.READ is a cursor
@@ -271,7 +276,7 @@ class StreamingStore:
             if valid_only:
                 # counter-rule chains link VALID samples only: a NaN
                 # boundary row would stop the probe without supplying the
-                # lag seed the kernel actually needs
+                # lag seed the counter aggregation needs
                 sl = sl.filter(~F.isnan("value"))
             if before:
                 sl = sl.filter(F.col("ts") < bound_ts)
@@ -290,51 +295,16 @@ class StreamingStore:
             out = out.unionByName(p.select("key", "ts", "value"))
         return out
 
-    def _twa_recompute(self, rule: CompactionRule, touched: DataFrame):
-        """Pruned, exact twa repair (see `_window_recompute`): the kernel
-        is the full twa with unclamped neighbor interpolation."""
-        from redistimeseries_spark import MAX_TS, MIN_TS
-        from redistimeseries_spark.operators.twa import twa_buckets
-
-        def kernel(per_key: DataFrame) -> DataFrame:
-            return twa_buckets(
-                per_key, rule.bucket_ms, rule.align_ts, MIN_TS, MAX_TS
-            ).withColumnRenamed("twa", "value")
-
-        return self._window_recompute(rule, touched, kernel, valid_only=False)
-
-    def _increase_recompute(self, rule: CompactionRule, touched: DataFrame):
-        """Pruned, exact increase/rate repair (see `_window_recompute`):
-        the kernel is the reset-aware step sum over the VALID-sample lag
-        chain (operators/rate.ts_increase semantics) — cross-bucket like
-        twa, because each sample's step links to the key's previous valid
-        sample wherever it lives, and an inserted sample changes the NEXT
-        valid sample's step (the neighbor-bucket extension repairs it)."""
-
-        def kernel(per_key: DataFrame) -> DataFrame:
-            w = Window.partitionBy("key").orderBy("ts")
-            prev = F.lag("value").over(w)
-            step = F.when(prev.isNull(), F.lit(None)).otherwise(
-                F.when(F.col("value") >= prev, F.col("value") - prev)
-                .otherwise(F.col("value"))
-            )
-            out = (
-                per_key.select("key", "__bucket", step.alias("__step"))
-                .groupBy("key", "__bucket")
-                .agg(
-                    F.sum("__step").alias("__inc"),
-                    F.count("__step").alias("__n"),
-                )
-                .filter(F.col("__n") > 0)
-            )
-            val = (
-                F.col("__inc") / F.lit(rule.bucket_ms / 1000.0)
-                if rule.agg == "rate"
-                else F.col("__inc")
-            )
-            return out.select("key", "__bucket", val.alias("value"))
-
-        return self._window_recompute(rule, touched, kernel, valid_only=True)
+    def _materialize(self, rule: CompactionRule, sl: DataFrame) -> DataFrame:
+        """Rule buckets of a maintenance slice as (key, __bucket, value):
+        `materialize_rule` — the one rule aggregation, shared with the
+        engine facade — keyed by the source key (empty dest_suffix, as
+        `TimeSeriesEngine._dest_samples` calls it) and with every bucket
+        kept: the dest stores the open bucket too, `rule_table` hides it
+        at read time."""
+        return materialize_rule(
+            sl, replace(rule, dest_suffix=""), include_open=True
+        ).select("key", F.col("ts").alias("__bucket"), "value")
 
     def _ewm_recompute(self, rule: CompactionRule, touched: DataFrame):
         """Incremental repair for the EWM smoothing rules (ewma_<alpha>,
@@ -515,18 +485,13 @@ class StreamingStore:
         )
         return touched_ext, recomputed
 
-    def _window_recompute(
-        self,
-        rule: CompactionRule,
-        touched: DataFrame,
-        kernel,
-        valid_only: bool,
-    ):
+    def _window_recompute(self, rule: CompactionRule, touched: DataFrame):
         """Pruned, exact repair for CROSS-BUCKET rule aggregators (twa,
-        increase/rate) over the (key, bucket) pairs in `touched` (already
-        arithmetic-widened ±1 bucket).  Returns the EXTENDED touched set
-        and the recomputed rows; `kernel` maps the assembled per-key slice
-        (key, ts, value, __bucket) to (key, __bucket, value).
+        increase/rate) over the (key, bucket) pairs in `touched`, first
+        widened ±1 bucket (a sample in bucket B also changes the
+        cross-bucket terms of B-1 and B+1).  Returns the EXTENDED touched
+        set and the recomputed rows: `materialize_rule` over the assembled
+        slice (see `_materialize`), kept to the extended touched set.
 
         Exactness requires recomputing every bucket whose cross-bucket
         term the batch's samples changed — the bucket holding the nearest
@@ -543,13 +508,28 @@ class StreamingStore:
              days);
           3. after extending `touched` with the neighbor buckets, one more
              slice + probe pass supplies the cross-bucket samples the
-             kernel needs at the extended span's edges.
+             aggregation needs at the extended span's edges.
 
-        `valid_only` restricts every read to non-NaN samples (the counter
-        chain links valid samples only; twa's kernel handles NaN itself).
-        Per-batch cost tracks the batch's time locality (touched days +
-        probe windows), never total log length.
+        Counter rules read non-NaN samples only (their chain links valid
+        samples, so a NaN boundary sample would not seed it); twa handles
+        NaN itself.  Per-batch cost tracks the batch's time locality
+        (touched days + probe windows), never total log length.
         """
+        valid_only = rule.agg != "twa"
+        touched = (
+            touched.select(
+                "key",
+                F.explode(
+                    F.array(
+                        F.col("__bucket") - rule.bucket_ms,
+                        F.col("__bucket"),
+                        F.col("__bucket") + rule.bucket_ms,
+                    )
+                ).alias("__bucket"),
+            )
+            .filter(F.col("__bucket") >= 0)
+            .distinct()
+        )
         tkeys = touched.select("key").distinct()
         all_days = self._log_days()
 
@@ -639,14 +619,10 @@ class StreamingStore:
         # the extended edges still need one sample beyond the span (twa:
         # interpolation neighbors, twaAddBucketParams src/module.c:943-958;
         # increase: the lag seed / next-step sample) — these feed the
-        # kernel but are NOT recomputed themselves
+        # aggregation but are NOT recomputed themselves
         before2, after2 = edge_probes(core2, lo2, hi2)
-        per_key = (
-            core2.unionByName(before2)
-            .unionByName(after2)
-            .withColumn("__bucket", bucket_start(F.col("ts"), rule.bucket_ms, rule.align_ts))
-        )
-        recomputed = kernel(per_key).join(
+        per_key = core2.unionByName(before2).unionByName(after2)
+        recomputed = self._materialize(rule, per_key).join(
             F.broadcast(touched), ["key", "__bucket"], "left_semi"
         )
         return touched, recomputed
@@ -667,25 +643,31 @@ class StreamingStore:
             + F.pmod(F.xxhash64("key", "ts", "value"), F.lit(1 << 20)),
         )
         batch.persist()
+        ignore = self.duplicate_policy == "last" and (
+            self.ignore_max_time_diff > 0 or self.ignore_max_val_diff > 0
+        )
+        # the stored `latest`, read ONCE and materialized: step 2 overwrites
+        # its files, and the filtered batch below is re-read after that by
+        # the rule step — a lazy read would then hit deleted files
+        if self.retention_ms > 0 or ignore:
+            cur = self.latest().localCheckpoint()
         # 0. reject samples older than the retention horizon (the reference
         # errors the write, src/module.c:1006-1012) -> error sink
         if self.retention_ms > 0:
             from redistimeseries_spark.write.retention import reject_late
 
-            cur_max = self.latest().select("key", F.col("ts").alias("max_ts"))
+            cur_max = cur.select("key", F.col("ts").alias("max_ts"))
             batch, late = reject_late(batch, cur_max, self.retention_ms)
             late.write.mode("append").parquet(self.errors_dir)
         # 0.5 IGNORE near-duplicate dedup, seeded with the stored last sample
         # so the kept-chain is continuous across batches; dropped samples are
         # silently ignored (the reference replies lastTimestamp, no error)
-        if self.duplicate_policy == "last" and (
-            self.ignore_max_time_diff > 0 or self.ignore_max_val_diff > 0
-        ):
+        if ignore:
             from redistimeseries_spark.write.mutate import ignore_filter_seeded
 
             batch = ignore_filter_seeded(
                 batch,
-                self.latest(),
+                cur,
                 self.ignore_max_time_diff,
                 self.ignore_max_val_diff,
             ).persist()
@@ -718,44 +700,23 @@ class StreamingStore:
         )
         # 3. per-rule dest recompute, touched buckets only
         for rule in self.rules:
+            src = batch
+            if rule.src_key_pattern is not None:
+                src = batch.filter(F.col("key").rlike(rule.src_key_pattern))
             touched = (
-                batch.select(
+                src.select(
                     "key",
                     bucket_start(F.col("ts"), rule.bucket_ms, rule.align_ts).alias("__bucket"),
                 )
                 .distinct()
             )
-            cross_bucket = rule.agg in ("twa", "increase", "rate")
-            if cross_bucket:
-                # a sample in bucket B also changes cross-bucket terms in
-                # B-1 and B+1 (twa: boundary interpolation,
-                # twaAddBucketParams src/module.c:943-958; increase/rate:
-                # the next valid sample's step) — widen the repair set one
-                # bucket each way, then recompute from the full per-key
-                # series so the kernel sees its neighbor samples.
-                touched = (
-                    touched.select(
-                        "key",
-                        F.explode(
-                            F.array(
-                                F.col("__bucket") - rule.bucket_ms,
-                                F.col("__bucket"),
-                                F.col("__bucket") + rule.bucket_ms,
-                            )
-                        ).alias("__bucket"),
-                    )
-                    .filter(F.col("__bucket") >= 0)
-                    .distinct()
-                )
             # recompute source: NEVER the whole log.  The slice is pruned
             # to the day partitions the touched buckets cover, so per-batch
             # cost tracks the batch's time locality, not history length
             # (the reference recomputes from chunk-local data,
             # src/tsdb.c:622-660 — it never re-reads the series' history).
-            if rule.agg == "twa":
-                touched, recomputed = self._twa_recompute(rule, touched)
-            elif rule.agg in ("increase", "rate"):
-                touched, recomputed = self._increase_recompute(rule, touched)
+            if rule.agg in CROSS_BUCKET_AGGS:
+                touched, recomputed = self._window_recompute(rule, touched)
             elif parse_ewm_rule(rule.agg) is not None:
                 # EWM smoothing rules repair FORWARD from the earliest
                 # touched bucket, seeded by the carried moment state —
@@ -763,8 +724,11 @@ class StreamingStore:
                 # buckets; later ones are regenerated wholesale)
                 touched, recomputed = self._ewm_recompute(rule, touched)
             else:
-                # non-twa aggs need exactly the samples inside each touched
-                # bucket: per-bucket day coverage, exact for sparse sets
+                # bucket-local aggs need exactly the samples inside each
+                # touched bucket: per-bucket day coverage, exact for sparse
+                # sets, semi-joined to the touched buckets BEFORE the
+                # aggregation (its emission rule drops an all-NaN bucket,
+                # and the kept anti-join below then deletes its old row)
                 src_days = [
                     r.d
                     for r in touched.select(
@@ -778,29 +742,15 @@ class StreamingStore:
                     .distinct()
                     .collect()
                 ]
-                from redistimeseries_spark.streaming.compaction import (
-                    emission_filter,
-                )
-
-                recomputed = (
+                sl = (
                     self._pruned(src_days)
                     .withColumn(
                         "__bucket", bucket_start(F.col("ts"), rule.bucket_ms, rule.align_ts)
                     )
                     .join(F.broadcast(touched), ["key", "__bucket"], "left_semi")
-                    .groupBy("key", "__bucket")
-                    .agg(
-                        agg_expr(rule.agg, F.col("value"), F.col("ts"), alias="value"),
-                        F.count(F.when(~F.isnan("value"), 1)).alias("__n_valid"),
-                        F.count(F.when(F.isnan("value"), 1)).alias("__n_nan"),
-                    )
-                    # same per-agg emission rule as the batch path — an
-                    # all-NaN touched bucket must vanish from the dest
-                    # (the kept anti-join below deletes its old row), not
-                    # be written back as a NaN sample
-                    .filter(emission_filter(rule.agg))
-                    .select("key", "__bucket", "value")
+                    .drop("__bucket")
                 )
+                recomputed = self._materialize(rule, sl)
             # PARTITION-SCOPED dest upsert: dests are day-partitioned by
             # bucket ts; a micro-batch's touched buckets cluster in recent
             # days, so only those day partitions are read (isin pruning),

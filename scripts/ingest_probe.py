@@ -8,6 +8,8 @@ a twa rule attached.  Before the fix the recompute re-read + dup-resolved
 the WHOLE log every batch (O(history)); after it, wall should be flat in H.
 
 Run: python scripts/ingest_probe.py [--days 10 100] [--keys 50] [--per-day 20000]
+The session comes from `get_spark()`, sized by SPARK_GRAFT_CPUS and
+SPARK_GRAFT_DRIVER_MEM like the test suite.
 """
 
 import argparse
@@ -19,9 +21,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from redistimeseries_spark import get_spark
 from redistimeseries_spark.streaming.compaction import CompactionRule
 from redistimeseries_spark.streaming.ingest import DAY_MS, StreamingStore
 
@@ -162,13 +164,7 @@ def main():
     ap.add_argument("--every", type=int, default=10)
     a = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', 32)}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "8g")
-        .appName("ingest_probe")
-        .getOrCreate()
-    )
+    spark = get_spark("ingest_probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     if a.auto_compact:

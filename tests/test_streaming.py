@@ -671,6 +671,43 @@ def test_fully_rejected_batch_with_twa_rule_is_noop(spark, dirs):
         assert abs(have[t] - exp[t]) < 1e-9
 
 
+def test_rule_src_key_pattern_limits_dest_keys(spark, dirs):
+    """Rules with a source-key pattern maintain buckets for matching keys
+    only — the incremental dest equals `materialize_rule` over the store,
+    for a bucket-local rule and for an EWM rule (its own repair path)."""
+    from redistimeseries_spark.streaming.compaction import materialize_rule
+
+    rules = [
+        CompactionRule("^a", "_s", "avg", 1000),
+        CompactionRule("^a", "_e", "ewma_0.5", 1000),
+    ]
+    store = StreamingStore(spark, os.path.join(dirs, "store"), "last", rules)
+    write_input(
+        spark, dirs, [("a1", 100, 1.0), ("b1", 200, 2.0), ("a1", 1100, 3.0)], "b1"
+    )
+    write_input(
+        spark, dirs,
+        [("a1", 600, 5.0), ("b1", 1200, 4.0), ("b1", 2500, 6.0), ("a1", 2100, 7.0)],
+        "b2",
+    )
+    drain(spark, dirs, store)
+
+    for rule in rules:
+        got = sorted(
+            (r.key + rule.dest_suffix, r.ts, round(r.value, 9))
+            for r in store.rule_table(rule).collect()
+        )
+        exp = sorted(
+            (r.key, r.ts, round(r.value, 9))
+            for r in materialize_rule(store.samples(), rule).collect()
+        )
+        assert got == exp and {k for k, _, _ in got} == {"a1" + rule.dest_suffix}
+    assert {(r.ts, r.value) for r in store.rule_table(rules[0]).collect()} == {
+        (0, 3.0),
+        (1000, 3.0),
+    }
+
+
 def test_last_policy_across_batches_partitioned_writer(spark, dirs):
     """'last' duplicate resolution must follow BATCH order even when an
     earlier batch ran with many partitions (the old seq formula let a

@@ -189,10 +189,19 @@ def test_stateful_ewm_band_across_batches(spark, tmp_path):
 
 
 def test_retention_reject_to_error_sink(spark, tmp_path):
+    """The second batch both rejects a late sample and advances `latest`
+    (whose files it rewrites) before the rule step re-reads the filtered
+    batch — the retention filter must not read `latest` lazily."""
+    from redistimeseries_spark.streaming.compaction import CompactionRule
+
     d = str(tmp_path)
-    store = StreamingStore(spark, os.path.join(d, "store"), "last", [], retention_ms=1000)
+    rule = CompactionRule(None, "_avg_1s", "avg", 1000)
+    store = StreamingStore(
+        spark, os.path.join(d, "store"), "last", [rule], retention_ms=1000
+    )
     feed(spark, d, [("k", 10_000, 1.0)])
-    feed(spark, d, [("k", 5_000, 2.0)])  # older than 10000 - 1000 -> rejected
+    # 5000 is older than 10000 - 1000 -> rejected; 10500 is in the horizon
+    feed(spark, d, [("k", 5_000, 2.0), ("k", 10_500, 3.0)])
     stream = (
         spark.readStream.schema(SCHEMA)
         .option("maxFilesPerTrigger", "1")
@@ -200,9 +209,15 @@ def test_retention_reject_to_error_sink(spark, tmp_path):
     )
     q = start_ingest(stream, store, availableNow=True)
     q.awaitTermination(120)
-    assert [(r.ts, r.value) for r in store.samples().collect()] == [(10_000, 1.0)]
+    assert sorted((r.ts, r.value) for r in store.samples().collect()) == [
+        (10_000, 1.0),
+        (10_500, 3.0),
+    ]
     errs = spark.read.parquet(store.errors_dir).collect()
     assert [(r.ts, r.value) for r in errs] == [(5_000, 2.0)]
+    full = store.rule_table(rule, include_open=True).collect()
+    assert [(r.key, r.ts, r.value) for r in full] == [("k", 10_000, 2.0)]
+    assert store.rule_table(rule).count() == 0  # bucket 10000 is still open
 
 
 def test_layout_partition_pruning(spark, tmp_path, samples_df):
