@@ -48,18 +48,9 @@ def seed(spark, store, days, keys, per_day):
         )
     )
     store._append_log(df)
-    # latest table must exist for the maintenance paths that seed from it
-    latest = df.groupBy("key").agg(
-        F.max("ts").alias("ts"), F.max_by("value", "ts").alias("value")
-    )
-    from redistimeseries_spark.streaming.ingest import _pk
-
-    (
-        latest.withColumn("pk", _pk(F.col("key")))
-        .write.mode("overwrite")
-        .partitionBy("pk")
-        .parquet(store.latest_dir)
-    )
+    # latest table must exist for the maintenance paths that seed from it:
+    # one delta through the store's own writer
+    store._append_latest(df)
 
 
 def one_batch(spark, store, days, keys, batch_rows):

@@ -306,7 +306,7 @@ def test_size_trigger_floor_guard_prevents_thrash(spark, dirs):
 def test_ingest_log_compacting_marker(spark, dirs):
     """A read racing compact()'s rename-swap must raise the typed
     retryable StoreCompactingError, NOT silently answer from an "empty"
-    log (the _empty_read no-state-yet rescue).  And a normal compact()
+    log (the _read no-state-yet rescue).  And a normal compact()
     leaves no marker behind."""
     import shutil
 
@@ -327,9 +327,14 @@ def test_ingest_log_compacting_marker(spark, dirs):
         pass
     with pytest.raises(StoreCompactingError, match="mid-compaction"):
         store.samples().collect()
+    # compact() swaps the folded `latest` under the same marker
+    shutil.rmtree(store.latest_dir)
+    with pytest.raises(StoreCompactingError, match="mid-compaction"):
+        store.latest().collect()
     # marker down -> the same missing path is a genuine "no state yet"
     os.remove(store._compacting_marker)
     assert store.samples().count() == 0
+    assert store.latest().count() == 0
 
 
 def test_tail_read_block_and_timeout(spark, dirs):
@@ -554,12 +559,12 @@ def test_rate_rule_matches_increase_per_second(spark, dirs):
 
 
 def test_partition_scoped_maintenance(spark, dirs):
-    """A micro-batch must rewrite ONLY the latest-table hash buckets and
-    dest day-partitions it touches — untouched partition files stay
-    byte-identical on disk (the 100M-key scale requirement)."""
-    from pyspark.sql import functions as F
-
-    from redistimeseries_spark.streaming.ingest import DAY_MS, _pk
+    """A micro-batch must rewrite ONLY the dest day-partitions it touches
+    — untouched partition files stay byte-identical on disk (the 100M-key
+    scale requirement) — and must never rewrite `latest`: it appends one
+    delta, so no `latest/` file that existed before the batch is modified
+    or removed (bar the `_SUCCESS` commit marker every write replaces)."""
+    from redistimeseries_spark.streaming.ingest import DAY_MS
 
     rule = CompactionRule(None, "_avg_1s", "avg", 1000)
     store = StreamingStore(spark, os.path.join(dirs, "store"), "last", [rule])
@@ -571,26 +576,124 @@ def test_partition_scoped_maintenance(spark, dirs):
         out = {}
         for dirpath, _, files in os.walk(root):
             for f in files:
+                if f in ("_SUCCESS", "._SUCCESS.crc"):
+                    continue
                 p = os.path.join(dirpath, f)
                 out[p] = os.path.getmtime(p)
         return out
 
-    pk_a = spark.range(1).select(_pk(F.lit("a")).alias("p")).collect()[0].p
-    pk_b = spark.range(1).select(_pk(F.lit("b")).alias("p")).collect()[0].p
-    assert pk_a != pk_b  # fixture precondition for a meaningful assertion
-
-    before_latest = snapshot(os.path.join(store.latest_dir, f"pk={pk_b}"))
+    before_latest = snapshot(store.latest_dir)
     before_dest = snapshot(os.path.join(store.rule_dir(rule), "__day=5"))
+    assert before_latest and before_dest  # something to compare
 
     # second stream touching only key a / day 0
     write_input(spark, dirs, [("a", 200, 3.0)], "b2")
     drain(spark, dirs, store)
 
-    assert snapshot(os.path.join(store.latest_dir, f"pk={pk_b}")) == before_latest
+    after_latest = snapshot(store.latest_dir)
+    assert {p: after_latest.get(p) for p in before_latest} == before_latest
+    assert len(after_latest) > len(before_latest)  # the batch's delta
     assert snapshot(os.path.join(store.rule_dir(rule), "__day=5")) == before_dest
     # and the touched side did advance
     latest = {r.key: (r.ts, r.value) for r in store.latest().collect()}
     assert latest["a"] == (200, 3.0) and latest["b"] == (day1 + 100, 2.0)
+
+
+def test_latest_follows_duplicate_policy(spark, dirs):
+    """Under every duplicate policy `latest()` holds each key's newest row
+    of `samples()` — including when a batch re-sends a key's newest
+    timestamp (a NaN re-send under `last` keeps the valid value) and when
+    one batch carries two values for it."""
+    import math
+
+    from redistimeseries_spark.write.dup_policy import POLICIES
+
+    nan = float("nan")
+    batches = [
+        [("a", 100, 9.0), ("a", 500, 2.0), ("b", 1000, 1.0), ("c", 300, nan)],
+        [("a", 500, 3.0), ("b", 1000, nan), ("c", 300, 4.0),
+         ("d", 700, 1.0), ("d", 700, 6.0)],
+        [("b", 900, 8.0), ("d", 700, nan)],
+    ]
+
+    def norm(rows):
+        return {
+            r.key: (r.ts, "nan" if math.isnan(r.value) else r.value)
+            for r in rows
+        }
+
+    for policy in POLICIES:
+        store = StreamingStore(spark, os.path.join(dirs, policy), policy, [])
+        for i, rows in enumerate(batches):
+            store.process_batch(spark.createDataFrame(rows, SCHEMA), i)
+        newest = {}
+        for r in store.samples().collect():
+            if r.key not in newest or r.ts > newest[r.key].ts:
+                newest[r.key] = r
+        got = store.latest().collect()
+        assert len(got) == 4, (policy, got)
+        assert norm(got) == norm(newest.values()), policy
+        if policy == "last":
+            assert norm(got)["b"] == (1000, 1.0)
+
+
+def test_compact_folds_latest_deltas(spark, dirs):
+    """compact() folds the per-batch `latest` deltas into one data file
+    without changing `latest()`, and the folded rows keep their `seq`, so
+    a later re-send of a newest timestamp still merges by the policy."""
+    store = StreamingStore(spark, os.path.join(dirs, "store"), "sum", [])
+    batches = [
+        [("a", 100, 1.0), ("b", 50, 2.0)],
+        [("a", 100, 2.5), ("b", 60, 1.0)],
+        [("a", 90, 7.0), ("c", 5, 3.0)],
+    ]
+    for i, rows in enumerate(batches):
+        store.process_batch(spark.createDataFrame(rows, SCHEMA), i)
+
+    def files():
+        return [f for f in os.listdir(store.latest_dir) if f.endswith(".parquet")]
+
+    def latest():
+        return sorted(tuple(r) for r in store.latest().collect())
+
+    assert len(files()) == len(batches)
+    want = [("a", 100, 3.5), ("b", 60, 1.0), ("c", 5, 3.0)]
+    assert latest() == want
+    store.compact()
+    assert len(files()) == 1
+    assert latest() == want
+    store.process_batch(spark.createDataFrame([("a", 100, 0.5)], SCHEMA), 3)
+    assert latest() == [("a", 100, 4.0), ("b", 60, 1.0), ("c", 5, 3.0)]
+
+
+def test_process_batch_job_budget(spark, dirs):
+    """One warm micro-batch into a store with an `avg` 1m rule runs a
+    bounded number of Spark jobs (counted through a job group): the
+    `latest` delta is a plain append — no read of the stored table, no
+    partition rewrite, no hash-bucket (`pk=`) directories — and the
+    touched (key, bucket) set is materialized and collected once."""
+    rule = CompactionRule(None, "_avg_1m", "avg", 60_000)
+    store = StreamingStore(spark, os.path.join(dirs, "store"), "last", [rule])
+    keys = [f"k{i}" for i in range(20)]
+
+    def batch(b):
+        rows = [(k, (b * 12 + j) * 10_000, float(j)) for k in keys for j in range(12)]
+        if b:  # late samples into buckets an earlier batch wrote
+            rows += [(k, (b * 12 - 3) * 10_000 + 1, 1.5) for k in keys[:3]]
+        return spark.createDataFrame(rows, SCHEMA)
+
+    for b in range(2):
+        store.process_batch(batch(b), b)
+    sc = spark.sparkContext
+    group = "test_process_batch_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        store.process_batch(batch(2), 2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 12, len(jobs)
+    assert not [n for n in os.listdir(store.latest_dir) if n.startswith("pk=")]
 
 
 def test_recompute_scan_is_partition_pruned(spark, dirs):
