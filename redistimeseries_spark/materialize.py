@@ -18,10 +18,11 @@ place instead of forty call sites):
   (Spark cautions against it under dynamic allocation).  Invisible on
   local[*]; on a cluster it trades a 2-3x recompute for reduced
   resilience.  For long cluster pipelines set a reliable checkpoint
-  directory (`spark.sparkContext.setCheckpointDir(...)`) and
-  `SPARKTS_RELIABLE_CHECKPOINT=1`: `materialize` then uses
-  `DataFrame.checkpoint`, whose blocks live in the checkpoint dir and
-  survive executor loss.
+  directory (`spark.sparkContext.setCheckpointDir(...)`): `materialize`
+  then uses `DataFrame.checkpoint`, whose files live in the checkpoint
+  dir and survive executor loss.  Spark deletes those files only with
+  `spark.cleaner.referenceTracking.cleanCheckpoints=true` (off by
+  default), so set it too or long sessions accumulate checkpoint data.
 * Eager materialization runs a Spark job at DataFrame-CONSTRUCTION
   time: formerly-lazy operators execute when called, and a caller that
   narrows the OUTPUT (filter/select after the operator returns) no
@@ -47,8 +48,6 @@ subtree sharing.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
@@ -57,16 +56,14 @@ def materialize(df: DataFrame, disk: bool = True) -> DataFrame:
     """Eagerly materialize `df` once so multiple consumers share one
     execution (module docstring has the full tradeoff discussion).
 
-    Default: `localCheckpoint(eager=True)` at DISK_ONLY (`disk=True`)
-    or the default MEMORY_AND_DISK level (`disk=False`).  With
-    `SPARKTS_RELIABLE_CHECKPOINT` set to a truthy value AND a session
-    checkpoint directory configured, uses a reliable `checkpoint()`
-    instead — slower (distributed filesystem write) but safe against
-    executor loss on clusters."""
-    if os.environ.get("SPARKTS_RELIABLE_CHECKPOINT", "") not in ("", "0"):
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is not None:
-            return df.checkpoint(eager=True)
+    With a session checkpoint directory configured, a reliable
+    `checkpoint()` — slower (distributed filesystem write) but safe
+    against executor loss on clusters; `disk` does not apply there (the
+    files live in the checkpoint dir).  Otherwise
+    `localCheckpoint(eager=True)` at DISK_ONLY (`disk=True`) or the
+    default MEMORY_AND_DISK level (`disk=False`)."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
     if disk:
         return df.localCheckpoint(
             eager=True, storageLevel=StorageLevel.DISK_ONLY

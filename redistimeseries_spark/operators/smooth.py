@@ -21,6 +21,15 @@ history into one task.  NaN samples are invalid everywhere
 samples.  Duplicate (key, ts) rows order deterministically by
 (ts, value) — the rate._last_pair rule.
 
+The EWM math lives here once, for every Python path: `ewm_recurrence`
+(the seeded recurrence), `_ewm_chunked` (the summarize/stitch/replay
+pipeline over a list of moment columns — ts_ewma's [value],
+ts_ewm_band's centered [y, y^2]), and `ewm_band_columns` with its
+`EWM_SNAP` variance snap.  streaming/stateful.ewm_band_stream and
+streaming/ingest's EWM rules call the same functions; the sql.py
+`ewm_band` TVF, which cannot call Python, takes the snap from
+`EWM_SNAP`.
+
 Float note: the chunked composition is mathematically exact but not
 bit-identical to the sequential loop (power/scan vs multiply-add
 order).  Drift is bounded by ulps of the final few chunks — the decay
@@ -48,6 +57,10 @@ from redistimeseries_spark import MAX_TS, MIN_TS
 from redistimeseries_spark.functions.filters import filter_valid_range
 
 EWMA_SCHEMA = "key string, ts long, ewma double"
+EWM_BAND_SCHEMA = (
+    "key string, ts long, value double, ewma double, std double,"
+    " upper double, lower double, breakout boolean"
+)
 LTTB_SCHEMA = "key string, ts long, value double"
 HOLT_SCHEMA = "key string, ts long, level double, trend double"
 
@@ -159,21 +172,75 @@ def _split_cold(d, chunk_ms):
     return d.filter(F.col("__ck") == 1), d.filter(F.col("__ck") > 1)
 
 
-def _ewma_seq_kernel(alpha):
-    """The single-pass per-key EWMA kernel (pandas C `ewm`) — shared by
-    the cold-key fast path and the `_ts_ewma_sequential` twin."""
+# the EWM variance snap threshold (ewm_credible_std) — also spliced into
+# the sql.py ewm_band TVF text
+EWM_SNAP = 1e-10
 
-    def smooth(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "value"])
-        return pd.DataFrame(
-            {
-                "key": pdf["key"],
-                "ts": pdf["ts"],
-                "ewma": pdf["value"].ewm(alpha=alpha, adjust=False).mean(),
-            }
-        )
 
-    return smooth
+def ewm_recurrence(x: np.ndarray, alpha: float, entry=None) -> np.ndarray:
+    """y_i = alpha * x_i + (1 - alpha) * y_{i-1} over `x` (pandas' C
+    `ewm(adjust=False)`) — THE EWM recurrence of every Python path.
+    `entry` is the state before x_0 (a chunk's stitched entry, a
+    stream's or a rule's carried state); None is the plain y_0 = x_0
+    seed.  A prepended entry equal to x_0 reproduces that seed bit for
+    bit (pandas skips the update when state == sample), which is why a
+    chunk pipeline can seed its first chunk with its own first value."""
+    seeded = entry is not None
+    s = pd.Series(np.concatenate(([entry], x)) if seeded else x)
+    y = s.ewm(alpha=alpha, adjust=False).mean().to_numpy()
+    return y[1:] if seeded else y
+
+
+def ewm_credible_std(var, ref):
+    """sqrt(var), with var snapped to 0 at or below EWM_SNAP * ref.
+
+    q - m^2 is a difference of q-magnitude terms, so a residue below
+    EWM_SNAP of the second moment is float cancellation, not variance —
+    sqrt would amplify it to a spurious band width that differs between
+    any two arithmetic orders (it broke 6dp oracle matching on every
+    key's second sample before the snap).  With CENTERED moments q is
+    variance-scaled (not offset^2-scaled), so the relative threshold
+    only ever removes true float residue — a mean-1e6/std-10 series
+    keeps its genuine variance (uncentered, q was ~1e12 there and the
+    snap deleted var=100, collapsing the band)."""
+    return np.sqrt(np.where(var > EWM_SNAP * ref, var, 0.0))
+
+
+def ewm_band_columns(c0, y, m, q, alpha: float, band_k: float) -> dict:
+    """The adaptive band of samples y (centered: y = value - c0) from
+    their post-update EWM moments m = ewm(y), q = ewm(y^2) — the
+    ts_ewm_band output columns ewma/std/upper/lower/breakout.
+
+    upper/lower are the ONE-STEP-AHEAD band each sample was tested
+    against: the pre-update state, recovered from the recurrence as
+    m_prev = (m - a*y) / (1-a) (same for q; for a series' first sample
+    it is the sample itself — a zero-width band).  BOTH snaps reference
+    the POST-update q: at a key's second sample the pre-update pq is
+    itself a pure cancellation residue (the centered first sample is
+    exactly 0), so a threshold relative to pq would keep it.  A
+    zero-width band (one-sample or constant history) never breaks out."""
+    pm = (m - alpha * y) / (1.0 - alpha)
+    pq = (q - alpha * y * y) / (1.0 - alpha)
+    psd = ewm_credible_std(pq - pm * pm, q)
+    half = band_k * psd
+    return {
+        "ewma": c0 + m,
+        "std": ewm_credible_std(q - m * m, q),
+        "upper": c0 + (pm + half),
+        "lower": c0 + (pm - half),
+        "breakout": (psd > 0) & ((y > pm + half) | (y < pm - half)),
+    }
+
+
+def last_wins(pdf: pd.DataFrame) -> pd.DataFrame:
+    """`pdf` in (ts, value) order with duplicate ts folded to the
+    last-wins effective sample (the max value) — the one sample per ts
+    the EWM moment pair consumes."""
+    return (
+        pdf.sort_values(["ts", "value"])
+        .drop_duplicates(subset=["ts"], keep="last")
+        .reset_index(drop=True)
+    )
 
 
 def _holt_seq_kernel(alpha, beta):
@@ -774,6 +841,94 @@ def _ts_holt_sequential(
     )
 
 
+def _ewm_chunked(d, alpha, chunk_ms, moments, emit, schema, fold):
+    """THE EWM chunk-affine pipeline (module docstring) over the moment
+    inputs `moments` — one callable per recurrence, mapping an ordered
+    chunk frame to its input array — of a chunked frame `d`
+    (`_assign_chunks` output).  The recurrences share their decay
+    A = (1-alpha)^n, so each (key, chunk) folds to A plus, per
+    recurrence, its zero-entry fold's exit B_i and first input; one
+    per-key stitch over the one-row-per-chunk frame composes every
+    entry state (the first
+    chunk's virtual entry is its own first value: bit-equal to the
+    plain seed, see `ewm_recurrence`), and one replay runs every
+    recurrence seeded with its entry and hands the per-row outputs to
+    `emit(pdf, inputs, outputs) -> frame` of `schema`.  Cold keys
+    (`_split_cold`) take the same replay unseeded, grouped by key.
+
+    `fold` is the operator's duplicate (key, ts) rule: False keeps
+    every raw row in (ts, value) order (ts_ewma), True folds them to
+    the `last_wins` effective sample INSIDE the chunk kernels
+    (ts_ewm_band — duplicates share a ts, so they always land in one
+    chunk; a groupBy(key, ts) pre-fold would cost a full-data exchange
+    + hash agg upstream of the `_split_cold` checkpoint, measured
+    24.3 -> ~16 s at 1 key x 10M parquet-backed)."""
+    cold, d = _split_cold(d, chunk_ms)
+    k = len(moments)
+
+    def ordered(pdf: pd.DataFrame) -> pd.DataFrame:
+        if fold:
+            return last_wins(pdf)
+        return pdf.sort_values(["ts", "value"]).reset_index(drop=True)
+
+    sum_schema = "key string, __c long, A double" + "".join(
+        f", B{i} double, F{i} double" for i in range(k)
+    )
+
+    def summarize(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = ordered(pdf)
+        row = {
+            "key": [pdf["key"].iloc[0]],
+            "__c": [pdf["__c"].iloc[0]],
+            "A": [float(np.cumprod(np.full(len(pdf), 1.0 - alpha))[-1])],
+        }
+        for i, f in enumerate(moments):
+            x = f(pdf)
+            row[f"B{i}"] = [float(ewm_recurrence(x, alpha, 0.0)[-1])]
+            row[f"F{i}"] = [float(x[0])]
+        return pd.DataFrame(row)
+
+    summaries = d.groupBy("key", "__c").applyInPandas(summarize, sum_schema)
+
+    state_schema = "key string, __c long" + "".join(
+        f", S{i} double" for i in range(k)
+    )
+
+    def stitch(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("__c").reset_index(drop=True)
+        A = pdf["A"].to_numpy(np.float64)
+        out = {"key": pdf["key"], "__c": pdf["__c"]}
+        for i in range(k):
+            B = pdf[f"B{i}"].to_numpy(np.float64)
+            s = np.empty(len(pdf))
+            s[0] = pdf[f"F{i}"].iloc[0]
+            for j in range(1, len(s)):
+                s[j] = A[j - 1] * s[j - 1] + B[j - 1]
+            out[f"S{i}"] = s
+        return pd.DataFrame(out)
+
+    states = summaries.groupBy("key").applyInPandas(stitch, state_schema)
+
+    def replay(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = ordered(pdf)
+        seeded = "S0" in pdf.columns
+        xs = [f(pdf) for f in moments]
+        ys = [
+            ewm_recurrence(x, alpha, pdf[f"S{i}"].iloc[0] if seeded else None)
+            for i, x in enumerate(xs)
+        ]
+        return emit(pdf, xs, ys)
+
+    out = (
+        d.join(states, ["key", "__c"])
+        .groupBy("key", "__c")
+        .applyInPandas(replay, schema)
+    )
+    if cold is not None:
+        out = out.unionByName(cold.groupBy("key").applyInPandas(replay, schema))
+    return out
+
+
 def ts_ewma(
     samples: DataFrame,
     alpha: float,
@@ -785,261 +940,32 @@ def ts_ewma(
     """(key, ts, ewma) — one smoothed row per valid sample.  The time cut
     applies BEFORE smoothing (the smoothed series restarts at the range
     start — the window the caller asked to smooth), matching the oracle.
+    Duplicate (key, ts) rows are all kept, each smoothed in (ts, value)
+    order.
 
-    SKEW-SAFE plan (round 9; see module docstring): one chunk-local
-    kernel per (key, chunk_ms time-chunk) folds each chunk to its affine
-    map (A = (1-alpha)^n by in-order cumprod; B = the zero-entry local
-    fold's exit, pandas' C `ewm` over a zero-prepended series) plus its
-    first value; a per-key stitch over that one-row-per-chunk frame
-    composes entry states (the first chunk's virtual entry is its own
-    first value: a*x1 + (1-a)*x1 = x1 reproduces the y_0 = x_0 seed —
-    bit-equal to the plain seed, so no mode flag is needed); and a
-    second chunk-local kernel replays each chunk with its entry
-    prepended — in-chunk arithmetic is EXACTLY the sequential `ewm`
-    recurrence, so drift enters only through the stitched entries.
-    `_ts_ewma_sequential` is the retained differential twin.
-    chunk_ms=None (default) uses the density-adaptive per-key grid —
-    see `_assign_chunks` (round 11: the fixed grid splintered balanced
-    fleets into per-row Arrow groups)."""
+    SKEW-SAFE plan (round 9; see module docstring): `_ewm_chunked` over
+    the one recurrence of `value` — in-chunk arithmetic is EXACTLY the
+    sequential `ewm` recurrence, so drift enters only through the
+    stitched entries.  `_ts_ewma_sequential` is the retained
+    differential twin.  chunk_ms=None (default) uses the
+    density-adaptive per-key grid — see `_assign_chunks` (round 11: the
+    fixed grid splintered balanced fleets into per-row Arrow groups)."""
     if not 0 < alpha <= 1:
         raise ValueError("alpha must be in (0, 1]")
     if chunk_ms is not None and chunk_ms <= 0:
         raise ValueError("chunk_ms must be positive")
     df = _filter_range(samples, keys, start, end)
     d = _assign_chunks(df.select("key", "ts", "value"), chunk_ms)
-    cold, d = _split_cold(d, chunk_ms)
 
-    sum_schema = "key string, __c long, A double, B double, fv double"
+    def values(pdf):
+        return pdf["value"].to_numpy(np.float64)
 
-    def summarize(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "value"]).reset_index(drop=True)
-        x = pdf["value"].astype(np.float64)
-        A = float(np.cumprod(np.full(len(x), 1.0 - alpha))[-1])
-        B = float(
-            pd.concat([pd.Series([0.0]), x], ignore_index=True)
-            .ewm(alpha=alpha, adjust=False)
-            .mean()
-            .iloc[-1]
-        )
-        return pd.DataFrame(
-            {"key": [pdf["key"].iloc[0]], "__c": [pdf["__c"].iloc[0]],
-             "A": [A], "B": [B], "fv": [float(x.iloc[0])]}
-        )
+    def emit(pdf, xs, ys):
+        return pd.DataFrame({"key": pdf["key"], "ts": pdf["ts"], "ewma": ys[0]})
 
-    summaries = d.groupBy("key", "__c").applyInPandas(summarize, sum_schema)
-
-    state_schema = "key string, __c long, s double"
-
-    def stitch(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__c").reset_index(drop=True)
-        A = pdf["A"].to_numpy(np.float64)
-        B = pdf["B"].to_numpy(np.float64)
-        s = np.empty(len(pdf))
-        s[0] = pdf["fv"].iloc[0]
-        for i in range(1, len(s)):
-            s[i] = A[i - 1] * s[i - 1] + B[i - 1]
-        return pd.DataFrame({"key": pdf["key"], "__c": pdf["__c"], "s": s})
-
-    states = summaries.groupBy("key").applyInPandas(stitch, state_schema)
-
-    def replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "value"]).reset_index(drop=True)
-        y = (
-            pd.concat(
-                [pd.Series([pdf["s"].iloc[0]]), pdf["value"]],
-                ignore_index=True,
-            )
-            .ewm(alpha=alpha, adjust=False)
-            .mean()
-            .iloc[1:]
-            .reset_index(drop=True)
-        )
-        return pd.DataFrame({"key": pdf["key"], "ts": pdf["ts"], "ewma": y})
-
-    out = (
-        d.join(states, ["key", "__c"])
-        .groupBy("key", "__c")
-        .applyInPandas(replay, EWMA_SCHEMA)
+    return _ewm_chunked(
+        d, alpha, chunk_ms, (values,), emit, EWMA_SCHEMA, fold=False
     )
-    if cold is not None:
-        out = out.unionByName(
-            cold.groupBy("key").applyInPandas(
-                _ewma_seq_kernel(alpha), EWMA_SCHEMA
-            )
-        )
-    return out
-
-
-def _ts_ewm_moments(
-    samples: DataFrame, alpha: float, chunk_ms: int | None
-) -> DataFrame:
-    """(key, ts, value, __c0, __m, __q) — BOTH EWM moments (mean of y
-    and of y^2, where y = value - __c0 is CENTERED on the key's first
-    effective sample) in ONE chunk-affine pipeline: the two recurrences
-    share their decay A = (1-alpha)^n, so each chunk folds to (A, B_m,
-    B_q, first values), one per-key stitch composes both entry states,
-    and one replay emits both smoothed columns.  This is the fused form
-    of running ts_ewma twice — same exchange count as ONE ewma (the
-    naive composition re-scans the source three times and joins two
-    100M-row outputs; measured 122.9 -> ~60 s at 1 key x 100M).
-
-    Centering is the variance-credibility discipline (same as
-    ts_anomalies fast=True): the downstream variance q - m^2 is a
-    difference of q-magnitude terms, so for a large-offset series
-    (mean 1e6, true std 10) the uncentered second moment is ~1e12 and
-    the genuine 100-scale variance drowns in cancellation noise — and
-    a relative snap threshold then deletes it.  Centered on the first
-    sample, q is variance-scaled after the offset decays and the snap
-    only ever removes true float residue.  The centering origin rides
-    the SAME per-key stats aggregation the adaptive chunk grid uses
-    (one hash agg, one co-partitioned join).
-
-    DUPLICATE (key, ts) rows fold to the (ts, value) LAST-WINS
-    effective sample INSIDE the chunk kernels (duplicates share a ts so
-    they always land in one chunk): a `groupBy(key, ts)` pre-fold costs
-    a full-data exchange + hash agg that, sitting UPSTREAM of the
-    `_split_cold` checkpoint, also executes twice (the stats aggregation
-    and the join both consume it) — measured 24.3 -> ~16 s at 1 key x
-    10M parquet-backed.  The centering origin accordingly uses
-    max_by(value, struct(-ts, value)) — the effective (max-value) sample
-    at the minimum ts — instead of min_by over pre-folded rows; the
-    chunk-count stats count raw rows, which only shifts chunk
-    boundaries (any chunking is exact)."""
-    d = _assign_chunks(
-        samples.select("key", "ts", "value"),
-        chunk_ms,
-        extra_stats={
-            "__c0": F.max_by(
-                "value",
-                F.struct(
-                    (-F.col("ts")).alias("nts"), F.col("value").alias("v")
-                ),
-            )
-        },
-    ).withColumn("__y", F.col("value") - F.col("__c0"))
-    cold, d = _split_cold(d, chunk_ms)
-
-    sum_schema = (
-        "key string, __c long, A double, Bm double, Bq double,"
-        " fvm double, fvq double"
-    )
-
-    def summarize(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = (
-            pdf.sort_values(["ts", "value"])
-            .drop_duplicates(subset=["ts"], keep="last")
-            .reset_index(drop=True)
-        )
-        x = pdf["__y"].astype(np.float64)
-        x2 = x * x
-        A = float(np.cumprod(np.full(len(x), 1.0 - alpha))[-1])
-
-        def fold(series):
-            return float(
-                pd.concat([pd.Series([0.0]), series], ignore_index=True)
-                .ewm(alpha=alpha, adjust=False)
-                .mean()
-                .iloc[-1]
-            )
-
-        return pd.DataFrame(
-            {
-                "key": [pdf["key"].iloc[0]],
-                "__c": [pdf["__c"].iloc[0]],
-                "A": [A],
-                "Bm": [fold(x)],
-                "Bq": [fold(x2)],
-                "fvm": [float(x.iloc[0])],
-                "fvq": [float(x2.iloc[0])],
-            }
-        )
-
-    summaries = d.groupBy("key", "__c").applyInPandas(summarize, sum_schema)
-
-    state_schema = "key string, __c long, sm double, sq double"
-
-    def stitch(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__c").reset_index(drop=True)
-        A = pdf["A"].to_numpy(np.float64)
-        Bm = pdf["Bm"].to_numpy(np.float64)
-        Bq = pdf["Bq"].to_numpy(np.float64)
-        sm = np.empty(len(pdf))
-        sq = np.empty(len(pdf))
-        sm[0] = pdf["fvm"].iloc[0]
-        sq[0] = pdf["fvq"].iloc[0]
-        for i in range(1, len(sm)):
-            sm[i] = A[i - 1] * sm[i - 1] + Bm[i - 1]
-            sq[i] = A[i - 1] * sq[i - 1] + Bq[i - 1]
-        return pd.DataFrame(
-            {"key": pdf["key"], "__c": pdf["__c"], "sm": sm, "sq": sq}
-        )
-
-    states = summaries.groupBy("key").applyInPandas(stitch, state_schema)
-
-    out_schema = (
-        "key string, ts long, value double, __c0 double,"
-        " __m double, __q double"
-    )
-
-    def replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = (
-            pdf.sort_values(["ts", "value"])
-            .drop_duplicates(subset=["ts"], keep="last")
-            .reset_index(drop=True)
-        )
-
-        def run(series, entry):
-            return (
-                pd.concat([pd.Series([entry]), series], ignore_index=True)
-                .ewm(alpha=alpha, adjust=False)
-                .mean()
-                .iloc[1:]
-                .reset_index(drop=True)
-            )
-
-        x = pdf["__y"].astype(np.float64)
-        return pd.DataFrame(
-            {
-                "key": pdf["key"],
-                "ts": pdf["ts"],
-                "value": pdf["value"],
-                "__c0": pdf["__c0"],
-                "__m": run(x, pdf["sm"].iloc[0]),
-                "__q": run(x * x, pdf["sq"].iloc[0]),
-            }
-        )
-
-    out = (
-        d.join(states, ["key", "__c"])
-        .groupBy("key", "__c")
-        .applyInPandas(replay, out_schema)
-    )
-    if cold is not None:
-
-        def direct(pdf: pd.DataFrame) -> pd.DataFrame:
-            # single-chunk key: the replay seeded with its own first
-            # values (the virtual-entry trick: a*y1 + (1-a)*y1 = y1)
-            pdf = (
-                pdf.sort_values(["ts", "value"])
-                .drop_duplicates(subset=["ts"], keep="last")
-                .reset_index(drop=True)
-            )
-            x = pdf["__y"].astype(np.float64)
-            return pd.DataFrame(
-                {
-                    "key": pdf["key"],
-                    "ts": pdf["ts"],
-                    "value": pdf["value"],
-                    "__c0": pdf["__c0"],
-                    "__m": x.ewm(alpha=alpha, adjust=False).mean(),
-                    "__q": (x * x).ewm(alpha=alpha, adjust=False).mean(),
-                }
-            )
-
-        out = out.unionByName(
-            cold.groupBy("key").applyInPandas(direct, out_schema)
-        )
-    return out
 
 
 def ts_ewm_band(
@@ -1059,28 +985,28 @@ def ts_ewm_band(
 
     The EWM variance uses the same-weights biased form — for
     adjust=False the weighted variance IS ewm(x^2) - ewm(x)^2 (pandas'
-    ewm.var(bias=True)) — so the operator is ts_ewma's chunk-affine
-    pipeline run FUSED over both moments (`_ts_ewm_moments`: the two
-    recurrences share their decay, so one summarize/stitch/replay pass
-    carries both states — the same exchange count as a single ewma).
-    `upper`/`lower` are the ONE-STEP-AHEAD band each sample was tested
-    against — the pre-update EWM state, so an outlier cannot inflate
-    its own envelope (the ts_anomalies exclude-self discipline); the
-    recurrence makes that state recoverable WITHOUT a lag window:
-    m_prev = (m - a*x) / (1-a), same for the second moment (exact, and
-    for a series' first sample it degenerates to the sample itself —
-    zero-width band, never a breakout).  `ewma`/`std` are the
-    post-update smoothed series users chart.  alpha=1 keeps no history
-    (the band would be undefined) and is rejected.  Duplicate (key, ts)
-    rows fold to the (ts, value) last-wins EFFECTIVE sample before
-    smoothing — the x and x^2 recurrences must consume duplicates in
-    the SAME order, and value-order under squaring flips for negative
-    pairs, so the fold (ts_corr's rule) removes the ambiguity instead
-    of inheriting ts_ewma's raw-dup ordering; the fold happens inside
-    `_ts_ewm_moments`' chunk kernels (round 12 — the former
-    groupBy(key, ts) pre-fold cost a doubly-executed full-data
-    exchange, see there).  NaN samples are invalid everywhere and are
-    dropped first."""
+    ewm.var(bias=True)) — so the operator is `_ewm_chunked` over BOTH
+    moments (the two recurrences share their decay, so one
+    summarize/stitch/replay pass carries both states — the same
+    exchange count as a single ewma), and the replay kernel finishes
+    each row with `ewm_band_columns`: the ONE-STEP-AHEAD band
+    `upper`/`lower` each sample was tested against (an outlier cannot
+    inflate its own envelope — the ts_anomalies exclude-self
+    discipline) and the post-update `ewma`/`std` users chart.
+    alpha=1 keeps no history (the band would be undefined) and is
+    rejected.
+
+    The moments are CENTERED on the key's first effective sample c0
+    (the variance-credibility discipline, `ewm_credible_std`; variance
+    is shift-invariant, ewma/upper/lower add c0 back).  c0 rides the
+    per-key stats aggregation the adaptive chunk grid already runs:
+    max_by(value, struct(-ts, value)) — the effective sample at the
+    minimum ts.  Duplicate (key, ts) rows fold to the (ts, value)
+    last-wins EFFECTIVE sample before smoothing — the y and y^2
+    recurrences must consume duplicates in the SAME order, and value
+    order under squaring flips for negative pairs, so the fold
+    (ts_corr's rule) removes the ambiguity.  NaN samples are invalid
+    everywhere and are dropped first."""
     if band_k <= 0:
         raise ValueError("band_k must be positive")
     if not 0 < alpha < 1:
@@ -1088,55 +1014,41 @@ def ts_ewm_band(
             "alpha must be in (0, 1) — alpha=1 keeps no history, so the"
             " one-step-ahead band is undefined"
         )
-    d = _filter_range(samples, keys, start, end)
-    j = _ts_ewm_moments(d, alpha, chunk_ms)
-    # the moments are CENTERED on the key's first sample (__c0) — see
-    # _ts_ewm_moments; variance is shift-invariant, the displayed
-    # ewma/upper/lower add the offset back
-    y = F.col("value") - F.col("__c0")
-    pm = (F.col("__m") - alpha * y) / (1.0 - alpha)
-    pq = (F.col("__q") - alpha * y * y) / (1.0 - alpha)
+    df = _filter_range(samples, keys, start, end)
+    d = _assign_chunks(
+        df.select("key", "ts", "value"),
+        chunk_ms,
+        extra_stats={
+            "__c0": F.max_by(
+                "value",
+                F.struct(
+                    (-F.col("ts")).alias("nts"), F.col("value").alias("v")
+                ),
+            )
+        },
+    )
+    kf = float(band_k)
 
-    # variance credibility snap: q - m^2 is a difference of
-    # q-magnitude terms, so a residue below ~1e-10 of the second
-    # moment is float cancellation, not variance — sqrt would amplify
-    # it to a spurious band width that differs between any two
-    # arithmetic orders (it broke 6dp oracle matching on every key's
-    # second sample before the snap).  With CENTERED moments q is
-    # variance-scaled (not offset^2-scaled), so the relative threshold
-    # only ever removes true float residue — a mean-1e6/std-10 series
-    # keeps its genuine variance (the round-10 ADVICE finding: the
-    # uncentered q was ~1e12 there and the snap deleted var=100,
-    # collapsing the band and suppressing every breakout)
-    def _credible_std(var, moment):
-        return F.sqrt(
-            F.when(var > F.lit(1e-10) * moment, var).otherwise(F.lit(0.0))
+    def centered(pdf):
+        return pdf["value"].to_numpy(np.float64) - pdf["__c0"].to_numpy(
+            np.float64
         )
 
-    # BOTH snaps reference the POST-update moment q: at a key's second
-    # sample the pre-update pq is itself a pure cancellation residue
-    # (centered first sample is exactly 0), so a threshold relative to
-    # pq would keep it — q is the smallest genuinely variance-scaled
-    # reference at every row
-    pstd = _credible_std(pq - pm * pm, F.col("__q"))
-    std = _credible_std(
-        F.col("__q") - F.col("__m") * F.col("__m"), F.col("__q")
-    )
-    half = F.lit(float(band_k)) * pstd
-    return j.select(
-        "key",
-        "ts",
-        "value",
-        (F.col("__c0") + F.col("__m")).alias("ewma"),
-        std.alias("std"),
-        (F.col("__c0") + (pm + half)).alias("upper"),
-        (F.col("__c0") + (pm - half)).alias("lower"),
-        # a zero-width band is degenerate (one-sample or constant
-        # history — no variance to scale by; ts_anomalies' std>0 rule):
-        # never a breakout; use ts_cusum to detect steps off a constant
-        ((pstd > 0) & ((y > pm + half) | (y < pm - half))).alias(
-            "breakout"
-        ),
+    def centered_sq(pdf):
+        y = centered(pdf)
+        return y * y
+
+    def emit(pdf, xs, ys):
+        band = ewm_band_columns(
+            pdf["__c0"].to_numpy(np.float64), xs[0], ys[0], ys[1], alpha, kf
+        )
+        return pd.DataFrame(
+            {"key": pdf["key"], "ts": pdf["ts"], "value": pdf["value"], **band}
+        )
+
+    return _ewm_chunked(
+        d, alpha, chunk_ms, (centered, centered_sq), emit, EWM_BAND_SCHEMA,
+        fold=True,
     )
 
 
@@ -1147,14 +1059,27 @@ def _ts_ewma_sequential(
     start: int = MIN_TS,
     end: int = MAX_TS,
 ) -> DataFrame:
-    """The pre-round-9 plan — pandas `ewm` per BARE key.  Kept as the
-    DIFFERENTIAL REFERENCE for the chunked `ts_ewma` (fuzz-pinned within
-    1e-9) and the comparison arm of the hot-series probe."""
+    """The pre-round-9 plan — pandas `ewm` per BARE key, written out
+    here rather than through `ewm_recurrence`, so the twin stays an
+    independent reference.  The DIFFERENTIAL REFERENCE for the chunked
+    `ts_ewma` (fuzz-pinned within 1e-9) and the comparison arm of the
+    hot-series probe."""
     if not 0 < alpha <= 1:
         raise ValueError("alpha must be in (0, 1]")
     df = _filter_range(samples, keys, start, end)
+
+    def smooth(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(["ts", "value"])
+        return pd.DataFrame(
+            {
+                "key": pdf["key"],
+                "ts": pdf["ts"],
+                "ewma": pdf["value"].ewm(alpha=alpha, adjust=False).mean(),
+            }
+        )
+
     return (
         df.select("key", "ts", "value")
         .groupBy("key")
-        .applyInPandas(_ewma_seq_kernel(alpha), EWMA_SCHEMA)
+        .applyInPandas(smooth, EWMA_SCHEMA)
     )

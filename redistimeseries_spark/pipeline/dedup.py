@@ -28,6 +28,7 @@ Scale shapes:
 
 from __future__ import annotations
 
+from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from redistimeseries_spark.materialize import materialize
@@ -58,8 +59,8 @@ def _widen(docs: DataFrame, key: str = "doc_id") -> DataFrame:
     try:
         if docs.rdd.getNumPartitions() < width:
             return docs.repartition(width, F.col(key))
-    except Exception:
-        pass
+    except PySparkNotImplementedError:
+        pass  # Spark Connect has no `.rdd`: keep the input partitioning
     return docs
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from redistimeseries_spark.operators.smooth import EWM_SNAP
 from redistimeseries_spark.store import TSStore
 
 # bucket(ts) = ts - ((ts - align) mod dur), clamped >= 0
@@ -393,7 +394,8 @@ def _ts_tvf_sql(p: str) -> list[str]:
         # centering as the facade (the moments run over y = value - c0
         # where c0 is the key's first sample, so q is variance-scaled
         # and the snap never deletes a large-offset series' genuine
-        # variance — the round-10 ADVICE finding).
+        # variance — the round-10 ADVICE finding).  The snap threshold
+        # is the facade's EWM_SNAP, spliced into the text.
         f"""CREATE OR REPLACE TEMPORARY FUNCTION {p}ewm_band(
                 alpha DOUBLE, band_k DOUBLE)
             RETURNS TABLE (key STRING, ts BIGINT, value DOUBLE,
@@ -443,10 +445,10 @@ def _ts_tvf_sql(p: str) -> list[str]:
               FROM e),
             f AS (
               SELECT key, ts, value, c0, y, m,
-                sqrt(CASE WHEN q - m * m > 1e-10 * q
+                sqrt(CASE WHEN q - m * m > {EWM_SNAP} * q
                           THEN q - m * m ELSE 0D END) AS sd,
                 pm,
-                sqrt(CASE WHEN pq - pm * pm > 1e-10 * q
+                sqrt(CASE WHEN pq - pm * pm > {EWM_SNAP} * q
                           THEN pq - pm * pm ELSE 0D END) AS psd
               FROM g)
             SELECT key, ts, value, c0 + m AS ewma, sd AS std,

@@ -53,6 +53,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from redistimeseries_spark.functions.buckets import bucket_start
+from redistimeseries_spark.operators.smooth import (
+    ewm_credible_std,
+    ewm_recurrence,
+)
 from redistimeseries_spark.streaming.compaction import (
     CROSS_BUCKET_AGGS,
     CompactionRule,
@@ -354,9 +358,11 @@ class StreamingStore:
              out-of-order insert before their first sample, which moves
              the centering origin c0 — fall back to their full history);
           3. a per-key Arrow kernel replays the recurrences from the
-             seed (the smooth.py entry-state trick: pandas ewm seeded by
-             prepending the carried state) and emits one (dest value,
-             state) row per bucket >= B0 with >=1 valid sample;
+             seed through `smooth.ewm_recurrence` (unseeded keys take
+             its plain y_0 = x_0 seed) and emits one (dest value,
+             state) row per bucket >= B0 with >=1 valid sample; the
+             band rule's std is `smooth.ewm_credible_std` — the batch
+             operator's own recurrence and snap;
           4. dest rows flow into the generic partition-scoped upsert;
              state rows >= B0 are replaced pk-partition-scoped (the
              `_pk` hash-bucket layout: state is only ever point-read by
@@ -419,47 +425,29 @@ class StreamingStore:
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             pdf = pdf.sort_values("ts").reset_index(drop=True)
-            seeded = pd.notna(pdf["__sb"].iloc[0])
-            if seeded:
+            if pd.notna(pdf["__sb"].iloc[0]):
                 c0 = float(pdf["__c0"].iloc[0])
                 m0 = float(pdf["__m"].iloc[0])
                 q0 = float(pdf["__q"].iloc[0])
             else:
                 c0 = float(pdf["value"].iloc[0]) if centered else 0.0
-                # unseeded first sample IS the level (pandas
-                # adjust=False): seed the replay with y_1 so the first
-                # output equals it (m1 = a*y1 + (1-a)*y1 = y1)
-                y1 = float(pdf["value"].iloc[0]) - c0
-                m0, q0 = y1, y1 * y1
-            y = pdf["value"].astype(np.float64) - c0
-
-            def run(series, entry):
-                return (
-                    pd.concat([pd.Series([entry]), series],
-                              ignore_index=True)
-                    .ewm(alpha=a, adjust=False)
-                    .mean()
-                    .iloc[1:]
-                    .reset_index(drop=True)
-                )
-
-            m = run(y, m0)
-            q = run(y * y, q0)
+                m0 = q0 = None  # the plain y_0 = x_0 seed
+            y = pdf["value"].to_numpy(np.float64) - c0
             t = pdf["ts"].to_numpy(np.int64)
-            bkt = t - (t - align_ts) % bucket_ms
             res = pd.DataFrame(
-                {"key": pdf["key"], "__bucket": bkt, "m": m, "q": q}
+                {
+                    "key": pdf["key"],
+                    "__bucket": t - (t - align_ts) % bucket_ms,
+                    "m": ewm_recurrence(y, a, m0),
+                    "q": ewm_recurrence(y * y, a, q0),
+                }
             )
             last = res.groupby("__bucket", as_index=False).last()
+            last["value"] = c0 + last["m"]
             if centered:
-                var = last["q"] - last["m"] * last["m"]
-                std = np.sqrt(
-                    np.where(var > 1e-10 * last["q"], var, 0.0)
+                last["value"] += kf * ewm_credible_std(
+                    last["q"] - last["m"] * last["m"], last["q"]
                 )
-                val = (c0 + last["m"]) + kf * std
-            else:
-                val = c0 + last["m"]
-            last["value"] = val
             last["c0"] = c0
             return last[["key", "__bucket", "value", "c0", "m", "q"]]
 

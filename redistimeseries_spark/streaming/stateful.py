@@ -19,6 +19,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from redistimeseries_spark.operators.smooth import (
+    EWM_BAND_SCHEMA,
+    ewm_band_columns,
+    ewm_recurrence,
+    last_wins,
+)
+
 INCR_OUTPUT_SCHEMA = "key string, ts long, value double"
 INCR_STATE_SCHEMA = "last_ts long, last_value double"
 
@@ -65,10 +72,6 @@ def incrby_stream(increments):
     )
 
 
-EWM_BAND_OUTPUT_SCHEMA = (
-    "key string, ts long, value double, ewma double, std double,"
-    " upper double, lower double, breakout boolean"
-)
 EWM_BAND_STATE_SCHEMA = "last_ts long, c0 double, m double, q double"
 
 
@@ -78,17 +81,22 @@ def ewm_band_stream(samples, alpha: float, band_k: float = 2.0):
     monitor on the ingest stream; cusum_stream's sibling for LEVEL
     rather than DRIFT).  The per-key EWM moment pair lives in Spark's
     streaming state store, CENTERED on the key's first accepted sample
-    (the round-11 variance-credibility discipline: q stays
-    variance-scaled, so the 1e-10 snap never deletes a large-offset
-    series' genuine variance).  Each micro-batch applies its samples in
-    (ts, value) order; a row with ts below the running maximum is
-    DROPPED (an accumulating statistic cannot be retro-inserted — the
-    incrby/cusum_stream rule; feed the resolved ingest view for
-    replay-exact history).  In-batch the recurrences vectorize with the
-    smooth.py entry trick — pandas ewm over the carried-state-prepended
-    series; same one-step-ahead band, snap, and zero-width suppression
-    as the batch operator, which the stream equals on in-order feeds
-    (pinned in test_streaming_native)."""
+    (the variance-credibility discipline: q stays variance-scaled, so
+    the EWM_SNAP snap never deletes a large-offset series' genuine
+    variance).
+
+    Each micro-batch takes the batch operator's effective samples: NaN
+    rows dropped, duplicate ts folded to the (ts, value) last-wins
+    sample (`smooth.last_wins`), applied in ts order.  A row whose ts
+    is at or below the key's last applied ts from an EARLIER batch is
+    DROPPED — an accumulating statistic cannot be retro-inserted, and
+    append-mode output cannot retract the row already emitted for that
+    ts (the incrby/cusum_stream rule; feed the resolved ingest view
+    for replay-exact history).  The moments run through
+    `smooth.ewm_recurrence` seeded with the carried state and the band
+    through `smooth.ewm_band_columns` — the batch operator's own
+    kernel, so the stream equals ts_ewm_band on feeds whose batches
+    arrive in ts order (pinned in test_streaming_native)."""
     if band_k <= 0:
         raise ValueError("band_k must be positive")
     if not 0 < alpha < 1:
@@ -98,90 +106,34 @@ def ewm_band_stream(samples, alpha: float, band_k: float = 2.0):
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        pdf = pd.concat(list(pdfs))
+        pdf = last_wins(pdf[~pdf["value"].isna()])
         if state.exists:
             last_ts, c0, m0, q0 = state.get
-        else:
-            last_ts, c0, m0, q0 = -(1 << 62), 0.0, 0.0, 0.0
-        # a key whose batches were all-NaN has state but no accepted
-        # sample yet — the centering origin is still unset
-        have = last_ts > -(1 << 62)
-
-        def run(series, entry):
-            return (
-                pd.concat([pd.Series([entry]), series], ignore_index=True)
-                .ewm(alpha=a, adjust=False)
-                .mean()
-                .iloc[1:]
-                .reset_index(drop=True)
-            )
-
-        outs = []
-        for pdf in pdfs:
-            pdf = pdf[~pdf["value"].isna()]
-            pdf = pdf.sort_values(["ts", "value"]).reset_index(drop=True)
-            t = pdf["ts"].to_numpy(np.int64)
-            prior = np.maximum.accumulate(
-                np.concatenate(([last_ts], t))
-            )[:-1]
-            keep = t >= prior
-            pdf = pdf[keep].reset_index(drop=True)
-            if not len(pdf):
-                continue
-            if not have:
-                c0 = float(pdf["value"].iloc[0])
-                have = True
-            y = (pdf["value"].astype(np.float64) - c0).reset_index(
-                drop=True
-            )
-            m = run(y, m0).to_numpy()
-            q = run(y * y, q0).to_numpy()
-            yv = y.to_numpy()
-            pm = (m - a * yv) / (1.0 - a)
-            pq = (q - a * yv * yv) / (1.0 - a)
-
-            def snap(var, ref):
-                return np.sqrt(np.where(var > 1e-10 * ref, var, 0.0))
-
-            # both snaps reference the POST-update moment q (see
-            # ts_ewm_band: pre-update pq is a pure residue at the
-            # second sample)
-            psd = snap(pq - pm * pm, q)
-            sd = snap(q - m * m, q)
-            half = kf * psd
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "key": pdf["key"],
-                        "ts": pdf["ts"],
-                        "value": pdf["value"],
-                        "ewma": c0 + m,
-                        "std": sd,
-                        "upper": c0 + (pm + half),
-                        "lower": c0 + (pm - half),
-                        "breakout": (psd > 0)
-                        & ((yv > pm + half) | (yv < pm - half)),
-                    }
-                )
-            )
-            last_ts = int(pdf["ts"].iloc[-1])
-            m0, q0 = float(m[-1]), float(q[-1])
-        state.update((last_ts, c0, m0, q0))
-        if outs:
-            yield pd.concat(outs)
-        else:
-            yield pd.DataFrame(
-                {
-                    c: []
-                    for c in [
-                        "key", "ts", "value", "ewma", "std",
-                        "upper", "lower", "breakout",
-                    ]
-                }
-            )
+            pdf = pdf[pdf["ts"] > last_ts].reset_index(drop=True)
+        elif len(pdf):
+            # the key's first valid sample: centering origin, plain seed
+            c0, m0, q0 = float(pdf["value"].iloc[0]), None, None
+        if not len(pdf):
+            # all NaN or already applied; an all-NaN key stores no
+            # state, so its centering origin stays unset
+            return
+        y = pdf["value"].to_numpy(np.float64) - c0
+        m = ewm_recurrence(y, a, m0)
+        q = ewm_recurrence(y * y, a, q0)
+        state.update((int(pdf["ts"].iloc[-1]), c0, float(m[-1]), float(q[-1])))
+        yield pd.DataFrame(
+            {
+                "key": pdf["key"],
+                "ts": pdf["ts"],
+                "value": pdf["value"],
+                **ewm_band_columns(c0, y, m, q, a, kf),
+            }
+        )
 
     return samples.groupBy("key").applyInPandasWithState(
         fn,
-        outputStructType=EWM_BAND_OUTPUT_SCHEMA,
+        outputStructType=EWM_BAND_SCHEMA,
         stateStructType=EWM_BAND_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,

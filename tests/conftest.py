@@ -1,4 +1,5 @@
 import math
+import os
 import sys
 
 import pytest
@@ -12,7 +13,12 @@ NAN = float("nan")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pytest", cpus=8)
+    # the session width follows SPARK_GRAFT_CPUS like every other entry
+    # point (8 when unset); the heap is capped at 6g unless
+    # SPARK_GRAFT_DRIVER_MEM says otherwise — get_spark's 48g default lets
+    # the JVM grow past what a small shared test host can hold
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
+    s = get_spark("pytest", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

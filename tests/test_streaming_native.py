@@ -134,7 +134,10 @@ def test_stateful_ewm_band_across_batches(spark, tmp_path):
     ordered feed the stream equals the batch ts_ewm_band operator
     (values, band, breakouts); ts<last rows are dropped; NaN rows are
     invalid everywhere — including a first batch that is ALL NaN for a
-    key, which must not freeze the centering origin at 0."""
+    key, which must not freeze the centering origin at 0.  Duplicate ts
+    inside a batch fold to the batch operator's last-wins effective
+    sample (one row out, one step of the recurrence), and a re-send of
+    a ts an earlier batch already applied is dropped like ts<last."""
     import math
 
     from redistimeseries_spark.operators.smooth import ts_ewm_band
@@ -143,8 +146,12 @@ def test_stateful_ewm_band_across_batches(spark, tmp_path):
     d = str(tmp_path)
     nan = float("nan")
     base = 1_000_000.0  # large offset: the centering discipline's case
-    b1 = [("c", 10, base + 2.0), ("c", 20, base - 1.0), ("e", 10, nan)]
-    b2 = [("c", 30, nan), ("c", 40, base + 1.5), ("c", 5, 99.0),
+    # c@20 arrives twice in b1 (last-wins keeps base + 3.0); b2
+    # re-sends c@20, which b1 already applied
+    resend = ("c", 20, base + 9.0)
+    b1 = [("c", 10, base + 2.0), ("c", 20, base - 1.0),
+          ("c", 20, base + 3.0), ("e", 10, nan)]
+    b2 = [("c", 30, nan), ("c", 40, base + 1.5), ("c", 5, 99.0), resend,
           ("e", 20, 7.0)]
     b3 = [("c", 50, base + 50.0), ("e", 30, 7.4)]
     for b in (b1, b2, b3):
@@ -164,10 +171,14 @@ def test_stateful_ewm_band_across_batches(spark, tmp_path):
         .start()
     )
     q.awaitTermination(120)
-    got = {
-        (r.key, r.ts): r for r in spark.sql("SELECT * FROM envelope").collect()
-    }
-    kept = [r for r in b1 + b2 + b3 if r[1] != 5 and not math.isnan(r[2])]
+    rows = spark.sql("SELECT * FROM envelope").collect()
+    got = {(r.key, r.ts): r for r in rows}
+    assert len(rows) == len(got)  # one row per (key, ts)
+    assert got[("c", 20)].value == base + 3.0
+    kept = [
+        r for r in b1 + b2 + b3
+        if r[1] != 5 and not math.isnan(r[2]) and r != resend
+    ]
     sdf = spark.createDataFrame(kept, SCHEMA)
     want = {
         (r.key, r.ts): r for r in ts_ewm_band(sdf, 0.3, band_k=2.0).collect()
