@@ -26,6 +26,7 @@ import math
 import re
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,7 +37,7 @@ from redistimeseries_spark.operators.nrange import ts_nrange
 from redistimeseries_spark.operators.range_query import ts_range
 from redistimeseries_spark.streaming.compaction import CompactionRule, materialize_rule
 from redistimeseries_spark.write.dup_policy import merge_sample, resolve_duplicates
-from redistimeseries_spark.write.mutate import ignore_filter
+from redistimeseries_spark.write.mutate import _kept_chain
 from redistimeseries_spark.write.retention import retention_clamp
 
 _UNITS = {"": 1, "m": 1, "s": 1000, "M": 60_000, "h": 3_600_000, "d": 86_400_000}
@@ -366,11 +367,12 @@ class TimeSeriesEngine:
     def flush(self):
         """Fold pending writes into the store with per-series dup policy +
         retention + IGNORE semantics — the batch analogue of foreachBatch
-        MERGE (SURVEY §2.8/§3.2)."""
+        MERGE (SURVEY §2.8/§3.2).  IGNORE filters the pending writes
+        only (`_ignore_pending`): stored rows are never re-filtered."""
         if not self._pending:
             return
         rows = []
-        for key, ts, value, on_dup in self._pending:
+        for key, ts, value, on_dup in self._ignore_pending():
             rows.append((key, ts, value, self._seq, on_dup))
             self._seq += 1
         self._pending.clear()
@@ -428,16 +430,44 @@ class TimeSeriesEngine:
                     ov_out, "key string, ts long, value double"
                 )
             )
-        for cfg in self.series.values():
-            if cfg.ignore_max_time_diff > 0 or cfg.ignore_max_val_diff > 0:
-                keep = out.filter(F.col("key") != cfg.key)
-                seq = ignore_filter(
-                    out.filter(F.col("key") == cfg.key),
-                    cfg.ignore_max_time_diff,
-                    cfg.ignore_max_val_diff,
-                )
-                out = keep.unionByName(seq)
         self._samples = out.localCheckpoint()  # materialize the fold
+
+    def _ignore_pending(self) -> list:
+        """The pending writes IGNORE keeps (src/module.c:986-1023): only
+        under a LAST series policy, each series' writes in arrival order
+        through the seeded kept-chain (`mutate._kept_chain`, the streaming
+        store's kernel), anchored at its stored last sample; a write at or
+        before the anchor is an upsert and passes."""
+        cfgs = {
+            k: c
+            for k, c in self.series.items()
+            if (c.ignore_max_time_diff > 0 or c.ignore_max_val_diff > 0)
+            and (c.duplicate_policy or self.default_dup_policy) == "last"
+        }
+        keys = sorted({p[0] for p in self._pending} & cfgs.keys())
+        if not keys:
+            return self._pending
+        anchors = {
+            r.key: (r.t, r.v)
+            for r in self._samples.filter(F.col("key").isin(keys))
+            .groupBy("key")
+            .agg(F.max("ts").alias("t"), F.max_by("value", "ts").alias("v"))
+            .collect()
+        }
+        keep = [True] * len(self._pending)
+        for k in keys:
+            idx = [i for i, p in enumerate(self._pending) if p[0] == k]
+            mask = _kept_chain(
+                np.array([self._pending[i][1] for i in idx], np.int64),
+                np.array([self._pending[i][2] for i in idx], np.float64),
+                cfgs[k].ignore_max_time_diff,
+                cfgs[k].ignore_max_val_diff,
+                *anchors.get(k, (None, None)),
+                upsert_passthrough=True,
+            )
+            for i, m in zip(idx, mask):
+                keep[i] = bool(m)
+        return [p for p, m in zip(self._pending, keep) if m]
 
     def _keys_by_policy(self):
         by = {}

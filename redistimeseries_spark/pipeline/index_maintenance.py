@@ -29,13 +29,12 @@ Single-writer maintenance op: run it while no stream is writing to the
 store and no query is mid-flight — the tmp-write + rename swap is atomic
 per table on a real filesystem but the multi-table sequence is not
 transactional (the same contract as OPTIMIZE on plain-parquet layouts).
-Crash recovery: every swap is preceded by `_recover_swap`, which
-restores a table stranded mid-swap — live dir missing with `<sub>__old`
-present (crash between the two renames) renames the old data back;
-leftover `__old`/`__compact` dirs next to a live table are deleted — so
-RERUNNING compact_index (or any later compaction) repairs every crash
-point, and queries between the crash and the rerun fail loudly (path
-missing) rather than reading half-swapped state.
+The marker, the rename swap and its crash recovery are the shared
+`store_files` protocol: every pass starts by recovering each table a
+crashed pass stranded, so RERUNNING compact_index (or any later
+compaction) repairs every crash point, and queries between the crash
+and the rerun fail loudly (the typed retryable `StoreCompactingError`)
+rather than reading half-swapped state.
 """
 
 from __future__ import annotations
@@ -43,87 +42,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from redistimeseries_spark.pipeline.retrieval import (
+from redistimeseries_spark.pipeline.retrieval import _read_index_rows
+from redistimeseries_spark.store_files import (
+    COMPACTING_MARKER,
+    _data_file_count,
     _path_exists,
-    _read_index_rows,
-    _read_optional,
+    _recover_swap,
     _rm,
+    _swap_in,
     _touch,
+    read_state,
 )
-
-# marker present while a compaction pass is mid-flight: readers racing a
-# rename-swap translate their PATH_NOT_FOUND into a clear RETRYABLE
-# error (see retrieval._read_index_rows) instead of a bare missing-path
-# failure.  Left behind by a crash, it is removed by the next compaction
-# (which starts by recovering swaps anyway) — a stale marker only makes
-# an unrelated missing-path error claim retryability, never hides one.
-COMPACTING_MARKER = "_compacting"
 
 # every row table a store flavor can own: (subdir, partition column)
 _ROW_TABLES = (("postings", "tb"), ("cells", "cid"))
 
 
-def _rename(spark, src: str, dst: str) -> None:
-    """Driver-side Hadoop-FS rename (same-filesystem move)."""
-    jvm = spark._jvm
-    sp = jvm.org.apache.hadoop.fs.Path(src)
-    dp = jvm.org.apache.hadoop.fs.Path(dst)
-    fs = sp.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.rename(sp, dp):
-        raise IOError(f"rename {src} -> {dst} failed")
-
-
-def _recover_swap(spark, path: str, sub: str) -> bool:
-    """Repair a table stranded by a crashed previous swap.  Returns
-    whether the table exists after recovery (False = nothing to
-    compact).  Cases: live dir missing + `__old` present -> the crash
-    hit between the two renames, rename the old data back (the
-    `__compact` copy may be incomplete if the writer crashed — the old
-    data is the only copy known-good); leftover `__old`/`__compact`
-    beside a live table -> delete them."""
-    live, tmp, old = f"{path}/{sub}", f"{path}/{sub}__compact", f"{path}/{sub}__old"
-    if not _path_exists(spark, live) and _path_exists(spark, old):
-        _rename(spark, old, live)
-    _rm(spark, tmp)
-    _rm(spark, old)
-    return _path_exists(spark, live)
-
-
-def _data_file_count(spark, path: str) -> int:
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
-    it = fs.listFiles(hp, True)
-    n = 0
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(".parquet"):
-            n += 1
-    return n
-
-
-def _swap_in(spark, path: str, sub: str, compacted: DataFrame, writer) -> int:
-    """Write `compacted` to `<sub>__compact`, swap it in under a rename
-    pair, and return the row count — read back from the WRITTEN files
-    (metadata-cheap), so the compaction lineage executes exactly once
-    (a pre-swap .count() would run the whole read+join+distinct job a
-    second time).  `writer(df, dest)` performs the actual write so
-    callers control partitioning/file counts.
-
-    An EMPTY compacted frame (e.g. a store holding only crash-orphan
-    rows) skips the swap: a dynamic-partition write of zero rows emits
-    no data files, so swapping it in would leave a schema-less dir that
-    breaks readers — the original table (whose orphans are invisible to
-    readers anyway) stays in place and 0 is returned."""
-    tmp, old = f"{path}/{sub}__compact", f"{path}/{sub}__old"
-    writer(compacted, tmp)
-    if _data_file_count(spark, tmp) == 0:
-        _rm(spark, tmp)
+def _rewrite(spark, path: str, sub: str, compacted: DataFrame, writer) -> int:
+    """Swap `compacted` in for `<path>/<sub>` (`store_files._swap_in`;
+    `writer(df, dest)` sets partitioning/file counts) and return its row
+    count, read back from the WRITTEN files (metadata-cheap), so the
+    compaction lineage runs once.  An empty frame (e.g. only crash-orphan
+    rows) keeps the original table and returns 0."""
+    if not _swap_in(spark, path, sub, lambda dest: writer(compacted, dest)):
         return 0
-    cnt = spark.read.parquet(tmp).count()
-    _rename(spark, f"{path}/{sub}", old)
-    _rename(spark, tmp, f"{path}/{sub}")
-    _rm(spark, old)
-    return cnt
+    return spark.read.parquet(f"{path}/{sub}").count()
 
 
 def _committed(rows: DataFrame, done: DataFrame) -> DataFrame:
@@ -158,7 +101,11 @@ def compact_index(spark, path: str) -> dict[str, int]:
         sub: _recover_swap(spark, path, sub)
         for sub in ("postings", "cells", "stats_batches", "decisions", "batches")
     }
-    done = _read_optional(spark, f"{path}/batches", "batch_id long")
+    done = (
+        read_state(spark, path, "batches", "batch_id long")
+        if present["batches"]
+        else spark.createDataFrame([], "batch_id long")
+    )
     out: dict[str, int] = {}
 
     for sub, part_col in _ROW_TABLES:
@@ -171,7 +118,7 @@ def compact_index(spark, path: str) -> dict[str, int]:
         def _writer(df, dest, pc=part_col):
             df.write.mode("overwrite").partitionBy(pc).parquet(dest)
 
-        out[sub] = _swap_in(spark, path, sub, compacted, _writer)
+        out[sub] = _rewrite(spark, path, sub, compacted, _writer)
 
     def _one_file(df, dest):
         df.coalesce(1).write.mode("overwrite").parquet(dest)
@@ -185,7 +132,7 @@ def compact_index(spark, path: str) -> dict[str, int]:
             F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n_docs"),
             F.coalesce(F.sum("total_dl"), F.lit(0)).alias("total_dl"),
         ).filter(F.col("batch_id").isNotNull())
-        out["stats_batches"] = _swap_in(
+        out["stats_batches"] = _rewrite(
             spark, path, "stats_batches", folded, _one_file
         )
 
@@ -198,10 +145,10 @@ def compact_index(spark, path: str) -> dict[str, int]:
         def _parallel(df, dest):
             df.write.mode("overwrite").parquet(dest)
 
-        out["decisions"] = _swap_in(spark, path, "decisions", rows, _parallel)
+        out["decisions"] = _rewrite(spark, path, "decisions", rows, _parallel)
     if present["batches"]:
         rows = spark.read.parquet(f"{path}/batches").distinct()
-        out["batches"] = _swap_in(spark, path, "batches", rows, _one_file)
+        out["batches"] = _rewrite(spark, path, "batches", rows, _one_file)
 
     _rm(spark, f"{path}/{COMPACTING_MARKER}")
     return out
@@ -229,7 +176,7 @@ def compact_dedup_state(spark, state_dir: str) -> dict[str, int]:
         def _writer(df, dest):
             df.write.mode("overwrite").parquet(dest)
 
-        out[sub] = _swap_in(spark, state_dir, sub, rows, _writer)
+        out[sub] = _rewrite(spark, state_dir, sub, rows, _writer)
     _rm(spark, f"{state_dir}/{COMPACTING_MARKER}")
     return out
 
@@ -237,23 +184,11 @@ def compact_dedup_state(spark, state_dir: str) -> dict[str, int]:
 def index_file_counts(spark, path: str) -> dict[str, int]:
     """Parquet data-file count per row table — the quantity compaction
     bounds (tests assert it; ops dashboards watch it)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    out: dict[str, int] = {}
-    for sub in (
-        "postings", "cells", "stats_batches", "decisions", "batches",
-        "fps", "bands", "texts",
-    ):
-        p = f"{path}/{sub}"
-        if not _path_exists(spark, p):
-            continue
-        hp = jvm.org.apache.hadoop.fs.Path(p)
-        fs = hp.getFileSystem(conf)
-        it = fs.listFiles(hp, True)
-        n = 0
-        while it.hasNext():
-            f_ = it.next()
-            if f_.getPath().getName().endswith(".parquet"):
-                n += 1
-        out[sub] = n
-    return out
+    return {
+        sub: _data_file_count(spark, f"{path}/{sub}")
+        for sub in (
+            "postings", "cells", "stats_batches", "decisions", "batches",
+            "fps", "bands", "texts",
+        )
+        if _path_exists(spark, f"{path}/{sub}")
+    }

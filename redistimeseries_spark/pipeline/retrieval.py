@@ -33,6 +33,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from redistimeseries_spark.pipeline.dedup import WORD_RE
+from redistimeseries_spark.store_files import (
+    _maybe_compact,
+    _path_exists,
+    _rm,
+    _touch,
+    read_state,
+)
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -236,7 +243,7 @@ def bm25_topk_indexed(
         # which would otherwise dominate the small-query latency floor
         post = post.drop("batch_id")
     if "batch_id" in post.columns:
-        done = _read_optional(spark, f"{path}/batches", "batch_id long")
+        done = read_state(spark, path, "batches", "batch_id long")
         # streamed index (TextIndexStream): neutralize partially-applied
         # batches — keep only rows whose batch committed (marker written),
         # and distinct() away the duplicate copies a replayed-after-crash
@@ -356,33 +363,6 @@ def bm25_topk(
     )
 
 
-def _path_exists(spark, path: str) -> bool:
-    """Driver-side Hadoop-FS existence probe — no Spark job, no failed
-    read-attempt round trip (~0.3 s each on the query path)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
-def _touch(spark, path: str) -> None:
-    """Create an empty marker file (idempotent, driver-side Hadoop FS)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        fs.create(hpath, True).close()
-
-
-def _rm(spark, path: str) -> None:
-    """Delete a file/dir if present (driver-side Hadoop FS, recursive)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hpath):
-        fs.delete(hpath, True)
-
-
 def _clear_stream_state(spark, path: str, extra: tuple[str, ...] = ()) -> None:
     """A batch REBUILD is a new store epoch: drop the previous stream's
     state (committed-batch rows survive nowhere else, so leaving e.g.
@@ -392,26 +372,6 @@ def _clear_stream_state(spark, path: str, extra: tuple[str, ...] = ()) -> None:
         _rm(spark, f"{path}/{sub}")
 
 
-class IndexCompactingError(RuntimeError):
-    """A query raced an in-flight compaction's rename-swap (the store's
-    `_compacting` marker is present): the table it tried to read is
-    mid-swap, not lost.  RETRYABLE — re-issue the query once the
-    compaction pass finishes (typically sub-second; the marker is
-    removed at the end of compact_index / compact_dedup_state)."""
-
-
-def _check_compacting(spark, path: str, exc) -> None:
-    """Translate a missing-table read under an in-flight compaction into
-    the clear retryable error class (ADVICE r8: a raw PATH_NOT_FOUND
-    mid-swap gives readers no retry hint)."""
-    if _path_exists(spark, f"{path}/_compacting"):
-        raise IndexCompactingError(
-            f"index store at {path} is mid-compaction (its _compacting "
-            f"marker is present) and a table vanished under this read — "
-            f"retry after the compaction pass finishes"
-        ) from exc
-
-
 def _read_index_rows(spark, path: str, sub: str) -> DataFrame:
     """Read an index row table (`postings`/`cells`) with the
     legacy-mixed-schema rescue: if a pre-sentinel batch build was
@@ -419,16 +379,9 @@ def _read_index_rows(spark, path: str, sub: str) -> DataFrame:
     footer (dropping batch_id), re-read with mergeSchema so commit
     filtering isn't silently skipped.  Current builds stamp
     BATCH_BUILT_ID, so the footer-merge cost is confined to the legacy
-    shape.  A PATH_NOT_FOUND while the store's `_compacting` marker is
-    present re-raises as the retryable IndexCompactingError."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        d = spark.read.parquet(f"{path}/{sub}")
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            _check_compacting(spark, path, exc)
-        raise
+    shape.  A missing table raises — the retryable StoreCompactingError
+    while the store's `_compacting` marker is up (`read_state`)."""
+    d = read_state(spark, path, sub)
     if "batch_id" not in d.columns and _path_exists(spark, f"{path}/batches"):
         d = spark.read.option("mergeSchema", "true").parquet(f"{path}/{sub}")
     return d
@@ -465,19 +418,6 @@ def _needs_commit_filtering(spark, path: str) -> bool:
     return not _path_exists(spark, f"{path}/_batch_built")
 
 
-def _read_optional(spark, path: str, schema: str) -> DataFrame:
-    """Read a parquet state table, or an empty frame if it doesn't exist
-    yet (first micro-batch / batch-built index)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            return spark.createDataFrame([], schema)
-        raise
-
-
 def read_index_stats(spark, path: str) -> DataFrame:
     """1-row (n_docs, total_dl, avgdl) for ANY index flavor.  A
     batch-built index (`build_text_index`) stores totals directly in
@@ -496,7 +436,7 @@ def read_index_stats(spark, path: str) -> DataFrame:
             spark.read.parquet(f"{path}/stats").select("n_docs", "total_dl")
         )
     if _path_exists(spark, f"{path}/stats_batches"):
-        done = _read_optional(spark, f"{path}/batches", "batch_id long")
+        done = read_state(spark, path, "batches", "batch_id long")
         per_batch = spark.read.parquet(f"{path}/stats_batches")
         parts.append(
             per_batch.join(F.broadcast(done), "batch_id", "left_semi")
@@ -557,7 +497,7 @@ class TextIndexStream:
         QUIESCED-WRITER precondition holds by construction and the
         per-batch parquet fragments never accumulate past N batches.
         `compact_max_files=N` instead triggers on the store's total
-        parquet data-file count exceeding N (see `_maybe_compact`;
+        parquet data-file count exceeding N (`store_files._maybe_compact`;
         either trigger firing compacts).
         The quiesced-READER precondition is the caller's to arrange: a
         query racing the rename-swap can fail transiently on the
@@ -565,7 +505,7 @@ class TextIndexStream:
         so compactions land in ingest maintenance windows, or retry
         failed reads.  The pass holds a `_compacting` marker while
         running, so a racing reader gets the retryable
-        IndexCompactingError instead of a bare missing-path failure."""
+        StoreCompactingError instead of a bare missing-path failure."""
         import os
 
         self.spark, self.path, self.buckets = spark, path, buckets
@@ -610,7 +550,7 @@ class TextIndexStream:
         # touched the store, readers always commit-filter (a crash right
         # after an append can never leave invisible filtering off)
         _touch(self.spark, f"{self.path}/_streamed")
-        done = _read_optional(self.spark, f"{self.path}/batches", "batch_id long")
+        done = read_state(self.spark, self.path, "batches", "batch_id long")
         if done.filter(F.col("batch_id") == batch_id).take(1):
             return
         toks = self._tokenize(batch)
@@ -626,72 +566,17 @@ class TextIndexStream:
         self.spark.createDataFrame([(batch_id,)], "batch_id long").write.mode(
             "append"
         ).parquet(f"{self.path}/batches")
-        self._compact_floor = _maybe_compact(
-            self.spark, self.path, batch_id, self.compact_every,
-            max_files=self.compact_max_files, floor=self._compact_floor,
-        )
+        _maybe_compact_index(self, batch_id)
 
 
-def _maybe_compact(
-    spark,
-    path: str,
-    batch_id: int,
-    every: int | None,
-    fn=None,
-    max_files: int | None = None,
-    floor: int | None = None,
-) -> int | None:
-    """Periodic in-stream compaction — ONE shared trigger rule for all
-    four stores, two triggers (either fires):
+def _maybe_compact_index(stream, batch_id: int) -> None:
+    """`store_files._maybe_compact` for an index stream: its row tables'
+    data-file count, `index_maintenance.compact_index`."""
+    from redistimeseries_spark.pipeline import index_maintenance as im
 
-    - `every=N`: after the Nth, 2Nth, ... committed batch (by monotone
-      micro-batch id) — the round-9 rule, kept as the fallback for
-      callers that want compactions on a schedule.
-    - `max_files=N` (round 10): when the store's total parquet
-      data-file count exceeds N.  The read-side cost compaction bounds
-      IS the fragment count, so thresholding on it directly holds the
-      same floor at lower amortized build cost than a fixed cadence —
-      one recursive listing per batch (`index_file_counts`), the same
-      class of listing the batch's own appends perform.
-
-    `floor` is the store's post-compaction file count from the last
-    pass (the store carries it between calls; this function RETURNS the
-    updated value).  It guards the size trigger against thrash: once a
-    compacted store's OWN file count exceeds max_files (more populated
-    partitions than the threshold), a bare `count > max_files` would
-    re-fire on EVERY batch, paying a full-store rewrite per micro-batch
-    — so the size trigger requires `count > max(max_files, 2 * floor)`:
-    fragmentation must double past the last compacted state before the
-    next rewrite.  The floor is in-memory only; a restarted stream pays
-    at most one redundant compaction to re-learn it.
-
-    `fn(spark, path)` is the store's compaction pass (default
-    `index_maintenance.compact_index`; DedupStream passes
-    `compact_dedup_state`).  Runs AFTER the batch marker, so a crash
-    mid-compaction loses only maintenance work — the next trigger (or a
-    manual rerun) repairs the swap via `_recover_swap` and the batch
-    itself stays committed."""
-    due = bool(every and (batch_id + 1) % every == 0)
-    size_due = False
-    if max_files and not due:
-        from redistimeseries_spark.pipeline.index_maintenance import (
-            index_file_counts,
-        )
-
-        cnt = sum(index_file_counts(spark, path).values())
-        size_due = cnt > max_files and (floor is None or cnt > 2 * floor)
-    if due or size_due:
-        if fn is None:
-            from redistimeseries_spark.pipeline.index_maintenance import (
-                compact_index,
-            )
-
-            fn = compact_index
-        fn(spark, path)
-        if max_files:
-            from redistimeseries_spark.pipeline.index_maintenance import (
-                index_file_counts,
-            )
-
-            return sum(index_file_counts(spark, path).values())
-    return floor
+    _maybe_compact(
+        stream,
+        batch_id,
+        lambda: sum(im.index_file_counts(stream.spark, stream.path).values()),
+        lambda: im.compact_index(stream.spark, stream.path),
+    )

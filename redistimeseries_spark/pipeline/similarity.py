@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from redistimeseries_spark.materialize import materialize
+from redistimeseries_spark.store_files import _path_exists, _touch, read_state
 from pyspark.storagelevel import StorageLevel
 
 
@@ -755,7 +756,7 @@ def build_ivf_index(
     cell dirs reading ONLY (vec_id, codes): the persisted form of the
     full IVF-PQ economics (float vectors written once at build, never
     read again by queries)."""
-    from redistimeseries_spark.pipeline.retrieval import BATCH_BUILT_ID, _touch
+    from redistimeseries_spark.pipeline.retrieval import BATCH_BUILT_ID
 
     d = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     if train_iters > 0:
@@ -862,7 +863,7 @@ class IVFIndexStream:
         compact_max_files: int | None = None,
     ):
         """`compact_every=N` compacts the store after every Nth
-        committed batch (retrieval._maybe_compact — the stream is the
+        committed batch (store_files._maybe_compact — the stream is the
         only writer inside process_batch, so the maintenance pass's
         quiesced-writer precondition holds by construction);
         `compact_max_files=N` triggers on total data-file count instead
@@ -890,10 +891,8 @@ class IVFIndexStream:
         self._store_checked = True
 
     def _centroids(self, d: DataFrame) -> DataFrame:
-        from redistimeseries_spark.pipeline.retrieval import _read_optional
-
-        cents = _read_optional(
-            self.spark, f"{self.path}/centroids", "cid long, cv array<double>"
+        cents = read_state(
+            self.spark, self.path, "centroids", "cid long, cv array<double>"
         )
         if not cents.take(1):
             (
@@ -910,16 +909,10 @@ class IVFIndexStream:
         return cents
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        from redistimeseries_spark.pipeline.retrieval import (
-            _path_exists,
-            _read_optional,
-            _touch,
-        )
-
         self._check_store()
         # monotone stream marker BEFORE any append (see TextIndexStream)
         _touch(self.spark, f"{self.path}/_streamed")
-        done = _read_optional(self.spark, f"{self.path}/batches", "batch_id long")
+        done = read_state(self.spark, self.path, "batches", "batch_id long")
         if done.filter(F.col("batch_id") == batch_id).take(1):
             return
         d = batch.select(
@@ -949,12 +942,9 @@ class IVFIndexStream:
         self.spark.createDataFrame([(batch_id,)], "batch_id long").write.mode(
             "append"
         ).parquet(f"{self.path}/batches")
-        from redistimeseries_spark.pipeline.retrieval import _maybe_compact
+        from redistimeseries_spark.pipeline.retrieval import _maybe_compact_index
 
-        self._compact_floor = _maybe_compact(
-            self.spark, self.path, batch_id, self.compact_every,
-            max_files=self.compact_max_files, floor=self._compact_floor,
-        )
+        _maybe_compact_index(self, batch_id)
 
 
 def _read_cells(spark, path: str) -> DataFrame:
@@ -977,14 +967,11 @@ def _committed_cells(spark, path: str, d: DataFrame) -> DataFrame:
     path's latency floor is broadcast-build-bound."""
     if "batch_id" not in d.columns:
         return d
-    from redistimeseries_spark.pipeline.retrieval import (
-        _needs_commit_filtering,
-        _read_optional,
-    )
+    from redistimeseries_spark.pipeline.retrieval import _needs_commit_filtering
 
     if not _needs_commit_filtering(spark, path):
         return d.drop("batch_id")
-    done = _read_optional(spark, f"{path}/batches", "batch_id long")
+    done = read_state(spark, path, "batches", "batch_id long")
     # ONE scan: broadcast LEFT join against the committed set (a
     # semi-join + null-branch self-union would plan the slice twice)
     return (
@@ -1229,13 +1216,10 @@ class SemDedupStream:
         self._compact_floor = None
         os.makedirs(path, exist_ok=True)
 
-    def _read(self, sub: str, schema: str) -> DataFrame:
-        from redistimeseries_spark.pipeline.retrieval import _read_optional
-
-        return _read_optional(self.spark, f"{self.path}/{sub}", schema)
-
     def _centroids(self, d: DataFrame) -> DataFrame:
-        cents = self._read("centroids", "cid long, cv array<double>")
+        cents = read_state(
+            self.spark, self.path, "centroids", "cid long, cv array<double>"
+        )
         if not cents.take(1):
             (
                 d.orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
@@ -1252,19 +1236,21 @@ class SemDedupStream:
 
     def accepted(self) -> DataFrame:
         """Committed, replay-collapsed accepted vectors (cid, vec_id, u)."""
-        done = self._read("batches", "batch_id long")
+        done = read_state(self.spark, self.path, "batches", "batch_id long")
         return (
-            self._read("cells", self.CELL_SCHEMA)
+            read_state(self.spark, self.path, "cells", self.CELL_SCHEMA)
             .join(F.broadcast(done), "batch_id", "left_semi")
             .dropDuplicates(["vec_id"])
             .drop("batch_id")
         )
 
     def decisions(self) -> DataFrame:
-        return self._read("decisions", self.DECISION_SCHEMA).distinct()
+        return read_state(
+            self.spark, self.path, "decisions", self.DECISION_SCHEMA
+        ).distinct()
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        done = self._read("batches", "batch_id long")
+        done = read_state(self.spark, self.path, "batches", "batch_id long")
         if done.filter(F.col("batch_id") == batch_id).take(1):
             return
         d = batch.select(
@@ -1327,9 +1313,6 @@ class SemDedupStream:
         self.spark.createDataFrame([(batch_id,)], "batch_id long").write.mode(
             "append"
         ).parquet(f"{self.path}/batches")
-        from redistimeseries_spark.pipeline.retrieval import _maybe_compact
+        from redistimeseries_spark.pipeline.retrieval import _maybe_compact_index
 
-        self._compact_floor = _maybe_compact(
-            self.spark, self.path, batch_id, self.compact_every,
-            max_files=self.compact_max_files, floor=self._compact_floor,
-        )
+        _maybe_compact_index(self, batch_id)

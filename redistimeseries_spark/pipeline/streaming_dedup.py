@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from redistimeseries_spark.pipeline.dedup import minhash_signatures
+from redistimeseries_spark.store_files import _maybe_compact, read_state
 
 FP_SCHEMA = "fp string, doc_id long"
 TEXT_SCHEMA = "doc_id long, text string"
@@ -75,44 +76,31 @@ class DedupStream:
         # the stream is the only writer inside process_batch, so the
         # maintenance pass's quiesced-writer precondition holds;
         # compact_max_files=N triggers on total data-file count instead
-        # (retrieval._maybe_compact; either firing compacts)
+        # (store_files._maybe_compact; either firing compacts)
         self.compact_every = compact_every
         self.compact_max_files = compact_max_files
         self._compact_floor = None
         os.makedirs(state_dir, exist_ok=True)
 
-    def _read(self, sub: str, schema: str) -> DataFrame:
-        from pyspark.errors import AnalysisException
-
-        path = os.path.join(self.state_dir, sub)
-        # only "no state yet" is recoverable — any OTHER failure (corrupt
-        # footer, permissions) must FAIL the batch, not silently dedup
-        # against nothing.  Matching on the error class keeps this correct
-        # for remote URIs (s3://, hdfs://) where os.path checks lie.
-        try:
-            return self.spark.read.schema(schema).parquet(path)
-        except AnalysisException as exc:
-            if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-                return self.spark.createDataFrame([], schema)
-            raise
-
     def fp_store(self) -> DataFrame:
-        return self._read("fps", FP_SCHEMA)
+        return read_state(self.spark, self.state_dir, "fps", FP_SCHEMA)
 
     def band_store(self) -> DataFrame:
-        return self._read("bands", BAND_SCHEMA)
+        return read_state(self.spark, self.state_dir, "bands", BAND_SCHEMA)
 
     def decisions(self) -> DataFrame:
         # distinct: a crash between the decisions append and the batch
         # marker replays identical rows; the verdict per doc is
         # deterministic, so dedup on read restores exactly-once output
-        return self._read("decisions", DECISION_SCHEMA).distinct()
+        return read_state(
+            self.spark, self.state_dir, "decisions", DECISION_SCHEMA
+        ).distinct()
 
     def text_store(self) -> DataFrame:
-        return self._read("texts", TEXT_SCHEMA)
+        return read_state(self.spark, self.state_dir, "texts", TEXT_SCHEMA)
 
     def completed_batches(self) -> DataFrame:
-        return self._read("batches", BATCH_SCHEMA)
+        return read_state(self.spark, self.state_dir, "batches", BATCH_SCHEMA)
 
     def _verify(self, batch: DataFrame, cands: DataFrame) -> DataFrame:
         """Exact n-gram Jaccard on candidate pairs only (array_intersect
@@ -179,7 +167,7 @@ class DedupStream:
         # foreachBatch is at-least-once: a completed batch_id replaying is
         # a no-op.  The marker is a row in a parquet `batches` state table
         # (appended LAST, after every other append succeeded) read through
-        # the same error-class `_read` as the rest of the state — so the
+        # the same `read_state` as the rest of the state — so the
         # guard survives remote state dirs (s3://, hdfs://) where
         # driver-filesystem markers would lie.
         if self.completed_batches().filter(F.col("batch_id") == batch_id).take(1):
@@ -271,13 +259,14 @@ class DedupStream:
         )
         from redistimeseries_spark.pipeline.index_maintenance import (
             compact_dedup_state,
+            index_file_counts,
         )
-        from redistimeseries_spark.pipeline.retrieval import _maybe_compact
 
-        self._compact_floor = _maybe_compact(
-            self.spark, self.state_dir, batch_id, self.compact_every,
-            fn=compact_dedup_state, max_files=self.compact_max_files,
-            floor=self._compact_floor,
+        _maybe_compact(
+            self,
+            batch_id,
+            lambda: sum(index_file_counts(self.spark, self.state_dir).values()),
+            lambda: compact_dedup_state(self.spark, self.state_dir),
         )
 
 

@@ -8,9 +8,11 @@ the fly by finalizing a clone of the live context (src/tsdb.c:1468-1501).
 
 Batch shape: dest = bucketed aggregation of src restricted to closed
 buckets — one shuffle on (key, bucket).  Incremental maintenance = re-run
-restricted to buckets touched by a micro-batch / delete
-(write/mutate.affected_buckets) and MERGE into the dest table; the
-recompute set is tiny so the MERGE join is broadcast.
+restricted to the (key, bucket) pairs a micro-batch touched and upsert
+them into the dest table; the recompute set is tiny so the join is
+broadcast.  The engine facade materializes its dests from the source
+at read time (`TimeSeriesEngine._dest_samples`), so a TS.DEL cascades by
+construction.
 `materialize_rule` is the one rule aggregation: the engine facade calls it
 over whole series, `streaming/ingest.StreamingStore` over the pruned slice
 behind a micro-batch's touched buckets.  The Structured Streaming

@@ -40,6 +40,20 @@ At 100 TB scale: the log is written partitioned by SAMPLE-TIME day
   * `latest` and rule dests are small enough to broadcast;
   * every maintained table is read with its known schema, so no read
     launches a schema-inference job.
+
+Replay and crash contract.  `foreachBatch` delivers at least once: after
+a restart Spark re-delivers the batch it had not logged as done.
+`process_batch` writes a commit record (`_commits/<batch_id>`) after
+every table of the batch, so a re-delivered COMMITTED batch is a no-op,
+and an id below the committed one raises `StaleBatchError`.  A batch
+that failed midway is not committed: its re-delivery is applied again on
+top of its partial writes, and readers see those partial writes in the
+meantime (both still open).  `compact()` swaps each table in by renames
+under the `_compacting` marker — the `store_files` protocol the pipeline
+stores share.  A crashed pass leaves the marker up; a read of a table it
+left missing raises the retryable `StoreCompactingError`, never an empty
+answer, and the next `process_batch` or `compact()` restores every table
+before it writes.
 """
 
 from __future__ import annotations
@@ -62,6 +76,20 @@ from redistimeseries_spark.streaming.compaction import (
     CompactionRule,
     materialize_rule,
     parse_ewm_rule,
+)
+from redistimeseries_spark.store_files import (
+    COMPACTING_MARKER,
+    StoreCompactingError,  # noqa: F401 — what a read racing compact() raises
+    _data_file_count,
+    _ls,
+    _maybe_compact,
+    _path_exists,
+    _put,
+    _recover_swap,
+    _rm,
+    _swap_in,
+    _touch,
+    read_state,
 )
 from redistimeseries_spark.write.dup_policy import resolve_duplicates
 
@@ -89,6 +117,9 @@ EWM_STATE_SCHEMA = "key string, __bucket long, c0 double, m double, q double"
 STATE_BUCKETS = 64
 DAY_MS = 86_400_000
 
+# the tables `compact()` rewrites, under the store root
+LOG, LATEST = "samples_log", "latest"
+
 
 def _pk(col):
     return F.pmod(F.hash(col), F.lit(STATE_BUCKETS))
@@ -111,13 +142,14 @@ def _newest(df: DataFrame) -> DataFrame:
     )
 
 
-class StoreCompactingError(RuntimeError):
-    """A read raced the ingest log's compaction rename-swap (the store's
-    `_compacting` marker is present): the log is mid-swap, not lost —
-    and definitely not EMPTY, which is what the empty-safe read would
-    otherwise report.  RETRYABLE — re-issue once the swap finishes
-    (sub-second; the marker is removed at the end of compact()).  The
-    ingest-log twin of pipeline.retrieval.IndexCompactingError."""
+def _rule_sub(rule: CompactionRule) -> str:
+    return f"rule{rule.dest_suffix}"
+
+
+class StaleBatchError(RuntimeError):
+    """A micro-batch id below the store's last committed one: a stream
+    with a NEW checkpoint (ids restart at 0) writes into an OLD root.
+    Skipping would drop its rows silently, so the batch fails."""
 
 
 @dataclass
@@ -131,32 +163,16 @@ class StreamingStore:
     # chained across micro-batches by seeding with the latest table
     ignore_max_time_diff: int = 0
     ignore_max_val_diff: float = 0.0
+    # the shared compaction trigger (store_files._maybe_compact):
     # compact_every=N rewrites the log in resolved form after every Nth
-    # micro-batch (round 9; the index stores' _maybe_compact rule):
-    # _append_log adds one fragment set per batch per touched day, so
-    # without it the log's FILE COUNT grows linearly with batch count
-    # and every read's listing/open cost with it.  process_batch is the
-    # store's only writer, so compact()'s quiesced-writer precondition
-    # holds by construction; size N so the rewrites land in maintenance
-    # windows (the rewrite reads the whole log — amortize it).
+    # micro-batch, compact_max_files=N when the log's parquet data-file
+    # count exceeds N.  _append_log adds one fragment set per batch per
+    # touched day, so without either the FILE COUNT — and every read's
+    # listing/open cost — grows linearly with batch count.  Size N so the
+    # rewrites (which read the whole log) amortize.
     compact_every: int | None = None
-    # compact_max_files=N compacts when the log's parquet data-file
-    # count exceeds N (round 10): the batch-count rule pays a full-log
-    # rewrite every N batches whether or not fragmentation accumulated,
-    # while the read-side cost compaction exists to bound IS the file
-    # count — so thresholding on it directly holds the same floor at
-    # lower amortized build cost.  The check is one recursive listing
-    # per batch (the same class of listing the append itself performs).
-    # Both triggers may be set; compaction fires when EITHER trips.
-    # Thrash guard: once the COMPACTED log's own file count exceeds the
-    # threshold (more day partitions than compact_max_files), a bare
-    # count-check would re-fire every batch — the size trigger requires
-    # count > max(compact_max_files, 2 * _compact_floor), the
-    # post-compaction count of the last pass (in-memory; a restarted
-    # stream pays at most one redundant compaction to re-learn it).
     compact_max_files: int | None = None
     _compact_floor: int | None = None
-    _batch_id: int = 0
     # DataFrames persisted during the current micro-batch's maintenance;
     # unpersisted at the end of process_batch (a long-running stream must
     # not rely on driver GC to release executor storage)
@@ -164,59 +180,44 @@ class StreamingStore:
 
     @property
     def log_dir(self):
-        return os.path.join(self.root, "samples_log")
+        return os.path.join(self.root, LOG)
 
     @property
     def latest_dir(self):
-        return os.path.join(self.root, "latest")
+        return os.path.join(self.root, LATEST)
 
     @property
     def errors_dir(self):
         return os.path.join(self.root, "errors")
 
     def rule_dir(self, rule: CompactionRule):
-        return os.path.join(self.root, f"rule{rule.dest_suffix}")
+        return os.path.join(self.root, _rule_sub(rule))
 
     def rule_state_dir(self, rule: CompactionRule):
         """EWM rules' carried-state table (see `_ewm_recompute`)."""
-        return os.path.join(self.root, f"rule{rule.dest_suffix}_state")
+        return os.path.join(self.root, _rule_sub(rule) + "_state")
 
     @property
     def _compacting_marker(self):
-        return os.path.join(self.root, "_compacting")
+        return os.path.join(self.root, COMPACTING_MARKER)
 
-    def _read(self, path, schema) -> DataFrame:
-        """Spark read of a maybe-absent state path with its known schema
-        (no schema-inference job; partition columns named in the schema
-        are still discovered from the directory layout).  Only "no state
-        yet" is recoverable (error-class matched, correct for remote URIs
-        where os.path checks lie — same pattern as
-        pipeline/streaming_dedup): a missing path reads as no rows.
-        EXCEPT while the store's `_compacting` marker is up: then a
-        missing path means the read raced compact()'s rename-swap, and
-        treating it as "no state" would silently answer from an EMPTY
-        table — raise the typed retryable error instead (the index
-        stores' ADVICE-r8 rule)."""
-        from pyspark.errors import AnalysisException
+    @property
+    def _commits_dir(self):
+        return os.path.join(self.root, "_commits")
 
-        try:
-            return self.spark.read.schema(schema).parquet(path)
-        except AnalysisException as exc:
-            if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-                if os.path.exists(self._compacting_marker):
-                    raise StoreCompactingError(
-                        f"ingest store at {self.root} is mid-compaction "
-                        f"(its _compacting marker is present) and "
-                        f"{path} vanished under this read — retry after "
-                        f"the compaction pass finishes"
-                    ) from exc
-                return self.spark.createDataFrame([], schema)
-            raise
+    def _recover(self):
+        """Repair a crashed `compact()`: its marker is up from the first
+        write to the last rename, so a marker seen here is a crashed
+        pass's — restore each table, then drop the marker."""
+        if _path_exists(self.spark, self._compacting_marker):
+            for sub in (LOG, LATEST):
+                _recover_swap(self.spark, self.root, sub)
+            _rm(self.spark, self._compacting_marker)
 
     # ---- the day-partitioned ingest log ----------------------------------
     def _log(self) -> DataFrame:
         """Raw log with its `__day` partition column (empty-safe)."""
-        return self._read(self.log_dir, LOG_SCHEMA)
+        return read_state(self.spark, self.root, LOG, LOG_SCHEMA)
 
     def _log_days(self) -> list[int]:
         """Day partitions present in the log.  Local roots answer from one
@@ -382,7 +383,12 @@ class StreamingStore:
         centered = kind == "ewm_band"
         bucket_ms, align_ts = rule.bucket_ms, rule.align_ts
         sdir = self.rule_state_dir(rule)
-        st_df = self._read(sdir, EWM_STATE_SCHEMA + ", pk int")
+        st_df = read_state(
+            self.spark,
+            self.root,
+            _rule_sub(rule) + "_state",
+            EWM_STATE_SCHEMA + ", pk int",
+        )
         b0 = touched.groupBy("key").agg(F.min("__bucket").alias("__b0"))
         b0.persist()
         self._batch_cached.append(b0)
@@ -634,6 +640,20 @@ class StreamingStore:
 
     # ---- the foreachBatch body ------------------------------------------
     def process_batch(self, batch: DataFrame, batch_id: int):
+        """One micro-batch; a committed id is a no-op, a lower one raises
+        `StaleBatchError`, and a batch that failed midway is re-applied
+        on top of its partial writes (module docstring)."""
+        self._recover()
+        commits = [int(n) for n in _ls(self.spark, self._commits_dir) if n.isdigit()]
+        done = max(commits, default=-1)
+        if batch_id == done:
+            return
+        if batch_id < done:
+            raise StaleBatchError(
+                f"micro-batch {batch_id} is older than the last batch the "
+                f"store at {self.root} committed ({done}): a new checkpoint "
+                f"is writing into an old store root"
+            )
         # Arrival order for duplicate resolution: the batch id must DOMINATE
         # (first/last semantics are defined ACROSS batches; within one
         # distributed batch there is no arrival order — dup_policy.py).
@@ -745,7 +765,7 @@ class StreamingStore:
             # repaired, and dynamically overwritten — historical days are
             # never rewritten.
             days = sorted({_day(b) for b in buckets})
-            old_dest = self._read(self.rule_dir(rule), DEST_SCHEMA)
+            old_dest = read_state(self.spark, self.root, _rule_sub(rule), DEST_SCHEMA)
             # (keyed on __bucket like the slice's semi-join, so the plan
             # broadcasts `touched` once)
             kept = (
@@ -792,30 +812,14 @@ class StreamingStore:
         for df in self._batch_cached:
             df.unpersist()
         self._batch_cached.clear()
-        self._batch_id = batch_id
-        # periodic log compaction AFTER all of the batch's maintenance —
-        # a crash mid-compaction loses only the rewrite (the .tmp dir is
-        # simply re-overwritten next trigger); the batch itself is fully
-        # applied above
-        due = bool(
-            self.compact_every and (batch_id + 1) % self.compact_every == 0
-        )
-        if not due and self.compact_max_files:
-            cnt = self.log_file_count()
-            due = cnt > self.compact_max_files and (
-                self._compact_floor is None
-                or cnt > 2 * self._compact_floor
-            )
-        if due:
-            self.compact()
-            if self.compact_max_files:
-                self._compact_floor = self.log_file_count()
-
-    @staticmethod
-    def _swap(tmp: str, final: str):
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
+        # commit record LAST, driver-side (no Spark job); the older one is
+        # removed after, so the newest id survives any crash
+        _put(self.spark, f"{self._commits_dir}/{batch_id}", str(batch_id))
+        for c in commits:
+            _rm(self.spark, f"{self._commits_dir}/{c}")
+        # periodic log compaction AFTER the commit — a crash mid-compaction
+        # loses only the rewrite, which the next write recovers
+        _maybe_compact(self, batch_id, self.log_file_count, self.compact)
 
     # ---- read views ------------------------------------------------------
     def samples(self) -> DataFrame:
@@ -831,13 +835,15 @@ class StreamingStore:
         key's newest ts, folded by the duplicate policy — the value
         `samples()` holds at that ts."""
         return resolve_duplicates(
-            _newest(self._read(self.latest_dir, LATEST_SCHEMA)),
+            _newest(read_state(self.spark, self.root, LATEST, LATEST_SCHEMA)),
             self.duplicate_policy,
         )
 
     def rule_table(self, rule: CompactionRule, include_open: bool = False) -> DataFrame:
         """Closed-bucket dest view; include_open=True is the LATEST view."""
-        df = self._read(self.rule_dir(rule), DEST_SCHEMA).select("key", "ts", "value")
+        df = read_state(self.spark, self.root, _rule_sub(rule), DEST_SCHEMA).select(
+            "key", "ts", "value"
+        )
         if include_open:
             return df
         opens = self.latest().select(
@@ -852,10 +858,7 @@ class StreamingStore:
     def log_file_count(self) -> int:
         """Parquet data-file count of the ingest log — the quantity
         compaction bounds (tests assert it; ops dashboards watch it)."""
-        n = 0
-        for root, _dirs, files in os.walk(self.log_dir):
-            n += sum(1 for f in files if f.endswith(".parquet"))
-        return n
+        return _data_file_count(self.spark, self.log_dir)
 
     def compact(self):
         """Rewrite the log in resolved form (the periodic MERGE job),
@@ -864,37 +867,32 @@ class StreamingStore:
         index_maintenance file-count rule; day partitions are
         micro-batch-sized, far under a task's working set) — and fold
         the `latest` deltas into ONE file (each key's newest rows, seq
-        kept: the duplicate policy still folds them on read)."""
-        resolved = self.samples().withColumn("seq", F.lit(0).cast("long"))
-        tmp = self.log_dir + ".tmp"
-        (
-            resolved.withColumn("__day", F.expr(f"ts div {DAY_MS}").cast("int"))
+        kept: the duplicate policy still folds them on read).  Each table
+        is swapped in by `store_files._swap_in` under the `_compacting`
+        marker (module docstring); process_batch is the only writer and
+        runs it inline, so the quiesced-writer precondition holds."""
+        self._recover()
+        _touch(self.spark, self._compacting_marker)
+        resolved = (
+            self.samples()
+            .withColumn("seq", F.lit(0).cast("long"))
+            .withColumn("__day", F.expr(f"ts div {DAY_MS}").cast("int"))
             .repartition(F.col("__day"))
-            .write.mode("overwrite")
-            .partitionBy("__day")
-            .parquet(tmp)
         )
-        latest_tmp = self.latest_dir + ".tmp"
-        (
-            _newest(self._read(self.latest_dir, LATEST_SCHEMA))
-            .write.mode("overwrite")
-            .parquet(latest_tmp)
+        _swap_in(
+            self.spark,
+            self.root,
+            LOG,
+            lambda d: resolved.write.mode("overwrite").partitionBy("__day").parquet(d),
         )
-        # marker up only for the swap window: a reader racing the
-        # rmtree->rename gets the typed retryable StoreCompactingError
-        # instead of a silently-empty table (see _read).  A stale
-        # marker (crash mid-swap) only adds a retry hint to missing-path
-        # errors — the next compact() pass removes it.
-        with open(self._compacting_marker, "w"):
-            pass
-        try:
-            self._swap(tmp, self.log_dir)
-            self._swap(latest_tmp, self.latest_dir)
-        finally:
-            try:
-                os.remove(self._compacting_marker)
-            except OSError:
-                pass
+        latest = _newest(read_state(self.spark, self.root, LATEST, LATEST_SCHEMA))
+        _swap_in(
+            self.spark,
+            self.root,
+            LATEST,
+            lambda d: latest.write.mode("overwrite").parquet(d),
+        )
+        _rm(self.spark, self._compacting_marker)
 
 
 def start_ingest(

@@ -24,7 +24,7 @@ per micro-batch, not per row.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 POLICIES = ("block", "first", "last", "min", "max", "sum")
@@ -36,9 +36,10 @@ def resolve_duplicates(
     """Fold duplicate (key, ts) rows to one row per the policy.
     raw: (key, ts, value, <seq_col>).  Returns (key, ts, value).
 
-    `block` raises on collision in the reference; in batch we surface the
-    colliding rows via `blocked_rows` instead so the caller can route them
-    to an error sink (the streaming path does exactly that).
+    `block` rejects the colliding write in the reference; here the group
+    folds to its first arrival and the later writes are dropped — the
+    streaming store routes no error for them; `mutate.madd_status`
+    classifies them as DUPLICATE where a per-write reply is needed.
     """
     policy = policy.lower()
     if policy not in POLICIES:
@@ -53,7 +54,7 @@ def resolve_duplicates(
         out = g.agg(F.coalesce(F.min_by(v, valid_seq), nan).alias("value"))
     elif policy == "block":
         # collisions are rejected at ingest: the stored value is the first
-        # arrival (callers route the rest through blocked_rows)
+        # arrival
         out = g.agg(F.min_by(v, s).alias("value"))
     elif policy == "last":
         out = g.agg(F.coalesce(F.max_by(v, valid_seq), nan).alias("value"))
@@ -83,7 +84,7 @@ def merge_sample(old: float, new: float, policy: str) -> float:
         raise ValueError(f"bad duplicate policy {policy!r}")
     onan, nnan = math.isnan(old), math.isnan(new)
     if policy == "block":
-        return old  # rejected; caller routes the write to the error sink
+        return old  # the colliding write is rejected
     if policy == "first":
         return new if (onan and not nnan) else old
     if policy == "last":
@@ -95,14 +96,3 @@ def merge_sample(old: float, new: float, policy: str) -> float:
     if policy == "max":
         return max(old, new)
     return old + new
-
-
-def blocked_rows(raw: DataFrame, seq_col: str = "seq") -> DataFrame:
-    """Rows a BLOCK policy would reject: every row of a colliding (key, ts)
-    group except the first arrival (src/module.c rejects the later write)."""
-    w_min = F.min(seq_col).over(Window.partitionBy("key", "ts"))
-    return (
-        raw.withColumn("__first", w_min)
-        .filter(F.col(seq_col) != F.col("__first"))
-        .drop("__first")
-    )

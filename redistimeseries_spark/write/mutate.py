@@ -6,9 +6,9 @@ running cumulative sum per key, i.e. one window scan (no driver loop).
 
 DEL (src/module.c:2306-2339): delete samples in [from, to]; on a Delta
 layout this is `DELETE WHERE key = ? AND ts BETWEEN`; here the batch
-builder returns the surviving rows plus which compaction buckets must be
-recomputed (ContinuousDeletion cascade, src/tsdb.c:772-793) — the caller
-re-aggregates exactly those buckets (streaming/compaction.py).
+builder returns the surviving rows plus the deleted ones, from which a
+caller can derive the rule buckets to recompute (ContinuousDeletion
+cascade, src/tsdb.c:772-793).
 
 IGNORE (src/module.c:986-1023): at ingest, with DP_LAST, drop a sample if
 ts - prev_ts <= ignoreMaxTimeDiff AND |value - prev_value| <=
@@ -23,8 +23,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from redistimeseries_spark.functions.buckets import bucket_start
 
 
 # seq-chunk width for the incrby running sum (power of two; the
@@ -106,14 +104,6 @@ def ts_del(
     return samples.filter(~hit), samples.filter(hit)
 
 
-def affected_buckets(deleted: DataFrame, bucket_ms: int, align: int = 0) -> DataFrame:
-    """Distinct (key, bucket) touched by a delete — the recompute set for a
-    compaction rule (src/tsdb.c:622-660 SeriesCalcRange recompute)."""
-    return deleted.select(
-        "key", bucket_start(F.col("ts"), bucket_ms, align).alias("bucket")
-    ).distinct()
-
-
 def _kept_chain(
     t: np.ndarray,
     v: np.ndarray,
@@ -151,7 +141,9 @@ def _kept_chain(
         while j < n:
             hi = min(n, j + step)
             seg_t = t[j:hi]
-            brk = (seg_t - at > max_time_diff) | (np.abs(v[j:hi] - av) > max_val_diff)
+            # the reference's `<=` test negated, so a NaN value (or
+            # anchor) is never within max_val_diff: it is kept
+            brk = (seg_t - at > max_time_diff) | ~(np.abs(v[j:hi] - av) <= max_val_diff)
             if upsert_passthrough:
                 newer = seg_t > at
                 brk &= newer

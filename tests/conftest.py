@@ -4,7 +4,8 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, so a second checkout tests its own code
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from redistimeseries_spark import get_spark
 

@@ -4,12 +4,14 @@ order-insensitive, floats rounded to 6dp)."""
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, so a second checkout gates its own code
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E  # noqa: E402
 from redistimeseries_spark import get_spark  # noqa: E402
@@ -21,7 +23,11 @@ TABLES = [
 
 
 def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
-    spark = get_spark("gate", cpus=8)
+    # the session shape the tests use (tests/conftest.py): SPARK_GRAFT_CPUS
+    # wide (8 when unset), a 6g heap unless SPARK_GRAFT_DRIVER_MEM says
+    # otherwise
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
+    spark = get_spark("gate", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

@@ -101,6 +101,36 @@ def test_incrby_chain_is_o1(eng):
     assert eng.get("ig") == (10, 5.0)
 
 
+def test_ignore_judges_pending_writes_only(spark):
+    """IGNORE filters each write once, on arrival, and only under LAST
+    (src/module.c:986-1023): an out-of-order write is an upsert and must
+    not re-run the kept-chain over stored samples (which dropped the
+    stored sample at ts 20), and a `sum` series ignores nothing."""
+    eng = TimeSeriesEngine(spark, duplicate_policy="last")
+    eng.create("s", ignore_max_time_diff=10, ignore_max_val_diff=1.0)
+    eng.add("s", 0, 0.0)
+    eng.add("s", 20, 0.5)
+    eng.flush()
+    eng.add("s", 15, 0.2)
+    got = sorted((r.ts, r.value) for r in eng.range("s").collect())
+    assert got == [(0, 0.0), (15, 0.2), (20, 0.5)]
+    # the chain continues from the stored last sample (20, 0.5)
+    eng.add("s", 25, 0.9)  # within both diffs: ignored
+    eng.add("s", 40, 0.9)  # dt = 20 > 10: kept
+    assert eng.get("s") == (40, 0.9)
+    assert 25 not in {r.ts for r in eng.range("s").collect()}
+
+    eng.create(
+        "t", duplicate_policy="sum", ignore_max_time_diff=10, ignore_max_val_diff=1.0
+    )
+    eng.add("t", 0, 0.0)
+    eng.add("t", 5, 0.5)
+    assert sorted((r.ts, r.value) for r in eng.range("t").collect()) == [
+        (0, 0.0),
+        (5, 0.5),
+    ]
+
+
 def test_mget_latest_collect_is_dest_bounded(eng):
     """mget(latest)'s only driver materialization is the matched∩dests
     set, computed via a broadcast semi-join against the (catalog-sized)

@@ -65,24 +65,24 @@ class Sim:
         self.pending.append((key, ts, float(value), on_dup))
 
     def flush(self):
+        # IGNORE (src/module.c:986-1023) judges each write once, on
+        # arrival, and only under a LAST series policy: a write newer than
+        # the last kept sample is dropped when it lies within both diffs
+        # of it; a write at or before it is an upsert and never filtered.
+        # Stored samples are never re-judged.  The chain starts from each
+        # series' stored last sample.
+        kept = {k: (max(s), s[max(s)]) for k, s in self.store.items() if s}
         for key, ts, v, od in self.pending:
-            pol = od or self.cfg[key][0]
+            policy, _, mtd, mvd = self.cfg[key]
+            if policy == "last" and (mtd > 0 or mvd > 0):
+                at, av = kept.get(key, (None, None))
+                if at is None or ts > at:
+                    if at is not None and ts - at <= mtd and abs(v - av) <= mvd:
+                        continue  # NaN v: abs(NaN-av)<=mvd is False -> kept
+                    kept[key] = (ts, v)
             s = self.store[key]
-            s[ts] = _merge(s[ts], v, pol) if ts in s else v
+            s[ts] = _merge(s[ts], v, od or policy) if ts in s else v
         self.pending.clear()
-        # the engine re-runs the kept-chain over the full fold each flush
-        for key, (_, _, mtd, mvd) in self.cfg.items():
-            if mtd > 0 or mvd > 0:
-                kept, anchor = {}, None
-                for ts in sorted(self.store[key]):
-                    v = self.store[key][ts]
-                    if anchor is not None:
-                        at, av = anchor
-                        if ts - at <= mtd and abs(v - av) <= mvd:
-                            continue  # NaN v: abs(NaN-av)<=mvd is False -> kept
-                    kept[ts] = v
-                    anchor = (ts, v)
-                self.store[key] = kept
 
     def last(self, key):
         self.flush()

@@ -349,7 +349,7 @@ def test_compacting_marker_makes_race_retryable(spark, tmp_path):
     """Round-9 (ADVICE r8): a reader racing the rename-swap used to get
     a raw PATH_NOT_FOUND with no retry hint.  With the `_compacting`
     marker held for the duration of the pass, a vanished-table read
-    raises the typed retryable IndexCompactingError; without the marker
+    raises the typed retryable StoreCompactingError; without the marker
     the original AnalysisException propagates unchanged; and a completed
     compaction leaves no marker behind."""
     import pytest as _pytest
@@ -359,13 +359,13 @@ def test_compacting_marker_makes_race_retryable(spark, tmp_path):
         compact_index,
     )
     from redistimeseries_spark.pipeline.retrieval import (
-        IndexCompactingError,
         TextIndexStream,
         _path_exists,
         _read_index_rows,
         _touch,
         bm25_topk_indexed,
     )
+    from redistimeseries_spark.store_files import StoreCompactingError
 
     docs = _docs(spark)
     path = str(tmp_path / "race")
@@ -380,9 +380,9 @@ def test_compacting_marker_makes_race_retryable(spark, tmp_path):
 
     shutil.move(f"{path}/postings", f"{path}/postings__compact")
     _touch(spark, f"{path}/{COMPACTING_MARKER}")
-    with _pytest.raises(IndexCompactingError, match="retry"):
+    with _pytest.raises(StoreCompactingError, match="retry"):
         _read_index_rows(spark, path, "postings")
-    with _pytest.raises(IndexCompactingError, match="retry"):
+    with _pytest.raises(StoreCompactingError, match="retry"):
         bm25_topk_indexed(spark, path, "fast table scan query", k=3).collect()
 
     # no marker -> the original missing-path error propagates

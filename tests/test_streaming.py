@@ -824,3 +824,98 @@ def test_last_policy_across_batches_partitioned_writer(spark, dirs):
     b2 = spark.createDataFrame([("k", 100, -1.0)], SCHEMA).coalesce(1)
     store.process_batch(b2, 1)
     assert [(r.ts, r.value) for r in store.samples().collect()] == [(100, -1.0)]
+
+
+def test_replayed_batch_is_noop(spark, dirs):
+    """foreachBatch re-delivers a batch after a restart: a batch id the
+    store already committed is a no-op (under `sum` a second apply would
+    double every sample, `latest` and the rule bucket), also for a new
+    store object on the same root; an id below the committed one is a new
+    checkpoint on an old root and raises."""
+    rule = CompactionRule(None, "_sum_1m", "sum", 60_000)
+    root = os.path.join(dirs, "store")
+    store = StreamingStore(spark, root, "sum", [rule])
+
+    def batch():
+        return spark.createDataFrame([("a", 1000, 1.0), ("a", 2000, 2.0)], SCHEMA)
+
+    def state(st):
+        return (
+            sorted((r.ts, r.value) for r in st.samples().collect()),
+            [(r.ts, r.value) for r in st.latest().collect()],
+            [(r.ts, r.value) for r in st.rule_table(rule, include_open=True).collect()],
+        )
+
+    store.process_batch(batch(), 0)
+    want = ([(1000, 1.0), (2000, 2.0)], [(2000, 2.0)], [(0, 3.0)])
+    assert state(store) == want
+    store.process_batch(batch(), 0)
+    assert state(store) == want
+    restarted = StreamingStore(spark, root, "sum", [rule])
+    restarted.process_batch(batch(), 0)
+    assert state(restarted) == want
+    restarted.process_batch(batch(), 1)  # a new id applies
+    assert state(restarted)[0] == [(1000, 2.0), (2000, 4.0)]
+    from redistimeseries_spark.streaming.ingest import StaleBatchError
+
+    with pytest.raises(StaleBatchError, match="older than"):
+        restarted.process_batch(batch(), 0)
+
+
+@pytest.mark.parametrize(
+    "crash", ["partial_compact", "between_renames", "marker_after_swap"]
+)
+def test_compact_crash_recovery(spark, dirs, crash):
+    """compact() swaps each table by renames under the `_compacting`
+    marker: `<t>__compact` written, `<t>` -> `<t>__old`, `<t>__compact`
+    -> `<t>`, `<t>__old` deleted, marker down.  Each crash point leaves
+    an on-disk state; a fresh store on the root recovers it in its next
+    process_batch, which then holds the pre-crash rows plus the new ones
+    with no read raising.  (Between the renames the log lives only in
+    `samples_log__old`: without recovery the next batch starts a fresh
+    log and the history is lost.)"""
+    import shutil
+
+    root = os.path.join(dirs, "store")
+    rule = CompactionRule(None, "_avg_1m", "avg", 60_000)
+    store = StreamingStore(spark, root, "last", [rule])
+    store.process_batch(
+        spark.createDataFrame([("a", 1000, 1.0), ("b", 90_000, 2.0)], SCHEMA), 0
+    )
+    store.process_batch(spark.createDataFrame([("a", 2000, 3.0)], SCHEMA), 1)
+    before = sorted(tuple(r) for r in store.samples().collect())
+
+    def partial(table):
+        # a half-written compaction output: one data file of the live table
+        src = next(
+            os.path.join(d, f)
+            for d, _, fs in os.walk(table)
+            for f in fs
+            if f.endswith(".parquet")
+        )
+        os.makedirs(table + "__compact")
+        shutil.copy(src, table + "__compact")
+
+    if crash == "partial_compact":
+        partial(store.log_dir)
+    elif crash == "between_renames":
+        partial(store.log_dir)
+        os.rename(store.log_dir, store.log_dir + "__old")
+    else:
+        store.compact()
+        shutil.copytree(store.latest_dir, store.latest_dir + "__old")
+    with open(store._compacting_marker, "w"):
+        pass
+
+    fresh = StreamingStore(spark, root, "last", [rule])
+    fresh.process_batch(spark.createDataFrame([("c", 5000, 4.0)], SCHEMA), 2)
+    got = sorted(tuple(r) for r in fresh.samples().collect())
+    assert got == sorted(before + [("c", 5000, 4.0)])
+    assert sorted((r.key, r.ts) for r in fresh.latest().collect()) == [
+        ("a", 2000), ("b", 90_000), ("c", 5000)
+    ]
+    assert fresh.rule_table(rule, include_open=True).count() == 3
+    assert not os.path.exists(fresh._compacting_marker)
+    assert not [n for n in os.listdir(root) if n.endswith(("__old", "__compact"))]
+    fresh.compact()
+    assert sorted(tuple(r) for r in fresh.samples().collect()) == got
