@@ -320,7 +320,11 @@ class TimeSeriesEngine:
     def madd(self, triples):
         """Batched TS.ADD: per-triple result array — the resolved timestamp
         on success, the error on failure; failed triples are not ingested
-        (only successful ones replicated, src/module.c:1115-1161)."""
+        (only successful ones replicated, src/module.c:1115-1161).  The
+        reply is built before the writes fold into the store, so a write
+        `flush` later drops — IGNORE, or older than the retention horizon,
+        where the reference replies an error — still answers with its
+        timestamp here."""
         out = []
         for key, ts, value in triples:
             try:
@@ -367,12 +371,13 @@ class TimeSeriesEngine:
     def flush(self):
         """Fold pending writes into the store with per-series dup policy +
         retention + IGNORE semantics — the batch analogue of foreachBatch
-        MERGE (SURVEY §2.8/§3.2).  IGNORE filters the pending writes
-        only (`_ignore_pending`): stored rows are never re-filtered."""
+        MERGE (SURVEY §2.8/§3.2).  IGNORE and the late-beyond-retention
+        reject filter the pending writes only (`_accepted_pending`):
+        stored rows are never re-filtered."""
         if not self._pending:
             return
         rows = []
-        for key, ts, value, on_dup in self._ignore_pending():
+        for key, ts, value, on_dup in self._accepted_pending():
             rows.append((key, ts, value, self._seq, on_dup))
             self._seq += 1
         self._pending.clear()
@@ -432,19 +437,29 @@ class TimeSeriesEngine:
             )
         self._samples = out.localCheckpoint()  # materialize the fold
 
-    def _ignore_pending(self) -> list:
-        """The pending writes IGNORE keeps (src/module.c:986-1023): only
-        under a LAST series policy, each series' writes in arrival order
-        through the seeded kept-chain (`mutate._kept_chain`, the streaming
-        store's kernel), anchored at its stored last sample; a write at or
-        before the anchor is an upsert and passes."""
-        cfgs = {
-            k: c
+    def _accepted_pending(self) -> list:
+        """The pending writes the store takes, in arrival order.
+
+        - IGNORE (src/module.c:986-1023): only under a LAST series
+          policy, each series' writes run through the seeded kept-chain
+          (`mutate._kept_chain`, the streaming store's kernel), anchored
+          at its stored last sample; a write at or before the anchor is
+          an upsert and passes.
+        - Retention (src/module.c:1006-1012): a write older than the
+          series' running last ts - retention is rejected.  The running
+          last ts starts at the stored max and advances only on accepted
+          writes.
+
+        Both anchors come from one aggregate job over the stored
+        samples of the keys that need them."""
+        ignore = {
+            k
             for k, c in self.series.items()
             if (c.ignore_max_time_diff > 0 or c.ignore_max_val_diff > 0)
             and (c.duplicate_policy or self.default_dup_policy) == "last"
         }
-        keys = sorted({p[0] for p in self._pending} & cfgs.keys())
+        retained = {k for k, c in self.series.items() if c.retention_ms > 0}
+        keys = sorted({p[0] for p in self._pending} & (ignore | retained))
         if not keys:
             return self._pending
         anchors = {
@@ -455,18 +470,27 @@ class TimeSeriesEngine:
             .collect()
         }
         keep = [True] * len(self._pending)
-        for k in keys:
+        for k in ignore.intersection(keys):
+            cfg = self.series[k]
             idx = [i for i, p in enumerate(self._pending) if p[0] == k]
             mask = _kept_chain(
                 np.array([self._pending[i][1] for i in idx], np.int64),
                 np.array([self._pending[i][2] for i in idx], np.float64),
-                cfgs[k].ignore_max_time_diff,
-                cfgs[k].ignore_max_val_diff,
+                cfg.ignore_max_time_diff,
+                cfg.ignore_max_val_diff,
                 *anchors.get(k, (None, None)),
                 upsert_passthrough=True,
             )
             for i, m in zip(idx, mask):
                 keep[i] = bool(m)
+        last = {k: anchors[k][0] for k in retained.intersection(anchors)}
+        for i, (k, ts, _, _) in enumerate(self._pending):
+            if not keep[i] or k not in retained:
+                continue
+            if k in last and ts < last[k] - self.series[k].retention_ms:
+                keep[i] = False
+            else:
+                last[k] = max(last.get(k, ts), ts)
         return [p for p, m in zip(self._pending, keep) if m]
 
     def _keys_by_policy(self):

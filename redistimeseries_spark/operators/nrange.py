@@ -6,24 +6,25 @@ bucket duration; output is one row per distinct timestamp with one value
 column per (key, aggregator), NaN-filled where a key lacks that timestamp
 (src/reply.c:414-460).
 
-Spark shape — SINGLE PASS: one scan of the fact table filtered to the key
-list, ONE (key, bucket) hash aggregation computing the union of all
-requested aggregators, a per-key CASE emission filter (each key keeps its
-own validity rule — count-class aggregators widen it exactly as in
-ts_range), a map-side explode to (bucket, column, value) pairs restricted
-to each key's requested aggregators, then groupBy(ts).pivot with the
-*known* column list — no pivot-value inference job.  The former shape
-built one ts_range branch per key: |keys| scan subtrees unioned, which at
-100 TB means |keys| passes over the fact table.  This plan reads it once
-regardless of key count (plan-asserted: 1 scan node for 10 keys).
+Spark shape — one pass: `range_query.bucket_aggregate`, the stage
+TS.RANGE runs, over the key list and the UNION of all keys' aggregators
+(one scan, one (key, bucket) aggregation, whatever the number of keys or
+distinct specs — twa and EMPTY included), then each key's own emission
+rule, each key's COUNT, a map-side explode to (ts, column, value) pairs
+restricted to each key's requested aggregators, and groupBy(ts).pivot
+with the known column list (no pivot-value inference job).
 
-Value semantics note: on rows emitted under the narrow (no count-class)
-rule, the widened-rule finalizers are identities — LOCF `last` equals the
-bucket's own last valid value whenever __n_valid > 0, and the
-finalizeEmpty coalesce never fires — so the single pass applies the
-widened finalizers universally and only the emission PREDICATE varies per
-key.  This keeps exact parity with the per-key ts_range semantics
-(differentially fuzzed in tests/test_fuzz_nrange_oracle.py).
+Per-key emission: the union's rule is the widest of the keys' rules
+(`range_query.emission_rule`), and on a row a key's own rule keeps, the
+widened finalizers are identities — LOCF `last` is the bucket's own last
+valid value whenever it holds a valid sample, and finalizeEmpty never
+fires.  So only the emission PREDICATE varies per key: `emission_rule`
+over the key's own aggregators, with a `count` column (added to the
+union when it holds a count class) standing in for the valid-sample
+count.  Under EMPTY every key emits every bucket of its span, so no
+per-key filter runs and no `count` is added.  Parity with a per-key `ts_range` is pinned in
+tests/test_nrange_shared_stage.py and against DuckDB in
+tests/test_fuzz_nrange_oracle.py.
 """
 
 from __future__ import annotations
@@ -32,20 +33,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from redistimeseries_spark import MAX_TS, MIN_TS
-from redistimeseries_spark.functions.aggs import (
-    agg_expr,
-    empty_value,
-    is_valid_agg,
-    sanitize,
+from redistimeseries_spark.functions.aggs import sanitize
+from redistimeseries_spark.functions.buckets import report_ts
+from redistimeseries_spark.operators.range_query import (
+    COUNT_CLASSES,
+    bucket_aggregate,
+    emission_rule,
+    ts_range,
 )
-from redistimeseries_spark.functions.buckets import (
-    bucket_start,
-    report_ts,
-    resolve_align,
-)
-from redistimeseries_spark.operators.range_query import ts_range
-
-_COUNT_CLASSES = ("count_nan", "count_all")
 
 
 def ts_nrange(
@@ -79,20 +74,10 @@ def ts_nrange(
         value_cols = [
             f"{k}_{sanitize(a)}" for k in keys for a in agg_specs[k]
         ]
-        all_aggs = list(dict.fromkeys(a for k in keys for a in agg_specs[k]))
-        if "twa" in all_aggs or range_kwargs.get("empty"):
-            # twa needs its own window pipeline and EMPTY needs a per-key
-            # bucket spine — delegate to ts_range, one branch per DISTINCT
-            # spec (keys sharing an agg list share one scan subtree)
-            long_df = _branched_long(
-                samples, keys, start, end, agg_specs, bucket_dur, rev,
-                range_kwargs,
-            )
-        else:
-            long_df = _single_pass_long(
-                samples, keys, start, end, agg_specs, all_aggs, bucket_dur,
-                rev, range_kwargs,
-            )
+        long_df = _stacked(
+            samples, keys, start, end, agg_specs, bucket_dur, rev,
+            **range_kwargs,
+        )
         wide = (
             long_df.groupBy("ts").pivot("__col", value_cols).agg(F.first("__v"))
         )
@@ -104,102 +89,52 @@ def ts_nrange(
     return wide.orderBy(F.col("ts").desc() if rev else F.col("ts").asc())
 
 
-def _single_pass_long(
-    samples, keys, start, end, agg_specs, all_aggs, bucket_dur, rev, kwargs
+def _stacked(
+    samples, keys, start, end, agg_specs, bucket_dur, rev,
+    align="0", bucket_ts="-", count=None, empty=False, **filters,
 ) -> DataFrame:
-    """(ts, __col, __v) long rows from ONE scan + ONE (key, bucket)
-    aggregation over the union of requested aggregators."""
-    unknown = [a for a in all_aggs if not is_valid_agg(a)]
-    if unknown:
-        raise ValueError(f"unknown aggregation type(s): {unknown}")
-    align = kwargs.pop("align", "0")
-    bucket_ts = kwargs.pop("bucket_ts", "-")
-    count = kwargs.pop("count", None)
-    # remaining kwargs are the pre-aggregation filters ts_range knows;
-    # run them through the raw ts_range path so FILTER_BY_TS truncation /
-    # FILTER_BY_VALUE NaN rules stay single-sourced
-    df = ts_range(samples, start, end, keys=keys, **kwargs).select(
-        "key", "ts", "value"
+    """(ts, __col, __v) long rows: one `bucket_aggregate` over the union
+    of the keys' aggregators, then each key's emission rule and COUNT."""
+    union = list(dict.fromkeys(a for k in keys for a in agg_specs[k]))
+    # under EMPTY every key emits its whole bucket span: no per-key rule
+    per_key = bool(set(COUNT_CLASSES) & set(union)) and not empty
+    if per_key and "count" not in union:
+        union.append("count")  # the valid-sample count of emission_rule
+    out = bucket_aggregate(
+        samples, union, bucket_dur, align, start, end, keys,
+        empty=empty, **filters,
     )
-    align_ts = resolve_align(align, start, end)
-    df = df.withColumn("__bucket", bucket_start(F.col("ts"), bucket_dur, align_ts))
-    exprs = [agg_expr(a, F.col("value"), F.col("ts")) for a in all_aggs]
-    exprs.append(
-        F.count(
-            F.when(F.col("value").isNotNull() & ~F.isnan("value"), 1)
-        ).alias("__n_valid")
-    )
-    wide = df.groupBy("key", "__bucket").agg(*exprs)
+    if per_key:
+        by_spec: dict[frozenset, list[str]] = {}
+        for k in keys:
+            by_spec.setdefault(frozenset(agg_specs[k]), []).append(k)
+        pred = F.lit(False)
+        for spec, spec_keys in by_spec.items():
+            own = emission_rule(spec, F.col("count"))
+            pred = F.when(
+                F.col("key").isin(spec_keys),
+                F.lit(True) if own is None else own,
+            ).otherwise(pred)
+        out = out.filter(pred)
 
-    nv = F.col("__n_valid")
-    if "last" in all_aggs:
-        # LOCF finalizeEmpty for `last` (src/compaction.c:81-84,115-121),
-        # chronological regardless of rev; over ALL buckets, pre-filter.
-        # Identity on narrow-rule keys: their emitted rows have nv > 0.
-        w = (
-            Window.partitionBy("key")
-            .orderBy("__bucket")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        wide = wide.withColumn(
-            "last",
-            F.last(F.when(nv > 0, F.col("last")), ignorenulls=True).over(w),
-        )
-
-    # per-key emission: OR of the key's aggregators' isValueValid classes
-    # (validSamplesInBucket, src/filter_iterator.c:1286-1292) — CASE over
-    # spec classes, so each key keeps exactly its own rule
-    def class_pred(aggs: list[str]):
-        parts = []
-        if set(aggs) - set(_COUNT_CLASSES):
-            parts.append(nv > 0)
-        if "count_nan" in aggs:
-            parts.append(F.col("count_nan") > 0)
-        if "count_all" in aggs:
-            parts.append(F.lit(True))
-        pred = parts[0]
-        for p in parts[1:]:
-            pred = pred | p
-        return pred
-
-    classes: dict[frozenset, list[str]] = {}
-    for k in keys:
-        classes.setdefault(frozenset(agg_specs[k]), []).append(k)
-    pred = F.lit(False)
-    for spec_set, class_keys in classes.items():
-        pred = F.when(
-            F.col("key").isin(class_keys), class_pred(sorted(spec_set))
-        ).otherwise(pred)
-    wide = wide.filter(pred)
-
-    wide = wide.withColumn(
-        "ts", report_ts(F.col("__bucket"), bucket_dur, bucket_ts)
-    )
+    out = out.withColumn("ts", report_ts(F.col("__bucket"), bucket_dur, bucket_ts))
     if count is not None:
         order = F.col("ts").desc() if rev else F.col("ts").asc()
         wc = Window.partitionBy("key").orderBy(order)
-        wide = (
-            wide.withColumn("__rn", F.row_number().over(wc))
+        out = (
+            out.withColumn("__rn", F.row_number().over(wc))
             .filter(F.col("__rn") <= count)
             .drop("__rn")
         )
 
-    # finalize + stack: only each key's requested (agg -> column) pairs,
-    # map-side (no shuffle).  count classes pass through; everything else
-    # finalizes empty via its per-agg value (identity when nv > 0).
-    def v_expr(a: str):
-        col = F.col(sanitize(a))
-        if a in _COUNT_CLASSES:
-            return col
-        return F.coalesce(col, F.lit(empty_value(a)))
-
+    # stack only each key's requested (agg -> column) pairs, map-side
     branch = None
     for k in keys:
         arr = F.array(
             *[
                 F.struct(
                     F.lit(f"{k}_{sanitize(a)}").alias("c"),
-                    v_expr(a).alias("v"),
+                    F.col(sanitize(a)).alias("v"),
                 )
                 for a in agg_specs[k]
             ]
@@ -209,41 +144,6 @@ def _single_pass_long(
             if branch is None
             else branch.when(F.col("key") == k, arr)
         )
-    return wide.select("ts", F.explode(branch).alias("__p")).select(
+    return out.select("ts", F.explode(branch).alias("__p")).select(
         "ts", F.col("__p.c").alias("__col"), F.col("__p.v").alias("__v")
-    )
-
-
-def _branched_long(
-    samples, keys, start, end, agg_specs, bucket_dur, rev, kwargs
-) -> DataFrame:
-    """Fallback for twa / EMPTY specs: one ts_range branch per DISTINCT
-    aggregator list (keys sharing a spec share a scan subtree), stacked to
-    (ts, __col, __v)."""
-    groups: dict[tuple, list[str]] = {}
-    for k in keys:
-        groups.setdefault(tuple(agg_specs[k]), []).append(k)
-    parts = []
-    for aggs, group_keys in groups.items():
-        part = ts_range(
-            samples,
-            start,
-            end,
-            keys=group_keys,
-            aggregations=list(aggs),
-            bucket_dur=bucket_dur,
-            rev=rev,
-            **kwargs,
-        )
-        stack = ", ".join(f"'{sanitize(a)}', {sanitize(a)}" for a in aggs)
-        parts.append(
-            part.selectExpr(
-                "key", "ts", f"stack({len(aggs)}, {stack}) AS (__agg, __v)"
-            )
-        )
-    long_df = parts[0]
-    for p in parts[1:]:
-        long_df = long_df.unionByName(p)
-    return long_df.withColumn("__col", F.concat_ws("_", "key", "__agg")).select(
-        "ts", "__col", "__v"
     )

@@ -16,26 +16,40 @@ COUNT semantics: the reference applies COUNT per series (reply loop,
 src/reply.c:180-192), so the limit here is a per-key row_number, evaluated
 after filters and aggregation.
 
+Everything up to the (key, bucket) aggregated frame — the pre-filters,
+the per-bucket emission rule and the finalizers — is `bucket_aggregate`,
+the one bucket-aggregation stage: TS.NRANGE (operators/nrange.py) and
+the compaction rules (streaming/compaction.py) run it too, so the rule
+for which bucket emits, and with what value, is written once.
+
 Empty-bucket (EMPTY) semantics are in operators/empty.py; time-weighted
 average in operators/twa.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from redistimeseries_spark import MAX_TS, MIN_TS
 from redistimeseries_spark.functions.aggs import (
-    AGGREGATORS,
     agg_expr,
     empty_value,
+    is_valid_agg,
     sanitize,
 )
 from redistimeseries_spark.functions.buckets import bucket_start, report_ts, resolve_align
+from redistimeseries_spark.operators.empty import fill_empty_buckets
+from redistimeseries_spark.operators.twa import twa_buckets
 
 # src/query_language.h:53
 MAX_TS_VALUES_FILTER = 128
+
+# aggregators with their own isValueValid (nanValueValid / allValueValid,
+# src/compaction.c:944-978): they accept NaN samples
+COUNT_CLASSES = ("count_nan", "count_all")
 
 
 def _as_list(x):
@@ -44,25 +58,8 @@ def _as_list(x):
     return [x] if isinstance(x, str) else list(x)
 
 
-def ts_range(
-    samples: DataFrame,
-    start: int = MIN_TS,
-    end: int = MAX_TS,
-    keys=None,
-    *,
-    filter_by_ts=None,
-    filter_by_value: tuple[float, float] | None = None,
-    aggregations: list[str] | str | None = None,
-    bucket_dur: int | None = None,
-    align="0",
-    bucket_ts: str = "-",
-    empty: bool = False,
-    rev: bool = False,
-    count: int | None = None,
-) -> DataFrame:
-    """Build the TS.RANGE plan.  Returns (key, ts, value) for raw scans or
-    (key, ts, <agg...>) for aggregated queries, ordered by ts (desc if rev).
-    """
+def _prefiltered(samples, start, end, keys, filter_by_ts, filter_by_value):
+    """The FilterTS / FilterValue stages ahead of any aggregation."""
     df = samples
     keys = _as_list(keys)
     if keys is not None:
@@ -88,127 +85,167 @@ def ts_range(
         # NaN never passes (src/filter_iterator.c:18-24): Spark orders NaN
         # above all doubles so `<= hi` already rejects it; keep explicit guard.
         df = df.filter(~F.isnan("value") & (F.col("value") >= lo) & (F.col("value") <= hi))
+    return df
 
-    aggs = _as_list(aggregations)
-    if aggs:
-        from redistimeseries_spark.functions.aggs import is_valid_agg
 
-        unknown = [a for a in aggs if not is_valid_agg(a)]
-        if unknown:
-            # "TSDB: Unknown aggregation type" (src/query_language.c);
-            # beyond-reference p-names (p50/p99/p99.9) are valid here too
-            raise ValueError(f"unknown aggregation type(s): {unknown}")
-        if bucket_dur is None or bucket_dur <= 0:
-            raise ValueError("aggregation requires bucket_dur > 0")
-        align_ts = resolve_align(align, start, end)
-        bucket = bucket_start(F.col("ts"), bucket_dur, align_ts)
-        df = df.withColumn("__bucket", bucket)
+def emission_rule(aggs, n_valid: Column) -> Column | None:
+    """validSamplesInBucket (src/filter_iterator.c:389-401, 1286-1292): a
+    bucket emits iff ANY of `aggs` saw a sample its own isValueValid
+    accepts (src/compaction.c:944-978) — `n_valid` > 0 for the plain
+    aggregators, a NaN for count_nan, anything for count_all (None: no
+    filter at all)."""
+    if "count_all" in aggs:
+        return None
+    conds = []
+    if set(aggs) - set(COUNT_CLASSES):
+        conds.append(n_valid > 0)
+    if "count_nan" in aggs:
+        # count_nan's own column IS the per-bucket NaN count
+        conds.append(F.col("count_nan") > 0)
+    return reduce(lambda a, b: a | b, conds)
 
-        plain = [a for a in aggs if a != "twa"]
-        if aggs == ["twa"] and not empty:
-            # twa-only fast path: twa_buckets already drops NaN-only buckets
-            # (it filters NaN samples before bucketing), so the base
-            # __n_valid aggregation — a second scan + SortMergeJoin — is
-            # unnecessary; the plan is scan -> window -> one aggregation.
-            from redistimeseries_spark.operators.twa import twa_buckets
 
-            out = twa_buckets(df, bucket_dur, align_ts, start, end)
-        else:
-            exprs = [agg_expr(a, F.col("value"), F.col("ts")) for a in plain]
-            # validSamplesInBucket (src/filter_iterator.c:389-401): a bucket
-            # whose samples are all NaN is treated as empty and not emitted.
-            exprs.append(
-                F.count(
-                    F.when(F.col("value").isNotNull() & ~F.isnan("value"), 1)
-                ).alias("__n_valid")
+def bucket_aggregate(
+    samples: DataFrame,
+    aggs: list[str],
+    bucket_dur: int | None,
+    align=0,
+    start: int = MIN_TS,
+    end: int = MAX_TS,
+    keys=None,
+    *,
+    filter_by_ts=None,
+    filter_by_value=None,
+    empty: bool = False,
+) -> DataFrame:
+    """The bucketed-aggregation stage of TS.RANGE: unordered
+    (key, __bucket, <sanitized aggs>) rows, one per emitted bucket, with
+    `__bucket` the UNCLAMPED bucket start.  It decides which buckets emit
+    (`emission_rule`) and with what values (EMPTY fill, LOCF `last`,
+    finalizeEmpty); `ts_range`, `ts_nrange` and the compaction rules all
+    run it."""
+    df = _prefiltered(samples, start, end, keys, filter_by_ts, filter_by_value)
+    unknown = [a for a in aggs if not is_valid_agg(a)]
+    if unknown:
+        # "TSDB: Unknown aggregation type" (src/query_language.c);
+        # beyond-reference p-names (p50/p99/p99.9) are valid here too
+        raise ValueError(f"unknown aggregation type(s): {unknown}")
+    if bucket_dur is None or bucket_dur <= 0:
+        raise ValueError("aggregation requires bucket_dur > 0")
+    align_ts = resolve_align(align, start, end)
+    bucket = bucket_start(F.col("ts"), bucket_dur, align_ts)
+    df = df.withColumn("__bucket", bucket)
+
+    plain = [a for a in aggs if a != "twa"]
+    if aggs == ["twa"] and not empty:
+        # twa-only fast path: twa_buckets already drops NaN-only buckets
+        # (it filters NaN samples before bucketing), so the base
+        # __n_valid aggregation — a second scan + SortMergeJoin — is
+        # unnecessary; the plan is scan -> window -> one aggregation.
+        out = twa_buckets(df, bucket_dur, align_ts, start, end)
+    else:
+        exprs = [agg_expr(a, F.col("value"), F.col("ts")) for a in plain]
+        # validSamplesInBucket (src/filter_iterator.c:389-401): a bucket
+        # whose samples are all NaN is treated as empty and not emitted.
+        exprs.append(
+            F.count(
+                F.when(F.col("value").isNotNull() & ~F.isnan("value"), 1)
+            ).alias("__n_valid")
+        )
+        out = df.groupBy("key", "__bucket").agg(*exprs)
+
+        # count_nan / count_all have their own isValueValid, so their
+        # presence widens the bucket-emit rule (`emission_rule`)
+        has_count_class = bool(set(COUNT_CLASSES) & set(aggs))
+
+        if "twa" in aggs and not empty:
+            # with a count-class aggregator, only-NaN buckets emit and twa
+            # takes its finalizeEmpty (gap interpolation) value there —
+            # the empty=True spine carries exactly those values.
+            tw = twa_buckets(
+                df, bucket_dur, align_ts, start, end, empty=has_count_class
             )
-            out = df.groupBy("key", "__bucket").agg(*exprs)
+            out = out.join(tw, ["key", "__bucket"], "left")
 
-            # count_nan / count_all have their own isValueValid (nanValueValid /
-            # allValueValid, src/compaction.c:944-978), so their presence widens
-            # the bucket-emit rule: a bucket emits iff ANY requested aggregator
-            # saw a sample it considers valid (validSamplesInBucket,
-            # src/filter_iterator.c:1286-1292).
-            count_classes = {"count_nan", "count_all"}
-            has_count_class = bool(count_classes & set(aggs))
-
-            if "twa" in aggs and not empty:
-                from redistimeseries_spark.operators.twa import twa_buckets
-
-                # with a count-class aggregator, only-NaN buckets emit and twa
-                # takes its finalizeEmpty (gap interpolation) value there —
-                # the empty=True spine carries exactly those values.
-                tw = twa_buckets(
-                    df, bucket_dur, align_ts, start, end, empty=has_count_class
+        if empty:
+            if "twa" in aggs:
+                tw = twa_buckets(df, bucket_dur, align_ts, start, end, empty=True)
+                out = out.join(tw, ["key", "__bucket"], "full")
+            out = fill_empty_buckets(
+                out, df, aggs, bucket_dur, align_ts, start, end
+            )
+        else:
+            if has_count_class and "last" in aggs:
+                # aggLast.finalizeEmpty returns the LOCF-carried context
+                # value (finalize_empty_last_value + LastValueReset keeping
+                # value across buckets, src/compaction.c:81-84,115-121):
+                # an emitted only-NaN bucket reports the previous bucket's
+                # last valid sample, NaN if unseeded.  Chronological window
+                # regardless of rev — the reference seeds reverse iteration
+                # to agree with forward (src/filter_iterator.c:473-506).
+                w = (
+                    Window.partitionBy("key")
+                    .orderBy("__bucket")
+                    .rowsBetween(Window.unboundedPreceding, 0)
                 )
-                out = out.join(tw, ["key", "__bucket"], "left")
-
-            if empty:
-                from redistimeseries_spark.operators.empty import fill_empty_buckets
-
-                if "twa" in aggs:
-                    from redistimeseries_spark.operators.twa import twa_buckets
-
-                    tw = twa_buckets(df, bucket_dur, align_ts, start, end, empty=True)
-                    out = out.join(tw, ["key", "__bucket"], "full")
-                out = fill_empty_buckets(
-                    out, df, aggs, bucket_dur, align_ts, start, end
-                )
-            elif not has_count_class:
-                out = out.filter(F.col("__n_valid") > 0)
-            else:
                 invalid = F.col("__n_valid") == 0
-                if "last" in aggs:
-                    # aggLast.finalizeEmpty returns the LOCF-carried context
-                    # value (finalize_empty_last_value + LastValueReset keeping
-                    # value across buckets, src/compaction.c:81-84,115-121):
-                    # an emitted only-NaN bucket reports the previous bucket's
-                    # last valid sample, NaN if unseeded.  Chronological window
-                    # regardless of rev — the reference seeds reverse iteration
-                    # to agree with forward (src/filter_iterator.c:473-506).
-                    w = (
-                        Window.partitionBy("key")
-                        .orderBy("__bucket")
-                        .rowsBetween(Window.unboundedPreceding, 0)
-                    )
-                    locf = F.last(
-                        F.when(~invalid, F.col("last")), ignorenulls=True
-                    ).over(w)
-                    out = out.withColumn("last", locf)
-                conds = []
-                if set(aggs) - count_classes:
-                    conds.append(F.col("__n_valid") > 0)
-                if "count_nan" in aggs:
-                    # count_nan's own column IS the per-bucket NaN count
-                    conds.append(F.col("count_nan") > 0)
-                if "count_all" not in aggs:
-                    # count_all validates every sample, so its presence means
-                    # every sample-bearing bucket emits (no filter at all)
-                    pred = conds[0]
-                    for c in conds[1:]:
-                        pred = pred | c
-                    out = out.filter(pred)
-                # per-agg finalizeEmpty for aggregators whose own valid set is
-                # empty in an emitted bucket (finalize_empty_with_NAN / _ZERO;
-                # sum/count already fold to 0 in their builders)
+                locf = F.last(
+                    F.when(~invalid, F.col("last")), ignorenulls=True
+                ).over(w)
+                out = out.withColumn("last", locf)
+            pred = emission_rule(aggs, F.col("__n_valid"))
+            if pred is not None:
+                out = out.filter(pred)
+            if has_count_class:
+                # per-agg finalizeEmpty for aggregators whose own valid set
+                # is empty in an emitted bucket (finalize_empty_with_NAN /
+                # _ZERO; sum/count already fold to 0 in their builders)
                 out = out.withColumns(
                     {
                         sanitize(a): F.coalesce(
                             F.col(sanitize(a)), F.lit(empty_value(a))
                         )
                         for a in aggs
-                        if a not in count_classes
+                        if a not in COUNT_CLASSES
                     }
                 )
+    return out.select("key", "__bucket", *[sanitize(a) for a in aggs])
 
-        out = out.select(
+
+def ts_range(
+    samples: DataFrame,
+    start: int = MIN_TS,
+    end: int = MAX_TS,
+    keys=None,
+    *,
+    filter_by_ts=None,
+    filter_by_value: tuple[float, float] | None = None,
+    aggregations: list[str] | str | None = None,
+    bucket_dur: int | None = None,
+    align="0",
+    bucket_ts: str = "-",
+    empty: bool = False,
+    rev: bool = False,
+    count: int | None = None,
+) -> DataFrame:
+    """Build the TS.RANGE plan.  Returns (key, ts, value) for raw scans or
+    (key, ts, <agg...>) for aggregated queries, ordered by ts (desc if rev).
+    """
+    aggs = _as_list(aggregations)
+    if aggs:
+        df = bucket_aggregate(
+            samples, aggs, bucket_dur, align, start, end, keys,
+            filter_by_ts=filter_by_ts, filter_by_value=filter_by_value,
+            empty=empty,
+        ).select(
             "key",
             report_ts(F.col("__bucket"), bucket_dur, bucket_ts).alias("ts"),
             *[sanitize(a) for a in aggs],
         )
-        df = out
     else:
-        df = df.select("key", "ts", "value")
+        df = _prefiltered(
+            samples, start, end, keys, filter_by_ts, filter_by_value
+        ).select("key", "ts", "value")
 
     order = F.col("ts").desc() if rev else F.col("ts").asc()
     if count is not None:

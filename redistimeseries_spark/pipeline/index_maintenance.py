@@ -42,7 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from redistimeseries_spark.pipeline.retrieval import _read_index_rows
+from redistimeseries_spark.pipeline.retrieval import INDEX_TABLES, _read_index_rows
+from redistimeseries_spark.pipeline.streaming_dedup import DEDUP_TABLES
 from redistimeseries_spark.store_files import (
     COMPACTING_MARKER,
     _data_file_count,
@@ -97,10 +98,7 @@ def compact_index(spark, path: str) -> dict[str, int]:
     # first would yield an EMPTY watermark that makes _committed drop
     # every committed row of the other tables
     _touch(spark, f"{path}/{COMPACTING_MARKER}")
-    present = {
-        sub: _recover_swap(spark, path, sub)
-        for sub in ("postings", "cells", "stats_batches", "decisions", "batches")
-    }
+    present = {sub: _recover_swap(spark, path, sub) for sub in INDEX_TABLES}
     done = (
         read_state(spark, path, "batches", "batch_id long")
         if present["batches"]
@@ -164,10 +162,9 @@ def compact_dedup_state(spark, state_dir: str) -> dict[str, int]:
     single copy its replay would have re-appended anyway, and the replay
     anti-join still removes them by doc_id.  Same quiesced-writer
     precondition and rename-swap crash story as `compact_index`."""
-    tables = ("fps", "bands", "texts", "decisions", "batches")
     out: dict[str, int] = {}
     _touch(spark, f"{state_dir}/{COMPACTING_MARKER}")
-    for sub in tables:
+    for sub in DEDUP_TABLES:
         if not _recover_swap(spark, state_dir, sub):
             continue
         rows = spark.read.parquet(f"{state_dir}/{sub}").distinct()

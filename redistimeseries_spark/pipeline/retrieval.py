@@ -39,10 +39,15 @@ from redistimeseries_spark.store_files import (
     _rm,
     _touch,
     read_state,
+    recover,
 )
 
 BM25_K1 = 1.2
 BM25_B = 0.75
+
+# every table an index store (text, IVF, SemDeDup) appends to and
+# `index_maintenance.compact_index` swaps
+INDEX_TABLES = ("postings", "cells", "stats_batches", "decisions", "batches")
 
 
 def query_terms(query: str) -> list[str]:
@@ -545,6 +550,7 @@ class TextIndexStream:
         )
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
+        recover(self.spark, self.path, INDEX_TABLES)
         self._check_store()
         # monotone stream marker, BEFORE any append: once a stream has
         # touched the store, readers always commit-filter (a crash right

@@ -17,7 +17,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from redistimeseries_spark.materialize import materialize
-from redistimeseries_spark.store_files import _path_exists, _touch, read_state
+from redistimeseries_spark.pipeline.retrieval import INDEX_TABLES
+from redistimeseries_spark.store_files import (
+    _path_exists,
+    _touch,
+    read_state,
+    recover,
+)
 from pyspark.storagelevel import StorageLevel
 
 
@@ -909,6 +915,7 @@ class IVFIndexStream:
         return cents
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
+        recover(self.spark, self.path, INDEX_TABLES)
         self._check_store()
         # monotone stream marker BEFORE any append (see TextIndexStream)
         _touch(self.spark, f"{self.path}/_streamed")
@@ -1250,6 +1257,7 @@ class SemDedupStream:
         ).distinct()
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
+        recover(self.spark, self.path, INDEX_TABLES)
         done = read_state(self.spark, self.path, "batches", "batch_id long")
         if done.filter(F.col("batch_id") == batch_id).take(1):
             return

@@ -36,13 +36,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from redistimeseries_spark.pipeline.dedup import minhash_signatures
-from redistimeseries_spark.store_files import _maybe_compact, read_state
+from redistimeseries_spark.store_files import _maybe_compact, read_state, recover
 
 FP_SCHEMA = "fp string, doc_id long"
 TEXT_SCHEMA = "doc_id long, text string"
 BAND_SCHEMA = "band int, band_key string, doc_id long"
 DECISION_SCHEMA = "doc_id long, status string, dup_of long"
 BATCH_SCHEMA = "batch_id long"
+# every state table the stream appends to and
+# `index_maintenance.compact_dedup_state` swaps
+DEDUP_TABLES = ("fps", "bands", "texts", "decisions", "batches")
 
 
 class DedupStream:
@@ -164,6 +167,7 @@ class DedupStream:
         return fps, band_keys
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
+        recover(self.spark, self.state_dir, DEDUP_TABLES)
         # foreachBatch is at-least-once: a completed batch_id replaying is
         # a no-op.  The marker is a row in a parquet `batches` state table
         # (appended LAST, after every other append succeeded) read through

@@ -14,7 +14,8 @@ here, once:
   -> `<sub>`, delete `<sub>__old`.  Every crash point (a partial
   `__compact`; the live table missing beside `__old`; a leftover
   `__old`) is repaired by `_recover_swap`, and the marker comes down
-  only after the last swap, so a crashed pass always leaves it up;
+  only after the last swap, so a crashed pass always leaves it up —
+  each store's writer runs `recover` on its tables before it reads;
 * `_maybe_compact`, the one compaction trigger.
 """
 
@@ -142,6 +143,20 @@ def _recover_swap(spark, root: str, sub: str) -> bool:
     _rm(spark, live + "__compact")
     _rm(spark, live + "__old")
     return _path_exists(spark, live)
+
+
+def recover(spark, root: str, subs) -> None:
+    """Repair a crashed compaction pass before a store's writer reads or
+    writes: the pass holds the `_compacting` marker from its first write
+    to its last rename, so a marker seen by the store's single writer is
+    a crashed pass's — restore each table in `subs` (`_recover_swap`),
+    then drop the marker.  Without the marker it is one existence probe,
+    no Spark job."""
+    marker = f"{root}/{COMPACTING_MARKER}"
+    if _path_exists(spark, marker):
+        for sub in subs:
+            _recover_swap(spark, root, sub)
+        _rm(spark, marker)
 
 
 def _swap_in(spark, root: str, sub: str, write) -> bool:

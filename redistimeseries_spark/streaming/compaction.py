@@ -15,8 +15,10 @@ at read time (`TimeSeriesEngine._dest_samples`), so a TS.DEL cascades by
 construction.
 `materialize_rule` is the one rule aggregation: the engine facade calls it
 over whole series, `streaming/ingest.StreamingStore` over the pruned slice
-behind a micro-batch's touched buckets.  The Structured Streaming
-window-aggregation variant lives in streaming/window_rules.py.
+behind a micro-batch's touched buckets.  Its per-bucket and twa rules
+run TS.RANGE's bucket stage (`operators/range_query.bucket_aggregate`).
+The Structured Streaming window-aggregation variant lives in
+streaming/window_rules.py.
 """
 
 from __future__ import annotations
@@ -27,8 +29,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from redistimeseries_spark.functions.aggs import agg_expr
+from redistimeseries_spark import MAX_TS, MIN_TS
+from redistimeseries_spark.functions.aggs import sanitize
 from redistimeseries_spark.functions.buckets import bucket_start
+from redistimeseries_spark.operators.range_query import bucket_aggregate
 
 # EWM rule aggregators (beyond-reference; the Prometheus recording-rule
 # shape increase/rate got in round 7, for continuous SMOOTHING): the agg
@@ -96,33 +100,29 @@ def materialize_rule(
     include_open: bool = False,
 ) -> DataFrame:
     """Dest-series samples for a rule: (key, ts, value) where ts is the
-    bucket start (reference compaction always reports bucket start) and key
-    is the dest key.  include_open=False replicates the closed-bucket-only
+    UNCLAMPED bucket start (reference compaction always reports bucket
+    start; `StreamingStore` keys its touched buckets by it) and key is
+    the dest key.  include_open=False replicates the closed-bucket-only
     dest content; True = the LATEST view (open bucket finalized on the fly).
+
+    Per-bucket aggregators and twa are `bucket_aggregate` over the whole
+    series, TS.RANGE's stage: a bucket emits by the aggregator's own
+    validity rule (count_nan when it saw a NaN, count_all whenever it
+    holds a sample, the rest on a valid sample), and twa takes the
+    boundary samples of the neighbouring buckets.  increase/rate route to
+    `operators/rate.ts_increase` and the EWM rules to the smooth
+    operators, each with its own emission rule.
     """
     df = samples
     if rule.src_key_pattern is not None:
         df = df.filter(F.col("key").rlike(rule.src_key_pattern))
-    b = bucket_start(F.col("ts"), rule.bucket_ms, rule.align_ts)
-    if rule.agg == "twa":
-        # TWA rules carry boundary samples across buckets in the reference
-        # (twaAddBucketParams, src/module.c:943-958); the batch equivalent is
-        # the full-series TWA with unclamped neighbors.
-        from redistimeseries_spark import MAX_TS, MIN_TS
-        from redistimeseries_spark.operators.twa import twa_buckets
-
-        agg = twa_buckets(
-            df.withColumn("__bucket", b),
-            rule.bucket_ms, rule.align_ts, MIN_TS, MAX_TS,
-        ).withColumnRenamed("twa", "value")
-    elif rule.agg in ("increase", "rate"):
+    if rule.agg in ("increase", "rate"):
         # counter rules (beyond-reference; the Prometheus recording-rule
-        # shape): continuous reset-aware per-bucket counter rollup.  Like
-        # twa, the aggregator is cross-bucket (each sample's step links to
-        # the key's previous valid sample, wherever it lives), so it
-        # routes to the operator (operators/rate.ts_increase) instead of
-        # a per-bucket agg_expr; emission = >=1 sample with a predecessor
-        # (the operator's own rule).
+        # shape): continuous reset-aware per-bucket counter rollup.  The
+        # aggregator is cross-bucket (each sample's step links to the
+        # key's previous valid sample, wherever it lives), so it routes
+        # to the operator (operators/rate.ts_increase); emission = >=1
+        # sample with a predecessor (the operator's own rule).
         from redistimeseries_spark.operators.rate import ts_increase
 
         agg = (
@@ -176,24 +176,21 @@ def materialize_rule(
                 ),
             )
         agg = (
-            sm.withColumn("__bucket", b)
+            sm.withColumn(
+                "__bucket",
+                bucket_start(F.col("ts"), rule.bucket_ms, rule.align_ts),
+            )
             .groupBy("key", "__bucket")
             .agg(F.max_by("__metric", "ts").alias("value"))
         )
     else:
-        # each aggregator emits a bucket by its OWN validity rule
-        # (src/compaction.c:944-978 isValueValid family): count_nan when
-        # it saw NaNs, count_all whenever the bucket holds anything,
-        # everything else needs >=1 valid sample
-        emit = {
-            "count_nan": F.col("__n_nan") > 0,
-            "count_all": F.lit(True),
-        }.get(rule.agg, F.col("__n_valid") > 0)
-        agg = df.withColumn("__bucket", b).groupBy("key", "__bucket").agg(
-            agg_expr(rule.agg, F.col("value"), F.col("ts"), alias="value"),
-            F.count(F.when(~F.isnan("value"), 1)).alias("__n_valid"),
-            F.count(F.when(F.isnan("value"), 1)).alias("__n_nan"),
-        ).filter(emit)
+        # every per-bucket aggregator, and twa (whose boundary terms reach
+        # into the neighbouring buckets — twaAddBucketParams,
+        # src/module.c:943-958 — over the full, unclamped series): the
+        # TS.RANGE bucket stage, emission rule and finalizers included
+        agg = bucket_aggregate(
+            df, [rule.agg], rule.bucket_ms, rule.align_ts, MIN_TS, MAX_TS
+        ).withColumnRenamed(sanitize(rule.agg), "value")
     if not include_open:
         opens = closed_buckets(df, rule.bucket_ms, rule.align_ts)
         agg = agg.join(F.broadcast(opens), "key", "left").filter(

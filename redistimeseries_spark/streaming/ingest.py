@@ -83,13 +83,12 @@ from redistimeseries_spark.store_files import (
     _data_file_count,
     _ls,
     _maybe_compact,
-    _path_exists,
     _put,
-    _recover_swap,
     _rm,
     _swap_in,
     _touch,
     read_state,
+    recover,
 )
 from redistimeseries_spark.write.dup_policy import resolve_duplicates
 
@@ -204,15 +203,6 @@ class StreamingStore:
     @property
     def _commits_dir(self):
         return os.path.join(self.root, "_commits")
-
-    def _recover(self):
-        """Repair a crashed `compact()`: its marker is up from the first
-        write to the last rename, so a marker seen here is a crashed
-        pass's — restore each table, then drop the marker."""
-        if _path_exists(self.spark, self._compacting_marker):
-            for sub in (LOG, LATEST):
-                _recover_swap(self.spark, self.root, sub)
-            _rm(self.spark, self._compacting_marker)
 
     # ---- the day-partitioned ingest log ----------------------------------
     def _log(self) -> DataFrame:
@@ -643,7 +633,7 @@ class StreamingStore:
         """One micro-batch; a committed id is a no-op, a lower one raises
         `StaleBatchError`, and a batch that failed midway is re-applied
         on top of its partial writes (module docstring)."""
-        self._recover()
+        recover(self.spark, self.root, (LOG, LATEST))
         commits = [int(n) for n in _ls(self.spark, self._commits_dir) if n.isdigit()]
         done = max(commits, default=-1)
         if batch_id == done:
@@ -871,7 +861,7 @@ class StreamingStore:
         is swapped in by `store_files._swap_in` under the `_compacting`
         marker (module docstring); process_batch is the only writer and
         runs it inline, so the quiesced-writer precondition holds."""
-        self._recover()
+        recover(self.spark, self.root, (LOG, LATEST))
         _touch(self.spark, self._compacting_marker)
         resolved = (
             self.samples()

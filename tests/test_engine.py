@@ -188,6 +188,30 @@ def test_retention_clamps_range(eng):
     assert [r.ts for r in out] == [10_000]
 
 
+def test_write_older_than_retention_rejected(eng):
+    """A write older than the series' last ts - retention is dropped at
+    flush (src/module.c:1006-1012): it reaches neither the series nor its
+    compaction dest, and deleting the newer samples does not uncover it.
+    Within one flush the horizon follows the writes accepted before."""
+    eng.create("s", retention=1000)
+    eng.create("d")
+    eng.create_rule("s", "d", "count", 10_000)
+    eng.add("s", 5000, 1.0)
+    eng.flush()
+    assert eng.madd([("s", 100, 7.0)]) == [100]  # replied before the fold
+    assert [(r.ts, r.value) for r in eng.range("d", latest=True).collect()] == [
+        (0, 1.0)
+    ]
+    assert eng.delete("s", 5000, 5000) == 1
+    assert eng.range("s").collect() == []
+    # empty series: 9000 is accepted and moves the horizon to 8000, so
+    # 7500 is rejected and 8500 accepted
+    eng.madd([("s", 9000, 1.0), ("s", 7500, 2.0), ("s", 8500, 3.0)])
+    assert [(r.ts, r.value) for r in eng.range("d", latest=True).collect()] == [
+        (0, 2.0)
+    ]
+
+
 def test_del_and_info(eng):
     eng.create("d", labels={"a": "b"})
     eng.madd([("d", i * 1000, float(i)) for i in range(10)])

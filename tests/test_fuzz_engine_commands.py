@@ -70,16 +70,22 @@ class Sim:
         # the last kept sample is dropped when it lies within both diffs
         # of it; a write at or before it is an upsert and never filtered.
         # Stored samples are never re-judged.  The chain starts from each
-        # series' stored last sample.
+        # series' stored last sample.  A write older than the series'
+        # last ts - retention is rejected (src/module.c:1006-1012); the
+        # last ts moves only on accepted writes.
         kept = {k: (max(s), s[max(s)]) for k, s in self.store.items() if s}
+        last = {k: max(s) for k, s in self.store.items() if s}
         for key, ts, v, od in self.pending:
-            policy, _, mtd, mvd = self.cfg[key]
+            policy, retention, mtd, mvd = self.cfg[key]
             if policy == "last" and (mtd > 0 or mvd > 0):
                 at, av = kept.get(key, (None, None))
                 if at is None or ts > at:
                     if at is not None and ts - at <= mtd and abs(v - av) <= mvd:
                         continue  # NaN v: abs(NaN-av)<=mvd is False -> kept
                     kept[key] = (ts, v)
+            if retention > 0 and key in last and ts < last[key] - retention:
+                continue
+            last[key] = max(last.get(key, ts), ts)
             s = self.store[key]
             s[ts] = _merge(s[ts], v, od or policy) if ts in s else v
         self.pending.clear()

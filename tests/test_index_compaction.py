@@ -5,6 +5,9 @@ at 10^4+ batches (verdict r7 "what's wrong" #2)."""
 
 from __future__ import annotations
 
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
 
 from redistimeseries_spark.pipeline.index_maintenance import (
@@ -18,6 +21,35 @@ def _docs(spark):
     return read_parquet(
         spark, "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text")
+
+
+@pytest.fixture(scope="module")
+def text_store6(spark, tmp_path_factory):
+    """A never-compacted TextIndexStream store after 6 micro-batches
+    (`doc_id % 6 = i`) — the uncompacted twin several tests compare
+    against.  Read-only: a test that writes works on a copy."""
+    from redistimeseries_spark.pipeline.retrieval import TextIndexStream
+
+    docs = _docs(spark)
+    path = str(tmp_path_factory.mktemp("text6") / "plain")
+    stream = TextIndexStream(spark, path)
+    for i in range(6):
+        stream.process_batch(docs.filter(f"doc_id % 6 = {i}"), i)
+    return path
+
+
+@pytest.fixture(scope="module")
+def dedup_store5(spark, tmp_path_factory):
+    """A never-compacted DedupStream state dir (verify_threshold=0.5)
+    after 5 micro-batches (`doc_id % 6 = i`).  Read-only: tests copy it."""
+    from redistimeseries_spark.pipeline.streaming_dedup import DedupStream
+
+    docs = _docs(spark)
+    path = str(tmp_path_factory.mktemp("dedup5") / "state")
+    stream = DedupStream(spark, path, verify_threshold=0.5)
+    for i in range(5):
+        stream.process_batch(docs.filter(f"doc_id % 6 = {i}"), i)
+    return path
 
 
 def test_text_index_compaction_equivalence(spark, tmp_path):
@@ -133,11 +165,12 @@ def test_semdedup_stream_compaction_equivalence(spark, tmp_path):
     emb = read_parquet(spark, "/root/testdata/sf0.001/embeddings.parquet")
     path_a, path_b = str(tmp_path / "a"), str(tmp_path / "b")
     sa = SemDedupStream(spark, path_a, threshold=0.9, ncent=8)
-    sb = SemDedupStream(spark, path_b, threshold=0.9, ncent=8)
     batches = [emb.filter(f"vec_id % 6 = {i}") for i in range(6)]
     for i in range(5):
         sa.process_batch(batches[i], i)
-        sb.process_batch(batches[i], i)
+    # the twin: the same 5 batches' store, copied before compaction
+    shutil.copytree(path_a, path_b)
+    sb = SemDedupStream(spark, path_b, threshold=0.9, ncent=8)
 
     compact_index(spark, path_a)
 
@@ -207,7 +240,7 @@ def test_compaction_idempotent_and_rerunnable(spark, tmp_path):
     assert not os.path.exists(f"{path}/postings__compact")
 
 
-def test_dedup_state_compaction_equivalence(spark, tmp_path):
+def test_dedup_state_compaction_equivalence(spark, tmp_path, dedup_store5):
     """DedupStream state: 5 micro-batches -> compact: decisions equal,
     the NEXT batch decides identically on the compacted state, and the
     per-table file counts collapse."""
@@ -218,12 +251,11 @@ def test_dedup_state_compaction_equivalence(spark, tmp_path):
 
     docs = _docs(spark)
     a_dir, b_dir = str(tmp_path / "a"), str(tmp_path / "b")
+    shutil.copytree(dedup_store5, a_dir)
+    shutil.copytree(dedup_store5, b_dir)
     sa = DedupStream(spark, a_dir, verify_threshold=0.5)
     sb = DedupStream(spark, b_dir, verify_threshold=0.5)
     batches = [docs.filter(f"doc_id % 6 = {i}") for i in range(6)]
-    for i in range(5):
-        sa.process_batch(batches[i], i)
-        sb.process_batch(batches[i], i)
 
     pre = index_file_counts(spark, a_dir)
     written = compact_dedup_state(spark, a_dir)
@@ -248,7 +280,7 @@ def test_dedup_state_compaction_equivalence(spark, tmp_path):
     )
 
 
-def test_auto_compaction_in_stream(spark, tmp_path):
+def test_auto_compaction_in_stream(spark, tmp_path, text_store6):
     """compact_every=2: the stream self-compacts after every second
     committed batch — results identical to an uncompacted twin, file
     counts bounded, replay guard intact."""
@@ -259,12 +291,10 @@ def test_auto_compaction_in_stream(spark, tmp_path):
     )
 
     docs = _docs(spark)
-    a_path, b_path = str(tmp_path / "auto"), str(tmp_path / "plain")
+    a_path, b_path = str(tmp_path / "auto"), text_store6
     sa = TextIndexStream(spark, a_path, compact_every=2)
-    sb = TextIndexStream(spark, b_path)
     for i in range(6):
         sa.process_batch(docs.filter(f"doc_id % 6 = {i}"), i)
-        sb.process_batch(docs.filter(f"doc_id % 6 = {i}"), i)
 
     q = "fast table scan query"
     got = [
@@ -289,7 +319,7 @@ def test_auto_compaction_in_stream(spark, tmp_path):
     assert read_index_stats(spark, a_path).collect()[0].n_docs == sa_stats.n_docs
 
 
-def test_size_based_compaction_trigger(spark, tmp_path):
+def test_size_based_compaction_trigger(spark, tmp_path, text_store6):
     """compact_max_files (round 10): compaction fires only when the
     store's total data-file count exceeds the threshold — file counts
     stay bounded, results equal an uncompacted twin, and a generous
@@ -302,13 +332,12 @@ def test_size_based_compaction_trigger(spark, tmp_path):
 
     docs = _docs(spark)
     a_path = str(tmp_path / "sized")
-    b_path = str(tmp_path / "plain")
+    b_path = text_store6
     c_path = str(tmp_path / "lofty")
     sa = TextIndexStream(spark, a_path, compact_max_files=25)
-    sb = TextIndexStream(spark, b_path)
     sc = TextIndexStream(spark, c_path, compact_max_files=100_000)
     for i in range(6):
-        for s in (sa, sb, sc):
+        for s in (sa, sc):
             s.process_batch(docs.filter(f"doc_id % 6 = {i}"), i)
     q = "fast table scan query"
     got = [(r.doc_id, r.score)
@@ -399,3 +428,57 @@ def test_compacting_marker_makes_race_retryable(spark, tmp_path):
     compact_index(spark, path)
     assert not _path_exists(spark, f"{path}/{COMPACTING_MARKER}")
     assert bm25_topk_indexed(spark, path, "fast table scan query", k=3).count() > 0
+
+
+@pytest.mark.parametrize("kind", ["text", "dedup"])
+def test_stream_recovers_crashed_compaction(
+    spark, tmp_path, kind, text_store6, dedup_store5
+):
+    """A compaction pass that crashed between its two renames leaves a
+    table as `<t>__old` (beside a partial `<t>__compact`) under the
+    `_compacting` marker.  The stream's next `process_batch` repairs the
+    store before its first read and carries on with every committed
+    batch, instead of raising StoreCompactingError on every batch until
+    someone reruns the compaction by hand."""
+    import os
+
+    from redistimeseries_spark.pipeline.retrieval import (
+        TextIndexStream,
+        read_index_stats,
+    )
+    from redistimeseries_spark.pipeline.streaming_dedup import DedupStream
+    from redistimeseries_spark.store_files import COMPACTING_MARKER
+
+    docs = _docs(spark)
+    path = str(tmp_path / kind)
+    if kind == "text":
+        shutil.copytree(text_store6, path)
+        stream = TextIndexStream(spark, path)
+        crashed = ("postings", "batches")
+        # 6 committed batches hold every doc; batch 6 adds new ids
+        batch = docs.filter("doc_id < 40").withColumn(
+            "doc_id", F.col("doc_id") + 10_000
+        )
+        n_docs = docs.count() + batch.count()
+    else:
+        shutil.copytree(dedup_store5, path)
+        stream = DedupStream(spark, path, verify_threshold=0.5)
+        crashed = ("fps", "batches")
+        batch = docs.filter("doc_id % 6 = 5")
+    for sub in crashed:
+        os.rename(f"{path}/{sub}", f"{path}/{sub}__old")
+        os.makedirs(f"{path}/{sub}__compact")
+    open(f"{path}/{COMPACTING_MARKER}", "w").close()
+
+    stream.process_batch(batch, 6 if kind == "text" else 5)
+    assert not os.path.exists(f"{path}/{COMPACTING_MARKER}")
+    for sub in crashed:
+        assert os.path.exists(f"{path}/{sub}")
+        assert not os.path.exists(f"{path}/{sub}__old")
+        assert not os.path.exists(f"{path}/{sub}__compact")
+    if kind == "text":
+        assert read_index_stats(spark, path).collect()[0].n_docs == n_docs
+    else:
+        done = {r.batch_id for r in stream.completed_batches().collect()}
+        assert done == set(range(6))
+        assert stream.decisions().count() == docs.count()

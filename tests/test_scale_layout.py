@@ -122,7 +122,8 @@ def test_nrange_multiagg_single_scan(spark, tmp_path):
     regardless of key count: the former shape unioned one ts_range branch
     per key (10 keys = 10 scan subtrees = 10 passes over 100 TB); the
     single-pass plan has exactly one scan and one (key, bucket) hash
-    aggregation, plus the pivot's."""
+    aggregation, plus the pivot's.  twa and EMPTY specs run the same one
+    stage, so their scan count does not grow with the distinct specs."""
     from redistimeseries_spark.operators.nrange import ts_nrange
 
     path = str(tmp_path / "facts")
@@ -143,6 +144,32 @@ def test_nrange_multiagg_single_scan(spark, tmp_path):
     row = {r.ts: r for r in df.collect()}[0]
     assert row.k0_min == 0.0 and row.k0_max == 9.0  # k0: values t+0, t in 0..9
     assert row.k1_avg == sum(1 + t for t in range(10)) / 10
+
+    # twa and EMPTY specs take the same single stage: the scan count is
+    # that of ONE key spec holding the union, however many distinct
+    # specs the keys carry (a per-spec branch would add scans per spec)
+    twa_specs = {
+        k: [["twa"], ["twa", "min"], ["avg", "twa"], ["count_nan", "twa"]][i % 4]
+        for i, k in enumerate(keys)
+    }
+    union = ["twa", "min", "avg", "count_nan"]
+    for kw in ({}, {"empty": True}):
+        one = _plan(ts_nrange(
+            facts, keys, agg_specs={k: union for k in keys}, bucket_dur=1000, **kw
+        )).count("Scan parquet")
+        many = _plan(ts_nrange(
+            facts, keys, agg_specs=twa_specs, bucket_dur=1000, **kw
+        )).count("Scan parquet")
+        assert many == one <= 4, (kw, many, one)
+    empty_specs = {
+        k: [["min"], ["sum", "last"], ["count_all"]][i % 3]
+        for i, k in enumerate(keys)
+    }
+    plan = _plan(ts_nrange(
+        facts, keys, agg_specs=empty_specs, bucket_dur=1000, empty=True
+    ))
+    # the aggregation and the EMPTY spine read the facts once each
+    assert plan.count("Scan parquet") == 2, plan
 
 
 def test_session_stats_chunk_local_plan(spark):
