@@ -719,8 +719,8 @@ def q_mrange_max_1h(spark, sf_dir):
 
 def q_mrange_twa(spark, sf_dir):
     """TS.MRANGE FILTER type=view AGGREGATION twa 2h — the trapezoid
-    integration runs per matched series after the broadcast label
-    semi-join; same single-window JVM plan as TS.RANGE twa."""
+    integration runs per matched series after the driver-side label
+    match's `key IN` filter; same single-window JVM plan as TS.RANGE twa."""
     st = _store(spark, sf_dir)
     return ts_mrange(
         st.samples, st.labels, ["type=view"], D14, D21,

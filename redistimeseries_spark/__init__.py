@@ -12,8 +12,8 @@ Data model (SURVEY.md §1.5):
 
 Scale notes: samples are stored sorted by (key, ts) so Parquet row-group
 min/max stats give the same time-pruning the reference's chunk rax-seek does
-(src/series_iterator.c:21-56).  Label filters are a broadcast semi-join
-(labels << samples).  Per-series operators groupBy/window on `key`, which
+(src/series_iterator.c:21-56).  Label filters are answered on the driver
+from a label index, and reach the samples scan as a `key IN (...)` filter.  Per-series operators groupBy/window on `key`, which
 shuffles once and parallelizes per series — the Spark-native replacement for
 the reference's LibMR shard fan-out (src/libmr_commands.c).
 """

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from redistimeseries_spark import MAX_TS, MIN_TS
-from redistimeseries_spark.operators.labels import matched_keys, query_labels
+from redistimeseries_spark.operators.labels import LabelIndex, arrow_frame, key_in
 from redistimeseries_spark.operators.multi import ts_mget, ts_mrange
 from redistimeseries_spark.operators.nrange import ts_nrange
 from redistimeseries_spark.operators.range_query import ts_range
@@ -143,6 +143,14 @@ class TimeSeriesEngine:
         # cache gives the facade the same O(1): consulted by _last, kept
         # fresh by incrby's own writes, invalidated by every other mutation
         self._last_cache: dict[str, tuple[int, float]] = {}
+        # retention series' running last sample (ts, value) over the stored
+        # and queued writes, None while empty: the anchor of the add-time
+        # retention check (`_admit`); dropped wherever the stored samples
+        # change outside the fold of the writes it has judged
+        self._horizon: dict[str, tuple[int, float] | None] = {}
+        # the label index over the catalog; None until the next label query
+        # after a create, alter, drop or rename
+        self._labels: LabelIndex | None = None
 
     # ---- DDL ------------------------------------------------------------
     def create(
@@ -173,6 +181,9 @@ class TimeSeriesEngine:
             ignore_max_val_diff=ignore_max_val_diff,
         )
         self.series[key] = cfg
+        if cfg.retention_ms > 0:
+            self._horizon[key] = None  # a new series holds no samples
+        self._labels = None
         # COMPACTION_POLICY auto-rules (src/module.c:1085-1093)
         for r in self.auto_rules:
             dest = f"{key}_{r.agg}_{r.bucket_ms}"
@@ -189,8 +200,11 @@ class TimeSeriesEngine:
             cfg.retention_ms = parse_duration_ms(retention)
         if labels is not None:
             cfg.labels = dict(labels)  # full relabel, reindexed (src/module.c:1252)
+            self._labels = None
         if duplicate_policy is not None:
             cfg.duplicate_policy = duplicate_policy
+        if retention is not None or duplicate_policy is not None:
+            self._horizon.pop(key, None)
         return cfg
 
     def create_rule(self, src: str, dest: str, agg: str, bucket, align_ts=0):
@@ -231,8 +245,7 @@ class TimeSeriesEngine:
             .localCheckpoint()
         )
         self._frozen_dests.update(dest_keys)
-        for k in dest_keys:
-            self._last_cache.pop(k, None)
+        self._forget(*dest_keys)
 
     def delete_rule(self, src: str, dest: str):
         hit = [r for r in self.rules if r.src_key == src and r.dest_key == dest]
@@ -260,8 +273,9 @@ class TimeSeriesEngine:
             if c.src_key == key:
                 c.src_key = None
         del self.series[key]
+        self._labels = None
         self._frozen_dests.discard(key)
-        self._last_cache.pop(key, None)
+        self._forget(key)
         self._samples = self._samples.filter(F.col("key") != key)
 
     def rename(self, old: str, new: str) -> None:
@@ -286,8 +300,8 @@ class TimeSeriesEngine:
             # Redis RENAME clobbers the destination key — DEL semantics
             self.drop(new)
         del self.series[old]
-        self._last_cache.pop(old, None)
-        self._last_cache.pop(new, None)
+        self._labels = None
+        self._forget(old, new)
         cfg.key = new
         self.series[new] = cfg
         if old in self._frozen_dests:
@@ -314,17 +328,80 @@ class TimeSeriesEngine:
             raise ValueError("TS.ADD timestamp must be >= 0")
         if key not in self.series:
             self.create(key, **create_kwargs)  # auto-create (src/module.c:1085)
+        if self.series[key].retention_ms > 0:
+            self._seed_horizon([key])
+            if not self._admit(key, ts_ms, float(value)):
+                raise ValueError("TSDB: Timestamp is older than retention")
         self._pending.append((key, ts_ms, float(value), on_duplicate))
         self._last_cache.pop(key, None)  # dup-policy fold decides at flush
+
+    def _forget(self, *keys: str) -> None:
+        """Drop the cached last samples of keys whose stored samples changed."""
+        for k in keys:
+            self._last_cache.pop(k, None)
+            self._horizon.pop(k, None)
+
+    def _ignores(self, cfg: SeriesConfig) -> bool:
+        """IGNORE applies (src/module.c:986-1023): only under a LAST policy."""
+        return (cfg.ignore_max_time_diff > 0 or cfg.ignore_max_val_diff > 0) and (
+            cfg.duplicate_policy or self.default_dup_policy
+        ) == "last"
+
+    def _admit(self, key: str, ts: int, value: float) -> bool:
+        """Judge one write of a retention series against its running last
+        sample: False when it is older than last ts - retention
+        (src/module.c:1006-1012).  An accepted newer write becomes the
+        running last sample unless IGNORE drops it — the same rules, in
+        the same order, as `flush`'s `_accepted_pending`."""
+        cfg, last = self.series[key], self._horizon[key]
+        if last is None:
+            self._horizon[key] = (ts, value)
+            return True
+        if ts < last[0] - cfg.retention_ms:
+            return False
+        ignored = (
+            self._ignores(cfg)
+            and ts - last[0] <= cfg.ignore_max_time_diff
+            and abs(value - last[1]) <= cfg.ignore_max_val_diff
+        )
+        if ts > last[0] and not ignored:
+            self._horizon[key] = (ts, value)
+        return True
+
+    def _seed_horizon(self, keys) -> None:
+        """Seed the running last sample of the retention series `_horizon`
+        lacks: from `_last_cache`, else from one aggregate job over the
+        stored samples; then judge the queued writes in arrival order."""
+        need = [k for k in keys if k not in self._horizon]
+        if not need:
+            return
+        last = {k: self._last_cache[k] for k in need if k in self._last_cache}
+        rest = [k for k in need if k not in last]
+        if rest:
+            for r in (
+                self._samples.filter(key_in(rest))
+                .groupBy("key")
+                .agg(F.max("ts"), F.max_by("value", "ts"))
+                .collect()
+            ):
+                last[r[0]] = (r[1], r[2])
+        self._horizon.update((k, last.get(k)) for k in need)
+        for k, ts, value, _ in self._pending:
+            if k in need:
+                self._admit(k, ts, value)
 
     def madd(self, triples):
         """Batched TS.ADD: per-triple result array — the resolved timestamp
         on success, the error on failure; failed triples are not ingested
-        (only successful ones replicated, src/module.c:1115-1161).  The
-        reply is built before the writes fold into the store, so a write
-        `flush` later drops — IGNORE, or older than the retention horizon,
-        where the reference replies an error — still answers with its
-        timestamp here."""
+        (only successful ones replicated, src/module.c:1115-1161).  A write
+        older than its series' last ts - retention fails here (`_admit`):
+        one aggregate query per call at most seeds the series that need
+        it, none when no series in the call has retention.  A write that
+        IGNORE drops still answers with its timestamp."""
+        triples = list(triples)
+        self._seed_horizon(
+            {k for k, _, _ in triples if k in self.series and self.series[k].retention_ms > 0}
+        )
         out = []
         for key, ts, value in triples:
             try:
@@ -365,7 +442,7 @@ class TimeSeriesEngine:
         hit = (F.col("key") == key) & F.col("ts").between(lo, hi)
         n = self._samples.filter(hit).count()
         self._samples = self._samples.filter(~hit).localCheckpoint()
-        self._last_cache.pop(key, None)
+        self._forget(key)
         return n
 
     def flush(self):
@@ -452,12 +529,7 @@ class TimeSeriesEngine:
 
         Both anchors come from one aggregate job over the stored
         samples of the keys that need them."""
-        ignore = {
-            k
-            for k, c in self.series.items()
-            if (c.ignore_max_time_diff > 0 or c.ignore_max_val_diff > 0)
-            and (c.duplicate_policy or self.default_dup_policy) == "last"
-        }
+        ignore = {k for k, c in self.series.items() if self._ignores(c)}
         retained = {k for k, c in self.series.items() if c.retention_ms > 0}
         keys = sorted({p[0] for p in self._pending} & (ignore | retained))
         if not keys:
@@ -491,6 +563,9 @@ class TimeSeriesEngine:
                 keep[i] = False
             else:
                 last[k] = max(last.get(k, ts), ts)
+        # the fold may change the stored last value an IGNORE anchor reads
+        for k in ignore.intersection(keys):
+            self._horizon.pop(k, None)
         return [p for p, m in zip(self._pending, keep) if m]
 
     def _keys_by_policy(self):
@@ -506,13 +581,16 @@ class TimeSeriesEngine:
         return self._samples
 
     @property
-    def labels_df(self) -> DataFrame:
-        rows = [
-            (cfg.key, lbl, val)
-            for cfg in self.series.values()
-            for lbl, val in cfg.labels.items()
-        ]
-        return self.spark.createDataFrame(rows or [], "key string, label string, value string")
+    def label_index(self) -> LabelIndex:
+        """The catalog's label index, built on the driver with no Spark job
+        (rebuilt on first use after a create, alter, drop or rename)."""
+        if self._labels is None:
+            self._labels = LabelIndex(
+                (cfg.key, lbl, val)
+                for cfg in self.series.values()
+                for lbl, val in cfg.labels.items()
+            )
+        return self._labels
 
     def _cfg(self, key: str) -> SeriesConfig:
         if key not in self.series:
@@ -905,22 +983,12 @@ class TimeSeriesEngine:
     def mget(self, filters: list[str], latest: bool = False, **kw) -> DataFrame:
         """TS.MGET; latest=True finalizes the open bucket for matched series
         that are compaction destinations (src/tsdb.c:1468-1501)."""
-        out = ts_mget(self.samples, self.labels_df, filters, **kw)
-        dests = sorted({r.dest_key for r in self.rules})
+        out = ts_mget(self.samples, self.label_index, filters, **kw)
+        dests = {r.dest_key for r in self.rules}
         if not dests:
             return out
-        # which dests matched the filter: a broadcast semi-join of the
-        # matched-key set against the (catalog-sized) dest list, so the
-        # collect is bounded by |rules| — never by |matched series| (at the
-        # reference's 1M-series benchmark scale, collecting every matched
-        # key in the MGET path would be a 1M-row driver materialization)
-        dest_df = self.spark.createDataFrame([(k,) for k in dests], "key string")
-        hit = sorted(
-            r.key
-            for r in matched_keys(self.labels_df, filters)
-            .join(F.broadcast(dest_df), "key", "left_semi")
-            .collect()
-        )
+        # which dests matched the filter: a driver-side set intersection
+        hit = sorted(dests.intersection(self.label_index.match(filters)))
         if not hit:
             return out
         # compaction destinations materialize from their rules in ONE pass
@@ -951,11 +1019,11 @@ class TimeSeriesEngine:
             groups[(r.agg, r.bucket_ms, r.align_ts)].append(r)
         out = None
         for (agg, bucket_ms, align), rs in groups.items():
-            mapping = self.spark.createDataFrame(
-                [(r.src_key, r.dest_key) for r in rs], "key string, __dest string"
+            mapping = arrow_frame(
+                self.spark, key=[r.src_key for r in rs], __dest=[r.dest_key for r in rs]
             )
             mat = materialize_rule(
-                self.samples.filter(F.col("key").isin([r.src_key for r in rs])),
+                self.samples.filter(key_in([r.src_key for r in rs])),
                 CompactionRule(None, "", agg, bucket_ms, align),
                 include_open=latest,
             )
@@ -1000,20 +1068,16 @@ class TimeSeriesEngine:
         samples = self._samples_with_dests(latest) if self.rules else self.samples
         # per-series retention clamps apply to every range query
         # (src/tsdb.c:1367-1374); the retentions dim is the series catalog
-        rets = [
-            (cfg.key, cfg.retention_ms)
-            for cfg in self.series.values()
-            if cfg.retention_ms > 0
-        ]
+        rets = {cfg.key: cfg.retention_ms for cfg in self.series.values() if cfg.retention_ms > 0}
         if rets:
             from redistimeseries_spark.write.retention import retention_clamp_per_key
 
             samples = retention_clamp_per_key(
                 samples,
-                self.spark.createDataFrame(rets, "key string, retention_ms long"),
+                arrow_frame(self.spark, key=list(rets), retention_ms=list(rets.values())),
             )
         return ts_mrange(
-            samples, self.labels_df, filters,
+            samples, self.label_index, filters,
             self._resolve_ts(from_ts), self._resolve_ts(to_ts), **kw,
         )
 
@@ -1049,10 +1113,7 @@ class TimeSeriesEngine:
 
         samples = self.samples
         if filters:
-            ks = matched_keys(self.labels_df, filters)
-            samples = samples.join(
-                F.broadcast(ks), "key", "left_semi"
-            )
+            samples = samples.filter(key_in(self.label_index.match(filters)))
         return ts_topk(
             samples,
             parse_duration_ms(bucket_dur),
@@ -1196,8 +1257,7 @@ class TimeSeriesEngine:
 
         samples = self.samples
         if filters:
-            ks = matched_keys(self.labels_df, filters)
-            samples = samples.join(F.broadcast(ks), "key", "left_semi")
+            samples = samples.filter(key_in(self.label_index.match(filters)))
         return ts_features(
             samples,
             parse_duration_ms(bucket_dur),
@@ -1248,13 +1308,10 @@ class TimeSeriesEngine:
         ).drop("key")
 
     def queryindex(self, filters: list[str]) -> list[str]:
-        return sorted(r.key for r in matched_keys(self.labels_df, filters).collect())
+        return self.label_index.match(filters)
 
     def querylabels(self, mode="labels", label=None, filters=None) -> list[str]:
-        col = "label" if mode == "labels" else "value"
-        return sorted(
-            r[col] for r in query_labels(self.labels_df, mode, label, filters).collect()
-        )
+        return self.label_index.query_labels(mode, label, filters)
 
     def read(self, key: str, cursor="-", min_count: int = 0, max_count: int | None = None):
         """Batch TS.READ: samples with ts >= cursor ascending; returns

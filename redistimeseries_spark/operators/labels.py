@@ -1,12 +1,33 @@
-"""Label secondary index: predicate parsing + key matching.
+"""Label secondary index: predicate parsing + a driver-side label index.
 
 Reference: src/indexer.h:29-51 predicate forms, src/indexer.c:507-565
-QueryIndex (inverted-index postings intersection).  Spark replaces the
-hand-built inverted index with filters + semi/anti-joins on the `labels`
-dimension table; Catalyst + AQE order the predicates.  The labels table is
-tiny relative to samples (one row per series per label), so every join
-against it is broadcast-able — `matched_keys` results get broadcast into
-the samples semi-join by the callers.
+QueryIndex (inverted-index postings intersection).  As in the reference,
+every label predicate is answered from an in-memory index before a sample
+is touched: `LabelIndex` maps key -> {label -> set of values} on the
+driver, and the multi-series operators scan samples with a literal
+`key IN (<matched keys>)` filter (`key_in`), which Catalyst pushes into
+the scan.  No Spark join against the labels table runs on a query path.
+
+Where the index comes from (`label_index`):
+  * a labels DataFrame (key, label, value) is read with one collect; the
+    index is kept for as long as Spark serves that frame object from the
+    same cache entry — Spark's own snapshot semantics for a cached frame,
+    which end at `unpersist` or when a write through Spark re-caches the
+    source — and an uncached frame is re-read on every call;
+  * `TimeSeriesEngine` builds its index from its own series catalog, with
+    no Spark job.
+
+Catalog-size limit: the labels table lives on the driver, a match scans
+every key of the index, and a query's matched keys travel as one SQL
+literal list.  Measured on a 4-core host: building the index of 10k
+series with 4 labels each took 43 ms and a match 7 ms (100k series:
+0.9 s and 95 ms); over 200k cached samples, the `key IN` filter plus a
+per-key aggregate ran 0.5 s at 1k matched keys, 1.1 s at 10k and 7.6 s
+at 100k (a broadcast semi-join against a key frame: 0.9 / 0.4 / 1.0 s;
+`Column.isin` alone took 0.5 s to build at 1k keys and 36 s at 100k).
+The index therefore fits fleets where one query matches up to ~10k
+series; like the reference's single-node index, it is not meant for
+label queries that match hundreds of thousands of series.
 
 Predicate forms (same surface as the reference FILTER syntax):
   l=v       series whose label l equals v
@@ -17,14 +38,19 @@ Predicate forms (same surface as the reference FILTER syntax):
   l!=(a,b)  l not in (a, b) (absent label passes)
 
 At least one inclusive predicate (=v, =(...), !=) is required, as in the
-reference (src/indexer.c:521-528).
+reference (src/indexer.c:521-528).  A key with duplicate (key, label) rows
+matches `=v`, `=(..)` and `!=` if any of its values does, and `!=v`,
+`!=(..)` and `=` only if none does; a NULL value makes the label present
+but never equals a value.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from weakref import WeakKeyDictionary
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -37,6 +63,16 @@ class LabelPredicate:
     @property
     def inclusive(self) -> bool:
         return self.op in ("eq", "in", "exists")
+
+    def holds(self, values: set | None) -> bool:
+        """The predicate on one key: `values` are the key's values of
+        `label`, None when the key lacks it."""
+        if self.op == "exists":
+            return values is not None
+        if self.op == "notexists":
+            return values is None
+        hit = values is not None and not values.isdisjoint(self.values)
+        return hit if self.op in ("eq", "in") else not hit
 
 
 def parse_filter(expr: str) -> LabelPredicate:
@@ -59,23 +95,107 @@ def parse_filter(expr: str) -> LabelPredicate:
     return LabelPredicate(label, "ne" if neg else "eq", [rhs])
 
 
+class LabelIndex:
+    """key -> {label -> set of values}; its keys are the key universe (the
+    keys holding at least one label row).  Rows with a NULL key or label
+    can never satisfy an inclusive predicate and are left out."""
+
+    def __init__(self, rows):
+        self.by_key: dict[str, dict[str, set]] = {}
+        for key, label, value in rows:
+            if key is not None and label is not None:
+                self.by_key.setdefault(key, {}).setdefault(label, set()).add(value)
+
+    def match(self, filters: list[str | LabelPredicate]) -> list[str]:
+        """TS.QUERYINDEX: the sorted keys matching every predicate."""
+        preds = [p if isinstance(p, LabelPredicate) else parse_filter(p) for p in filters]
+        if not any(p.inclusive for p in preds):
+            raise ValueError("label filter needs at least one inclusive predicate")
+        return sorted(
+            k for k, lv in self.by_key.items() if all(p.holds(lv.get(p.label)) for p in preds)
+        )
+
+    def query_labels(self, mode="labels", label=None, filters=None) -> list:
+        """TS.QUERYLABELS LABELS|VALUES lbl [FILTER ...]
+        (src/module.c:407-465): sorted distinct label names, or distinct
+        values of one label, over matching (or all) series."""
+        keys = self.match(filters) if filters else self.by_key
+        if mode == "labels":
+            out = {lbl for k in keys for lbl in self.by_key[k]}
+        elif mode == "values":
+            if label is None:
+                raise ValueError("VALUES mode needs a label")
+            out = {v for k in keys for v in self.by_key[k].get(label, ())}
+        else:
+            raise ValueError(f"bad mode {mode!r}")
+        return sorted(out, key=lambda v: (v is not None, v or ""))
+
+
+# DataFrame -> (its cache entry's identity, index)
+_INDEXES: WeakKeyDictionary = WeakKeyDictionary()
+
+
+def _cache_entry(labels: DataFrame) -> int | None:
+    """The identity of the cache entry Spark serves `labels` from, None
+    when it is not cached.  A write through Spark to a cached source
+    re-caches it under a new entry."""
+    if not labels.is_cached:
+        return None
+    jss = labels.sparkSession._jsparkSession
+    cached = jss.sharedState().cacheManager().lookupCachedData(labels._jdf)
+    if cached.isEmpty():
+        return None
+    builder = cached.get().cachedRepresentation().cacheBuilder()
+    return labels.sparkSession.sparkContext._jvm.System.identityHashCode(builder)
+
+
+def label_index(labels: DataFrame | LabelIndex) -> LabelIndex:
+    """The index of a labels frame (key, label, value): one collect, kept
+    for as long as Spark serves the frame from the same cache entry."""
+    if isinstance(labels, LabelIndex):
+        return labels
+    entry = _cache_entry(labels)
+    if entry is not None and _INDEXES.get(labels, (None,))[0] == entry:
+        return _INDEXES[labels][1]
+    t = labels.select("key", "label", "value").toArrow()
+    index = LabelIndex(zip(*(t.column(i).to_pylist() for i in range(3))))
+    if entry is not None:
+        _INDEXES[labels] = (entry, index)
+    return index
+
+
+def arrow_frame(spark: SparkSession, **columns: list) -> DataFrame:
+    """A driver-built frame of string/long columns from an Arrow table — a
+    LocalRelation, where `createDataFrame(<list>)` runs a Python worker."""
+    return spark.createDataFrame(
+        pa.table(
+            {
+                n: pa.array(v, pa.int64() if v and isinstance(v[0], int) else pa.string())
+                for n, v in columns.items()
+            }
+        )
+    )
+
+
+def _sql_str(s: str) -> str:
+    # a quote, backslash or `$` (variable substitution) goes as UTF-8 hex,
+    # which no parser setting reinterprets
+    if any(c in s for c in "'\\$"):
+        return f"CAST(X'{s.encode().hex()}' AS STRING)"
+    return f"'{s}'"
+
+
+def key_in(keys: list[str]) -> Column:
+    """`key IN (<keys>)` as one SQL literal list, parsed once on the JVM
+    (`Column.isin` costs one py4j round trip per key: 0.5 ms each)."""
+    if not keys:
+        return F.lit(False)
+    return F.expr("key IN (" + ",".join(map(_sql_str, keys)) + ")")
+
+
 def matched_keys(labels: DataFrame, filters: list[str | LabelPredicate]) -> DataFrame:
     """TS.QUERYINDEX: distinct keys matching every predicate."""
-    preds = [p if isinstance(p, LabelPredicate) else parse_filter(p) for p in filters]
-    if not any(p.inclusive for p in preds):
-        raise ValueError("label filter needs at least one inclusive predicate")
-    keys = labels.select("key").distinct()
-    for p in preds:
-        lbl = labels.filter(F.col("label") == p.label)
-        if p.op == "eq" or p.op == "in":
-            keys = keys.join(lbl.filter(F.col("value").isin(p.values)), "key", "left_semi")
-        elif p.op == "ne" or p.op == "notin":
-            keys = keys.join(lbl.filter(F.col("value").isin(p.values)), "key", "left_anti")
-        elif p.op == "exists":
-            keys = keys.join(lbl, "key", "left_semi")
-        elif p.op == "notexists":
-            keys = keys.join(lbl, "key", "left_anti")
-    return keys
+    return arrow_frame(labels.sparkSession, key=label_index(labels).match(filters))
 
 
 def query_labels(
@@ -84,28 +204,23 @@ def query_labels(
     label: str | None = None,
     filters: list[str] | None = None,
 ) -> DataFrame:
-    """TS.QUERYLABELS LABELS|VALUES lbl [FILTER ...]
-    (src/module.c:407-465): distinct label names, or distinct values of one
-    label, over matching (or all) series."""
-    df = labels
-    if filters:
-        df = df.join(F.broadcast(matched_keys(labels, filters)), "key", "left_semi")
-    if mode == "labels":
-        return df.select("label").distinct()
-    if mode == "values":
-        if label is None:
-            raise ValueError("VALUES mode needs a label")
-        return df.filter(F.col("label") == label).select("value").distinct()
-    raise ValueError(f"bad mode {mode!r}")
+    """TS.QUERYLABELS as a one-column frame (`label` or `value`)."""
+    out = label_index(labels).query_labels(mode, label, filters)
+    return arrow_frame(labels.sparkSession, **{"label" if mode == "labels" else "value": out})
 
 
 def with_labels(
-    df: DataFrame, labels: DataFrame, selected: list[str] | None = None
+    df: DataFrame, labels: DataFrame | LabelIndex, selected: list[str] | None = None
 ) -> DataFrame:
     """Attach label columns (WITHLABELS / SELECTED_LABELS) to a keyed result.
-    Missing labels surface as NULL, as the reference replies nil."""
-    lbl = labels
-    if selected is not None:
-        lbl = lbl.filter(F.col("label").isin(selected))
-    wide = lbl.groupBy("key").pivot("label", selected).agg(F.first("value"))
+    Missing labels surface as NULL, as the reference replies nil; a label
+    held more than once reports its smallest value."""
+    index = label_index(labels)
+    names = index.query_labels("labels") if selected is None else selected
+    keys = list(index.by_key)
+    cols = {
+        n: [min((v for v in index.by_key[k].get(n, ()) if v is not None), default=None) for k in keys]
+        for n in names
+    }
+    wide = arrow_frame(df.sparkSession, key=keys, **cols)
     return df.join(F.broadcast(wide), "key", "left")

@@ -8,10 +8,12 @@ Spark shapes (all one- or two-shuffle plans that hold at 100 TB):
                the reference's O(1) lastSample becomes a partial-agg scan,
                or a maintained `latest` table at ingest time (see
                streaming/compaction.py).
-  * mrange   — label match (broadcast semi-join, labels << samples) then
-               the per-series ts_range pipeline; per-series grouping is the
-               shuffle key so series parallelize across executors exactly
-               like the reference's shard fan-out (src/libmr_commands.c).
+  * mrange   — label match on the driver (operators/labels.LabelIndex,
+               the reference's in-memory index) into a literal
+               `key IN (...)` scan filter, then the per-series ts_range
+               pipeline; per-series grouping is the shuffle key so series
+               parallelize across executors exactly like the reference's
+               shard fan-out (src/libmr_commands.c).
   * groupby  — the reference's k-way heap merge + per-ts reduce
                (src/multiseries_sample_iterator.c:47-87) is just a second
                groupBy((label_value, ts)) — Spark's shuffle IS the merge.
@@ -24,7 +26,13 @@ from pyspark.sql import functions as F
 
 from redistimeseries_spark import MAX_TS, MIN_TS
 from redistimeseries_spark.functions.aggs import AGGREGATORS, sanitize
-from redistimeseries_spark.operators.labels import matched_keys, with_labels
+from redistimeseries_spark.operators.labels import (
+    LabelIndex,
+    arrow_frame,
+    key_in,
+    label_index,
+    with_labels,
+)
 from redistimeseries_spark.operators.range_query import ts_range
 
 # (bucket aggregator, GROUPBY reducer) pairs that commute: the two-stage
@@ -35,7 +43,7 @@ _FUSABLE = {("sum", "sum"), ("min", "min"), ("max", "max")}
 
 def ts_mget(
     samples: DataFrame,
-    labels: DataFrame,
+    labels: DataFrame | LabelIndex,
     filters: list[str],
     selected_labels: list[str] | None = None,
     with_labels_flag: bool = False,
@@ -48,28 +56,26 @@ def ts_mget(
 
     latest_table: an ingest-maintained (key, ts, value) last-sample table
     (streaming/ingest.StreamingStore maintains one per micro-batch); when
-    given, MGET is a semi-join against |keys| rows — the analogue of the
+    given, MGET is a key filter over |keys| rows — the analogue of the
     reference's O(1) series->lastSample read — instead of a full samples
     scan (7-23 s vs 1.0 s at 100M rows, BASELINE.md)."""
-    keys = matched_keys(labels, filters)
+    index = label_index(labels)
+    matched = key_in(index.match(filters))
     if latest_table is not None:
-        out = latest_table.select("key", "ts", "value").join(
-            F.broadcast(keys), "key", "left_semi"
-        )
+        out = latest_table.select("key", "ts", "value").filter(matched)
     else:
-        df = samples.join(F.broadcast(keys), "key", "left_semi")
-        out = df.groupBy("key").agg(
+        out = samples.filter(matched).groupBy("key").agg(
             F.max("ts").alias("ts"),
             F.max_by("value", "ts").alias("value"),
         )
     if with_labels_flag or selected_labels is not None:
-        out = with_labels(out, labels, selected_labels)
+        out = with_labels(out, index, selected_labels)
     return out
 
 
 def ts_mrange(
     samples: DataFrame,
-    labels: DataFrame,
+    labels: DataFrame | LabelIndex,
     filters: list[str],
     start: int = MIN_TS,
     end: int = MAX_TS,
@@ -98,15 +104,17 @@ def ts_mrange(
     series' value is NaN reduces to NaN (count reducers: 0)
     (src/multiseries_agg_dup_sample_iterator.c:46-59).
     """
-    keys = matched_keys(labels, filters)
-    df = samples.join(F.broadcast(keys), "key", "left_semi")
+    index = label_index(labels)
+    keys = index.match(filters)
+    df = samples.filter(key_in(keys))
     out = ts_range(df, start, end, **range_kwargs)
+    spark = samples.sparkSession
 
     if groupby is None:
         if not exclude_empty:
-            out = F.broadcast(keys).join(out, "key", "left")
+            out = F.broadcast(arrow_frame(spark, key=keys)).join(out, "key", "left")
         if with_labels_flag or selected_labels is not None:
-            out = with_labels(out, labels, selected_labels)
+            out = with_labels(out, index, selected_labels)
         return out
 
     if reduce is None:
@@ -117,8 +125,11 @@ def ts_mrange(
     aggs = range_kwargs.get("aggregations")
     vcol = "value" if not aggs else sanitize(aggs if isinstance(aggs, str) else aggs[0])
 
-    grp_lbl = labels.filter(F.col("label") == groupby).select(
-        "key", F.col("value").alias("__grpval")
+    # the group map: one (key, group value) row per matched key and value
+    # of the GROUPBY label; keys without it join no group
+    pairs = [(k, v) for k in keys for v in index.by_key[k].get(groupby, ())]
+    grp_lbl = arrow_frame(
+        spark, key=[k for k, _ in pairs], __grpval=[v for _, v in pairs]
     )
     builder, _ = AGGREGATORS[reduce]
     if builder is None:
@@ -171,11 +182,12 @@ def ts_mrange(
     # __source__ the comma-joined keys of ALL group members (the whole
     # matched group, not per-timestamp contributors); sorted here for
     # determinism where the reference follows index iteration order.  The
-    # membership table is one row per group — broadcast.
-    members = (
-        keys.join(F.broadcast(grp_lbl), "key")
-        .groupBy("__grpval")
-        .agg(F.concat_ws(",", F.sort_array(F.collect_set("key"))).alias("__source__"))
+    # membership table is one row per group, built on the driver.
+    groups: dict[str, list[str]] = {}
+    for k, v in pairs:
+        groups.setdefault(v, []).append(k)
+    members = arrow_frame(
+        spark, __grpval=list(groups), __source__=[",".join(ks) for ks in groups.values()]
     )
     return red.join(F.broadcast(members), "__grpval").select(
         name, "ts", vcol, F.lit(reduce).alias("__reducer__"), "__source__"

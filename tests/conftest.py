@@ -1,3 +1,4 @@
+import itertools
 import math
 import os
 import sys
@@ -10,6 +11,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from redistimeseries_spark import get_spark
 
 NAN = float("nan")
+_JOB_GROUPS = itertools.count()
 
 
 @pytest.fixture(scope="session")
@@ -30,6 +32,18 @@ def samples_df(spark):
         return spark.createDataFrame(rows, "key string, ts long, value double")
 
     return make
+
+
+def count_jobs(spark, fn):
+    """(fn(), the number of Spark jobs fn ran), counted through a job group."""
+    sc = spark.sparkContext
+    group = f"count_jobs_{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def feq(a, b, tol=1e-9):

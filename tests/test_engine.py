@@ -6,6 +6,8 @@ import math
 
 import pytest
 
+from tests.conftest import count_jobs
+
 from redistimeseries_spark.engine import (
     TimeSeriesEngine,
     parse_compaction_policy,
@@ -188,17 +190,28 @@ def test_retention_clamps_range(eng):
     assert [r.ts for r in out] == [10_000]
 
 
+def _too_old(reply) -> bool:
+    return isinstance(reply, ValueError) and str(reply) == (
+        "TSDB: Timestamp is older than retention"
+    )
+
+
 def test_write_older_than_retention_rejected(eng):
-    """A write older than the series' last ts - retention is dropped at
-    flush (src/module.c:1006-1012): it reaches neither the series nor its
-    compaction dest, and deleting the newer samples does not uncover it.
-    Within one flush the horizon follows the writes accepted before."""
+    """A write older than the series' last ts - retention is rejected
+    (src/module.c:1006-1012): MADD replies the reference's error for it,
+    and it reaches neither the series nor its compaction dest; deleting
+    the newer samples does not uncover it.  Within one call the horizon
+    follows the writes accepted before.  `flush` keeps the same check for
+    writes queued before the series had retention."""
     eng.create("s", retention=1000)
     eng.create("d")
     eng.create_rule("s", "d", "count", 10_000)
     eng.add("s", 5000, 1.0)
     eng.flush()
-    assert eng.madd([("s", 100, 7.0)]) == [100]  # replied before the fold
+    (reply,) = eng.madd([("s", 100, 7.0)])
+    assert _too_old(reply)
+    with pytest.raises(ValueError, match="older than retention"):
+        eng.add("s", 3999, 7.0)
     assert [(r.ts, r.value) for r in eng.range("d", latest=True).collect()] == [
         (0, 1.0)
     ]
@@ -206,10 +219,37 @@ def test_write_older_than_retention_rejected(eng):
     assert eng.range("s").collect() == []
     # empty series: 9000 is accepted and moves the horizon to 8000, so
     # 7500 is rejected and 8500 accepted
-    eng.madd([("s", 9000, 1.0), ("s", 7500, 2.0), ("s", 8500, 3.0)])
+    out = eng.madd([("s", 9000, 1.0), ("s", 7500, 2.0), ("s", 8500, 3.0)])
+    assert out[0] == 9000 and _too_old(out[1]) and out[2] == 8500
     assert [(r.ts, r.value) for r in eng.range("d", latest=True).collect()] == [
         (0, 2.0)
     ]
+    # queued while "t" had no retention: only flush can judge 100
+    eng.create("t")
+    assert eng.madd([("t", 5000, 1.0), ("t", 100, 2.0)]) == [5000, 100]
+    eng.alter("t", retention=1000)
+    assert [r.ts for r in eng.range("t").collect()] == [5000]
+
+
+def test_madd_retention_check_job_budget(spark, eng):
+    """The add-time horizon costs at most one aggregate query per MADD
+    call (seeded for every retention series in the call at once, then
+    advanced on the driver) — two Spark jobs under AQE, its shuffle stage
+    and its result — and no job when no series in the call has
+    retention."""
+    for k in ("r1", "r2", "r3"):
+        eng.create(k, retention=1000)
+    eng.create("plain")
+    eng.madd([(k, 5000, 1.0) for k in ("r1", "r2", "r3", "plain")])
+    eng.flush()
+    for k in ("r1", "r2", "r3"):
+        eng.delete(k, 0, 0)  # forgets the horizon: the next call seeds it
+    triples = [(k, ts, 1.0) for ts in (6000, 100, 7000) for k in ("r1", "r2", "r3")]
+    out, jobs = count_jobs(spark, lambda: eng.madd(triples))
+    assert jobs <= 2, jobs
+    assert [_too_old(r) for r in out] == [False] * 3 + [True] * 3 + [False] * 3
+    out, jobs = count_jobs(spark, lambda: eng.madd([("plain", 1, 1.0), ("new", 2, 2.0)]))
+    assert (out, jobs) == ([1, 2], 0)
 
 
 def test_del_and_info(eng):

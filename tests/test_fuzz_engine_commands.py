@@ -59,12 +59,7 @@ class Sim:
         self.cfg[key] = (policy, retention, mtd, mvd)
         self.store[key] = {}
 
-    def add(self, key, ts, value, on_dup=None):
-        if ts < 0:
-            raise ValueError("negative ts")
-        self.pending.append((key, ts, float(value), on_dup))
-
-    def flush(self):
+    def _judge(self, kept, last, key, ts, v) -> bool:
         # IGNORE (src/module.c:986-1023) judges each write once, on
         # arrival, and only under a LAST series policy: a write newer than
         # the last kept sample is dropped when it lies within both diffs
@@ -73,21 +68,42 @@ class Sim:
         # series' stored last sample.  A write older than the series'
         # last ts - retention is rejected (src/module.c:1006-1012); the
         # last ts moves only on accepted writes.
+        policy, retention, mtd, mvd = self.cfg[key]
+        if policy == "last" and (mtd > 0 or mvd > 0):
+            at, av = kept.get(key, (None, None))
+            if at is None or ts > at:
+                if at is not None and ts - at <= mtd and abs(v - av) <= mvd:
+                    return False  # NaN v: abs(NaN-av)<=mvd is False -> kept
+                kept[key] = (ts, v)
+        if retention > 0 and key in last and ts < last[key] - retention:
+            return False
+        last[key] = max(last.get(key, ts), ts)
+        return True
+
+    def _anchors(self):
         kept = {k: (max(s), s[max(s)]) for k, s in self.store.items() if s}
-        last = {k: max(s) for k, s in self.store.items() if s}
+        return kept, {k: t for k, (t, _) in kept.items()}
+
+    def add(self, key, ts, value, on_dup=None):
+        if ts < 0:
+            raise ValueError("negative ts")
+        # the retention reject answers the write itself, judged after
+        # every write queued before it
+        retention = self.cfg[key][1]
+        if retention > 0:
+            kept, last = self._anchors()
+            for k, t, v, _ in self.pending:
+                self._judge(kept, last, k, t, v)
+            if key in last and ts < last[key] - retention:
+                raise ValueError("older than retention")
+        self.pending.append((key, ts, float(value), on_dup))
+
+    def flush(self):
+        kept, last = self._anchors()
         for key, ts, v, od in self.pending:
-            policy, retention, mtd, mvd = self.cfg[key]
-            if policy == "last" and (mtd > 0 or mvd > 0):
-                at, av = kept.get(key, (None, None))
-                if at is None or ts > at:
-                    if at is not None and ts - at <= mtd and abs(v - av) <= mvd:
-                        continue  # NaN v: abs(NaN-av)<=mvd is False -> kept
-                    kept[key] = (ts, v)
-            if retention > 0 and key in last and ts < last[key] - retention:
-                continue
-            last[key] = max(last.get(key, ts), ts)
-            s = self.store[key]
-            s[ts] = _merge(s[ts], v, od or policy) if ts in s else v
+            if self._judge(kept, last, key, ts, v):
+                s = self.store[key]
+                s[ts] = _merge(s[ts], v, od or self.cfg[key][0]) if ts in s else v
         self.pending.clear()
 
     def last(self, key):
@@ -172,14 +188,27 @@ def test_fuzz_command_sequences(spark, seed):
         op = rng.random()
         if op < 0.45:
             od = rng.choice(POLICIES) if rng.random() < 0.3 else None
-            eng.add(k, rand_ts(), (v := rand_val()), on_duplicate=od)
-            sim.add(k, eng._pending[-1][1], v, od)
+            ts, v = rand_ts(), rand_val()
+            err_e = err_s = False
+            try:
+                eng.add(k, ts, v, on_duplicate=od)
+            except ValueError:
+                err_e = True
+            try:
+                sim.add(k, ts, v, od)
+            except ValueError:
+                err_s = True
+            assert err_e == err_s, (step, k, ts)
         elif op < 0.60:
             triples = [(rng.choice(keys), rand_ts(), rand_val())
                        for _ in range(3)]
-            eng.madd(triples)
-            for kk, t, v in triples:
-                sim.add(kk, t, v)
+            replies = eng.madd(triples)
+            for (kk, t, v), reply in zip(triples, replies):
+                try:
+                    sim.add(kk, t, v)
+                    assert reply == t, (step, kk, t, reply)
+                except ValueError:
+                    assert isinstance(reply, ValueError), (step, kk, t, reply)
         elif op < 0.78:
             delta = float(rng.randrange(-5, 6))
             explicit = rng.random() < 0.5
