@@ -31,7 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from redistimeseries_spark import MAX_TS, MIN_TS
-from redistimeseries_spark.operators.labels import LabelIndex, arrow_frame, key_in
+from redistimeseries_spark.functions.filters import key_in
+from redistimeseries_spark.operators.labels import LabelIndex, arrow_frame
 from redistimeseries_spark.operators.multi import ts_mget, ts_mrange
 from redistimeseries_spark.operators.nrange import ts_nrange
 from redistimeseries_spark.operators.range_query import ts_range
@@ -240,7 +241,7 @@ class TimeSeriesEngine:
         # keeps one (src/tsdb.c:622-660 upserts into the same chunk).
         dest_keys = [r.dest_key for r in rules]
         self._samples = (
-            self._samples.filter(~F.col("key").isin(dest_keys))
+            self._samples.filter(~key_in(dest_keys))
             .unionByName(frozen)
             .localCheckpoint()
         )
@@ -501,7 +502,7 @@ class TimeSeriesEngine:
             )
         parts = []
         for policy, keys in self._keys_by_policy():
-            sub = merged.filter(F.col("key").isin(keys))
+            sub = merged.filter(key_in(keys))
             parts.append(resolve_duplicates(sub, policy))
         out = parts[0]
         for p in parts[1:]:
@@ -536,7 +537,7 @@ class TimeSeriesEngine:
             return self._pending
         anchors = {
             r.key: (r.t, r.v)
-            for r in self._samples.filter(F.col("key").isin(keys))
+            for r in self._samples.filter(key_in(keys))
             .groupBy("key")
             .agg(F.max("ts").alias("t"), F.max_by("value", "ts").alias("v"))
             .collect()
@@ -1001,7 +1002,7 @@ class TimeSeriesEngine:
             .groupBy("key")
             .agg(F.max("ts").alias("ts"), F.max_by("value", "ts").alias("value"))
         )
-        return out.filter(~F.col("key").isin(hit)).unionByName(
+        return out.filter(~key_in(hit)).unionByName(
             dest_latest.select("key", "ts", "value")
         )
 
@@ -1039,7 +1040,7 @@ class TimeSeriesEngine:
         # into a non-empty dest series)
         dirty = [r.dest_key for r in rules if r.dest_key in self._frozen_dests]
         if dirty:
-            stored = self.samples.filter(F.col("key").isin(dirty))
+            stored = self.samples.filter(key_in(dirty))
             kept = stored.join(out.select("key", "ts"), ["key", "ts"], "left_anti")
             out = out.unionByName(kept)
         return out
@@ -1058,7 +1059,7 @@ class TimeSeriesEngine:
         dirty = [r.dest_key for r in self.rules if r.dest_key in self._frozen_dests]
         if dirty:
             # stored rows of re-ruled dests ride in via _dest_samples' merge
-            base = base.filter(~F.col("key").isin(dirty))
+            base = base.filter(~key_in(dirty))
         return base.unionByName(self._dest_samples(self.rules, latest))
 
     def mrange(self, filters: list[str], from_ts="-", to_ts="+",

@@ -10,7 +10,9 @@ Reference: src/compaction.c class tables (571-979).  Semantics replicated:
   * var.s / std.s with n == 1 return 0, not NULL (src/compaction.c:503-516).
   * first/last = value at min/max timestamp among valid samples,
     direction-independent (src/compaction.c:787-808).
-  * twa is not a groupBy-able expression — see operators/twa.py.
+  * twa has no single-column builder: its per-bucket partials ride the
+    same groupBy (operators/twa.twa_partials) and its value reads the
+    neighbouring buckets (operators/twa.with_twa).
 
 All outputs are double (the reference's only value type).  Everything here
 is a built-in JVM expression, so bucketed aggregation runs inside

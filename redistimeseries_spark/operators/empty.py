@@ -12,11 +12,12 @@ Reference (src/filter_iterator.c:389-443, 686-799):
     sample (src/filter_iterator.c:473-506) and `twa` = neighbor
     interpolation (operators/twa.py).
 
-Spark shape: per-key bucket spine via sequence()/explode (bounded by the
-observed first/last bucket, so generated rows ≈ range/dur per key, never
-unbounded), left join of the aggregated rows, window LOCF for `last`.
-The spine join is a shuffle on (key, bucket) that AQE coalesces; at 100 TB
-the spine side is tiny relative to samples.
+Spark shape: the spine comes from the aggregated rows themselves — each
+bucket row explodes into itself and the gap up to the key's next bucket
+(`sequence(__bucket, lead(__bucket) - dur, dur)`), so generated rows ≈
+range/dur per key and the source is read once, by the aggregation.
+NaN-only buckets are aggregated rows too, so they bound the span.  A
+window LOCF fills `last`.
 """
 
 from __future__ import annotations
@@ -27,37 +28,43 @@ from pyspark.sql import functions as F
 from redistimeseries_spark.functions.aggs import empty_value, sanitize
 
 
-def fill_empty_buckets(
-    agg_df: DataFrame,
-    samples_b: DataFrame,
-    aggs: list[str],
-    dur: int,
-    align_ts: int,
-    start: int,
-    end: int,
-) -> DataFrame:
-    """agg_df: groupBy(key, __bucket) result incl. __n_valid (0 for NaN-only
-    buckets); samples_b: the filtered samples with __bucket (drives the spine
-    bounds, NaN rows included — a leading NaN-only bucket is still emitted)."""
-    spine = (
-        samples_b.groupBy("key")
-        .agg(F.min("__bucket").alias("__lo"), F.max("__bucket").alias("__hi"))
+def empty_spine(agg_df: DataFrame, dur: int) -> DataFrame:
+    """agg_df (one row per (key, __bucket) holding a sample) with a row
+    for every gap bucket between a key's first and last bucket; a gap
+    row is NULL in every column but key and __bucket."""
+    w = Window.partitionBy("key").orderBy("__bucket")
+    step = F.lit(dur).cast("long")
+    cols = [c for c in agg_df.columns if c not in ("key", "__bucket")]
+    return (
+        agg_df.withColumn("__next", F.lead("__bucket").over(w))
+        .select(
+            "*",
+            F.posexplode(
+                F.sequence(
+                    F.col("__bucket"),
+                    F.coalesce(F.col("__next") - step, F.col("__bucket")),
+                    step,
+                )
+            ).alias("__pos", "__gap"),
+        )
         .select(
             "key",
-            F.explode(
-                F.sequence(F.col("__lo"), F.col("__hi"), F.lit(dur).cast("long"))
-            ).alias("__bucket"),
+            F.col("__gap").alias("__bucket"),
+            *[F.when(F.col("__pos") == 0, F.col(c)).alias(c) for c in cols],
         )
     )
-    joined = spine.join(agg_df, ["key", "__bucket"], "left")
 
+
+def fill_empty_buckets(spine: DataFrame, aggs: list[str]) -> DataFrame:
+    """The per-aggregator finalizeEmpty over `empty_spine` rows:
+    `__n_valid` is 0 for a NaN-only bucket and NULL for a gap."""
     valid = F.col("__n_valid") > 0
     cols = []
     w = Window.partitionBy("key").orderBy("__bucket").rowsBetween(Window.unboundedPreceding, 0)
     for a in aggs:
         name = sanitize(a)
         if a == "twa":
-            # twa column joined in range_query covers the whole spine
+            # operators/twa.with_twa fills every row of the spine
             cols.append(F.col(name))
         elif a == "last":
             locf = F.last(F.when(valid, F.col(name)), ignorenulls=True).over(w)
@@ -71,4 +78,4 @@ def fill_empty_buckets(
             cols.append(
                 F.when(valid, F.col(name)).otherwise(F.lit(empty_value(a))).alias(name)
             )
-    return joined.select("key", "__bucket", *cols).withColumn("__n_valid", F.lit(1))
+    return spine.select("key", "__bucket", *cols)

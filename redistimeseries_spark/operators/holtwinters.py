@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 from redistimeseries_spark.materialize import materialize
 
 from redistimeseries_spark import MAX_TS, MIN_TS
+from redistimeseries_spark.functions.filters import key_in
 
 MODES = ("additive", "multiplicative")
 
@@ -101,7 +102,7 @@ def ts_holt_winters(
     df = samples.filter(~F.isnan("value"))
     if keys is not None:
         klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(F.col("key").isin(klist))
+        df = df.filter(key_in(klist))
     if start > MIN_TS:
         df = df.filter(F.col("ts") >= F.lit(start))
     if end < MAX_TS:

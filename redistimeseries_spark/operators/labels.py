@@ -5,8 +5,8 @@ QueryIndex (inverted-index postings intersection).  As in the reference,
 every label predicate is answered from an in-memory index before a sample
 is touched: `LabelIndex` maps key -> {label -> set of values} on the
 driver, and the multi-series operators scan samples with a literal
-`key IN (<matched keys>)` filter (`key_in`), which Catalyst pushes into
-the scan.  No Spark join against the labels table runs on a query path.
+`key IN (<matched keys>)` filter (`functions/filters.key_in`), which
+Catalyst pushes into the scan.  No Spark join against the labels table runs on a query path.
 
 Where the index comes from (`label_index`):
   * a labels DataFrame (key, label, value) is read with one collect; the
@@ -50,7 +50,7 @@ from dataclasses import dataclass
 from weakref import WeakKeyDictionary
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -175,22 +175,6 @@ def arrow_frame(spark: SparkSession, **columns: list) -> DataFrame:
             }
         )
     )
-
-
-def _sql_str(s: str) -> str:
-    # a quote, backslash or `$` (variable substitution) goes as UTF-8 hex,
-    # which no parser setting reinterprets
-    if any(c in s for c in "'\\$"):
-        return f"CAST(X'{s.encode().hex()}' AS STRING)"
-    return f"'{s}'"
-
-
-def key_in(keys: list[str]) -> Column:
-    """`key IN (<keys>)` as one SQL literal list, parsed once on the JVM
-    (`Column.isin` costs one py4j round trip per key: 0.5 ms each)."""
-    if not keys:
-        return F.lit(False)
-    return F.expr("key IN (" + ",".join(map(_sql_str, keys)) + ")")
 
 
 def matched_keys(labels: DataFrame, filters: list[str | LabelPredicate]) -> DataFrame:

@@ -26,10 +26,10 @@ from pyspark.sql import functions as F
 
 from redistimeseries_spark import MAX_TS, MIN_TS
 from redistimeseries_spark.functions.aggs import AGGREGATORS, sanitize
+from redistimeseries_spark.functions.filters import key_in
 from redistimeseries_spark.operators.labels import (
     LabelIndex,
     arrow_frame,
-    key_in,
     label_index,
     with_labels,
 )
@@ -262,7 +262,7 @@ def ts_topk(
     df = samples
     if keys is not None:
         klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(F.col("key").isin(klist))
+        df = df.filter(key_in(klist))
     if start > MIN_TS:
         df = df.filter(F.col("ts") >= F.lit(start))
     if end < MAX_TS:

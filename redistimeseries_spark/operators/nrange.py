@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from redistimeseries_spark import MAX_TS, MIN_TS
 from redistimeseries_spark.functions.aggs import sanitize
 from redistimeseries_spark.functions.buckets import report_ts
+from redistimeseries_spark.functions.filters import key_in
 from redistimeseries_spark.operators.range_query import (
     COUNT_CLASSES,
     bucket_aggregate,
@@ -112,7 +113,7 @@ def _stacked(
         for spec, spec_keys in by_spec.items():
             own = emission_rule(spec, F.col("count"))
             pred = F.when(
-                F.col("key").isin(spec_keys),
+                key_in(spec_keys),
                 F.lit(True) if own is None else own,
             ).otherwise(pred)
         out = out.filter(pred)

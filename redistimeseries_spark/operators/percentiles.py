@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from redistimeseries_spark import MAX_TS, MIN_TS
 from redistimeseries_spark.functions.buckets import bucket_start, resolve_align
+from redistimeseries_spark.functions.filters import key_in
 
 
 def ts_rolling_quantile(
@@ -142,7 +143,7 @@ def ts_bucket_percentiles(
     df = samples
     if keys is not None:
         klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(F.col("key").isin(klist))
+        df = df.filter(key_in(klist))
     if start > MIN_TS:
         df = df.filter(F.col("ts") >= F.lit(start))
     if end < MAX_TS:
@@ -213,7 +214,7 @@ def ts_mad(
     df = samples.filter(~F.isnan("value"))
     if keys is not None:
         klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(F.col("key").isin(klist))
+        df = df.filter(key_in(klist))
     if start > MIN_TS:
         df = df.filter(F.col("ts") >= F.lit(start))
     if end < MAX_TS:
@@ -308,7 +309,7 @@ def ts_outlier_mad(
     df = samples.filter(~F.isnan("value"))
     if keys is not None:
         klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(F.col("key").isin(klist))
+        df = df.filter(key_in(klist))
     if start > MIN_TS:
         df = df.filter(F.col("ts") >= F.lit(start))
     if end < MAX_TS:
@@ -415,7 +416,7 @@ def ts_value_histogram(
     df = samples.filter(~F.isnan("value"))
     if keys is not None:
         klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(F.col("key").isin(klist))
+        df = df.filter(key_in(klist))
     if start > MIN_TS:
         df = df.filter(F.col("ts") >= F.lit(start))
     if end < MAX_TS:

@@ -20,10 +20,11 @@ Everything up to the (key, bucket) aggregated frame — the pre-filters,
 the per-bucket emission rule and the finalizers — is `bucket_aggregate`,
 the one bucket-aggregation stage: TS.NRANGE (operators/nrange.py) and
 the compaction rules (streaming/compaction.py) run it too, so the rule
-for which bucket emits, and with what value, is written once.
-
-Empty-bucket (EMPTY) semantics are in operators/empty.py; time-weighted
-average in operators/twa.py.
+for which bucket emits, and with what value, is written once.  Like the
+reference's single AggregationIterator pass, it computes every
+aggregator of a bucket, twa's partials included, in one (key, bucket)
+aggregation, and derives twa (operators/twa.py) and the EMPTY spine
+(operators/empty.py) from those rows: the source is read once.
 """
 
 from __future__ import annotations
@@ -41,8 +42,9 @@ from redistimeseries_spark.functions.aggs import (
     sanitize,
 )
 from redistimeseries_spark.functions.buckets import bucket_start, report_ts, resolve_align
-from redistimeseries_spark.operators.empty import fill_empty_buckets
-from redistimeseries_spark.operators.twa import twa_buckets
+from redistimeseries_spark.functions.filters import key_in
+from redistimeseries_spark.operators.empty import empty_spine, fill_empty_buckets
+from redistimeseries_spark.operators.twa import twa_partials, with_twa
 
 # src/query_language.h:53
 MAX_TS_VALUES_FILTER = 128
@@ -63,9 +65,7 @@ def _prefiltered(samples, start, end, keys, filter_by_ts, filter_by_value):
     df = samples
     keys = _as_list(keys)
     if keys is not None:
-        df = df.filter(F.col("key") == keys[0]) if len(keys) == 1 else df.filter(
-            F.col("key").isin(keys)
-        )
+        df = df.filter(F.col("key") == keys[0] if len(keys) == 1 else key_in(keys))
     if start > MIN_TS:
         df = df.filter(F.col("ts") >= F.lit(start))
     if end < MAX_TS:
@@ -136,79 +136,64 @@ def bucket_aggregate(
     bucket = bucket_start(F.col("ts"), bucket_dur, align_ts)
     df = df.withColumn("__bucket", bucket)
 
-    plain = [a for a in aggs if a != "twa"]
-    if aggs == ["twa"] and not empty:
-        # twa-only fast path: twa_buckets already drops NaN-only buckets
-        # (it filters NaN samples before bucketing), so the base
-        # __n_valid aggregation — a second scan + SortMergeJoin — is
-        # unnecessary; the plan is scan -> window -> one aggregation.
-        out = twa_buckets(df, bucket_dur, align_ts, start, end)
-    else:
-        exprs = [agg_expr(a, F.col("value"), F.col("ts")) for a in plain]
-        # validSamplesInBucket (src/filter_iterator.c:389-401): a bucket
-        # whose samples are all NaN is treated as empty and not emitted.
-        exprs.append(
-            F.count(
-                F.when(F.col("value").isNotNull() & ~F.isnan("value"), 1)
-            ).alias("__n_valid")
-        )
-        out = df.groupBy("key", "__bucket").agg(*exprs)
+    exprs = [agg_expr(a, F.col("value"), F.col("ts")) for a in aggs if a != "twa"]
+    # validSamplesInBucket (src/filter_iterator.c:389-401): a bucket
+    # whose samples are all NaN is treated as empty and not emitted.
+    exprs.append(
+        F.count(
+            F.when(F.col("value").isNotNull() & ~F.isnan("value"), 1)
+        ).alias("__n_valid")
+    )
+    if "twa" in aggs:
+        df, partials = twa_partials(df)
+        exprs += partials
+    out = df.groupBy("key", "__bucket").agg(*exprs)
+    if empty:
+        out = empty_spine(out, bucket_dur)
+    if "twa" in aggs:
+        out = with_twa(out, bucket_dur, start, end)
 
+    if empty:
+        out = fill_empty_buckets(out, aggs)
+    else:
         # count_nan / count_all have their own isValueValid, so their
         # presence widens the bucket-emit rule (`emission_rule`)
         has_count_class = bool(set(COUNT_CLASSES) & set(aggs))
-
-        if "twa" in aggs and not empty:
-            # with a count-class aggregator, only-NaN buckets emit and twa
-            # takes its finalizeEmpty (gap interpolation) value there —
-            # the empty=True spine carries exactly those values.
-            tw = twa_buckets(
-                df, bucket_dur, align_ts, start, end, empty=has_count_class
+        if has_count_class and "last" in aggs:
+            # aggLast.finalizeEmpty returns the LOCF-carried context
+            # value (finalize_empty_last_value + LastValueReset keeping
+            # value across buckets, src/compaction.c:81-84,115-121):
+            # an emitted only-NaN bucket reports the previous bucket's
+            # last valid sample, NaN if unseeded.  Chronological window
+            # regardless of rev — the reference seeds reverse iteration
+            # to agree with forward (src/filter_iterator.c:473-506).
+            w = (
+                Window.partitionBy("key")
+                .orderBy("__bucket")
+                .rowsBetween(Window.unboundedPreceding, 0)
             )
-            out = out.join(tw, ["key", "__bucket"], "left")
-
-        if empty:
-            if "twa" in aggs:
-                tw = twa_buckets(df, bucket_dur, align_ts, start, end, empty=True)
-                out = out.join(tw, ["key", "__bucket"], "full")
-            out = fill_empty_buckets(
-                out, df, aggs, bucket_dur, align_ts, start, end
+            invalid = F.col("__n_valid") == 0
+            locf = F.last(
+                F.when(~invalid, F.col("last")), ignorenulls=True
+            ).over(w)
+            out = out.withColumn("last", locf)
+        pred = emission_rule(aggs, F.col("__n_valid"))
+        if pred is not None:
+            out = out.filter(pred)
+        if has_count_class:
+            # per-agg finalizeEmpty for aggregators whose own valid set
+            # is empty in an emitted bucket (finalize_empty_with_NAN /
+            # _ZERO; sum/count already fold to 0 in their builders; twa
+            # carries its gap interpolation, NULL where there is none)
+            out = out.withColumns(
+                {
+                    sanitize(a): F.coalesce(
+                        F.col(sanitize(a)), F.lit(empty_value(a))
+                    )
+                    for a in aggs
+                    if a not in COUNT_CLASSES
+                }
             )
-        else:
-            if has_count_class and "last" in aggs:
-                # aggLast.finalizeEmpty returns the LOCF-carried context
-                # value (finalize_empty_last_value + LastValueReset keeping
-                # value across buckets, src/compaction.c:81-84,115-121):
-                # an emitted only-NaN bucket reports the previous bucket's
-                # last valid sample, NaN if unseeded.  Chronological window
-                # regardless of rev — the reference seeds reverse iteration
-                # to agree with forward (src/filter_iterator.c:473-506).
-                w = (
-                    Window.partitionBy("key")
-                    .orderBy("__bucket")
-                    .rowsBetween(Window.unboundedPreceding, 0)
-                )
-                invalid = F.col("__n_valid") == 0
-                locf = F.last(
-                    F.when(~invalid, F.col("last")), ignorenulls=True
-                ).over(w)
-                out = out.withColumn("last", locf)
-            pred = emission_rule(aggs, F.col("__n_valid"))
-            if pred is not None:
-                out = out.filter(pred)
-            if has_count_class:
-                # per-agg finalizeEmpty for aggregators whose own valid set
-                # is empty in an emitted bucket (finalize_empty_with_NAN /
-                # _ZERO; sum/count already fold to 0 in their builders)
-                out = out.withColumns(
-                    {
-                        sanitize(a): F.coalesce(
-                            F.col(sanitize(a)), F.lit(empty_value(a))
-                        )
-                        for a in aggs
-                        if a not in COUNT_CLASSES
-                    }
-                )
     return out.select("key", "__bucket", *[sanitize(a) for a in aggs])
 
 

@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from redistimeseries_spark import MAX_TS, MIN_TS
+from redistimeseries_spark.functions.filters import key_in
 from redistimeseries_spark.functions.buckets import bucket_start, resolve_align
 
 
@@ -86,7 +87,7 @@ def _bucket_chain(
     df = samples
     if keys is not None:
         klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(F.col("key").isin(klist))
+        df = df.filter(key_in(klist))
     df = df.filter(~F.isnan("value"))
     align_ts = resolve_align(align, start, end)
     b = bucket_start(F.col("ts"), bucket_dur, align_ts)
@@ -209,7 +210,7 @@ def _key_window_chain(
     df = samples
     if keys is not None:
         klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(F.col("key").isin(klist))
+        df = df.filter(key_in(klist))
     df = df.filter(~F.isnan("value"))
     w = Window.partitionBy("key").orderBy("ts")
     prev = F.lag("value").over(w)
@@ -279,7 +280,7 @@ def ts_deriv(
     df = samples.filter(~F.isnan("value"))
     if keys is not None:
         klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(F.col("key").isin(klist))
+        df = df.filter(key_in(klist))
     if start > MIN_TS:
         df = df.filter(F.col("ts") >= F.lit(start))
     if end < MAX_TS:
@@ -424,7 +425,7 @@ def ts_predict_linear(
     df = samples.filter(~F.isnan("value"))
     if keys is not None:
         klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(F.col("key").isin(klist))
+        df = df.filter(key_in(klist))
     if start > MIN_TS:
         df = df.filter(F.col("ts") >= F.lit(start))
     if end < MAX_TS:
@@ -481,7 +482,7 @@ def ts_gaps(
     df = samples
     if keys is not None:
         klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(F.col("key").isin(klist))
+        df = df.filter(key_in(klist))
     if start > MIN_TS:
         df = df.filter(F.col("ts") >= F.lit(start))
     if end < MAX_TS:
@@ -546,7 +547,7 @@ def ts_delta(
     df = samples.filter(~F.isnan("value"))
     if keys is not None:
         klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(F.col("key").isin(klist))
+        df = df.filter(key_in(klist))
     if start > MIN_TS:
         df = df.filter(F.col("ts") >= F.lit(start))
     if end < MAX_TS:
@@ -634,7 +635,7 @@ def _last_pair(
     df = samples.filter(~F.isnan("value"))
     if keys is not None:
         klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(F.col("key").isin(klist))
+        df = df.filter(key_in(klist))
     if start > MIN_TS:
         df = df.filter(F.col("ts") >= F.lit(start))
     if end < MAX_TS:

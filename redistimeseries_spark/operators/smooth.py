@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from redistimeseries_spark.materialize import materialize
 
 from redistimeseries_spark import MAX_TS, MIN_TS
-from redistimeseries_spark.functions.filters import filter_valid_range
+from redistimeseries_spark.functions.filters import filter_valid_range, key_in
 
 EWMA_SCHEMA = "key string, ts long, ewma double"
 EWM_BAND_SCHEMA = (
@@ -566,7 +566,7 @@ def ts_lttb(
     df = samples.filter(~F.isnan("value"))
     if keys is not None:
         klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(F.col("key").isin(klist))
+        df = df.filter(key_in(klist))
     if start > MIN_TS:
         df = df.filter(F.col("ts") >= F.lit(start))
     if end < MAX_TS:

@@ -20,17 +20,29 @@ Empty / NaN-only buckets under EMPTY (src/filter_iterator.c:307-386):
   the average of the line through them evaluated at ta and tb; one-sided
   values use a sample-spacing heuristic to decide NaN vs nearest value.
 
-Spark shape: the integration is inherently sequential per series, so it runs
-as a vectorized numpy kernel inside applyInPandas grouped by key — one
-shuffle by key, series processed in parallel across executors; within a key
-the work is O(n) numpy, no Python-per-row cost.
+Spark shape: twa rides the one (key, __bucket) aggregation of
+`range_query.bucket_aggregate`, as the reference computes every
+aggregator of a bucket in one AggregationIterator pass.  `twa_partials`
+adds a valid-only lag over a (key, __bucket) window (bucket-local, so a
+hot series parallelizes across its buckets) and the per-bucket partials
+— the in-bucket trapezoid area, the first and last valid samples and the
+ts of the second and second-to-last — as conditional aggregates next to
+the plain ones.
+`with_twa` then reads each bucket's neighbours on that per-bucket frame
+(#buckets rows, never #samples) and computes the value of a bucket with
+valid samples and of an empty / NaN-only one in one column.
+
+`_twa_kernel` + `_empty_bucket_vals` (numpy, via `_twa_buckets_kernel`)
+and `_twa_key_window_expr` (a bare-key window plan) are independent
+formulations kept as differential twins for the tests and the hot-series
+probe.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from redistimeseries_spark import MAX_TS
@@ -117,231 +129,60 @@ def _empty_bucket_vals(
     return out
 
 
-def twa_buckets_expr(
-    df: DataFrame, dur: int, start: int, end: int
-) -> DataFrame:
-    """Pure-JVM TWA (no Python in the hot path), SKEW-SAFE (round 8):
-    the lag window that feeds the in-bucket trapezoid terms partitions
-    by (key, bucket) — never bare key — so one hot series parallelizes
-    across its buckets (the rate-family `_bucket_chain` discipline).
-    The cross-bucket boundary terms need exactly two values per edge —
-    the previous bucket's LAST sample (the open term's interpolation
-    anchor) and the next bucket's FIRST sample (the close term's) — and
-    both live on the per-bucket aggregated frame (one row per non-empty
-    (key, bucket)), where a lag+lead over key costs #buckets rows, not
-    #samples.  Term derivation mirrors TwaAddValue/
-    TwaAddNextBucketFirstSample (src/compaction.c:348-419) exactly; see
-    _twa_kernel for the same math in numpy (the differential twin,
-    cross-checked in tests), and `_twa_key_window_expr` for the
-    pre-round-8 bare-key-window plan kept as the other twin."""
-    from pyspark.sql import Window
 
-    # (ts, value) ordering everywhere: duplicate (key, ts) rows — legal
-    # in the RAW sample table — resolve deterministically (the
-    # rate._last_pair rule), so the trapezoid chain, the bucket-first
-    # and bucket-last picks all agree across retries and engines
-    wloc = Window.partitionBy("key", "__bucket").orderBy("ts", "value")
-    d = (
-        df.filter(~F.isnan("value"))
-        .select("key", "ts", "value", "__bucket")
-        .withColumn("pts", F.lag("ts").over(wloc))
-        .withColumn("pv", F.lag("value").over(wloc))
-    )
+
+def twa_partials(df: DataFrame) -> tuple[DataFrame, list[Column]]:
+    """`df` (samples with `__bucket`, NaN rows kept) with a valid-only
+    lag, and the twa partials to aggregate per (key, __bucket): `__larea`
+    (the in-bucket trapezoids, TwaAddValue src/compaction.c:348-390), the
+    bucket's first and last valid (ts, value) structs `__f`, `__l`, and
+    the ts of its second and second-to-last valid samples `__f2ts`,
+    `__l2ts` (the empty-bucket heuristic reads only their spacing).
+
+    The window orders NaN rows after the valid ones, so `lag` over a
+    valid row is the previous valid sample of its bucket; NaN rows stay
+    in the frame for count_nan and the EMPTY spine.  (ts, value) order
+    everywhere: duplicate (key, ts) rows, legal in the raw sample table,
+    resolve deterministically (the rate._last_pair rule)."""
+    valid = ~F.isnan("value")
+    w = Window.partitionBy("key", "__bucket").orderBy(F.isnan("value"), "ts", "value")
+    df = df.withColumns({"__pts": F.lag("ts").over(w), "__pv": F.lag("value").over(w)})
+    # a valid row with a valid predecessor: every valid row but the first
+    inner = valid & F.col("__pts").isNotNull()
     ts, v = F.col("ts").cast("double"), F.col("value")
-    pts, pv = F.col("pts").cast("double"), F.col("pv")
-    # in-bucket trapezoids fold locally; the bucket's first/last samples
-    # ride into the aggregated frame for the boundary terms (min/max of
-    # the (ts, value) struct = the window order's first/last row)
-    agg = d.groupBy("key", "__bucket").agg(
-        F.sum(
-            F.when(F.col("pts").isNotNull(), (pv + v) * (ts - pts) / 2.0)
-        ).alias("__larea"),
-        F.min(F.struct("ts", "value")).alias("__f"),
-        F.max(F.struct("ts", "value")).alias("__l"),
-    ).select(
-        "key",
-        "__bucket",
-        "__larea",
-        F.col("__f.ts").cast("double").alias("fts"),
-        F.col("__f.value").alias("fv"),
-        F.col("__l.ts").cast("double").alias("lts"),
-        F.col("__l.value").alias("lastv"),
-    )
-    return _twa_stitch(agg, dur, start, end)
+    pts, pv = F.col("__pts").cast("double"), F.col("__pv")
+    sample = F.struct("ts", "value")
+    return df, [
+        F.sum(F.when(inner, (pv + v) * (ts - pts) / 2.0)).alias("__larea"),
+        F.min(F.when(valid, sample)).alias("__f"),
+        F.max(F.when(valid, sample)).alias("__l"),
+        F.min(F.when(inner, F.col("ts"))).alias("__f2ts"),
+        # the predecessor of the last valid row
+        F.max(F.when(inner, F.col("__pts"))).alias("__l2ts"),
+    ]
 
 
-def _twa_value_col(dur: int, start: int, end: int, larea, fts, fv, lts,
-                   lastv, plts, plv, nfts, nfv):
-    """The cross-bucket boundary-term TWA value as ONE column expression
-    over per-bucket columns: in-bucket trapezoid area `larea`, the
-    bucket's first/last sample (fts/fv, lts/lastv), the previous
-    non-empty bucket's last (plts/plv) and the next non-empty bucket's
-    first (nfts/nfv).  Shared by the non-EMPTY stitch (_twa_stitch) and
-    the round-9 EMPTY path, which computes the same value on its wider
-    per-bucket frame so the aggregation pipeline runs ONCE."""
-    rng_end = float(min(end, MAX_TS))
-    b = F.col("__bucket")
-    ta = F.greatest(b.cast("double"), F.lit(float(start)))
-    tb = F.least(b.cast("double") + F.lit(float(dur)), F.lit(rng_end))
-    opens = plts.isNotNull()
-    closes = nfts.isNotNull()
-    vab_open = plv + (ta - plts) * (fv - plv) / (fts - plts)
-    vab_close = lastv + (tb - lts) * (nfv - lastv) / (nfts - lts)
-    res = (
-        F.coalesce(larea, F.lit(0.0))
-        + F.when(opens, (vab_open + fv) * (fts - ta) / 2.0).otherwise(0.0)
-        + F.when(closes, (vab_close + lastv) * (tb - lts) / 2.0).otherwise(0.0)
-    )
-    first_ts = F.when(opens, ta).otherwise(fts)
-    last_ts = F.when(closes, tb).otherwise(lts)
-    return F.when(last_ts == first_ts, lastv).otherwise(
-        res / F.abs(last_ts - first_ts)
-    )
+def with_twa(perb: DataFrame, dur: int, start: int, end: int) -> DataFrame:
+    """`perb` (one row per (key, __bucket), the `twa_partials` columns
+    NULL where the bucket holds no valid sample) with the `twa` column
+    and without the partials.
 
+    A bucket with valid samples takes the boundary terms of
+    TwaAddNextBucketFirstSample (src/compaction.c:392-419): the last
+    valid sample of the nearest earlier bucket holding one (`__L1`) and
+    the first of the nearest later one (`__R0`).  A bucket without
+    takes twa_calc_empty_bucket_val (src/filter_iterator.c:307-386,
+    the numpy twin `_empty_bucket_vals`) over its nearest valid sample
+    on each side (`__L1`, `__R0`) and the ts of the second-nearest
+    (`__L2`, `__R1`): NULL where it cannot interpolate (the kernel's NaN
+    crosses Arrow as null, the contract downstream).  So one value
+    serves TS.RANGE, its count-class finalizeEmpty and EMPTY.
 
-def _twa_stitch(agg: DataFrame, dur: int, start: int, end: int) -> DataFrame:
-    """Cross-bucket boundary-term stitch over the per-bucket aggregated
-    frame — `agg` has one row per NON-EMPTY (key, __bucket) with columns
-    (__larea, fts, fv, lts, lastv); a lag+lead over key costs #buckets
-    rows.  Used by the non-EMPTY path (twa_buckets_expr); the EMPTY path
-    inlines the same `_twa_value_col` on its own per-bucket frame."""
-    from pyspark.sql import Window
-
-    wk = Window.partitionBy("key").orderBy("__bucket")
-    st = agg.select(
-        "key", "__bucket", "__larea", "fts", "fv", "lts", "lastv",
-        F.lag("lts").over(wk).alias("plts"),
-        F.lag("lastv").over(wk).alias("plv"),
-        F.lead("fts").over(wk).alias("nfts"),
-        F.lead("fv").over(wk).alias("nfv"),
-    )
-    return st.select(
-        "key",
-        "__bucket",
-        _twa_value_col(
-            dur, start, end,
-            F.col("__larea"), F.col("fts"), F.col("fv"), F.col("lts"),
-            F.col("lastv"), F.col("plts"), F.col("plv"), F.col("nfts"),
-            F.col("nfv"),
-        ).alias("twa"),
-    )
-
-
-def twa_buckets_empty_expr(
-    df: DataFrame, dur: int, start: int, end: int
-) -> DataFrame:
-    """EMPTY-path TWA as pure JVM expressions, SKEW-SAFE (round 9 — the
-    last TWA family member still partitioned by bare key): emits every
-    bucket of each key's [min, max] bucket span; non-empty buckets carry
-    the `_twa_stitch` value, empty / NaN-only buckets the neighbor
-    interpolation of twa_calc_empty_bucket_val
-    (src/filter_iterator.c:307-386).
-
-    The interpolation needs at most TWO valid samples on each side of an
-    empty bucket, and both live on per-bucket aggregates: the nearest
-    left sample is the previous non-empty bucket's LAST (`__l`), the
-    second-nearest is that bucket's second-to-last (`__l2`) when it
-    holds >=2 samples, else the non-empty bucket before it's last — so
-    one lag over the per-bucket frame precomputes a `pen` struct per
-    non-empty bucket and ONE last(ignorenulls) gather over the bucket
-    spine resolves both left neighbors for every empty bucket (lead +
-    first(ignorenulls) symmetrically on the right).  No structure ever
-    holds more than one bucket of one series; the spine windows are
-    #buckets-bounded (the OUTPUT size), never #samples-bounded.  The
-    numpy kernel (`_twa_kernel` + `_empty_bucket_vals` via
-    `_twa_buckets_kernel`) is retained as the differential twin."""
-    from pyspark.sql import Window
-
-    rng_end = float(min(end, MAX_TS))
-    valid = df.filter(~F.isnan("value"))
-    wloc = Window.partitionBy("key", "__bucket").orderBy("ts", "value")
-    wcnt = Window.partitionBy("key", "__bucket")
-    d = valid.select(
-        "key",
-        "ts",
-        "value",
-        "__bucket",
-        F.lag("ts").over(wloc).alias("pts"),
-        F.lag("value").over(wloc).alias("pv"),
-        F.row_number().over(wloc).alias("__ra"),
-        # rank-from-the-end WITHOUT a second (desc) sort: the unordered
-        # count shares wloc's partitioning, so one local sort serves
-        # every per-sample window in the plan
-        (
-            F.count(F.lit(1)).over(wcnt) - F.row_number().over(wloc) + 1
-        ).alias("__rd"),
-    )
-    ts, v = F.col("ts").cast("double"), F.col("value")
-    pts, pv = F.col("pts").cast("double"), F.col("pv")
-    perb = d.groupBy("key", "__bucket").agg(
-        F.sum(
-            F.when(F.col("pts").isNotNull(), (pv + v) * (ts - pts) / 2.0)
-        ).alias("__larea"),
-        F.min(F.struct("ts", "value")).alias("__f"),
-        F.max(F.struct("ts", "value")).alias("__l"),
-        F.min(F.when(F.col("__ra") == 2, F.struct("ts", "value"))).alias("__f2"),
-        F.max(F.when(F.col("__rd") == 2, F.struct("ts", "value"))).alias("__l2"),
-        F.count(F.lit(1)).alias("__n"),
-    )
-    # ONE per-bucket frame carries BOTH the non-empty TWA value and the
-    # empty-bucket neighbor structs (pen/nxt), so the #samples-sized
-    # aggregation pipeline executes ONCE — the first cut of this plan
-    # built `nonempty` and the neighbor frame as separate branches from
-    # `perb` and Catalyst ran the whole source scan + sort + aggregation
-    # TWICE (no ReusedExchange across the differing projections): 3 scans
-    # of a 100M-row series measured 50 s where this shape takes ~20
-    wke = Window.partitionBy("key").orderBy("__bucket")
-    nbf = perb.select(
-        "key",
-        "__bucket",
-        "__f",
-        "__l",
-        "__n",
-        # pen: the sample just BELOW this bucket's last in the key's
-        # global order; nxt: just above its first — sourced in-bucket
-        # when the bucket holds >=2 samples, else from the adjacent
-        # non-empty bucket on the per-bucket frame
-        F.when(F.col("__n") >= 2, F.col("__l2"))
-        .otherwise(F.lag("__l").over(wke))
-        .alias("__pen"),
-        F.when(F.col("__n") >= 2, F.col("__f2"))
-        .otherwise(F.lead("__f").over(wke))
-        .alias("__nxt"),
-        _twa_value_col(
-            dur, start, end,
-            F.col("__larea"),
-            F.col("__f.ts").cast("double"),
-            F.col("__f.value"),
-            F.col("__l.ts").cast("double"),
-            F.col("__l.value"),
-            F.lag(F.col("__l.ts").cast("double")).over(wke),
-            F.lag("__l.value").over(wke),
-            F.lead(F.col("__f.ts").cast("double")).over(wke),
-            F.lead("__f.value").over(wke),
-        ).alias("twa"),
-    )
-    # spine bounds come from ALL rows (NaN-only buckets extend the span,
-    # exactly the kernel's `ball`); sequence's step matches the aligned
-    # bucket grid
-    bounds = df.groupBy("key").agg(
-        F.min("__bucket").alias("__lo"), F.max("__bucket").alias("__hi")
-    )
-    spine = bounds.select(
-        "key",
-        F.explode(
-            F.sequence(F.col("__lo"), F.col("__hi"), F.lit(int(dur)))
-        ).alias("__bucket"),
-    )
-    full = spine.join(nbf, ["key", "__bucket"], "left")
-    # BOTH gather directions run as GROWING frames (unboundedPreceding
-    # .. -1): Spark evaluates a growing frame incrementally (O(1)/row)
-    # but RECOMPUTES a shrinking unboundedFollowing frame from scratch
-    # for every row — the natural `first(...).over(rowsBetween(1,
-    # unboundedFollowing))` phrasing is O(#buckets^2) per key and
-    # measured 52 s on a 27.8k-bucket spine where this shape takes <1 s.
-    # "First non-null to the RIGHT in ascending order" == "last non-null
-    # seen so far scanning in DESCENDING order", so the right-side
-    # gathers just flip the sort.
+    Every gather is a growing frame (unboundedPreceding .. -1), which
+    Spark evaluates incrementally, where a shrinking unboundedFollowing
+    frame is recomputed per row (O(#buckets^2) per key: 52 s on a
+    27.8k-bucket spine against <1 s).  The first valid sample to the
+    right is the last one seen scanning in descending order."""
     before = (
         Window.partitionBy("key")
         .orderBy("__bucket")
@@ -352,50 +193,63 @@ def twa_buckets_empty_expr(
         .orderBy(F.col("__bucket").desc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    g = full.select(
-        "key",
-        "__bucket",
-        "__n",
-        "twa",
-        F.last("__l", ignorenulls=True).over(before).alias("__L1"),
-        F.last("__pen", ignorenulls=True).over(before).alias("__L2"),
-        F.last("__f", ignorenulls=True).over(after_rev).alias("__R0"),
-        F.last("__nxt", ignorenulls=True).over(after_rev).alias("__R1"),
+    has = F.col("__f").isNotNull()
+    # one sort per direction: each pair shares its window order.  The
+    # second of a pair gathers the ts just above a bucket's first (below
+    # its last): in-bucket when it holds two samples, else the
+    # neighbouring bucket's
+    g = (
+        perb.withColumn("__R0", F.last("__f", ignorenulls=True).over(after_rev))
+        .withColumn(
+            "__R1",
+            F.last(F.when(has, F.coalesce("__f2ts", "__R0.ts")), ignorenulls=True).over(after_rev),
+        )
+        .withColumn("__L1", F.last("__l", ignorenulls=True).over(before))
+        .withColumn(
+            "__L2",
+            F.last(F.when(has, F.coalesce("__l2ts", "__L1.ts")), ignorenulls=True).over(before),
+        )
     )
-    b = F.col("__bucket")
-    ta = F.greatest(b.cast("double"), F.lit(float(start)))
-    tb = F.least(b.cast("double") + F.lit(float(dur)), F.lit(rng_end))
-    tl1, vl1 = F.col("__L1.ts"), F.col("__L1.value")
-    tl2 = F.col("__L2.ts")
-    tr0, vr0 = F.col("__R0.ts"), F.col("__R0.value")
-    tr1 = F.col("__R1.ts")
-    dv = vr0 - vl1
-    dt = (tr0 - tl1).cast("double")
+    b = F.col("__bucket").cast("double")
+    ta = F.greatest(b, F.lit(float(start)))
+    tb = F.least(b + F.lit(float(dur)), F.lit(float(min(end, MAX_TS))))
+    fts, fv = F.col("__f.ts").cast("double"), F.col("__f.value")
+    lts, lv = F.col("__l.ts").cast("double"), F.col("__l.value")
+    tl1, vl1 = F.col("__L1.ts").cast("double"), F.col("__L1.value")
+    tl2 = F.col("__L2").cast("double")
+    tr0, vr0 = F.col("__R0.ts").cast("double"), F.col("__R0.value")
+    tr1 = F.col("__R1").cast("double")
+
+    opens, closes = tl1.isNotNull(), tr0.isNotNull()
+    vab_open = vl1 + (ta - tl1) * (fv - vl1) / (fts - tl1)
+    vab_close = lv + (tb - lts) * (vr0 - lv) / (tr0 - lts)
+    res = (
+        F.coalesce(F.col("__larea"), F.lit(0.0))
+        + F.when(opens, (vab_open + fv) * (fts - ta) / 2.0).otherwise(0.0)
+        + F.when(closes, (vab_close + lv) * (tb - lts) / 2.0).otherwise(0.0)
+    )
+    first_ts = F.when(opens, ta).otherwise(fts)
+    last_ts = F.when(closes, tb).otherwise(lts)
+    value = F.when(last_ts == first_ts, lv).otherwise(res / F.abs(last_ts - first_ts))
+
+    # twa_calc_empty_bucket_val's decision tree: both sides -> average of
+    # the through-line at ta/tb; one-sided needs TWO samples on that
+    # side, the extrapolated next-sample instant to cross into the
+    # bucket, and the half-spacing keep heuristic
+    dv, dt = vr0 - vl1, tr0 - tl1
     va = vl1 + (ta - tl1) * dv / dt
     vb = vl1 + (tb - tl1) * dv / dt
-    # twa_calc_empty_bucket_val's decision tree (see _empty_bucket_vals,
-    # the numpy twin): both sides -> average of the through-line at
-    # ta/tb; one-sided needs TWO samples on that side, the extrapolated
-    # next-sample instant to cross into the bucket, and the
-    # half-spacing keep heuristic; otherwise the bucket reports NULL —
-    # the kernel's NaN crossed the Arrow boundary as null, so null IS
-    # the established empty-and-uninterpolatable contract downstream
-    # (fill_empty_buckets, the mrange reply shaping, the oracle)
-    near_r = tb + (tr1 - tr0).cast("double") > tr0.cast("double")
-    keep_r = ~(tb + F.floor((tr1 - tr0) / 2) <= tr0.cast("double"))
-    near_l = (tl1 + (tl1 - tl2)).cast("double") > ta
-    keep_l = ~((tl1 + F.floor((tl1 - tl2) / 2)).cast("double") <= ta)
+    near_r = tb + (tr1 - tr0) > tr0
+    keep_r = ~(tb + F.floor((tr1 - tr0) / 2) <= tr0)
+    near_l = tl1 + (tl1 - tl2) > ta
+    keep_l = ~(tl1 + F.floor((tl1 - tl2) / 2) <= ta)
     fill = (
-        F.when(tl1.isNotNull() & tr0.isNotNull(), (va + vb) / 2.0)
-        .when(tl1.isNull() & tr1.isNotNull() & near_r & keep_r, vr0)
-        .when(tr0.isNull() & tl2.isNotNull() & near_l & keep_l, vl1)
+        F.when(opens & closes, (va + vb) / 2.0)
+        .when(~opens & tr1.isNotNull() & near_r & keep_r, vr0)
+        .when(~closes & tl2.isNotNull() & near_l & keep_l, vl1)
     )
-    return g.select(
-        "key",
-        "__bucket",
-        F.when(F.col("__n").isNotNull(), F.col("twa")).otherwise(fill).alias(
-            "twa"
-        ),
+    return g.withColumn("twa", F.when(has, value).otherwise(fill)).drop(
+        "__larea", "__f", "__l", "__f2ts", "__l2ts", "__L1", "__L2", "__R0", "__R1"
     )
 
 
@@ -404,9 +258,10 @@ def _twa_key_window_expr(
 ) -> DataFrame:
     """The pre-round-8 plan — per-sample lag AND lead over bare
     (key, ts).  Kept as the DIFFERENTIAL REFERENCE for the skew-safe
-    `twa_buckets_expr` (fuzz-pinned equal in tests) and the comparison
-    arm of the hot-series probe: semantically identical, but one hot
-    series serializes its full history into a single window task."""
+    twa of `range_query.bucket_aggregate` (fuzz-pinned equal in tests)
+    and the comparison arm of the hot-series probe: semantically
+    identical, but one hot series serializes its full history into a
+    single window task."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("key").orderBy("ts")
@@ -474,26 +329,6 @@ def _twa_key_window_expr(
     )
 
 
-def twa_buckets(
-    df: DataFrame,
-    dur: int,
-    align_ts: int,
-    start: int,
-    end: int,
-    empty: bool = False,
-) -> DataFrame:
-    """df: filtered samples with a precomputed __bucket column.
-    Returns (key, __bucket, twa).  With empty=True also emits interior
-    empty / NaN-only buckets with the interpolated value.
-
-    Both paths are pure-JVM, bucket-local expression plans (round 9
-    closed the EMPTY path's bare-key kernel — the last TWA member that
-    serialized a hot series into one task); `_twa_buckets_kernel` is the
-    retained numpy differential twin for the EMPTY path."""
-    if not empty:
-        return twa_buckets_expr(df, dur, start, end)
-    return twa_buckets_empty_expr(df, dur, start, end)
-
 
 def _twa_buckets_kernel(
     df: DataFrame,
@@ -503,8 +338,8 @@ def _twa_buckets_kernel(
 ) -> DataFrame:
     """The pre-round-9 EMPTY-path plan — the numpy kernel
     (`_twa_kernel` + `_empty_bucket_vals`) via applyInPandas per BARE
-    key.  Kept as the DIFFERENTIAL REFERENCE for
-    `twa_buckets_empty_expr` (fuzz-pinned equal in tests) and the
+    key.  Kept as the DIFFERENTIAL REFERENCE for the EMPTY twa of
+    `range_query.bucket_aggregate` (fuzz-pinned equal in tests) and the
     comparison arm of the hot-series probe: one hot series serializes
     its full history into a single task here."""
     empty = True

@@ -80,16 +80,16 @@ def main():
     new_s = timed(lambda: ts_increase(df, H))
     out = {"n_rows": n, "bucket_local_sec": new_s}
 
-    # TWA arm (round 8): the heavy trapezoid operator on the same shapes
+    # TWA arms: the heavy trapezoid operator on the same shapes, through
+    # the one bucket stage TS.RANGE runs (bucket-local lag, per-bucket
+    # neighbour gathers); the twins below take the bucketed frame `bdf`
     from redistimeseries_spark.functions.buckets import bucket_start
-    from redistimeseries_spark.operators.twa import (
-        _twa_key_window_expr,
-        twa_buckets_expr,
-    )
+    from redistimeseries_spark.operators.range_query import bucket_aggregate
+    from redistimeseries_spark.operators.twa import _twa_key_window_expr
 
     bdf = df.withColumn("__bucket", bucket_start(F.col("ts"), H, 0))
     out["twa_bucket_local_sec"] = timed(
-        lambda: twa_buckets_expr(bdf, H, 0, 10**15)
+        lambda: bucket_aggregate(df, ["twa"], H, 0, 0, 10**15)
     )
 
     # round-9 arms: EMPTY-path TWA (spine + neighbor gathers) and the
@@ -102,13 +102,10 @@ def main():
         ts_ewma,
         ts_holt,
     )
-    from redistimeseries_spark.operators.twa import (
-        _twa_buckets_kernel,
-        twa_buckets_empty_expr,
-    )
+    from redistimeseries_spark.operators.twa import _twa_buckets_kernel
 
     out["twa_empty_expr_sec"] = timed(
-        lambda: twa_buckets_empty_expr(bdf, H, 0, 10**15)
+        lambda: bucket_aggregate(df, ["twa"], H, 0, 0, 10**15, empty=True)
     )
     out["ewma_chunked_sec"] = timed(lambda: ts_ewma(df, 0.3))
     out["holt_chunked_sec"] = timed(lambda: ts_holt(df, 0.4, 0.2))

@@ -133,8 +133,8 @@ def test_empty_edge_gaps_not_emitted(samples_df):
 
 
 def test_twa_bucket_local_vs_key_window_differential(samples_df):
-    """The round-8 skew-safe TWA plan (bucket-local lag + aggregated-
-    frame boundary stitch) is pinned equal to the pre-r8 bare-key-window
+    """The skew-safe TWA of the one bucket stage (bucket-local lag +
+    per-bucket neighbour gathers) is pinned equal to the bare-key-window
     twin across random series: NaNs, duplicate-bucket edges, sparse and
     dense buckets, and range cuts landing mid-bucket."""
     import math
@@ -143,10 +143,8 @@ def test_twa_bucket_local_vs_key_window_differential(samples_df):
     from pyspark.sql import functions as F
 
     from redistimeseries_spark.functions.buckets import bucket_start
-    from redistimeseries_spark.operators.twa import (
-        _twa_key_window_expr,
-        twa_buckets_expr,
-    )
+    from redistimeseries_spark.operators.range_query import bucket_aggregate
+    from redistimeseries_spark.operators.twa import _twa_key_window_expr
 
     rng = _random.Random(0x7A7A)
     for trial in range(8):
@@ -159,12 +157,13 @@ def test_twa_bucket_local_vs_key_window_differential(samples_df):
         dur = rng.choice([700, 1000, 9000])
         lo = rng.choice([0, rng.randrange(0, 30_000)])
         hi = rng.choice([10**15, rng.randrange(lo + 1, 70_000)])
-        df = samples_df(rows).filter(
+        raw = samples_df(rows)
+        df = raw.filter(
             (F.col("ts") >= lo) & (F.col("ts") <= hi)
         ).withColumn("__bucket", bucket_start(F.col("ts"), dur, 0))
         got = {
             (r.key, r["__bucket"]): r.twa
-            for r in twa_buckets_expr(df, dur, lo, hi).collect()
+            for r in bucket_aggregate(raw, ["twa"], dur, 0, lo, hi).collect()
         }
         want = {
             (r.key, r["__bucket"]): r.twa
@@ -179,17 +178,13 @@ def test_twa_bucket_local_vs_key_window_differential(samples_df):
 
 def test_twa_plan_is_bucket_local(samples_df):
     """The sample-level lag window partitions by (key, __bucket) — the
-    hot-series funnel is gone from the TWA hot path (round 9 removed it
-    from the EMPTY path too; see test_twa_empty_plan_is_bucket_local)."""
-    from pyspark.sql import functions as F
-
-    from redistimeseries_spark.functions.buckets import bucket_start
-    from redistimeseries_spark.operators.twa import twa_buckets_expr
+    hot-series funnel is gone from the TWA hot path (and from the EMPTY
+    path; see test_twa_empty_plan_is_bucket_local)."""
+    from redistimeseries_spark.operators.range_query import bucket_aggregate
 
     df = samples_df([("k", t, float(t)) for t in range(0, 5000, 100)])
-    df = df.withColumn("__bucket", bucket_start(F.col("ts"), 1000, 0))
     plan = (
-        twa_buckets_expr(df, 1000, 0, 10**15)
+        bucket_aggregate(df, ["twa"], 1000, 0, 0, 10**15)
         ._jdf.queryExecution().executedPlan().toString()
     )
     lag_lines = [
@@ -204,46 +199,37 @@ def test_twa_duplicate_ts_deterministic(samples_df):
     """Duplicate (key, ts) rows at bucket edges resolve by (ts, value) —
     the result is identical across repeated executions (the raw table
     permits dup rows; the rate-family determinism rule, round 8)."""
-    from pyspark.sql import functions as F
-
-    from redistimeseries_spark.functions.buckets import bucket_start
-    from redistimeseries_spark.operators.twa import twa_buckets_expr
+    from redistimeseries_spark.operators.range_query import bucket_aggregate
 
     rows = [
         ("k", 0, 5.0), ("k", 900, 1.0), ("k", 900, 9.0),   # dup at bucket end
         ("k", 1000, 2.0), ("k", 1000, 7.0),                 # dup at bucket start
         ("k", 1800, 4.0),
     ]
-    df = samples_df(rows).withColumn(
-        "__bucket", bucket_start(F.col("ts"), 1000, 0)
-    )
+    df = samples_df(rows)
     first = sorted(
         (r.key, r["__bucket"], round(r.twa, 12))
-        for r in twa_buckets_expr(df, 1000, 0, 10**15).collect()
+        for r in bucket_aggregate(df, ["twa"], 1000, 0, 0, 10**15).collect()
     )
     for _ in range(3):
         again = sorted(
             (r.key, r["__bucket"], round(r.twa, 12))
-            for r in twa_buckets_expr(df, 1000, 0, 10**15).collect()
+            for r in bucket_aggregate(df, ["twa"], 1000, 0, 0, 10**15).collect()
         )
         assert again == first
 
 
 def test_twa_empty_plan_is_bucket_local(samples_df):
     """The EMPTY path's sample-level lag window partitions by
-    (key, __bucket) — round 9: no applyInPandas / Arrow eval appears in
-    the plan at all, and every per-sample window is bucket-local (the
-    per-key windows that remain run over the #buckets-bounded spine and
-    aggregated frames)."""
-    from pyspark.sql import functions as F
-
-    from redistimeseries_spark.functions.buckets import bucket_start
-    from redistimeseries_spark.operators.twa import twa_buckets_empty_expr
+    (key, __bucket): no applyInPandas / Arrow eval appears in the plan
+    at all, and every per-sample window is bucket-local (the per-key
+    windows that remain run over the #buckets-bounded aggregated
+    frame and its spine)."""
+    from redistimeseries_spark.operators.range_query import bucket_aggregate
 
     df = samples_df([("k", t, float(t)) for t in range(0, 5000, 100)])
-    df = df.withColumn("__bucket", bucket_start(F.col("ts"), 1000, 0))
     plan = (
-        twa_buckets_empty_expr(df, 1000, 0, 10**15)
+        bucket_aggregate(df, ["twa"], 1000, 0, 0, 10**15, empty=True)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "ArrowEvalPython" not in plan and "FlatMapGroupsInPandas" not in plan
@@ -256,7 +242,7 @@ def test_twa_empty_plan_is_bucket_local(samples_df):
 
 
 def test_twa_empty_expr_vs_kernel_differential(samples_df):
-    """The round-9 bucket-local EMPTY-path plan (twa_buckets_empty_expr:
+    """The bucket-local EMPTY-path plan (bucket_aggregate with EMPTY:
     spine + aggregated-frame neighbor gathers) is pinned equal to the
     retained numpy kernel twin across random series — NaN-only buckets
     extending the spine, multi-bucket gaps (both one-sided heuristics
@@ -270,10 +256,8 @@ def test_twa_empty_expr_vs_kernel_differential(samples_df):
     from pyspark.sql import functions as F
 
     from redistimeseries_spark.functions.buckets import bucket_start
-    from redistimeseries_spark.operators.twa import (
-        _twa_buckets_kernel,
-        twa_buckets_empty_expr,
-    )
+    from redistimeseries_spark.operators.range_query import bucket_aggregate
+    from redistimeseries_spark.operators.twa import _twa_buckets_kernel
 
     rng = _random.Random(0xE119)
     for trial in range(8):
@@ -291,14 +275,17 @@ def test_twa_empty_expr_vs_kernel_differential(samples_df):
         dur = rng.choice([700, 1000, 9000])
         lo = rng.choice([0, rng.randrange(0, 30_000)])
         hi = rng.choice([10**15, rng.randrange(lo + 1, 200_000)])
-        df = samples_df(rows).filter(
+        raw = samples_df(rows)
+        df = raw.filter(
             (F.col("ts") >= lo) & (F.col("ts") <= hi)
         ).withColumn("__bucket", bucket_start(F.col("ts"), dur, 0))
 
         def key_map(res):
             return {(r.key, r["__bucket"]): r.twa for r in res}
 
-        got = key_map(twa_buckets_empty_expr(df, dur, lo, hi).collect())
+        got = key_map(
+            bucket_aggregate(raw, ["twa"], dur, 0, lo, hi, empty=True).collect()
+        )
         want = key_map(_twa_buckets_kernel(df, dur, lo, hi).collect())
         assert set(got) == set(want), (trial, dur, lo, hi)
         for kk in got:

@@ -160,7 +160,7 @@ def test_nrange_multiagg_single_scan(spark, tmp_path):
         many = _plan(ts_nrange(
             facts, keys, agg_specs=twa_specs, bucket_dur=1000, **kw
         )).count("Scan parquet")
-        assert many == one <= 4, (kw, many, one)
+        assert many == one == 1, (kw, many, one)
     empty_specs = {
         k: [["min"], ["sum", "last"], ["count_all"]][i % 3]
         for i, k in enumerate(keys)
@@ -168,8 +168,43 @@ def test_nrange_multiagg_single_scan(spark, tmp_path):
     plan = _plan(ts_nrange(
         facts, keys, agg_specs=empty_specs, bucket_dur=1000, empty=True
     ))
-    # the aggregation and the EMPTY spine read the facts once each
-    assert plan.count("Scan parquet") == 2, plan
+    # the EMPTY spine comes from the aggregated rows: one read of the facts
+    assert plan.count("Scan parquet") == 1, plan
+
+
+@pytest.mark.parametrize(
+    "aggs,empty",
+    [
+        (["avg"], False),
+        (["twa"], False),
+        (["twa", "avg"], False),
+        (["twa", "count_nan"], False),
+        (["avg"], True),
+        (["twa"], True),
+        (["twa", "avg", "last"], True),
+    ],
+)
+def test_range_single_scan(spark, tmp_path, aggs, empty):
+    """Every aggregator of a bucket, twa included, comes from one
+    (key, bucket) frame, and the EMPTY spine from its rows: TS.RANGE
+    reads the source once in the plan it executes."""
+    path = str(tmp_path / "facts")
+    spark.createDataFrame(
+        [
+            (k, t * 300 + 7 * i, float("nan") if t % 11 == 3 else float(t % 17))
+            for i, k in enumerate(["a", "b", "c", "d"])
+            for t in range(200)
+            if not 60 <= t % 100 < 80  # 6 s gaps for the EMPTY spine
+        ],
+        "key string, ts long, value double",
+    ).write.parquet(path)
+    df = ts_range(
+        spark.read.parquet(path), aggregations=aggs, bucket_dur=1000, empty=empty
+    )
+    df.collect()
+    # the executed AQE plan prints the final plan, then the initial one
+    final = _plan(df).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final and final.count("Scan parquet") == 1, final
 
 
 def test_session_stats_chunk_local_plan(spark):
