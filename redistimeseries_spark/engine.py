@@ -641,6 +641,7 @@ class TimeSeriesEngine:
             self._series_df(key, latest),
             self._resolve_ts(from_ts, key),
             self._resolve_ts(to_ts, key),
+            keys=key,
             **kw,
         ).drop("key")
 

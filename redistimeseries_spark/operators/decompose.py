@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from redistimeseries_spark.materialize import materialize
 
 from redistimeseries_spark import MAX_TS, MIN_TS
-from redistimeseries_spark.functions.filters import key_in
+from redistimeseries_spark.functions.filters import filter_key_range
 
 
 MODES = ("additive", "multiplicative")
@@ -70,14 +70,7 @@ def ts_decompose(
         raise ValueError("period_n must be >= 2")
     if mode not in MODES:
         raise ValueError(f"mode must be one of {MODES}")
-    df = samples.filter(~F.isnan("value"))
-    if keys is not None:
-        klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(key_in(klist))
-    if start > MIN_TS:
-        df = df.filter(F.col("ts") >= F.lit(start))
-    if end < MAX_TS:
-        df = df.filter(F.col("ts") <= F.lit(end))
+    df = filter_key_range(samples, keys, start, end, valid=True)
     # MATERIALIZED (eager localCheckpoint): the gridded aggregate is
     # bucket-bounded (#keys x #buckets rows) but is consumed twice here
     # (the spine min/max aggregate + the grid join) and the whole

@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 from redistimeseries_spark.materialize import materialize
 
 from redistimeseries_spark import MAX_TS, MIN_TS
-from redistimeseries_spark.functions.filters import key_in
+from redistimeseries_spark.functions.filters import filter_key_range
 
 MODES = ("additive", "multiplicative")
 
@@ -99,14 +99,7 @@ def ts_holt_winters(
         raise ValueError("horizon_n must be >= 0")
     if mode not in MODES:
         raise ValueError(f"mode must be one of {MODES}")
-    df = samples.filter(~F.isnan("value"))
-    if keys is not None:
-        klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(key_in(klist))
-    if start > MIN_TS:
-        df = df.filter(F.col("ts") >= F.lit(start))
-    if end < MAX_TS:
-        df = df.filter(F.col("ts") <= F.lit(end))
+    df = filter_key_range(samples, keys, start, end, valid=True)
     # MATERIALIZED (eager localCheckpoint): the gridded aggregate is
     # bucket-bounded but consumed twice (the short-key count aggregate and
     # the semi-join probe side) — without this both consumers re-execute

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from redistimeseries_spark import MAX_TS, MIN_TS
 from redistimeseries_spark.functions.aggs import AGGREGATORS, sanitize
-from redistimeseries_spark.functions.filters import key_in
+from redistimeseries_spark.functions.filters import filter_key_range, key_in
 from redistimeseries_spark.operators.labels import (
     LabelIndex,
     arrow_frame,
@@ -259,14 +259,7 @@ def ts_topk(
         raise ValueError("bucket_dur must be positive")
     if n <= 0:
         raise ValueError("n must be positive")
-    df = samples
-    if keys is not None:
-        klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(key_in(klist))
-    if start > MIN_TS:
-        df = df.filter(F.col("ts") >= F.lit(start))
-    if end < MAX_TS:
-        df = df.filter(F.col("ts") <= F.lit(end))
+    df = filter_key_range(samples, keys, start, end)
     align_ts = resolve_align(align, start, end)
     b = bucket_start(F.col("ts"), bucket_dur, align_ts)
     agged = (

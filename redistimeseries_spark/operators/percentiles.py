@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from redistimeseries_spark import MAX_TS, MIN_TS
 from redistimeseries_spark.functions.buckets import bucket_start, resolve_align
-from redistimeseries_spark.functions.filters import key_in
+from redistimeseries_spark.functions.filters import filter_key_range, filter_valid_range
 
 
 def ts_rolling_quantile(
@@ -71,7 +71,6 @@ def ts_rolling_quantile(
     SMOOTH_CHUNK_MS grid (expression-only consumer — tiny JVM window
     partitions are free, the adaptive-grid rationale in
     smooth._assign_chunks)."""
-    from redistimeseries_spark.functions.filters import filter_valid_range
     from redistimeseries_spark.operators.smooth import (
         SMOOTH_CHUNK_MS,
         _chunk_context,
@@ -140,14 +139,7 @@ def ts_bucket_percentiles(
     ps = ps or [0.5, 0.95, 0.99]
     if not ps or any(not 0 <= p <= 1 for p in ps):
         raise ValueError("percentiles must lie in [0, 1]")
-    df = samples
-    if keys is not None:
-        klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(key_in(klist))
-    if start > MIN_TS:
-        df = df.filter(F.col("ts") >= F.lit(start))
-    if end < MAX_TS:
-        df = df.filter(F.col("ts") <= F.lit(end))
+    df = filter_key_range(samples, keys, start, end)
     align_ts = resolve_align(align, start, end)
     valid = F.when(~F.isnan("value"), F.col("value"))
     fn = "percentile" if exact else "approx_percentile"
@@ -211,14 +203,7 @@ def ts_mad(
     deviation re-shuffle of the rejected exact two-pass."""
     if bucket_dur <= 0:
         raise ValueError("bucket_dur must be positive")
-    df = samples.filter(~F.isnan("value"))
-    if keys is not None:
-        klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(key_in(klist))
-    if start > MIN_TS:
-        df = df.filter(F.col("ts") >= F.lit(start))
-    if end < MAX_TS:
-        df = df.filter(F.col("ts") <= F.lit(end))
+    df = filter_key_range(samples, keys, start, end, valid=True)
     align_ts = resolve_align(align, start, end)
     d = df.select(
         "key",
@@ -306,14 +291,7 @@ def ts_outlier_mad(
     stats = ts_mad(samples, bucket_dur, keys, start, end, align).select(
         "key", F.col("ts").alias("__b"), "med", "mad"
     )
-    df = samples.filter(~F.isnan("value"))
-    if keys is not None:
-        klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(key_in(klist))
-    if start > MIN_TS:
-        df = df.filter(F.col("ts") >= F.lit(start))
-    if end < MAX_TS:
-        df = df.filter(F.col("ts") <= F.lit(end))
+    df = filter_key_range(samples, keys, start, end, valid=True)
     align_ts = resolve_align(align, start, end)
     d = df.select(
         "key",
@@ -413,14 +391,7 @@ def ts_value_histogram(
     are invalid everywhere (isValueValid) and are dropped first."""
     if bin_width <= 0:
         raise ValueError("bin_width must be positive")
-    df = samples.filter(~F.isnan("value"))
-    if keys is not None:
-        klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(key_in(klist))
-    if start > MIN_TS:
-        df = df.filter(F.col("ts") >= F.lit(start))
-    if end < MAX_TS:
-        df = df.filter(F.col("ts") <= F.lit(end))
+    df = filter_key_range(samples, keys, start, end, valid=True)
     bin_ix = F.floor((F.col("value") - F.lit(float(lo))) / F.lit(float(bin_width)))
     return (
         df.select("key", (F.lit(float(lo)) + bin_ix * F.lit(float(bin_width))).alias("bin_lo"))

@@ -5,8 +5,8 @@ Reference lifecycle (SURVEY §3.1): SeriesIterator -> [FilterTS] ->
 (src/tsdb.c:1363-1426, src/reply.c:175-213).
 
 Spark translation: one declarative plan —
-  filter(key) . filter(ts between) . [isin] . [value between]
-  . [groupBy(key, bucket).agg(...)] . [per-key row_number limit]
+  filter(key and ts between) . [isin] . [value between]
+  . [groupBy(key, bucket).agg(...)] . [per-key row_number limit] . sort
 Catalyst pushes the key/ts filters into the parquet scan (row-group
 pruning = the reference's chunk seek) and runs the bucketed aggregation as
 partial+final hash aggregate — a single shuffle keyed by (key, bucket),
@@ -15,6 +15,12 @@ which is the plan that survives a 1000-executor / 100 TB scale-up.
 COUNT semantics: the reference applies COUNT per series (reply loop,
 src/reply.c:180-192), so the limit here is a per-key row_number, evaluated
 after filters and aggregation.
+
+Ordering contract: rows come back in (key, ts) order, ts descending under
+REV.  A one-key query sorts its answer in one partition after the last
+exchange (`ts_range` says why that holds at scale); several keys sort
+globally.  The key/ts pre-filter is one Filter node parsed from one SQL
+text (`functions/filters.filter_key_range`).
 
 Everything up to the (key, bucket) aggregated frame — the pre-filters,
 the per-bucket emission rule and the finalizers — is `bucket_aggregate`,
@@ -42,7 +48,7 @@ from redistimeseries_spark.functions.aggs import (
     sanitize,
 )
 from redistimeseries_spark.functions.buckets import bucket_start, report_ts, resolve_align
-from redistimeseries_spark.functions.filters import key_in
+from redistimeseries_spark.functions.filters import filter_key_range
 from redistimeseries_spark.operators.empty import empty_spine, fill_empty_buckets
 from redistimeseries_spark.operators.twa import twa_partials, with_twa
 
@@ -62,14 +68,7 @@ def _as_list(x):
 
 def _prefiltered(samples, start, end, keys, filter_by_ts, filter_by_value):
     """The FilterTS / FilterValue stages ahead of any aggregation."""
-    df = samples
-    keys = _as_list(keys)
-    if keys is not None:
-        df = df.filter(F.col("key") == keys[0] if len(keys) == 1 else key_in(keys))
-    if start > MIN_TS:
-        df = df.filter(F.col("ts") >= F.lit(start))
-    if end < MAX_TS:
-        df = df.filter(F.col("ts") <= F.lit(end))
+    df = filter_key_range(samples, keys, start, end)
     if filter_by_ts is not None:
         # reference stops parsing after 128 values (MAX_TS_VALUES_FILTER,
         # src/query_language.h:53, parse loop src/query_language.c:620) —
@@ -214,7 +213,20 @@ def ts_range(
     count: int | None = None,
 ) -> DataFrame:
     """Build the TS.RANGE plan.  Returns (key, ts, value) for raw scans or
-    (key, ts, <agg...>) for aggregated queries, ordered by ts (desc if rev).
+    (key, ts, <agg...>) for aggregated queries, ordered by (key, ts), ts
+    descending if rev.
+
+    A one-key `keys` (a str or a one-element list) answers in ONE
+    partition sorted within it, like the reference's walk of one series'
+    chunks into one reply (src/reply.c:175-213); any other `keys` sorts
+    globally (`orderBy`: a range-partition sampling job and a sort
+    shuffle, which buy nothing for one key).  The single partition holds
+    at scale: it starts after the aggregation's exchange, so it carries
+    at most one row per bucket of one series, while the scan and partial
+    aggregation keep every core.  A raw answer, that series' samples,
+    reaches the client as one reply anyway; it moves through one
+    single-partition exchange, so its scan is not coalesced into one
+    task.
     """
     aggs = _as_list(aggregations)
     if aggs:
@@ -240,4 +252,11 @@ def ts_range(
             .filter(F.col("__rn") <= count)
             .drop("__rn")
         )
-    return df.orderBy("key", order)
+    keys = _as_list(keys)
+    if keys is None or len(keys) != 1:
+        return df.orderBy("key", order)
+    # coalesce behind the last exchange (the aggregation's or COUNT's
+    # window); a raw scan has none, and coalescing it would read the
+    # source in one task
+    one = df.coalesce(1) if aggs or count is not None else df.repartition(1)
+    return one.sortWithinPartitions("key", order)

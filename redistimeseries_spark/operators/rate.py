@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from redistimeseries_spark import MAX_TS, MIN_TS
-from redistimeseries_spark.functions.filters import key_in
+from redistimeseries_spark.functions.filters import filter_key_range
 from redistimeseries_spark.functions.buckets import bucket_start, resolve_align
 
 
@@ -84,11 +84,7 @@ def _bucket_chain(
     "lag runs over the FULL per-key history" contract."""
     if bucket_dur <= 0:
         raise ValueError("bucket_dur must be positive")
-    df = samples
-    if keys is not None:
-        klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(key_in(klist))
-    df = df.filter(~F.isnan("value"))
+    df = filter_key_range(samples, keys, valid=True)
     align_ts = resolve_align(align, start, end)
     b = bucket_start(F.col("ts"), bucket_dur, align_ts)
     # (ts, value) ordering: duplicate (key, ts) rows — legal in the RAW
@@ -207,11 +203,7 @@ def _key_window_chain(
     one task here."""
     if bucket_dur <= 0:
         raise ValueError("bucket_dur must be positive")
-    df = samples
-    if keys is not None:
-        klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(key_in(klist))
-    df = df.filter(~F.isnan("value"))
+    df = filter_key_range(samples, keys, valid=True)
     w = Window.partitionBy("key").orderBy("ts")
     prev = F.lag("value").over(w)
     step = F.when(prev.isNull(), F.lit(None)).otherwise(
@@ -224,10 +216,7 @@ def _key_window_chain(
         step.alias("__step"),
         bucket_start(F.col("ts"), bucket_dur, align_ts).alias("__b"),
     )
-    if start > MIN_TS:
-        d = d.filter(F.col("ts") >= F.lit(start))
-    if end < MAX_TS:
-        d = d.filter(F.col("ts") <= F.lit(end))
+    d = filter_key_range(d, None, start, end)
     return (
         d.groupBy("key", "__b")
         .agg(F.sum("__step").alias("__v"), F.count("__step").alias("__n"))
@@ -277,14 +266,7 @@ def ts_deriv(
     slope is shift-invariant, the floating-point moments are not."""
     if bucket_dur <= 0:
         raise ValueError("bucket_dur must be positive")
-    df = samples.filter(~F.isnan("value"))
-    if keys is not None:
-        klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(key_in(klist))
-    if start > MIN_TS:
-        df = df.filter(F.col("ts") >= F.lit(start))
-    if end < MAX_TS:
-        df = df.filter(F.col("ts") <= F.lit(end))
+    df = filter_key_range(samples, keys, start, end, valid=True)
     align_ts = resolve_align(align, start, end)
     b = bucket_start(F.col("ts"), bucket_dur, align_ts)
     d = df.select(
@@ -422,14 +404,7 @@ def ts_predict_linear(
         raise ValueError("bucket_dur must be positive")
     if horizon_ms < 0:
         raise ValueError("horizon_ms must be non-negative")
-    df = samples.filter(~F.isnan("value"))
-    if keys is not None:
-        klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(key_in(klist))
-    if start > MIN_TS:
-        df = df.filter(F.col("ts") >= F.lit(start))
-    if end < MAX_TS:
-        df = df.filter(F.col("ts") <= F.lit(end))
+    df = filter_key_range(samples, keys, start, end, valid=True)
     align_ts = resolve_align(align, start, end)
     b = bucket_start(F.col("ts"), bucket_dur, align_ts)
     d = df.select(
@@ -479,14 +454,7 @@ def ts_gaps(
     gap)."""
     if min_gap_ms <= 0:
         raise ValueError("min_gap_ms must be positive")
-    df = samples
-    if keys is not None:
-        klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(key_in(klist))
-    if start > MIN_TS:
-        df = df.filter(F.col("ts") >= F.lit(start))
-    if end < MAX_TS:
-        df = df.filter(F.col("ts") <= F.lit(end))
+    df = filter_key_range(samples, keys, start, end)
     chunk = (F.col("ts") - F.pmod(F.col("ts"), F.lit(_LAST_PAIR_CHUNK_MS)))
     wloc = Window.partitionBy("key", chunk).orderBy("ts")
     local = df.select(
@@ -544,14 +512,7 @@ def ts_delta(
     class in the family (value_hist's)."""
     if bucket_dur <= 0:
         raise ValueError("bucket_dur must be positive")
-    df = samples.filter(~F.isnan("value"))
-    if keys is not None:
-        klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(key_in(klist))
-    if start > MIN_TS:
-        df = df.filter(F.col("ts") >= F.lit(start))
-    if end < MAX_TS:
-        df = df.filter(F.col("ts") <= F.lit(end))
+    df = filter_key_range(samples, keys, start, end, valid=True)
     align_ts = resolve_align(align, start, end)
     b = bucket_start(F.col("ts"), bucket_dur, align_ts)
     return (
@@ -632,14 +593,7 @@ def _last_pair(
     task.  Ordering is (ts, value) everywhere — the deterministic
     duplicate-timestamp rule both TVF and oracle share.  Keys with <2
     valid samples drop out via the __pv null filter."""
-    df = samples.filter(~F.isnan("value"))
-    if keys is not None:
-        klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(key_in(klist))
-    if start > MIN_TS:
-        df = df.filter(F.col("ts") >= F.lit(start))
-    if end < MAX_TS:
-        df = df.filter(F.col("ts") <= F.lit(end))
+    df = filter_key_range(samples, keys, start, end, valid=True)
     wc = Window.partitionBy(
         "key", (F.col("ts") - F.pmod(F.col("ts"), F.lit(_LAST_PAIR_CHUNK_MS)))
     ).orderBy(F.col("ts").desc(), F.col("value").desc())

@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from redistimeseries_spark.materialize import materialize
 
 from redistimeseries_spark import MAX_TS, MIN_TS
-from redistimeseries_spark.functions.filters import filter_valid_range, key_in
+from redistimeseries_spark.functions.filters import filter_valid_range
 
 EWMA_SCHEMA = "key string, ts long, ewma double"
 EWM_BAND_SCHEMA = (
@@ -563,14 +563,7 @@ def ts_lttb(
 
     if threshold < 3:
         raise ValueError("threshold must be >= 3 (first + last + 1 bucket)")
-    df = samples.filter(~F.isnan("value"))
-    if keys is not None:
-        klist = [keys] if isinstance(keys, str) else list(keys)
-        df = df.filter(key_in(klist))
-    if start > MIN_TS:
-        df = df.filter(F.col("ts") >= F.lit(start))
-    if end < MAX_TS:
-        df = df.filter(F.col("ts") <= F.lit(end))
+    df = filter_valid_range(samples, keys, start, end)
 
     def decimate(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("ts").reset_index(drop=True)

@@ -44,5 +44,12 @@ def get_spark(app_name: str = "sparkts", cpus: int | None = None) -> SparkSessio
         # setting is identical (workers are always host-local).
         .config("spark.python.unix.domain.socket.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # PySpark 4 records the Python call site of every Column and
+        # DataFrame call for the DataFrame error context.  Building a
+        # one-key TS.RANGE avg plan made 466 py4j round trips with it on
+        # and 166 with it off (4-core host), and the call sites would
+        # point into this package, not the user's code.  The trade-off:
+        # an analysis error carries no Python call site.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )
