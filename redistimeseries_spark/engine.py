@@ -27,13 +27,14 @@ import re
 from dataclasses import dataclass, field
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from redistimeseries_spark import MAX_TS, MIN_TS
 from redistimeseries_spark.functions.filters import key_in
-from redistimeseries_spark.operators.labels import LabelIndex, arrow_frame
-from redistimeseries_spark.operators.multi import ts_mget, ts_mrange
+from redistimeseries_spark.operators.labels import LabelIndex, arrow_frame, with_labels
+from redistimeseries_spark.operators.multi import ts_mrange
 from redistimeseries_spark.operators.nrange import ts_nrange
 from redistimeseries_spark.operators.range_query import ts_range
 from redistimeseries_spark.streaming.compaction import CompactionRule, materialize_rule
@@ -139,11 +140,13 @@ class TimeSeriesEngine:
         self._seq = 0
         # dest keys holding frozen (rule-deleted) buckets in _samples
         self._frozen_dests: set[str] = set()
-        # per-key (last_ts, last_value) — the reference keeps lastSample on
-        # the series struct so TS.INCRBY/GET-$ are O(1) (src/tsdb.c); this
-        # cache gives the facade the same O(1): consulted by _last, kept
-        # fresh by incrby's own writes, invalidated by every other mutation
-        self._last_cache: dict[str, tuple[int, float]] = {}
+        # per-key (last_ts, last_value), None for a series without
+        # samples — the reference keeps lastTimestamp/lastValue on the
+        # series struct so TS.GET/MGET/INCRBY are O(1) (src/tsdb.h:64-70);
+        # this cache gives the facade the same O(1): consulted by _lasts,
+        # refreshed by flush for the keys it folds and by incrby's own
+        # writes, invalidated by every other mutation
+        self._last_cache: dict[str, tuple[int, float] | None] = {}
         # retention series' running last sample (ts, value) over the stored
         # and queued writes, None while empty: the anchor of the add-time
         # retention check (`_admit`); dropped wherever the stored samples
@@ -182,8 +185,9 @@ class TimeSeriesEngine:
             ignore_max_val_diff=ignore_max_val_diff,
         )
         self.series[key] = cfg
+        self._last_cache[key] = None  # a new series holds no samples
         if cfg.retention_ms > 0:
-            self._horizon[key] = None  # a new series holds no samples
+            self._horizon[key] = None
         self._labels = None
         # COMPACTION_POLICY auto-rules (src/module.c:1085-1093)
         for r in self.auto_rules:
@@ -454,6 +458,7 @@ class TimeSeriesEngine:
         stored rows are never re-filtered."""
         if not self._pending:
             return
+        touched = sorted({p[0] for p in self._pending})
         rows = []
         for key, ts, value, on_dup in self._accepted_pending():
             rows.append((key, ts, value, self._seq, on_dup))
@@ -514,6 +519,7 @@ class TimeSeriesEngine:
                 )
             )
         self._samples = out.localCheckpoint()  # materialize the fold
+        self._last_cache.update(self._stored_lasts(touched))
 
     def _accepted_pending(self) -> list:
         """The pending writes the store takes, in arrival order.
@@ -607,18 +613,34 @@ class TimeSeriesEngine:
             return self._last(key)[0] + 1
         return parse_duration_ms(v)
 
+    def _stored_lasts(self, keys: list[str]) -> dict:
+        """The last stored sample of each of `keys`, None for a key without
+        samples: one aggregate job."""
+        found = {
+            r[0]: (r[1], r[2])
+            for r in self._samples.filter(key_in(keys))
+            .groupBy("key")
+            .agg(F.max("ts"), F.max_by("value", "ts"))
+            .collect()
+        }
+        return {k: found.get(k) for k in keys}
+
+    def _lasts(self, keys: list[str]) -> dict:
+        """The last sample (ts, value) of each of `keys`, None for a series
+        without samples: from `_last_cache`, which no pending write of a
+        cached key bypasses (`add` drops the entry), else after a flush,
+        which refreshes the keys it folds; any key still missing costs one
+        aggregate job for all of them."""
+        if any(k not in self._last_cache for k in keys):
+            self.flush()
+            need = [k for k in keys if k not in self._last_cache]
+            if need:
+                self._last_cache.update(self._stored_lasts(need))
+        return {k: self._last_cache[k] for k in keys}
+
     def _last(self, key: str):
-        if key in self._last_cache:
-            return self._last_cache[key]
-        r = (
-            self.samples.filter(F.col("key") == key)
-            .groupBy()
-            .agg(F.max("ts").alias("t"), F.max_by("value", "ts").alias("v"))
-            .collect()[0]
-        )
-        if r.t is not None:
-            self._last_cache[key] = (r.t, r.v)
-        return (r.t if r.t is not None else -1), r.v
+        last = self._lasts([key])[key]
+        return last if last is not None else (-1, None)
 
     def _series_df(self, key: str, latest: bool) -> DataFrame:
         cfg = self._cfg(key)
@@ -979,33 +1001,53 @@ class TimeSeriesEngine:
         return ts_asof_join(left, right, tolerance_ms=tolerance_ms).drop("key")
 
     def get(self, key: str, latest: bool = False):
+        """TS.GET: a plain series answers from its last sample (`_lasts`,
+        no Spark job once cached), a compaction destination from its
+        rule; latest=True finalizes a destination's open bucket."""
+        if self._cfg(key).src_key is None:
+            return self._lasts([key])[key]
         rows = self._series_df(key, latest).orderBy(F.col("ts").desc()).take(1)
         return (rows[0].ts, rows[0].value) if rows else None
 
-    def mget(self, filters: list[str], latest: bool = False, **kw) -> DataFrame:
-        """TS.MGET; latest=True finalizes the open bucket for matched series
-        that are compaction destinations (src/tsdb.c:1468-1501)."""
-        out = ts_mget(self.samples, self.label_index, filters, **kw)
+    def mget(
+        self,
+        filters: list[str],
+        latest: bool = False,
+        selected_labels: list[str] | None = None,
+        with_labels_flag: bool = False,
+    ) -> DataFrame:
+        """TS.MGET: the matched plain series answer from their last samples
+        (`_lasts`) as a driver-built frame; latest=True finalizes the open
+        bucket for matched series that are compaction destinations
+        (src/tsdb.c:1468-1501)."""
+        matched = self.label_index.match(filters)
         dests = {r.dest_key for r in self.rules}
-        if not dests:
-            return out
+        lasts = self._lasts([k for k in matched if k not in dests])
+        rows = [(k, *last) for k, last in lasts.items() if last is not None]
+        out = self.spark.createDataFrame(
+            pa.table(
+                {
+                    "key": pa.array([r[0] for r in rows], pa.string()),
+                    "ts": pa.array([r[1] for r in rows], pa.int64()),
+                    "value": pa.array([r[2] for r in rows], pa.float64()),
+                }
+            )
+        )
         # which dests matched the filter: a driver-side set intersection
-        hit = sorted(dests.intersection(self.label_index.match(filters)))
-        if not hit:
-            return out
-        # compaction destinations materialize from their rules in ONE pass
-        # (closed buckets; latest=True additionally finalizes the open
-        # bucket) — one Spark job regardless of how many dests matched, not
-        # a driver-side loop of .take(1) jobs per key
-        hit_rules = [r for r in self.rules if r.dest_key in set(hit)]
-        dest_latest = (
-            self._dest_samples(hit_rules, latest)
-            .groupBy("key")
-            .agg(F.max("ts").alias("ts"), F.max_by("value", "ts").alias("value"))
-        )
-        return out.filter(~key_in(hit)).unionByName(
-            dest_latest.select("key", "ts", "value")
-        )
+        hit = dests.intersection(matched)
+        if hit:
+            # compaction destinations materialize from their rules in ONE
+            # pass (closed buckets; latest=True additionally finalizes the
+            # open bucket) — one Spark job regardless of how many dests
+            # matched, not a driver-side loop of .take(1) jobs per key
+            out = out.unionByName(
+                self._dest_samples([r for r in self.rules if r.dest_key in hit], latest)
+                .groupBy("key")
+                .agg(F.max("ts").alias("ts"), F.max_by("value", "ts").alias("value"))
+            )
+        if with_labels_flag or selected_labels is not None:
+            out = with_labels(out, self.label_index, selected_labels)
+        return out
 
     def _dest_samples(self, rules, latest: bool) -> DataFrame:
         """Materialize compaction-destination series.  The plan grows with

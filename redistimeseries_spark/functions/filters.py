@@ -13,27 +13,40 @@ from pyspark.sql import functions as F
 from redistimeseries_spark import MAX_TS, MIN_TS
 
 
-def _sql_str(s: str) -> str:
-    # a quote, backslash or `$` (variable substitution) goes as UTF-8 hex,
-    # which no parser setting reinterprets
+def sql_str(s: str | None) -> str:
+    """A string literal in SQL text.  A quote, backslash or `$` (variable
+    substitution) goes as UTF-8 hex, which no parser setting
+    reinterprets."""
+    if s is None:
+        return "CAST(NULL AS STRING)"
     if any(c in s for c in "'\\$"):
         return f"CAST(X'{s.encode().hex()}' AS STRING)"
     return f"'{s}'"
 
 
-def _key_sql(keys: list[str]) -> str:
+def key_sql(keys: list[str]) -> str:
     if not keys:
         return "false"
     if len(keys) == 1:
-        return "key = " + _sql_str(keys[0])
-    return "key IN (" + ",".join(map(_sql_str, keys)) + ")"
+        return "key = " + sql_str(keys[0])
+    return "key IN (" + ",".join(map(sql_str, keys)) + ")"
+
+
+def key_runs_sql(runs: list[tuple[str, str]]) -> str:
+    """The inclusive key runs (`operators/labels.key_runs`) as an OR of
+    `key = k` / `key >= a AND key <= b`: forms the in-memory columnar
+    scan prunes cached batches on, where it cannot on an `InSet`."""
+    return " OR ".join(
+        f"key = {sql_str(a)}" if a == b else f"(key >= {sql_str(a)} AND key <= {sql_str(b)})"
+        for a, b in runs
+    )
 
 
 def key_in(keys: list[str]) -> Column:
     """`key IN (<keys>)` (`key = k` for one key) as one SQL text, parsed
     once on the JVM (`Column.isin` costs one py4j round trip per key:
     0.5 ms each)."""
-    return F.expr(_key_sql(keys))
+    return F.expr(key_sql(keys))
 
 
 def filter_key_range(
@@ -50,7 +63,7 @@ def filter_key_range(
     round trip each, and every extra `.filter` is analysed eagerly."""
     conds = []
     if keys is not None:
-        conds.append(_key_sql([keys] if isinstance(keys, str) else list(keys)))
+        conds.append(key_sql([keys] if isinstance(keys, str) else list(keys)))
     if start > MIN_TS:
         conds.append(f"ts >= {int(start)}")
     if end < MAX_TS:

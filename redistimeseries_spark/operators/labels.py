@@ -8,6 +8,20 @@ driver, and the multi-series operators scan samples with a literal
 `key IN (<matched keys>)` filter (`functions/filters.key_in`), which
 Catalyst pushes into the scan.  No Spark join against the labels table runs on a query path.
 
+Scan filter: above `spark.sql.optimizer.inSetConversionThreshold` keys
+Catalyst turns the `IN` into an `InSet`, which the in-memory columnar
+scan cannot prune cached batches on (its batch filter knows `=`, the
+comparisons, `In`, And/Or, IsNull and StartsWith).  The index knows the
+whole key universe, so `key_runs` cuts the matched keys, in sorted
+order, at the largest gaps of unmatched universe keys into at most that
+many runs, and TS.MRANGE ANDs `key IN` with the runs as `key = k` /
+`key >= a AND key <= b` (`functions/filters.key_runs_sql`).  The runs
+only prune: they are implied by the `IN`, so they never change an
+answer.  They are emitted only when they cover at most half of the
+universe — on a key-sorted cache, 13 matched keys of 1,000 whose runs
+cover 60 skip most batches, while 100 keys spread over every batch
+(runs covering 910) would only add a predicate per row.
+
 Where the index comes from (`label_index`):
   * a labels DataFrame (key, label, value) is read with one collect; the
     index is kept for as long as Spark serves that frame object from the
@@ -46,7 +60,9 @@ but never equals a value.
 
 from __future__ import annotations
 
+from bisect import bisect_left, bisect_right
 from dataclasses import dataclass
+from functools import cached_property
 from weakref import WeakKeyDictionary
 
 import pyarrow as pa
@@ -106,6 +122,11 @@ class LabelIndex:
             if key is not None and label is not None:
                 self.by_key.setdefault(key, {}).setdefault(label, set()).add(value)
 
+    @cached_property
+    def universe(self) -> list[str]:
+        """Every indexed key, sorted (Spark's UTF-8 byte order)."""
+        return sorted(self.by_key)
+
     def match(self, filters: list[str | LabelPredicate]) -> list[str]:
         """TS.QUERYINDEX: the sorted keys matching every predicate."""
         preds = [p if isinstance(p, LabelPredicate) else parse_filter(p) for p in filters]
@@ -129,6 +150,26 @@ class LabelIndex:
         else:
             raise ValueError(f"bad mode {mode!r}")
         return sorted(out, key=lambda v: (v is not None, v or ""))
+
+
+def key_runs(universe: list[str], keys: list[str], max_runs: int) -> list[tuple[str, str]] | None:
+    """Inclusive (first, last) key runs covering every key of `keys`:
+    sorted, split at the `max_runs - 1` largest gaps, a gap being the
+    number of `universe` keys (sorted) strictly between two neighbours.
+    None when the runs cover more than half of the universe, where
+    pruning batches by them would skip little."""
+    keys = sorted(set(keys))
+    if not keys or max_runs < 1:
+        return None
+    gaps = [
+        (bisect_left(universe, b) - bisect_right(universe, a), i)
+        for i, (a, b) in enumerate(zip(keys, keys[1:]), 1)
+    ]
+    cuts = sorted(i for g, i in sorted(gaps, reverse=True)[: max_runs - 1] if g > 0)
+    bounds = [0, *cuts, len(keys)]
+    runs = [(keys[lo], keys[hi - 1]) for lo, hi in zip(bounds, bounds[1:])]
+    covered = sum(bisect_right(universe, b) - bisect_left(universe, a) for a, b in runs)
+    return runs if 2 * covered <= len(universe) else None
 
 
 # DataFrame -> (its cache entry's identity, index)

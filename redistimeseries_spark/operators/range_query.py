@@ -17,10 +17,12 @@ src/reply.c:180-192), so the limit here is a per-key row_number, evaluated
 after filters and aggregation.
 
 Ordering contract: rows come back in (key, ts) order, ts descending under
-REV.  A one-key query sorts its answer in one partition after the last
-exchange (`ts_range` says why that holds at scale); several keys sort
-globally.  The key/ts pre-filter is one Filter node parsed from one SQL
-text (`functions/filters.filter_key_range`).
+REV.  A one-key query, and an aggregated query over a finite range whose
+row bound fits one `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+partition, sorts its answer in one partition after the last exchange
+(`ts_range` says why that holds at scale); raw multi-key reads and
+unbounded ranges sort globally.  The key/ts pre-filter is one Filter
+node parsed from one SQL text (`functions/filters.filter_key_range`).
 
 Everything up to the (key, bucket) aggregated frame — the pre-filters,
 the per-bucket emission rule and the finalizers — is `bucket_aggregate`,
@@ -35,6 +37,7 @@ aggregation, and derives twa (operators/twa.py) and the EMPTY spine
 
 from __future__ import annotations
 
+import re
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
@@ -54,6 +57,10 @@ from redistimeseries_spark.operators.twa import twa_partials, with_twa
 
 # src/query_language.h:53
 MAX_TS_VALUES_FILTER = 128
+
+# Spark's byte-size suffixes (JavaUtils.byteStringAsBytes), as shifts
+_BYTE_SHIFTS = {"": 0, "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20, "g": 30, "gb": 30,
+                "t": 40, "tb": 40, "p": 50, "pb": 50}
 
 # aggregators with their own isValueValid (nanValueValid / allValueValid,
 # src/compaction.c:944-978): they accept NaN samples
@@ -196,6 +203,23 @@ def bucket_aggregate(
     return out.select("key", "__bucket", *[sanitize(a) for a in aggs])
 
 
+def _fits_one_partition(spark, keys, aggs, bucket_dur, start, end) -> bool:
+    """Whether the answer for `keys` (a list, or None for every key) fits
+    one partition: one key always (one reply), several keys when the
+    answer is aggregated and its row bound — `len(keys)` x the buckets
+    [start, end] can touch — fits one advisory partition of the
+    (UnsafeRow-sized) output, where AQE would coalesce it to anyway."""
+    if keys is None or (len(keys) > 1 and not aggs):
+        return False
+    if len(keys) <= 1:
+        return True
+    rows = len(keys) * ((end - start) // bucket_dur + 2)
+    row_bytes = 8 * (3 + len(aggs)) + max(len(k.encode()) for k in keys)
+    advisory = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    num, unit = re.fullmatch(r"(\d+)([a-z]*)", advisory.strip().lower()).groups()
+    return rows * row_bytes <= int(num) << _BYTE_SHIFTS[unit]
+
+
 def ts_range(
     samples: DataFrame,
     start: int = MIN_TS,
@@ -218,15 +242,18 @@ def ts_range(
 
     A one-key `keys` (a str or a one-element list) answers in ONE
     partition sorted within it, like the reference's walk of one series'
-    chunks into one reply (src/reply.c:175-213); any other `keys` sorts
-    globally (`orderBy`: a range-partition sampling job and a sort
-    shuffle, which buy nothing for one key).  The single partition holds
-    at scale: it starts after the aggregation's exchange, so it carries
-    at most one row per bucket of one series, while the scan and partial
-    aggregation keep every core.  A raw answer, that series' samples,
-    reaches the client as one reply anyway; it moves through one
-    single-partition exchange, so its scan is not coalesced into one
-    task.
+    chunks into one reply (src/reply.c:175-213).  So does an aggregated
+    read of several `keys` over a finite [start, end] whose answer is
+    bounded on the driver by len(keys) x the buckets of the range and
+    fits one `spark.sql.adaptive.advisoryPartitionSizeInBytes` partition
+    (`_fits_one_partition`).  Any other read sorts globally (`orderBy`: a
+    range-partition sampling job and a sort shuffle, which buy nothing
+    for an answer of one partition).  The single partition holds at
+    scale: it starts after the aggregation's exchange, so it carries at
+    most the bounded rows, while the scan and partial aggregation keep
+    every core.  A one-key raw answer, that series' samples, reaches the
+    client as one reply anyway; it moves through one single-partition
+    exchange, so its scan is not coalesced into one task.
     """
     aggs = _as_list(aggregations)
     if aggs:
@@ -245,6 +272,12 @@ def ts_range(
         ).select("key", "ts", "value")
 
     order = F.col("ts").desc() if rev else F.col("ts").asc()
+    one = _fits_one_partition(samples.sparkSession, _as_list(keys), aggs, bucket_dur, start, end)
+    if one:
+        # coalesce behind the aggregation's exchange, so COUNT's window
+        # needs none of its own; a raw scan has none, and coalescing it
+        # would read the source in one task
+        df = df.coalesce(1) if aggs else df.repartition(1)
     if count is not None:
         w = Window.partitionBy("key").orderBy(order)
         df = (
@@ -252,11 +285,4 @@ def ts_range(
             .filter(F.col("__rn") <= count)
             .drop("__rn")
         )
-    keys = _as_list(keys)
-    if keys is None or len(keys) != 1:
-        return df.orderBy("key", order)
-    # coalesce behind the last exchange (the aggregation's or COUNT's
-    # window); a raw scan has none, and coalescing it would read the
-    # source in one task
-    one = df.coalesce(1) if aggs or count is not None else df.repartition(1)
-    return one.sortWithinPartitions("key", order)
+    return df.sortWithinPartitions("key", order) if one else df.orderBy("key", order)

@@ -23,11 +23,12 @@ Empty / NaN-only buckets under EMPTY (src/filter_iterator.c:307-386):
 Spark shape: twa rides the one (key, __bucket) aggregation of
 `range_query.bucket_aggregate`, as the reference computes every
 aggregator of a bucket in one AggregationIterator pass.  `twa_partials`
-adds a valid-only lag over a (key, __bucket) window (bucket-local, so a
-hot series parallelizes across its buckets) and the per-bucket partials
-— the in-bucket trapezoid area, the first and last valid samples and the
-ts of the second and second-to-last — as conditional aggregates next to
-the plain ones.
+adds a valid-only lag and lead over a (key, __bucket) window
+(bucket-local, so a hot series parallelizes across its buckets) and the
+per-bucket partials — the in-bucket trapezoid area, the first and last
+valid samples and the ts of the second and second-to-last — as scalar
+conditional aggregates next to the plain ones, so the aggregation stays
+a hash aggregate.
 `with_twa` then reads each bucket's neighbours on that per-bucket frame
 (#buckets rows, never #samples) and computes the value of a bucket with
 valid samples and of an empty / NaN-only one in one column.
@@ -133,29 +134,42 @@ def _empty_bucket_vals(
 
 def twa_partials(df: DataFrame) -> tuple[DataFrame, list[Column]]:
     """`df` (samples with `__bucket`, NaN rows kept) with a valid-only
-    lag, and the twa partials to aggregate per (key, __bucket): `__larea`
-    (the in-bucket trapezoids, TwaAddValue src/compaction.c:348-390), the
-    bucket's first and last valid (ts, value) structs `__f`, `__l`, and
-    the ts of its second and second-to-last valid samples `__f2ts`,
-    `__l2ts` (the empty-bucket heuristic reads only their spacing).
+    lag and lead, and the twa partials to aggregate per (key, __bucket):
+    `__larea` (the in-bucket trapezoids, TwaAddValue
+    src/compaction.c:348-390), the ts and value of the bucket's first and
+    last valid samples `__fts`, `__fv`, `__lts`, `__lv`, and the ts of its
+    second and second-to-last valid samples `__f2ts`, `__l2ts` (the
+    empty-bucket heuristic reads only their spacing).
 
     The window orders NaN rows after the valid ones, so `lag` over a
-    valid row is the previous valid sample of its bucket; NaN rows stay
-    in the frame for count_nan and the EMPTY spine.  (ts, value) order
-    everywhere: duplicate (key, ts) rows, legal in the raw sample table,
-    resolve deterministically (the rate._last_pair rule)."""
+    valid row is the previous valid sample of its bucket: the first valid
+    row is the one without a predecessor, the last the one whose `lead`
+    is not valid.  Each partial is a scalar over at most one row, so the
+    aggregation stays a hash aggregate.  NaN rows stay in the frame for
+    count_nan and the EMPTY spine.  (ts, value) order everywhere:
+    duplicate (key, ts) rows, legal in the raw sample table, resolve
+    deterministically (the rate._last_pair rule)."""
     valid = ~F.isnan("value")
     w = Window.partitionBy("key", "__bucket").orderBy(F.isnan("value"), "ts", "value")
-    df = df.withColumns({"__pts": F.lag("ts").over(w), "__pv": F.lag("value").over(w)})
+    df = df.withColumns(
+        {
+            "__pts": F.lag("ts").over(w),
+            "__pv": F.lag("value").over(w),
+            "__next_valid": F.lead(valid).over(w),
+        }
+    )
     # a valid row with a valid predecessor: every valid row but the first
     inner = valid & F.col("__pts").isNotNull()
+    first = valid & F.col("__pts").isNull()
+    last = valid & ~F.coalesce(F.col("__next_valid"), F.lit(False))
     ts, v = F.col("ts").cast("double"), F.col("value")
     pts, pv = F.col("__pts").cast("double"), F.col("__pv")
-    sample = F.struct("ts", "value")
     return df, [
         F.sum(F.when(inner, (pv + v) * (ts - pts) / 2.0)).alias("__larea"),
-        F.min(F.when(valid, sample)).alias("__f"),
-        F.max(F.when(valid, sample)).alias("__l"),
+        F.max(F.when(first, F.col("ts"))).alias("__fts"),
+        F.max(F.when(first, v)).alias("__fv"),
+        F.max(F.when(last, F.col("ts"))).alias("__lts"),
+        F.max(F.when(last, v)).alias("__lv"),
         F.min(F.when(inner, F.col("ts"))).alias("__f2ts"),
         # the predecessor of the last valid row
         F.max(F.when(inner, F.col("__pts"))).alias("__l2ts"),
@@ -193,13 +207,18 @@ def with_twa(perb: DataFrame, dur: int, start: int, end: int) -> DataFrame:
         .orderBy(F.col("__bucket").desc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    has = F.col("__f").isNotNull()
+    has = F.col("__fts").isNotNull()
     # one sort per direction: each pair shares its window order.  The
     # second of a pair gathers the ts just above a bucket's first (below
     # its last): in-bucket when it holds two samples, else the
-    # neighbouring bucket's
+    # neighbouring bucket's.  A (ts, value) struct gathers a sample whole
+    # (its value may be NULL)
+    def sample(p: str) -> Column:
+        return F.when(has, F.struct(F.col(p + "ts").alias("ts"), F.col(p + "v").alias("value")))
+
     g = (
-        perb.withColumn("__R0", F.last("__f", ignorenulls=True).over(after_rev))
+        perb.withColumns({"__f": sample("__f"), "__l": sample("__l")})
+        .withColumn("__R0", F.last("__f", ignorenulls=True).over(after_rev))
         .withColumn(
             "__R1",
             F.last(F.when(has, F.coalesce("__f2ts", "__R0.ts")), ignorenulls=True).over(after_rev),
@@ -213,8 +232,8 @@ def with_twa(perb: DataFrame, dur: int, start: int, end: int) -> DataFrame:
     b = F.col("__bucket").cast("double")
     ta = F.greatest(b, F.lit(float(start)))
     tb = F.least(b + F.lit(float(dur)), F.lit(float(min(end, MAX_TS))))
-    fts, fv = F.col("__f.ts").cast("double"), F.col("__f.value")
-    lts, lv = F.col("__l.ts").cast("double"), F.col("__l.value")
+    fts, fv = F.col("__fts").cast("double"), F.col("__fv")
+    lts, lv = F.col("__lts").cast("double"), F.col("__lv")
     tl1, vl1 = F.col("__L1.ts").cast("double"), F.col("__L1.value")
     tl2 = F.col("__L2").cast("double")
     tr0, vr0 = F.col("__R0.ts").cast("double"), F.col("__R0.value")
@@ -249,7 +268,8 @@ def with_twa(perb: DataFrame, dur: int, start: int, end: int) -> DataFrame:
         .when(~closes & tl2.isNotNull() & near_l & keep_l, vl1)
     )
     return g.withColumn("twa", F.when(has, value).otherwise(fill)).drop(
-        "__larea", "__f", "__l", "__f2ts", "__l2ts", "__L1", "__L2", "__R0", "__R1"
+        "__larea", "__fts", "__fv", "__lts", "__lv", "__f", "__l", "__f2ts", "__l2ts",
+        "__L1", "__L2", "__R0", "__R1",
     )
 
 

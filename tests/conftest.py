@@ -46,6 +46,35 @@ def count_jobs(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def plan_nodes(node):
+    """Every node of an executed physical plan, through the adaptive
+    plan's final stages."""
+    yield node
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        children = [node.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        children = [node.plan()]
+    else:
+        seq = node.children()
+        children = [seq.apply(i) for i in range(seq.size())]
+    for child in children:
+        yield from plan_nodes(child)
+
+
+def scan_output_rows(df) -> int:
+    """The rows the in-memory scans of `df`'s last execution emitted
+    (`numOutputRows` of every InMemoryTableScan in the final adaptive
+    plan): the rows of the cached batches the scan did not skip.  Call it
+    after an action on `df`."""
+    plan = df._jdf.queryExecution().executedPlan()
+    return sum(
+        n.metrics().apply("numOutputRows").value()
+        for n in plan_nodes(plan)
+        if n.getClass().getSimpleName() == "InMemoryTableScanExec"
+    )
+
+
 def feq(a, b, tol=1e-9):
     if a is None or b is None:
         return a is b

@@ -252,6 +252,39 @@ def test_madd_retention_check_job_budget(spark, eng):
     assert (out, jobs) == ([1, 2], 0)
 
 
+def test_get_mget_from_last_sample(spark, eng):
+    """After a flush, TS.GET and TS.MGET of plain series answer from the
+    catalog's last sample with no Spark job, and every write, DEL,
+    rename and drop shows in the next answer."""
+    eng.create("a", labels={"t": "x"})
+    eng.create("b", labels={"t": "x"})
+    eng.create("empty", labels={"t": "x"})
+    eng.madd([("a", 1000, 1.0), ("a", 3000, float("nan")), ("b", 2000, 5.0), ("b", 500, 6.0)])
+    eng.flush()
+
+    def mget():
+        return {r.key: (r.ts, r.value) for r in eng.mget(["t=x"]).collect()}
+
+    got, jobs = count_jobs(spark, lambda: (eng.get("a"), eng.get("b"), mget()))
+    assert jobs == 0, jobs
+    assert got[0][0] == 3000 and math.isnan(got[0][1])
+    assert got[1] == (2000, 5.0)
+    assert set(got[2]) == {"a", "b"} and got[2]["b"] == (2000, 5.0)
+    assert count_jobs(spark, lambda: eng.get("empty")) == (None, 0)
+    eng.add("b", 4000, 7.0)
+    assert eng.get("b") == (4000, 7.0)
+    assert eng.delete("b", 3500, 4500) == 1
+    assert eng.get("b") == (2000, 5.0)
+    assert mget()["b"] == (2000, 5.0)
+    eng.rename("b", "c")
+    assert eng.get("c") == (2000, 5.0)
+    assert set(mget()) == {"a", "c"}
+    eng.drop("a")
+    assert count_jobs(spark, mget) == ({"c": (2000, 5.0)}, 0)
+    labelled = eng.mget(["t=x"], with_labels_flag=True).collect()
+    assert [(r.key, r.t) for r in labelled] == [("c", "x")]
+
+
 def test_del_and_info(eng):
     eng.create("d", labels={"a": "b"})
     eng.madd([("d", i * 1000, float(i)) for i in range(10)])

@@ -223,15 +223,18 @@ def fleet(spark):
 def test_dashboard_label_query_job_budget(spark, fleet):
     """Each dashboard-shaped label query, warm (the cached labels frame
     already indexed), runs at most its budget of Spark jobs: the label
-    match runs on the driver, and the samples scan takes a literal key
-    set instead of a broadcast semi-join."""
+    match runs on the driver, the samples scan takes a literal key set
+    instead of a broadcast semi-join, an aggregated MRANGE answer is
+    bounded by its matched keys and sorted in one partition (no
+    range-partition sampling job, no sort shuffle), and GROUPBY maps keys
+    to groups with a literal instead of a broadcast job."""
     samples, labels, latest = fleet
     ops = {
-        "mrange_agg": (4, lambda: ts_mrange(
+        "mrange_agg": (2, lambda: ts_mrange(
             samples, labels, ["region=r1", "metric=cpu"], 0, 6 * H,
             aggregations=["max"], bucket_dur=H,
         )),
-        "mrange_groupby": (4, lambda: ts_mrange(
+        "mrange_groupby": (2, lambda: ts_mrange(
             samples, labels, ["metric=mem"], 0, 6 * H,
             aggregations=["avg"], bucket_dur=15 * M, groupby="service", reduce="avg",
         )),
