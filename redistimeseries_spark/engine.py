@@ -143,9 +143,9 @@ class TimeSeriesEngine:
         # per-key (last_ts, last_value), None for a series without
         # samples — the reference keeps lastTimestamp/lastValue on the
         # series struct so TS.GET/MGET/INCRBY are O(1) (src/tsdb.h:64-70);
-        # this cache gives the facade the same O(1): consulted by _lasts,
-        # refreshed by flush for the keys it folds and by incrby's own
-        # writes, invalidated by every other mutation
+        # this cache gives the facade the same O(1): filled by _lasts on a
+        # miss and by incrby's own writes, invalidated by every other
+        # mutation
         self._last_cache: dict[str, tuple[int, float] | None] = {}
         # retention series' running last sample (ts, value) over the stored
         # and queued writes, None while empty: the anchor of the add-time
@@ -458,7 +458,6 @@ class TimeSeriesEngine:
         stored rows are never re-filtered."""
         if not self._pending:
             return
-        touched = sorted({p[0] for p in self._pending})
         rows = []
         for key, ts, value, on_dup in self._accepted_pending():
             rows.append((key, ts, value, self._seq, on_dup))
@@ -519,7 +518,6 @@ class TimeSeriesEngine:
                 )
             )
         self._samples = out.localCheckpoint()  # materialize the fold
-        self._last_cache.update(self._stored_lasts(touched))
 
     def _accepted_pending(self) -> list:
         """The pending writes the store takes, in arrival order.
@@ -615,7 +613,7 @@ class TimeSeriesEngine:
 
     def _stored_lasts(self, keys: list[str]) -> dict:
         """The last stored sample of each of `keys`, None for a key without
-        samples: one aggregate job."""
+        samples: one aggregate query."""
         found = {
             r[0]: (r[1], r[2])
             for r in self._samples.filter(key_in(keys))
@@ -628,14 +626,19 @@ class TimeSeriesEngine:
     def _lasts(self, keys: list[str]) -> dict:
         """The last sample (ts, value) of each of `keys`, None for a series
         without samples: from `_last_cache`, which no pending write of a
-        cached key bypasses (`add` drops the entry), else after a flush,
-        which refreshes the keys it folds; any key still missing costs one
-        aggregate job for all of them."""
+        cached key bypasses (`add` drops the entry).  A miss flushes and
+        fills, with one aggregate query, the missing `keys` and every
+        plain series the cache lacks, so the reads after it run no job until a
+        write drops an entry."""
         if any(k not in self._last_cache for k in keys):
             self.flush()
-            need = [k for k in keys if k not in self._last_cache]
-            if need:
-                self._last_cache.update(self._stored_lasts(need))
+            need = {k for k in keys if k not in self._last_cache}
+            need.update(
+                k
+                for k, cfg in self.series.items()
+                if cfg.src_key is None and k not in self._last_cache
+            )
+            self._last_cache.update(self._stored_lasts(sorted(need)))
         return {k: self._last_cache[k] for k in keys}
 
     def _last(self, key: str):

@@ -51,6 +51,13 @@ from redistimeseries_spark.operators.range_query import ts_range
 # aggregation over the merged group, enabling the one-shuffle fused plan.
 _FUSABLE = {("sum", "sum"), ("min", "min"), ("max", "max")}
 
+# The two-stage GROUPBY maps keys to groups with a literal up to these
+# many groups and (key, group) pairs, else with a broadcast frame: the
+# crossover scripts/groupby_map_probe.py measured (its docstring has the
+# table; beyond it the broadcast's one job costs less than the literal).
+_LITERAL_GROUPS = 10
+_LITERAL_PAIRS = 500
+
 
 def _pruned_scan(
     samples: DataFrame, index: LabelIndex, keys: list[str], threshold: int
@@ -197,13 +204,12 @@ def ts_mrange(
         return ts_range(relabeled, start, end, **range_kwargs)
 
     out = ts_range(df, start, end, keys, **range_kwargs)
-    if 0 < len(groups) <= threshold:
-        # up to the InSet threshold of groups, each aggregated row probes
-        # one hashed `key IN` per group, a literal that runs no Spark job
-        # where broadcasting the driver-built group frame runs one.  (A
-        # literal key -> group `map` is scanned linearly per row: 4.3 s
-        # against 0.8 s for the broadcast at 5,000 keys in 5 groups, on a
-        # 4-core host.)  A key holding several values joins each group.
+    if 0 < len(groups) <= _LITERAL_GROUPS and len(pairs) <= _LITERAL_PAIRS:
+        # each aggregated row probes one hashed `key IN` per group: a
+        # literal that runs no Spark job where broadcasting the group
+        # frame runs one, but whose plan grows with the pairs and whose
+        # per-row work grows with the groups (`_LITERAL_GROUPS`).  A key
+        # holding several values joins each group.
         grpvals = ", ".join(
             f"IF({key_sql(ks)}, array({sql_str(v)}), array())" for v, ks in groups.items()
         )

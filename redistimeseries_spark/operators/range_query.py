@@ -37,7 +37,6 @@ aggregation, and derives twa (operators/twa.py) and the EMPTY spine
 
 from __future__ import annotations
 
-import re
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
@@ -57,10 +56,6 @@ from redistimeseries_spark.operators.twa import twa_partials, with_twa
 
 # src/query_language.h:53
 MAX_TS_VALUES_FILTER = 128
-
-# Spark's byte-size suffixes (JavaUtils.byteStringAsBytes), as shifts
-_BYTE_SHIFTS = {"": 0, "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20, "g": 30, "gb": 30,
-                "t": 40, "tb": 40, "p": 50, "pb": 50}
 
 # aggregators with their own isValueValid (nanValueValid / allValueValid,
 # src/compaction.c:944-978): they accept NaN samples
@@ -216,8 +211,9 @@ def _fits_one_partition(spark, keys, aggs, bucket_dur, start, end) -> bool:
     rows = len(keys) * ((end - start) // bucket_dur + 2)
     row_bytes = 8 * (3 + len(aggs)) + max(len(k.encode()) for k in keys)
     advisory = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    num, unit = re.fullmatch(r"(\d+)([a-z]*)", advisory.strip().lower()).groups()
-    return rows * row_bytes <= int(num) << _BYTE_SHIFTS[unit]
+    # Spark's own parser of its byte-size strings: one JVM call
+    limit = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(advisory)
+    return rows * row_bytes <= limit
 
 
 def ts_range(

@@ -253,9 +253,10 @@ def test_madd_retention_check_job_budget(spark, eng):
 
 
 def test_get_mget_from_last_sample(spark, eng):
-    """After a flush, TS.GET and TS.MGET of plain series answer from the
-    catalog's last sample with no Spark job, and every write, DEL,
-    rename and drop shows in the next answer."""
+    """TS.GET and TS.MGET of plain series answer from the catalog's last
+    sample: the first read fills it for every plain series with one
+    aggregate query, the reads after it run no Spark job, and every write, DEL, rename and
+    drop shows in the next answer."""
     eng.create("a", labels={"t": "x"})
     eng.create("b", labels={"t": "x"})
     eng.create("empty", labels={"t": "x"})
@@ -265,6 +266,7 @@ def test_get_mget_from_last_sample(spark, eng):
     def mget():
         return {r.key: (r.ts, r.value) for r in eng.mget(["t=x"]).collect()}
 
+    assert count_jobs(spark, lambda: eng.get("a"))[1] > 0
     got, jobs = count_jobs(spark, lambda: (eng.get("a"), eng.get("b"), mget()))
     assert jobs == 0, jobs
     assert got[0][0] == 3000 and math.isnan(got[0][1])

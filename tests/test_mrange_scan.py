@@ -11,6 +11,7 @@ import pytest
 from redistimeseries_spark import MAX_TS
 from redistimeseries_spark.functions.filters import key_in, key_runs_sql, key_sql
 from redistimeseries_spark.operators.labels import key_runs
+from redistimeseries_spark.operators import multi
 from redistimeseries_spark.operators.multi import ts_mrange
 from redistimeseries_spark.operators.range_query import ts_range
 from tests.conftest import count_jobs, plan_nodes, scan_output_rows
@@ -172,12 +173,17 @@ def test_bounded_mrange_order(spark, store):
     assert _sorts_globally(big)
 
 
-@pytest.mark.parametrize("groupby", ["region", "hostname"])
-def test_groupby_two_stage_group_map(store, groupby):
+@pytest.mark.parametrize(
+    "groupby, max_pairs", [("region", None), ("hostname", None), ("region", 51)]
+)
+def test_groupby_two_stage_group_map(monkeypatch, store, groupby, max_pairs):
     """The two-stage GROUPBY (avg of per-series avgs) maps keys to groups
-    with a literal up to the InSet threshold of groups (4 regions) and a
-    broadcast group frame above it (52 hostnames): both give the
-    reference's answer."""
+    with a literal within `_LITERAL_GROUPS` groups and `_LITERAL_PAIRS`
+    (key, group) pairs (4 regions of 52 keys), and with a broadcast
+    group frame beyond either (52 hostnames; or the pair cap set below
+    52): every path gives the reference's answer."""
+    if max_pairs is not None:
+        monkeypatch.setattr(multi, "_LITERAL_PAIRS", max_pairs)
     samples, labels = store
     start, end, dur = 0, 200 * M, 15 * M
     out = ts_mrange(
