@@ -628,8 +628,8 @@ class TimeSeriesEngine:
         without samples: from `_last_cache`, which no pending write of a
         cached key bypasses (`add` drops the entry).  A miss flushes and
         fills, with one aggregate query, the missing `keys` and every
-        plain series the cache lacks, so the reads after it run no job until a
-        write drops an entry."""
+        plain series the cache lacks, so the reads after it run no job
+        until a write drops an entry."""
         if any(k not in self._last_cache for k in keys):
             self.flush()
             need = {k for k in keys if k not in self._last_cache}

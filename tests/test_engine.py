@@ -255,8 +255,8 @@ def test_madd_retention_check_job_budget(spark, eng):
 def test_get_mget_from_last_sample(spark, eng):
     """TS.GET and TS.MGET of plain series answer from the catalog's last
     sample: the first read fills it for every plain series with one
-    aggregate query, the reads after it run no Spark job, and every write, DEL, rename and
-    drop shows in the next answer."""
+    aggregate query, the reads after it run no Spark job, and every
+    write, DEL, rename and drop shows in the next answer."""
     eng.create("a", labels={"t": "x"})
     eng.create("b", labels={"t": "x"})
     eng.create("empty", labels={"t": "x"})
