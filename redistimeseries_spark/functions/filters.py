@@ -24,6 +24,24 @@ def sql_str(s: str | None) -> str:
     return f"'{s}'"
 
 
+def bigint_sql(v: int) -> str:
+    """A BIGINT literal: the type of the table functions' integer
+    parameters, so the operator's plan and the function's fold alike."""
+    return f"{int(v)}L"
+
+
+def double_sql(v: float) -> str:
+    """A DOUBLE literal (a bare `1.5` is a DECIMAL in Spark SQL)."""
+    return f"{float(v)!r}D"
+
+
+def run_sql(text: str, src: DataFrame, **frags: str) -> DataFrame:
+    """`text` over `src`: the `{src}` field names the frame, every other
+    field takes its SQL fragment from `frags` (literals from `bigint_sql`
+    / `double_sql`)."""
+    return src.sparkSession.sql(text.format(src="{src}", **frags), src=src)
+
+
 def key_sql(keys: list[str]) -> str:
     if not keys:
         return "false"

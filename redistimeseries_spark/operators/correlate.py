@@ -39,7 +39,11 @@ from redistimeseries_spark.materialize import materialize
 
 from redistimeseries_spark import MAX_TS, MIN_TS
 from redistimeseries_spark.functions.buckets import bucket_start, resolve_align
-from redistimeseries_spark.functions.filters import filter_valid_range
+from redistimeseries_spark.functions.filters import (
+    bigint_sql,
+    filter_valid_range,
+    run_sql,
+)
 
 # the rate/smooth/incrby time-chunk constant (~4.7 h of millis)
 CUSUM_CHUNK_MS = 1 << 24
@@ -368,7 +372,6 @@ def ts_acf(
 def _acf_grid(samples, bucket_dur, keys, start, end, align):
     """Shared ACF prep: valid in-range rows averaged onto the regular
     bucket grid -> (key, __b, __v)."""
-    align_ts = resolve_align(align, start, end)
     # MATERIALIZED (eager localCheckpoint): the grid is bucket-bounded
     # (#keys x #buckets rows — catalog scale, never sample scale) but its
     # consumers re-execute the whole per-sample scan + hash agg otherwise:
@@ -378,58 +381,48 @@ def _acf_grid(samples, bucket_dur, keys, start, end, align):
     # detect_period plan, i.e. up to ~6 full corpus aggregations per query
     # at scale.  Subtree reuse does not deduplicate them (the re-aliased
     # self-join sides fail canonical matching, as with the LSH band table).
-    return (
-        _filtered(samples, keys, start, end)
-        .groupBy(
-            "key",
-            bucket_start(F.col("ts"), bucket_dur, align_ts).alias("__b"),
-        )
-        .agg(F.avg("value").alias("__v"))
-        .localCheckpoint()
-    )
+    return run_sql(
+        ACF_GRID_SQL,
+        _filtered(samples, keys, start, end),
+        dur=bigint_sql(bucket_dur),
+        align=bigint_sql(resolve_align(align, start, end)),
+    ).localCheckpoint()
+
+
+ACF_GRID_SQL = """
+SELECT key, ts - pmod(ts - {align}, {dur}) AS __b, avg(value) AS __v
+FROM {src} GROUP BY key, __b
+"""
 
 
 def _acf_sweep(g, bucket_dur, max_lag_n):
     """The lag sweep over a gridded (key, __b, __v) frame — the
     ts_xcorr join/aggregate shape with the key as its own pair."""
-    b = (
-        g.select(
-            "key",
-            "__b",
-            F.col("__v").alias("__vb"),
-            F.explode(
-                F.sequence(F.lit(1), F.lit(int(max_lag_n)))
-            ).alias("lag_n"),
-        )
-        .withColumn(
-            "__b", F.col("__b") - F.col("lag_n").cast("long") * bucket_dur
-        )
-    )
-    m = g.select("key", "__b", F.col("__v").alias("__va")).join(
-        b, ["key", "__b"]
-    )
-    acf = F.when(
-        (F.col("__sa") > 0) & (F.col("__sb") > 0),
-        F.col("__cov") / (F.col("__sa") * F.col("__sb")),
-    )
-    return (
-        m.groupBy("key", "lag_n")
-        .agg(
-            F.covar_samp("__va", "__vb").alias("__cov"),
-            F.stddev_samp("__va").alias("__sa"),
-            F.stddev_samp("__vb").alias("__sb"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            "key",
-            "lag_n",
-            (F.col("lag_n").cast("long") * bucket_dur).alias("lag_ms"),
-            acf.alias("acf"),
-            "n",
-        )
-        .filter(F.col("acf").isNotNull() & ~F.isnan("acf"))
-        .orderBy("key", "lag_n")
-    )
+    return run_sql(
+        ACF_SWEEP_SQL, g, dur=bigint_sql(bucket_dur), max_lag=str(int(max_lag_n))
+    ).orderBy("key", "lag_n")
+
+
+# the b leg explodes the 1..max_lag lag vector with its bucket timestamps
+# shifted back, so the match is a plain (key, bucket) equi-join
+ACF_SWEEP_SQL = """
+SELECT * FROM (
+  SELECT key, lag_n, CAST(lag_n AS BIGINT) * {dur} AS lag_ms,
+         CASE WHEN __sa > 0 AND __sb > 0 THEN __cov / (__sa * __sb) END AS acf,
+         n
+  FROM (
+    SELECT key, lag_n, covar_samp(__va, __vb) AS __cov,
+           stddev_samp(__va) AS __sa, stddev_samp(__vb) AS __sb,
+           count(1) AS n
+    FROM (SELECT key, __b, __v AS __va FROM {src})
+    JOIN (SELECT key, __b - CAST(lag_n AS BIGINT) * {dur} AS __b, __vb, lag_n
+          FROM (SELECT key, __b, __v AS __vb,
+                       explode(sequence(1, {max_lag})) AS lag_n
+                FROM {src}))
+    USING (key, __b)
+    GROUP BY key, lag_n))
+WHERE acf IS NOT NULL AND NOT isnan(acf)
+"""
 
 
 def ts_detect_period(

@@ -31,12 +31,15 @@ cancels catastrophically at 1e12 (PLANS.md round-11).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from redistimeseries_spark import MAX_TS, MIN_TS
-from redistimeseries_spark.functions.buckets import bucket_start, resolve_align
-from redistimeseries_spark.functions.filters import filter_valid_range
+from redistimeseries_spark.functions.buckets import resolve_align
+from redistimeseries_spark.functions.filters import (
+    bigint_sql,
+    filter_valid_range,
+    run_sql,
+)
 
 
 def ts_features(
@@ -73,95 +76,56 @@ def ts_features(
     """
     if bucket_dur <= 0:
         raise ValueError("bucket_dur must be positive")
-    dur = int(bucket_dur)
-    align_ts = resolve_align(align, start, end)
-    g = (
-        filter_valid_range(samples, keys, start, end)
-        .groupBy(
-            "key",
-            bucket_start(F.col("ts"), dur, align_ts).alias("__b"),
-        )
-        .agg(F.avg("value").alias("__v"), F.count(F.lit(1)).alias("__c"))
-    )
-    # both window specs share the (key, __b) sort order so the two
-    # Window nodes reuse ONE grid sort (an unordered partition-frame
-    # spec would plan a second key-only Sort)
-    wo = Window.partitionBy("key").orderBy("__b")
-    wp = wo.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    d = (
-        g.withColumn("__mu", F.avg("__v").over(wp))
-        .withColumn("__minb", F.min("__b").over(wp))
-        .withColumn("__vn", F.lead("__v").over(wo))
-        .withColumn("__bn", F.lead("__b").over(wo))
-    )
-    d = d.withColumn(
-        "__x", ((F.col("__b") - F.col("__minb")) / F.lit(dur)).cast("double")
-    ).withColumn(
-        "__adj",
-        F.coalesce(F.col("__bn") == F.col("__b") + F.lit(dur), F.lit(False)),
-    )
-    adj = F.col("__adj")
-    va = F.when(adj, F.col("__v"))
-    vb = F.when(adj, F.col("__vn"))
-    one = F.lit(1)
-    zero = F.lit(0)
-    a = d.groupBy("key").agg(
-        F.sum("__c").alias("n_samples"),
-        F.count(one).alias("n_buckets"),
-        F.avg("__v").alias("mean"),
-        F.stddev_samp("__v").alias("std"),
-        F.min("__v").alias("vmin"),
-        F.max("__v").alias("vmax"),
-        F.regr_slope(F.col("__v"), F.col("__x")).alias("__sl"),
-        F.regr_r2(F.col("__v"), F.col("__x")).alias("__r2"),
-        F.covar_samp(va, vb).alias("__cov"),
-        F.stddev_samp(va).alias("__sa"),
-        F.stddev_samp(vb).alias("__sb"),
-        F.sum(F.when(adj, one).otherwise(zero)).alias("__adjn"),
-        F.sum(
-            F.when(
-                adj
-                & (
-                    (F.col("__v") - F.col("__mu"))
-                    * (F.col("__vn") - F.col("__mu"))
-                    < 0
-                ),
-                one,
-            ).otherwise(zero)
-        ).alias("__cross"),
-        F.sum(
-            F.when(adj & (F.col("__vn") == F.col("__v")), one).otherwise(zero)
-        ).alias("__flat"),
-        F.max(F.abs(F.col("__v") - F.col("__mu"))).alias("__maxdev"),
-    )
-    adjn = F.col("__adjn")
-    return (
-        a.select(
-            "key",
-            "n_samples",
-            "n_buckets",
-            "mean",
-            "std",
-            F.when(
-                F.col("std").isNotNull() & (F.col("mean") != 0),
-                F.col("std") / F.abs(F.col("mean")),
-            ).alias("cv"),
-            "vmin",
-            "vmax",
-            F.col("__sl").alias("trend_slope"),
-            # r2 of a CONSTANT series is an engine-dependent edge
-            # (Postgres/Spark return 1.0 when Syy = 0, other engines
-            # NaN/NULL) — define it NULL there, like corr
-            F.when(F.col("std") > 0, F.col("__r2")).alias("trend_r2"),
-            F.when(
-                (F.col("__sa") > 0) & (F.col("__sb") > 0),
-                F.col("__cov") / (F.col("__sa") * F.col("__sb")),
-            ).alias("acf1"),
-            F.when(adjn > 0, F.col("__cross") / adjn).alias("crossing_rate"),
-            F.when(adjn > 0, F.col("__flat") / adjn).alias("flat_rate"),
-            F.when(F.col("std") > 0, F.col("__maxdev") / F.col("std")).alias(
-                "spikiness"
-            ),
-        )
-        .orderBy("key")
-    )
+    return run_sql(
+        FEATURES_SQL,
+        filter_valid_range(samples, keys, start, end),
+        dur=bigint_sql(bucket_dur),
+        align=bigint_sql(resolve_align(align, start, end)),
+    ).orderBy("key")
+
+
+# Both window specs share the (key, __b) sort order so the window stage
+# reuses ONE grid sort (an unordered partition-frame spec would plan a
+# second key-only Sort).  r2 of a CONSTANT series is an engine-dependent
+# edge (Postgres/Spark return 1.0 when Syy = 0, other engines NaN/NULL) —
+# defined NULL there, like corr.
+FEATURES_SQL = """
+SELECT key, n_samples, n_buckets, mean, std,
+       CASE WHEN std IS NOT NULL AND mean <> 0 THEN std / abs(mean) END AS cv,
+       vmin, vmax, __sl AS trend_slope,
+       CASE WHEN std > 0 THEN __r2 END AS trend_r2,
+       CASE WHEN __sa > 0 AND __sb > 0 THEN __cov / (__sa * __sb) END AS acf1,
+       CASE WHEN __adjn > 0 THEN __cross / __adjn END AS crossing_rate,
+       CASE WHEN __adjn > 0 THEN __flat / __adjn END AS flat_rate,
+       CASE WHEN std > 0 THEN __maxdev / std END AS spikiness
+FROM (
+  SELECT key, sum(__c) AS n_samples, count(1) AS n_buckets,
+         avg(__v) AS mean, stddev_samp(__v) AS std,
+         min(__v) AS vmin, max(__v) AS vmax,
+         regr_slope(__v, __x) AS __sl, regr_r2(__v, __x) AS __r2,
+         covar_samp(CASE WHEN __adj THEN __v END,
+                    CASE WHEN __adj THEN __vn END) AS __cov,
+         stddev_samp(CASE WHEN __adj THEN __v END) AS __sa,
+         stddev_samp(CASE WHEN __adj THEN __vn END) AS __sb,
+         sum(CASE WHEN __adj THEN 1 ELSE 0 END) AS __adjn,
+         sum(CASE WHEN __adj AND (__v - __mu) * (__vn - __mu) < 0
+                  THEN 1 ELSE 0 END) AS __cross,
+         sum(CASE WHEN __adj AND __vn = __v THEN 1 ELSE 0 END) AS __flat,
+         max(abs(__v - __mu)) AS __maxdev
+  FROM (
+    SELECT key, __b, __v, __c, __mu, __minb, __vn, __bn,
+           CAST((__b - __minb) / {dur} AS DOUBLE) AS __x,
+           coalesce(__bn = __b + {dur}, false) AS __adj
+    FROM (
+      SELECT key, __b, __v, __c,
+             avg(__v) OVER (PARTITION BY key ORDER BY __b ROWS BETWEEN
+                            UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS __mu,
+             min(__b) OVER (PARTITION BY key ORDER BY __b ROWS BETWEEN
+                            UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS __minb,
+             lead(__v) OVER (PARTITION BY key ORDER BY __b) AS __vn,
+             lead(__b) OVER (PARTITION BY key ORDER BY __b) AS __bn
+      FROM (SELECT key, ts - pmod(ts - {align}, {dur}) AS __b,
+                   avg(value) AS __v, count(1) AS __c
+            FROM {src} GROUP BY key, __b)))
+  GROUP BY key)
+"""

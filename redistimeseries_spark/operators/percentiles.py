@@ -27,7 +27,13 @@ from pyspark.sql import functions as F
 
 from redistimeseries_spark import MAX_TS, MIN_TS
 from redistimeseries_spark.functions.buckets import bucket_start, resolve_align
-from redistimeseries_spark.functions.filters import filter_key_range, filter_valid_range
+from redistimeseries_spark.functions.filters import (
+    bigint_sql,
+    double_sql,
+    filter_key_range,
+    filter_valid_range,
+    run_sql,
+)
 
 
 def ts_rolling_quantile(
@@ -205,56 +211,58 @@ def ts_mad(
         raise ValueError("bucket_dur must be positive")
     df = filter_key_range(samples, keys, start, end, valid=True)
     align_ts = resolve_align(align, start, end)
+    if exact:
+        return run_sql(
+            MAD_SQL, df, dur=bigint_sql(bucket_dur), align=bigint_sql(align_ts)
+        ).orderBy("key", "ts")
     d = df.select(
         "key",
         bucket_start(F.col("ts"), bucket_dur, align_ts).alias("__b"),
         "value",
     )
-    if not exact:
-        med = d.groupBy("key", "__b").agg(
-            F.expr("approx_percentile(value, 0.5)").alias("med")
-        )
-        return (
-            d.join(med, ["key", "__b"])
-            .groupBy("key", "__b")
-            .agg(
-                F.first("med").alias("med"),
-                F.expr("approx_percentile(abs(value - med), 0.5)").alias("mad"),
-            )
-            .select("key", F.col("__b").alias("ts"), "med", "mad")
-            .orderBy("key", "ts")
-        )
-    # q = 0.5*(n-1); med = a[floor(q)] + frac * (a[ceil(q)] - a[floor(q)])
-    # — exactly Spark percentile()'s interpolation, on the same doubles
-    interp = (
-        "element_at({a}, CAST(floor((size({a}) - 1) * 0.5) AS INT) + 1)"
-        " + ((size({a}) - 1) * 0.5 - floor((size({a}) - 1) * 0.5))"
-        " * (element_at({a}, CAST(ceil((size({a}) - 1) * 0.5) AS INT) + 1)"
-        "    - element_at({a}, CAST(floor((size({a}) - 1) * 0.5) AS INT) + 1))"
-    )
-    mm = F.expr(
-        "reduce(array(sort_array(collect_list(value))),"
-        " CAST(NULL AS STRUCT<med: DOUBLE, mad: DOUBLE>),"
-        " (z, a) -> reduce(array(" + interp.format(a="a") + "),"
-        "   CAST(NULL AS STRUCT<med: DOUBLE, mad: DOUBLE>),"
-        "   (z2, med) -> reduce("
-        "     array(sort_array(transform(a, x -> abs(x - med)))),"
-        "     CAST(NULL AS STRUCT<med: DOUBLE, mad: DOUBLE>),"
-        "     (z3, dv) -> struct(med AS med, "
-        + interp.format(a="dv")
-        + " AS mad))))"
+    med = d.groupBy("key", "__b").agg(
+        F.expr("approx_percentile(value, 0.5)").alias("med")
     )
     return (
-        d.groupBy("key", "__b")
-        .agg(mm.alias("__m"))
-        .select(
-            "key",
-            F.col("__b").alias("ts"),
-            F.col("__m.med").alias("med"),
-            F.col("__m.mad").alias("mad"),
+        d.join(med, ["key", "__b"])
+        .groupBy("key", "__b")
+        .agg(
+            F.first("med").alias("med"),
+            F.expr("approx_percentile(abs(value - med), 0.5)").alias("mad"),
         )
+        .select("key", F.col("__b").alias("ts"), "med", "mad")
         .orderBy("key", "ts")
     )
+
+
+def quantile_cont_sql(arr: str, pos: str) -> str:
+    """DuckDB quantile_cont's linear interpolation over the sorted array
+    `arr` at the 0-based rank `pos` = (n - 1) * q: a[floor] + frac *
+    (a[ceil] - a[floor]) — Spark percentile()'s, on the same doubles."""
+    lo = f"element_at({arr}, CAST(floor({pos}) AS INT) + 1)"
+    hi = f"element_at({arr}, CAST(ceil({pos}) AS INT) + 1)"
+    return f"{lo} + ({pos} - floor({pos})) * ({hi} - {lo})"
+
+
+# ONE (key, bucket) aggregation: nested reduce lambdas bind the bucket's
+# sorted array, its median and its sorted absolute deviations
+MAD_SQL = f"""
+SELECT key, __b AS ts, __m.med AS med, __m.mad AS mad FROM (
+  SELECT key, __b,
+         reduce(array(sort_array(collect_list(value))),
+           CAST(NULL AS STRUCT<med: DOUBLE, mad: DOUBLE>),
+           (z, a) -> reduce(array({quantile_cont_sql("a", "(size(a) - 1) * 0.5")}),
+             CAST(NULL AS STRUCT<med: DOUBLE, mad: DOUBLE>),
+             (z2, med) -> reduce(
+               array(sort_array(transform(a, x -> abs(x - med)))),
+               CAST(NULL AS STRUCT<med: DOUBLE, mad: DOUBLE>),
+               (z3, dv) -> struct(med AS med,
+                 {quantile_cont_sql("dv", "(size(dv) - 1) * 0.5")} AS mad))))
+           AS __m
+  FROM (SELECT key, ts - pmod(ts - {{align}}, {{dur}}) AS __b, value
+        FROM {{src}})
+  GROUP BY key, __b)
+"""
 
 
 # scale factor making MAD a consistent sigma estimator under normality
@@ -288,34 +296,27 @@ def ts_outlier_mad(
     end to end, no window."""
     if k <= 0:
         raise ValueError("k must be positive")
-    stats = ts_mad(samples, bucket_dur, keys, start, end, align).select(
-        "key", F.col("ts").alias("__b"), "med", "mad"
-    )
-    df = filter_key_range(samples, keys, start, end, valid=True)
-    align_ts = resolve_align(align, start, end)
-    d = df.select(
-        "key",
-        "ts",
-        "value",
-        bucket_start(F.col("ts"), bucket_dur, align_ts).alias("__b"),
-    )
-    score = F.round(
-        F.abs(F.col("value") - F.col("med"))
-        / (F.lit(MAD_SIGMA) * F.nullif(F.col("mad"), F.lit(0.0))),
-        6,
-    )
-    return (
-        d.join(stats, ["key", "__b"])
-        .select(
-            "key",
-            "ts",
-            "value",
-            score.alias("score"),
-            (score > F.lit(float(k))).alias("is_outlier"),
-        )
-        .na.fill({"is_outlier": False})
-        .orderBy("key", "ts")
-    )
+    if bucket_dur <= 0:
+        raise ValueError("bucket_dur must be positive")
+    return run_sql(
+        OUTLIER_MAD_SQL,
+        filter_key_range(samples, keys, start, end, valid=True),
+        dur=bigint_sql(bucket_dur),
+        align=bigint_sql(resolve_align(align, start, end)),
+        k=double_sql(k),
+    ).orderBy("key", "ts")
+
+
+_SCORE = f"round(abs(value - med) / ({MAD_SIGMA!r}D * nullif(mad, 0.0D)), 6)"
+# the MAD_SQL stats joined back to the samples on (key, bucket)
+OUTLIER_MAD_SQL = f"""
+SELECT key, ts, value, score, coalesce(is_outlier, false) AS is_outlier
+FROM (
+  SELECT key, ts, value, {_SCORE} AS score, {_SCORE} > {{k}} AS is_outlier
+  FROM (SELECT key, ts, value, ts - pmod(ts - {{align}}, {{dur}}) AS __b
+        FROM {{src}})
+  JOIN (SELECT key, ts AS __b, med, mad FROM ({MAD_SQL})) USING (key, __b))
+"""
 
 
 def ts_histogram_quantile(
@@ -339,34 +340,28 @@ def ts_histogram_quantile(
     one cumulative-sum window (same clustering), one first-crossing
     min-aggregation — every structure is bin-bounded, not
     sample-bounded."""
-    from pyspark.sql import Window
-
     if not 0.0 <= q <= 1.0:
         raise ValueError("q must lie in [0, 1]")
     if bin_width <= 0:
         raise ValueError("bin_width must be positive")
-    wk = Window.partitionBy("key")
-    wc = (
-        Window.partitionBy("key")
-        .orderBy("bin_lo")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    d = hist.select(
-        "key",
-        "bin_lo",
-        "n",
-        F.sum("n").over(wk).alias("__tot"),
-        F.sum("n").over(wc).alias("__cum"),
-    ).withColumn("__r", F.lit(float(q)) * F.col("__tot"))
-    crossing = d.filter(F.col("__cum") >= F.col("__r"))
-    first = crossing.groupBy("key").agg(
-        F.min(F.struct("bin_lo", "n", "__cum", "__r")).alias("__c")
-    )
-    c = F.col("__c")
-    qv = c.getField("bin_lo") + F.lit(float(bin_width)) * (
-        c.getField("__r") - (c.getField("__cum") - c.getField("n"))
-    ) / c.getField("n")
-    return first.select("key", qv.alias("qv")).orderBy("key")
+    return run_sql(
+        HIST_QUANTILE_SQL, hist, q=double_sql(q), bin_width=double_sql(bin_width)
+    ).orderBy("key")
+
+
+HIST_QUANTILE_SQL = """
+SELECT key,
+       __c.bin_lo + {bin_width} * (__c.__r - (__c.__cum - __c.n)) / __c.n AS qv
+FROM (
+  SELECT key, min(struct(bin_lo, n, __cum, __r)) AS __c FROM (
+    SELECT key, bin_lo, n, __tot, __cum, {q} * __tot AS __r FROM (
+      SELECT key, bin_lo, n, sum(n) OVER (PARTITION BY key) AS __tot,
+             sum(n) OVER (PARTITION BY key ORDER BY bin_lo ROWS BETWEEN
+                          UNBOUNDED PRECEDING AND CURRENT ROW) AS __cum
+      FROM {src}))
+  WHERE __cum >= __r
+  GROUP BY key)
+"""
 
 
 def ts_value_histogram(
@@ -391,11 +386,17 @@ def ts_value_histogram(
     are invalid everywhere (isValueValid) and are dropped first."""
     if bin_width <= 0:
         raise ValueError("bin_width must be positive")
-    df = filter_key_range(samples, keys, start, end, valid=True)
-    bin_ix = F.floor((F.col("value") - F.lit(float(lo))) / F.lit(float(bin_width)))
-    return (
-        df.select("key", (F.lit(float(lo)) + bin_ix * F.lit(float(bin_width))).alias("bin_lo"))
-        .groupBy("key", "bin_lo")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("key", "bin_lo")
-    )
+    return run_sql(
+        VALUE_HIST_SQL,
+        filter_key_range(samples, keys, start, end, valid=True),
+        lo=double_sql(lo),
+        bin_width=double_sql(bin_width),
+    ).orderBy("key", "bin_lo")
+
+
+VALUE_HIST_SQL = """
+SELECT key, bin_lo, count(1) AS n FROM (
+  SELECT key, {lo} + floor((value - {lo}) / {bin_width}) * {bin_width} AS bin_lo
+  FROM {src})
+GROUP BY key, bin_lo
+"""

@@ -51,103 +51,98 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from redistimeseries_spark import MAX_TS, MIN_TS
-from redistimeseries_spark.functions.filters import filter_key_range
+from redistimeseries_spark.functions.filters import (
+    bigint_sql,
+    filter_key_range,
+    run_sql,
+)
 from redistimeseries_spark.functions.buckets import bucket_start, resolve_align
 
 
-def _bucket_chain(
-    samples: DataFrame,
-    bucket_dur: int,
-    step_fn,
-    keys: list[str] | str | None,
-    start: int,
-    end: int,
-    align,
-    sum_type: str,
-) -> DataFrame:
-    """Shared skew-safe core of the full-history chain family
-    (increase/rate/changes/resets): `step_fn(value, prev) -> Column` maps
-    a valid sample and its previous valid sample to the per-step
-    contribution (a double step for increase, a 0/1 event indicator for
-    changes/resets).  Returns (key, ts=bucket_start, __v) where __v sums
-    the in-range steps whose predecessor exists, cast to `sum_type`;
-    buckets with no in-range sample, or where no in-range sample has a
-    predecessor, are not emitted — exactly the key-window twin's rule
-    (`_key_window_chain`, the differential reference these plans are
-    fuzz-pinned against).
+# The full-history chain of increase / rate / changes / resets (module
+# docstring: bucket-local lag, aggregated-frame stitch), one text for the
+# operators and their table functions.  `{src}` is the key- and
+# NaN-filtered samples, `{dur}` / `{align}` the bucket grid and `{in_rng}`
+# the range test; `_CHAIN` fills each member's step, sum type and output.
+# The range cut happens INSIDE the aggregation, never before the local
+# lag, so a range boundary mid-bucket still hands the first in-range
+# sample its true same-bucket predecessor, and out-of-range buckets still
+# carry their last value into the chain.  (ts, value) ordering resolves
+# duplicate (key, ts) rows deterministically (the _last_pair / TWA rule).
+# A bucket emits when an in-range sample has a predecessor: the rule of
+# `_key_window_chain`, the differential reference.
+_CHAIN_SQL = """
+SELECT key, ts, {out} FROM (
+  SELECT key, __b AS ts,
+         coalesce(CAST(__s AS {typ}), CAST(0 AS {typ}))
+         + coalesce(CAST(CASE WHEN __hf = 1 AND __pv IS NOT NULL
+                              THEN {edge_step} END AS {typ}),
+                    CAST(0 AS {typ})) AS __v
+  FROM (
+    SELECT key, __b, __s, __nl, __fv, __hf, __nin,
+           lag(__lv) OVER (PARTITION BY key ORDER BY __b) AS __pv
+    FROM (
+      SELECT key, __b,
+             sum(CASE WHEN __in AND __pl IS NOT NULL THEN {local_step} END)
+               AS __s,
+             count(CASE WHEN __in AND __pl IS NOT NULL THEN 1 END) AS __nl,
+             max(CASE WHEN __in AND __pl IS NULL THEN value END) AS __fv,
+             max(CAST(__in AND __pl IS NULL AS INT)) AS __hf,
+             max_by(value, struct(ts, value)) AS __lv,
+             sum(CAST(__in AS INT)) AS __nin
+      FROM (
+        SELECT key, __b, ts, value,
+               lag(value) OVER (PARTITION BY key, __b ORDER BY ts, value)
+                 AS __pl,
+               {in_rng} AS __in
+        FROM (SELECT key, ts, value, ts - pmod(ts - {align}, {dur}) AS __b
+              FROM {src}))
+      GROUP BY key, __b))
+  WHERE __nin > 0
+    AND __nl + CASE WHEN __hf = 1 AND __pv IS NOT NULL THEN 1 ELSE 0 END > 0)
+"""
 
-    The time-range cut happens INSIDE the aggregation (conditional
-    aggregates over the unfiltered bucket rows), never before the local
-    lag, so a range boundary mid-bucket still hands the first in-range
-    sample its true same-bucket predecessor, and out-of-range buckets
-    still carry their last value into the cross-bucket chain — the
-    "lag runs over the FULL per-key history" contract."""
+_INCREASE_STEP = "CASE WHEN {v} >= {p} THEN {v} - {p} ELSE {v} END"
+# member: (step(v, p) against the previous valid sample, sum type, output)
+_CHAIN = {
+    "increase": (_INCREASE_STEP, "DOUBLE", "__v AS increase"),
+    "rate": (_INCREASE_STEP, "DOUBLE", "__v / ({dur} / 1000.0D) AS rate"),
+    "changes": ("CAST({v} <> {p} AS INT)", "BIGINT", "__v AS changes"),
+    "resets": ("CAST({v} < {p} AS INT)", "BIGINT", "__v AS resets"),
+}
+
+
+def chain_sql(member: str) -> str:
+    """The `_CHAIN_SQL` text of one family member; `{src}`, `{dur}`,
+    `{align}` and `{in_rng}` stay fields."""
+    step, typ, out = _CHAIN[member]
+    frags = {
+        "local_step": step.format(v="value", p="__pl"),
+        "edge_step": step.format(v="__fv", p="__pv"),
+        "typ": typ,
+        "out": out,
+    }
+    text = _CHAIN_SQL
+    for name, frag in frags.items():
+        text = text.replace("{" + name + "}", frag)
+    return text
+
+
+def _chain(samples, member, bucket_dur, keys, start, end, align):
     if bucket_dur <= 0:
         raise ValueError("bucket_dur must be positive")
-    df = filter_key_range(samples, keys, valid=True)
-    align_ts = resolve_align(align, start, end)
-    b = bucket_start(F.col("ts"), bucket_dur, align_ts)
-    # (ts, value) ordering: duplicate (key, ts) rows — legal in the RAW
-    # sample table — resolve deterministically (the _last_pair / TWA
-    # rule), so the local lag, the bucket-first pick and the
-    # cross-bucket carry below all agree across retries and engines
-    wloc = Window.partitionBy("key", "__b").orderBy("ts", "value")
-    in_rng = F.lit(True)
+    in_rng = ["true"]
     if start > MIN_TS:
-        in_rng = in_rng & (F.col("ts") >= F.lit(start))
+        in_rng.append(f"ts >= {bigint_sql(start)}")
     if end < MAX_TS:
-        in_rng = in_rng & (F.col("ts") <= F.lit(end))
-    d = (
-        df.select("key", "ts", "value", b.alias("__b"))
-        .select(
-            "key",
-            "__b",
-            "ts",
-            "value",
-            F.lag("value").over(wloc).alias("__pl"),
-            in_rng.alias("__in"),
-        )
-    )
-    has_local = F.col("__in") & F.col("__pl").isNotNull()
-    is_first = F.col("__in") & F.col("__pl").isNull()
-    agg = d.groupBy("key", "__b").agg(
-        # in-range samples with a same-bucket predecessor: fold locally
-        F.sum(F.when(has_local, step_fn(F.col("value"), F.col("__pl")))).alias(
-            "__s"
-        ),
-        F.count(F.when(has_local, F.lit(1))).alias("__nl"),
-        # the bucket's (unique) first sample, if it is in range — its
-        # predecessor lives in an earlier bucket and is patched below
-        F.max(F.when(is_first, F.col("value"))).alias("__fv"),
-        F.max(is_first.cast("int")).alias("__hf"),
-        # the bucket's last valid value: what the NEXT bucket chains to
-        # (max over the (ts, value) struct = the window order's last row,
-        # deterministic under duplicate timestamps)
-        F.max_by("value", F.struct("ts", "value")).alias("__lv"),
-        F.sum(F.col("__in").cast("int")).alias("__nin"),
-    )
-    # tiny frame: one row per (key, bucket).  lag hands each bucket the
-    # previous NON-EMPTY bucket's last value = the true predecessor of
-    # this bucket's first sample.
-    wk = Window.partitionBy("key").orderBy("__b")
-    stitched = agg.select(
-        "key", "__b", "__s", "__nl", "__fv", "__hf", "__nin",
-        F.lag("__lv").over(wk).alias("__pv"),
-    )
-    edge = (F.col("__hf") == 1) & F.col("__pv").isNotNull()
-    zero = F.lit(0).cast(sum_type)
-    total = (
-        F.coalesce(F.col("__s").cast(sum_type), zero)
-        + F.coalesce(
-            F.when(edge, step_fn(F.col("__fv"), F.col("__pv"))).cast(sum_type),
-            zero,
-        )
-    )
-    n_steps = F.col("__nl") + F.when(edge, F.lit(1)).otherwise(F.lit(0))
-    return (
-        stitched.filter((F.col("__nin") > 0) & (n_steps > 0))
-        .select("key", F.col("__b").alias("ts"), total.alias("__v"))
-    )
+        in_rng.append(f"ts <= {bigint_sql(end)}")
+    return run_sql(
+        chain_sql(member),
+        filter_key_range(samples, keys, valid=True),
+        dur=bigint_sql(bucket_dur),
+        align=bigint_sql(resolve_align(align, start, end)),
+        in_rng=" AND ".join(in_rng),
+    ).orderBy("key", "ts")
 
 
 def _increase_step(v, p):
@@ -172,17 +167,10 @@ def ts_increase(
     The chain runs over the FULL per-key history before the time-range
     cut, so a bucket boundary never fabricates a reset: the first sample
     in the range still sees its true predecessor.  Skew-safe plan: see
-    `_bucket_chain` (bucket-local lag + aggregated-frame stitch; no task
+    `_CHAIN_SQL` (bucket-local lag + aggregated-frame stitch; no task
     ever holds more than one bucket of one series)."""
-    out = _bucket_chain(
-        samples, bucket_dur, _increase_step, keys, start, end, align, "double"
-    )
-    val = (
-        (F.col("__v") / F.lit(bucket_dur / 1000.0)).alias("rate")
-        if per_second
-        else F.col("__v").alias("increase")
-    )
-    return out.select("key", "ts", val).orderBy("key", "ts")
+    member = "rate" if per_second else "increase"
+    return _chain(samples, member, bucket_dur, keys, start, end, align)
 
 
 def _key_window_chain(
@@ -196,8 +184,8 @@ def _key_window_chain(
 ) -> DataFrame:
     """The pre-round-8 plan — ONE lag window over bare (key, ts) then one
     (key, bucket) aggregation.  Kept as the DIFFERENTIAL REFERENCE for
-    the skew-safe `_bucket_chain` (fuzz-pinned equal in
-    tests/test_aggs_nan.py) and as the comparison arm of the hot-series
+    the skew-safe `_CHAIN_SQL` plan (fuzz-pinned equal to ts_increase,
+    ts_changes and ts_resets in tests/test_aggs_nan.py) and as the comparison arm of the hot-series
     probe (scripts/hot_series_probe.py; BASELINE.md): semantically
     identical, but a single hot series serializes its full history into
     one task here."""
@@ -266,53 +254,44 @@ def ts_deriv(
     slope is shift-invariant, the floating-point moments are not."""
     if bucket_dur <= 0:
         raise ValueError("bucket_dur must be positive")
-    df = filter_key_range(samples, keys, start, end, valid=True)
-    align_ts = resolve_align(align, start, end)
-    b = bucket_start(F.col("ts"), bucket_dur, align_ts)
-    d = df.select(
-        "key",
-        b.alias("__b"),
-        ((F.col("ts") - b) / F.lit(1000.0)).alias("__x"),
-        "value",
-    )
-    return (
-        d.groupBy("key", "__b")
-        .agg(F.regr_slope("value", "__x").alias("slope"))
-        .filter(F.col("slope").isNotNull())
-        .select("key", F.col("__b").alias("ts"), "slope")
-        .orderBy("key", "ts")
-    )
+    return _bucketed(
+        DERIV_SQL, samples, bucket_dur, keys, start, end, align
+    ).orderBy("key", "ts")
 
 
-def _event_counts(
-    samples: DataFrame,
-    bucket_dur: int,
-    event,
-    keys: list[str] | str | None,
-    start: int,
-    end: int,
-    align,
-    out_col: str,
-) -> DataFrame:
-    """Shared core for ts_changes / ts_resets: an event indicator against
-    the previous valid sample, folded per (key, bucket) — the ts_increase
-    chain exactly, on the same skew-safe bucket-local plan
-    (`_bucket_chain`).  `event` maps (value, prev) -> boolean Column.
-    Buckets emit when at least one in-range sample HAS a predecessor (the
-    event count may then be 0); first-ever samples contribute nothing,
-    mirroring ts_increase."""
-    out = _bucket_chain(
-        samples,
-        bucket_dur,
-        lambda v, p: event(v, p).cast("int"),
-        keys,
-        start,
-        end,
-        align,
-        "bigint",
-    )
-    return out.select("key", "ts", F.col("__v").alias(out_col)).orderBy(
-        "key", "ts"
+# per-(key, bucket) least squares on the bucket-centered abscissa; ts_deriv
+# keeps the slope, ts_predict_linear the line's value past the bucket end
+DERIV_SQL = """
+SELECT key, __b AS ts, slope FROM (
+  SELECT key, __b, regr_slope(value, __x) AS slope
+  FROM (SELECT key, ts - pmod(ts - {align}, {dur}) AS __b,
+               (ts - (ts - pmod(ts - {align}, {dur}))) / 1000.0D AS __x, value
+        FROM {src})
+  GROUP BY key, __b)
+WHERE slope IS NOT NULL
+"""
+
+PREDICT_LINEAR_SQL = """
+SELECT key, __b AS ts, __c + __m * (({dur} + {horizon}) / 1000.0D) AS predicted
+FROM (
+  SELECT key, __b, regr_slope(value, __x) AS __m,
+         regr_intercept(value, __x) AS __c
+  FROM (SELECT key, ts - pmod(ts - {align}, {dur}) AS __b,
+               (ts - (ts - pmod(ts - {align}, {dur}))) / 1000.0D AS __x, value
+        FROM {src})
+  GROUP BY key, __b)
+WHERE __m IS NOT NULL
+"""
+
+
+def _bucketed(text, samples, bucket_dur, keys, start, end, align, **frags):
+    """`text` over the valid in-range samples on the (dur, align) grid."""
+    return run_sql(
+        text,
+        filter_key_range(samples, keys, start, end, valid=True),
+        dur=bigint_sql(bucket_dur),
+        align=bigint_sql(resolve_align(align, start, end)),
+        **frags,
     )
 
 
@@ -336,16 +315,7 @@ def ts_changes(
     and contribute nothing.  Buckets where no sample has a predecessor
     are not emitted; buckets whose samples all repeat the previous value
     emit changes = 0."""
-    return _event_counts(
-        samples,
-        bucket_dur,
-        lambda v, p: v != p,
-        keys,
-        start,
-        end,
-        align,
-        "changes",
-    )
+    return _chain(samples, "changes", bucket_dur, keys, start, end, align)
 
 
 def ts_resets(
@@ -362,16 +332,7 @@ def ts_resets(
     audit companion to ts_increase's reset-aware sum).  Chain, NaN, and
     emission semantics are exactly ts_changes' (full-history lag; emit
     when any sample has a predecessor, count may be 0)."""
-    return _event_counts(
-        samples,
-        bucket_dur,
-        lambda v, p: v < p,
-        keys,
-        start,
-        end,
-        align,
-        "resets",
-    )
+    return _chain(samples, "resets", bucket_dur, keys, start, end, align)
 
 
 def ts_predict_linear(
@@ -404,30 +365,10 @@ def ts_predict_linear(
         raise ValueError("bucket_dur must be positive")
     if horizon_ms < 0:
         raise ValueError("horizon_ms must be non-negative")
-    df = filter_key_range(samples, keys, start, end, valid=True)
-    align_ts = resolve_align(align, start, end)
-    b = bucket_start(F.col("ts"), bucket_dur, align_ts)
-    d = df.select(
-        "key",
-        b.alias("__b"),
-        ((F.col("ts") - b) / F.lit(1000.0)).alias("__x"),
-        "value",
-    )
-    xp = F.lit((bucket_dur + horizon_ms) / 1000.0)
-    return (
-        d.groupBy("key", "__b")
-        .agg(
-            F.regr_slope("value", "__x").alias("__m"),
-            F.regr_intercept("value", "__x").alias("__c"),
-        )
-        .filter(F.col("__m").isNotNull())
-        .select(
-            "key",
-            F.col("__b").alias("ts"),
-            (F.col("__c") + F.col("__m") * xp).alias("predicted"),
-        )
-        .orderBy("key", "ts")
-    )
+    return _bucketed(
+        PREDICT_LINEAR_SQL, samples, bucket_dur, keys, start, end, align,
+        horizon=bigint_sql(horizon_ms),
+    ).orderBy("key", "ts")
 
 
 def ts_gaps(
@@ -444,7 +385,7 @@ def ts_gaps(
     the reference's INFO exposes only totalSamples, not where the holes
     are.
 
-    Skew-safe plan (the _bucket_chain discipline on a ROW-LEVEL output):
+    Skew-safe plan (the _CHAIN_SQL discipline on a ROW-LEVEL output):
     the lag runs chunk-locally — partitioned by (key, ~4.7h time chunk)
     — and the one consecutive pair that crosses each chunk edge is
     recovered from a per-(key, chunk) min/max aggregation stitched by a
@@ -512,32 +453,26 @@ def ts_delta(
     class in the family (value_hist's)."""
     if bucket_dur <= 0:
         raise ValueError("bucket_dur must be positive")
-    df = filter_key_range(samples, keys, start, end, valid=True)
-    align_ts = resolve_align(align, start, end)
-    b = bucket_start(F.col("ts"), bucket_dur, align_ts)
-    return (
-        df.select("key", b.alias("__b"), "ts", "value")
-        .groupBy("key", "__b")
-        .agg(
-            # deterministic on duplicate-(key, ts) rows: the (ts, value)
-            # last-wins rule makes the MAX-value duplicate the effective
-            # sample at any ts, so both endpoints order by (ts, value
-            # desc-for-first / asc-for-last) instead of bare ts
-            (
-                F.max_by("value", F.struct("ts", "value"))
-                - F.min_by(
-                    "value", F.struct(F.col("ts"), (-F.col("value")).alias("v"))
-                )
-            ).alias("delta"),
-            # the two-sample minimum counts EFFECTIVE samples: a bucket
-            # holding only duplicates of one ts is one sample under the
-            # last-wins rule, so no difference is defined there either
-            F.countDistinct("ts").alias("__n"),
-        )
-        .filter(F.col("__n") >= 2)
-        .select("key", F.col("__b").alias("ts"), "delta")
-        .orderBy("key", "ts")
-    )
+    return _bucketed(
+        DELTA_SQL, samples, bucket_dur, keys, start, end, align
+    ).orderBy("key", "ts")
+
+
+# Deterministic on duplicate-(key, ts) rows: the (ts, value) last-wins rule
+# makes the MAX-value duplicate the effective sample at any ts, so both
+# endpoints order by (ts, value desc-for-first / asc-for-last) instead of
+# bare ts; the two-sample minimum counts EFFECTIVE samples (distinct ts).
+DELTA_SQL = """
+SELECT key, __b AS ts, delta FROM (
+  SELECT key, __b,
+         max_by(value, struct(ts, value))
+           - min_by(value, struct(ts, -value AS v)) AS delta,
+         count(DISTINCT ts) AS __n
+  FROM (SELECT key, ts - pmod(ts - {align}, {dur}) AS __b, ts, value
+        FROM {src})
+  GROUP BY key, __b)
+WHERE __n >= 2
+"""
 
 
 def ts_idelta(
@@ -559,11 +494,7 @@ def ts_idelta(
     key is emitted (the largest value at the max ts; its predecessor is
     the prior row in the same order).  Unique-(key, ts) inputs (the
     engine store's invariant) are unaffected."""
-    return _last_pair(samples, keys, start, end).select(
-        "key",
-        "ts",
-        (F.col("value") - F.col("__pv")).alias("idelta"),
-    ).orderBy("key")
+    return _last_pair(samples, "idelta", keys, start, end)
 
 
 # internal chunk for the keep-last-two prune (~4.7 h of millis): any
@@ -572,17 +503,12 @@ def ts_idelta(
 _LAST_PAIR_CHUNK_MS = 1 << 24
 
 
-def _last_pair(
-    samples: DataFrame,
-    keys: list[str] | str | None,
-    start: int,
-    end: int,
-) -> DataFrame:
-    """Shared ts_idelta / ts_irate core: per key, the single
-    deterministic LAST valid in-range sample and its predecessor —
-    (key, ts, value, __pv, __pt).
+def last_pair_sql(member: str) -> str:
+    """The ts_idelta / ts_irate text: per key, the single deterministic
+    LAST valid in-range sample and its predecessor (`__pv` value, `__pt`
+    ts) under `{src}`, mapped to the member's output.
 
-    Skew-safe in two stages (the _bucket_chain discipline applied to a
+    Skew-safe in two stages (the _CHAIN_SQL discipline applied to a
     keep-last-two): a (key, time-chunk)-partitioned top-2 prune first —
     the global last two samples ALWAYS survive it, because the global #1
     is its chunk's #1 and the global #2 is either the same chunk's #2 or
@@ -593,31 +519,46 @@ def _last_pair(
     task.  Ordering is (ts, value) everywhere — the deterministic
     duplicate-timestamp rule both TVF and oracle share.  Keys with <2
     valid samples drop out via the __pv null filter."""
-    df = filter_key_range(samples, keys, start, end, valid=True)
-    wc = Window.partitionBy(
-        "key", (F.col("ts") - F.pmod(F.col("ts"), F.lit(_LAST_PAIR_CHUNK_MS)))
-    ).orderBy(F.col("ts").desc(), F.col("value").desc())
-    pruned = (
-        df.select(
-            "key", "ts", "value", F.row_number().over(wc).alias("__cr")
-        )
-        .filter(F.col("__cr") <= 2)
-        .drop("__cr")
-    )
-    w = Window.partitionBy("key").orderBy("ts", "value")
-    wn = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    d = pruned.select(
-        "key",
-        "ts",
-        "value",
-        F.lag("value").over(w).alias("__pv"),
-        F.lag("ts").over(w).alias("__pt"),
-        F.row_number().over(w).alias("__rn"),
-        F.count(F.lit(1)).over(wn).alias("__n"),
-    )
-    return d.filter(
-        (F.col("__rn") == F.col("__n")) & F.col("__pv").isNotNull()
-    )
+    cond, out = _LAST_PAIR[member]
+    return _LAST_PAIR_SQL.replace("{cond}", cond).replace("{out}", out)
+
+
+_LAST_PAIR_SQL = f"""
+SELECT key, ts, {{out}} FROM (
+  SELECT key, ts, value,
+         lag(value) OVER (PARTITION BY key ORDER BY ts, value) AS __pv,
+         lag(ts) OVER (PARTITION BY key ORDER BY ts, value) AS __pt,
+         row_number() OVER (PARTITION BY key ORDER BY ts, value) AS __rn,
+         count(1) OVER (PARTITION BY key ORDER BY ts, value ROWS BETWEEN
+                        UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS __n
+  FROM (
+    SELECT key, ts, value FROM (
+      SELECT key, ts, value,
+             row_number() OVER (
+               PARTITION BY key, ts - pmod(ts, {_LAST_PAIR_CHUNK_MS})
+               ORDER BY ts DESC, value DESC) AS __cr
+      FROM {{src}})
+    WHERE __cr <= 2))
+WHERE __rn = __n AND __pv IS NOT NULL{{cond}}
+"""
+
+# member: (extra keep condition, output column); a last pair with zero
+# time span defines no rate
+_LAST_PAIR = {
+    "idelta": ("", "value - __pv AS idelta"),
+    "irate": (
+        " AND ts > __pt",
+        f"{_INCREASE_STEP.format(v='value', p='__pv')}"
+        " / ((ts - __pt) / 1000.0D) AS irate",
+    ),
+}
+
+
+def _last_pair(samples, member, keys, start, end):
+    return run_sql(
+        last_pair_sql(member),
+        filter_key_range(samples, keys, start, end, valid=True),
+    ).orderBy("key")
 
 
 def ts_irate(
@@ -639,18 +580,4 @@ def ts_irate(
     deterministically by (ts, value) — ts_idelta's rule — and a
     last-pair with ZERO time span (both samples at the max ts) defines
     no rate and is not emitted."""
-    step = F.when(
-        F.col("value") >= F.col("__pv"), F.col("value") - F.col("__pv")
-    ).otherwise(F.col("value"))
-    return (
-        _last_pair(samples, keys, start, end)
-        .filter(F.col("ts") > F.col("__pt"))
-        .select(
-            "key",
-            "ts",
-            (step / ((F.col("ts") - F.col("__pt")) / F.lit(1000.0))).alias(
-                "irate"
-            ),
-        )
-        .orderBy("key")
-    )
+    return _last_pair(samples, "irate", keys, start, end)

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from redistimeseries_spark.operators import correlate, features, percentiles, rate
+from redistimeseries_spark.operators.percentiles import quantile_cont_sql
 from redistimeseries_spark.operators.smooth import EWM_SNAP
 from redistimeseries_spark.store import TSStore
 
@@ -32,52 +34,128 @@ RETURN CASE mode WHEN '~' THEN b + dur DIV 2 WHEN '+' THEN b + dur ELSE b END
 """
 
 
-def _ts_tvf_sql(p: str) -> list[str]:
-    """SQL TABLE functions (Spark 4 `CREATE FUNCTION ... RETURNS TABLE`)
-    over the `<p>samples` view, one per beyond-reference TS companion, so
-    the `spark.sql` surface matches the Python facade (engine.topk /
-    deriv / changes / resets / predict_linear / value_histogram /
-    resample / holt / ewma / anomalies / mad / outlier_mad /
-    hist_quantile / decompose / forecast / corr / cusum / ewm_band /
-    acf / detect_period / features / seasonal_strength —
-    named
-    `<p><op>`, so two stores registered under
-    different prefixes keep independent function sets).  Bodies are the
-    operators' exact plans re-expressed
-    declaratively — Catalyst inlines them at the call site, so `SELECT *
-    FROM ts_deriv(3600000)` compiles to the same aggregation the
-    DataFrame operator builds (pinned equal in test_sql_surface).  Bucket
-    math is align-0 (`greatest(ts - pmod(ts, dur), 0)`); filter by key or
-    time range in the surrounding WHERE clause instead of via args.
+def _operator_tvf_sql(p: str) -> list[str]:
+    """The table functions that run their DataFrame operator's own SQL
+    text (`functions.filters.run_sql`) over `<p>samples`: deriv,
+    predict_linear, delta, increase, rate, changes, resets, idelta,
+    irate, value_hist, hist_quantile, mad, outlier_mad, features and acf.
+    The function fills the text with its parameters, the align-0 grid,
+    the whole time range and the NaN filter, so `SELECT * FROM
+    ts_deriv(3600000)` optimizes to the plan `rate.ts_deriv(samples,
+    3600000)` builds below its final sort (pinned in test_sql_surface).
+    Argument checks the operator makes in Python become a raise_error
+    guard in the function's source filter, which folds away for valid
+    literal arguments."""
+    samples = f"(SELECT * FROM {p}samples WHERE NOT isnan(value))"
 
-    `ts_holt` is the one sequential-recurrence member: its body folds
-    each series' sorted sample array with `aggregate()` (O(n^2) array
-    growth per key) — a correct SQL twin for interactive use; the Arrow
-    applyInPandas facade (operators/smooth.ts_holt) is the scale path."""
-    nn = "NOT isnan(value)"
-    b = "greatest(ts - pmod(ts, dur), 0)"
-
-    def _interp(a: str) -> str:
-        # percentile(·, 0.5)'s exact interpolation over a sorted array
+    def guarded(cond: str, msg: str) -> str:
+        # evaluated on every source row ahead of any outer key filter, so
+        # an invalid call raises even when the outer query matches nothing
         return (
-            f"element_at({a}, CAST(floor((size({a}) - 1) * 0.5) AS INT) + 1)"
-            f" + ((size({a}) - 1) * 0.5 - floor((size({a}) - 1) * 0.5))"
-            f" * (element_at({a}, CAST(ceil((size({a}) - 1) * 0.5) AS INT) + 1)"
-            f"    - element_at({a}, CAST(floor((size({a}) - 1) * 0.5) AS INT) + 1))"
+            f"(SELECT * FROM {p}samples WHERE NOT isnan(value) AND"
+            f" (CASE WHEN {cond} THEN true"
+            f" ELSE CAST(raise_error(concat({msg})) AS BOOLEAN) END))"
         )
 
-    # single-pass median+MAD aggregate (operators/percentiles.ts_mad's
-    # exact expression): nested reduce lambdas bind array/median/devs
-    mm_sql = (
-        "reduce(array(sort_array(collect_list(value))),"
-        " CAST(NULL AS STRUCT<med: DOUBLE, mad: DOUBLE>),"
-        " (z, a) -> reduce(array(" + _interp("a") + "),"
-        "   CAST(NULL AS STRUCT<med: DOUBLE, mad: DOUBLE>),"
-        "   (z2, med) -> reduce("
-        "     array(sort_array(transform(a, x -> abs(x - med)))),"
-        "     CAST(NULL AS STRUCT<med: DOUBLE, mad: DOUBLE>),"
-        "     (z3, dv) -> struct(med AS med, " + _interp("dv") + " AS mad))))"
+    grid = {"dur": "dur", "align": "0L"}
+    hist = percentiles.VALUE_HIST_SQL.format(
+        src=guarded(
+            "q BETWEEN 0 AND 1",
+            f"'{p}hist_quantile: q must lie in [0, 1], got ', q",
+        ),
+        lo="0.0D",
+        bin_width="bin_width",
     )
+    acf_grid = correlate.ACF_GRID_SQL.format(
+        src=guarded(
+            "dur > 0 AND max_lag >= 1 AND max_lag <= 128",
+            f"'{p}acf: need dur > 0 and max_lag in [1, 128], got dur=',"
+            " CAST(dur AS STRING), ' max_lag=', CAST(max_lag AS STRING)",
+        ),
+        **grid,
+    )
+    fns = [
+        ("deriv(dur BIGINT)", "ts BIGINT, slope DOUBLE",
+         rate.DERIV_SQL.format(src=samples, **grid)),
+        ("predict_linear(dur BIGINT, horizon BIGINT)",
+         "ts BIGINT, predicted DOUBLE",
+         rate.PREDICT_LINEAR_SQL.format(src=samples, horizon="horizon", **grid)),
+        ("delta(dur BIGINT)", "ts BIGINT, delta DOUBLE",
+         rate.DELTA_SQL.format(src=samples, **grid)),
+        *(
+            (f"{m}(dur BIGINT)", f"ts BIGINT, {m} {t}",
+             rate.chain_sql(m).format(src=samples, in_rng="true", **grid))
+            for m, t in (("increase", "DOUBLE"), ("rate", "DOUBLE"),
+                         ("changes", "BIGINT"), ("resets", "BIGINT"))
+        ),
+        *(
+            (f"{m}()", f"ts BIGINT, {m} DOUBLE",
+             rate.last_pair_sql(m).format(src=samples))
+            for m in ("idelta", "irate")
+        ),
+        ("value_hist(bin_width DOUBLE, lo DOUBLE)", "bin_lo DOUBLE, n BIGINT",
+         percentiles.VALUE_HIST_SQL.format(
+             src=samples, lo="lo", bin_width="bin_width")),
+        ("hist_quantile(bin_width DOUBLE, q DOUBLE)", "qv DOUBLE",
+         percentiles.HIST_QUANTILE_SQL.format(
+             src=f"({hist})", q="q", bin_width="bin_width")),
+        ("mad(dur BIGINT)", "ts BIGINT, med DOUBLE, mad DOUBLE",
+         percentiles.MAD_SQL.format(src=samples, **grid)),
+        ("outlier_mad(dur BIGINT, k DOUBLE)",
+         "ts BIGINT, value DOUBLE, score DOUBLE, is_outlier BOOLEAN",
+         percentiles.OUTLIER_MAD_SQL.format(src=samples, k="k", **grid)),
+        ("features(dur BIGINT)",
+         "n_samples BIGINT, n_buckets BIGINT, mean DOUBLE, std DOUBLE,"
+         " cv DOUBLE, vmin DOUBLE, vmax DOUBLE, trend_slope DOUBLE,"
+         " trend_r2 DOUBLE, acf1 DOUBLE, crossing_rate DOUBLE,"
+         " flat_rate DOUBLE, spikiness DOUBLE",
+         features.FEATURES_SQL.format(
+             src=guarded(
+                 "dur > 0",
+                 f"'{p}features: dur must be positive, got ',"
+                 " CAST(dur AS STRING)",
+             ),
+             **grid,
+         )),
+        # the operator checkpoints the grid between the two texts; here
+        # the grid is the sweep's source, as in its plan without the
+        # checkpoint
+        ("acf(dur BIGINT, max_lag INT)",
+         "lag_n INT, lag_ms BIGINT, acf DOUBLE, n BIGINT",
+         correlate.ACF_SWEEP_SQL.format(
+             src=f"({acf_grid})", dur="dur", max_lag="max_lag")),
+    ]
+    return [
+        f"CREATE OR REPLACE TEMPORARY FUNCTION {p}{sig}"
+        f" RETURNS TABLE (key STRING, {cols}) RETURN {body}"
+        for sig, cols, body in fns
+    ]
+
+
+def _ts_tvf_sql(p: str) -> list[str]:
+    """SQL twins of the operators `_operator_tvf_sql` does not cover, one
+    `CREATE FUNCTION ... RETURNS TABLE` body each over `<p>samples`, named
+    `<p><op>`, so two stores registered under different prefixes keep
+    independent function sets.  Catalyst inlines them at the call site;
+    test_sql_surface pins each one's answers to its operator's.  Bucket
+    math is align-0 (`greatest(ts - pmod(ts, dur), 0)`); filter by key or
+    time range in the surrounding WHERE clause instead of via args.  Why
+    each keeps its own text:
+
+    - topk: the operator dispatches every aggregator in Python.
+    - corr, xcorr, lead_lag: the operators take pair lists and a
+      tolerance; the functions take one pair and a symmetric lag sweep.
+    - cusum, resample, rolling_quantile: the operators' plans are
+      chunk-local (a hot series parallelizes across time chunks).
+    - decompose, forecast: the operators use literal `ROWS` frames, which
+      a function parameter cannot fill; seasonal_strength composes over
+      the decompose function.
+    - ewma, ewm_band, holt, holt_winters, anomalies: the operators run
+      Arrow kernels; these `aggregate()` folds are for interactive use.
+    - detect_period: the operator checkpoints its bucket grid, which its
+      detrend and sweep read six times; inlined, the grid would repeat."""
+    nn = "NOT isnan(value)"
+    b = "greatest(ts - pmod(ts, dur), 0)"
     return [
         # PromQL topk/bottomk per bucket (operators/multi.ts_topk); agg
         # dispatch covers the groupBy-native core five PLUS the p-name
@@ -134,11 +212,7 @@ def _ts_tvf_sql(p: str) -> list[str]:
                            array((size(a) - 1)
                              * try_cast(substring(agg, 2) AS DOUBLE) / 100),
                            CAST(NULL AS DOUBLE),
-                           (z2, q) ->
-                             element_at(a, CAST(floor(q) AS INT) + 1)
-                             + (q - floor(q))
-                             * (element_at(a, CAST(ceil(q) AS INT) + 1)
-                                - element_at(a, CAST(floor(q) AS INT) + 1)))),
+                           (z2, q) -> {quantile_cont_sql("a", "q")})),
                          6) AS __v
                 FROM (SELECT key, {b} AS __b, value
                       FROM {p}samples WHERE {nn})
@@ -147,178 +221,6 @@ def _ts_tvf_sql(p: str) -> list[str]:
                        AND try_cast(substring(agg, 2) AS DOUBLE) <= 100)
               WHERE __v IS NOT NULL AND NOT isnan(__v))
             WHERE rnk <= n""",
-        # per-bucket least-squares slope, value-units/second (ts_deriv)
-        f"""CREATE OR REPLACE TEMPORARY FUNCTION {p}deriv(dur BIGINT)
-            RETURNS TABLE (key STRING, ts BIGINT, slope DOUBLE)
-            RETURN SELECT key, __b AS ts, slope FROM (
-              SELECT key, __b, regr_slope(value, __x) AS slope
-              FROM (SELECT key, {b} AS __b,
-                           (ts - {b}) / 1000.0 AS __x, value
-                    FROM {p}samples WHERE {nn})
-              GROUP BY key, __b)
-            WHERE slope IS NOT NULL""",
-        # per-bucket change count vs previous valid sample (ts_changes)
-        f"""CREATE OR REPLACE TEMPORARY FUNCTION {p}changes(dur BIGINT)
-            RETURNS TABLE (key STRING, ts BIGINT, changes BIGINT)
-            RETURN SELECT key, __b AS ts, __s AS changes FROM (
-              SELECT key, __b, sum(__e) AS __s, count(__e) AS __n
-              FROM (
-                SELECT key, {b} AS __b,
-                       CASE WHEN __p IS NULL THEN NULL
-                            ELSE CAST(value <> __p AS INT) END AS __e
-                FROM (SELECT key, ts, value,
-                             lag(value) OVER (PARTITION BY key ORDER BY ts) AS __p
-                      FROM {p}samples WHERE {nn}))
-              GROUP BY key, __b)
-            WHERE __n > 0""",
-        # reset-aware counter increase / per-second rate per bucket
-        # (rate.ts_increase / ts_rate — the step sum over the full-history
-        # valid-sample lag chain; emit when any sample has a predecessor)
-        f"""CREATE OR REPLACE TEMPORARY FUNCTION {p}increase(dur BIGINT)
-            RETURNS TABLE (key STRING, ts BIGINT, increase DOUBLE)
-            RETURN SELECT key, __b AS ts, __s AS increase FROM (
-              SELECT key, __b, sum(__e) AS __s, count(__e) AS __n
-              FROM (
-                SELECT key, {b} AS __b,
-                       CASE WHEN __p IS NULL THEN NULL
-                            WHEN value >= __p THEN value - __p
-                            ELSE value END AS __e
-                FROM (SELECT key, ts, value,
-                             lag(value) OVER (PARTITION BY key ORDER BY ts) AS __p
-                      FROM {p}samples WHERE {nn}))
-              GROUP BY key, __b)
-            WHERE __n > 0""",
-        f"""CREATE OR REPLACE TEMPORARY FUNCTION {p}rate(dur BIGINT)
-            RETURNS TABLE (key STRING, ts BIGINT, rate DOUBLE)
-            RETURN SELECT key, ts, increase / (dur / 1000.0) AS rate
-            FROM {p}increase(dur)""",
-        # per-bucket counter-reset count (ts_resets)
-        f"""CREATE OR REPLACE TEMPORARY FUNCTION {p}resets(dur BIGINT)
-            RETURNS TABLE (key STRING, ts BIGINT, resets BIGINT)
-            RETURN SELECT key, __b AS ts, __s AS resets FROM (
-              SELECT key, __b, sum(__e) AS __s, count(__e) AS __n
-              FROM (
-                SELECT key, {b} AS __b,
-                       CASE WHEN __p IS NULL THEN NULL
-                            ELSE CAST(value < __p AS INT) END AS __e
-                FROM (SELECT key, ts, value,
-                             lag(value) OVER (PARTITION BY key ORDER BY ts) AS __p
-                      FROM {p}samples WHERE {nn}))
-              GROUP BY key, __b)
-            WHERE __n > 0""",
-        # per-bucket linear extrapolation `horizon` past bucket end
-        f"""CREATE OR REPLACE TEMPORARY FUNCTION {p}predict_linear(
-                dur BIGINT, horizon BIGINT)
-            RETURNS TABLE (key STRING, ts BIGINT, predicted DOUBLE)
-            RETURN SELECT key, __b AS ts,
-                          __c + __m * (dur + horizon) / 1000.0 AS predicted
-            FROM (
-              SELECT key, __b, regr_slope(value, __x) AS __m,
-                     regr_intercept(value, __x) AS __c
-              FROM (SELECT key, {b} AS __b,
-                           (ts - {b}) / 1000.0 AS __x, value
-                    FROM {p}samples WHERE {nn})
-              GROUP BY key, __b)
-            WHERE __m IS NOT NULL""",
-        # per-bucket last-minus-first gauge difference (rate.ts_delta)
-        f"""CREATE OR REPLACE TEMPORARY FUNCTION {p}delta(dur BIGINT)
-            RETURNS TABLE (key STRING, ts BIGINT, delta DOUBLE)
-            RETURN SELECT key, __b AS ts, delta FROM (
-              -- duplicate-(key, ts) rows: (ts, value) last-wins ordering
-              -- on both endpoints, effective-sample two-row minimum
-              SELECT key, __b,
-                     max_by(value, struct(ts, value))
-                       - min_by(value, struct(ts, -value)) AS delta,
-                     count(DISTINCT ts) AS __n
-              FROM (SELECT key, ts, {b} AS __b, value
-                    FROM {p}samples WHERE {nn})
-              GROUP BY key, __b)
-            WHERE __n >= 2""",
-        # spot gauge movement, last two samples (rate.ts_idelta);
-        # duplicate (key, ts) rows order deterministically by (ts, value)
-        # and exactly one row per key emits — the facade's rule
-        f"""CREATE OR REPLACE TEMPORARY FUNCTION {p}idelta()
-            RETURNS TABLE (key STRING, ts BIGINT, idelta DOUBLE)
-            RETURN SELECT key, ts, idelta FROM (
-              SELECT key, ts,
-                     value - lag(value) OVER
-                       (PARTITION BY key ORDER BY ts, value) AS idelta,
-                     row_number() OVER
-                       (PARTITION BY key ORDER BY ts DESC, value DESC) AS __rn
-              FROM {p}samples WHERE {nn})
-            WHERE __rn = 1 AND idelta IS NOT NULL""",
-        # robust median/MAD dispersion per bucket (percentiles.ts_mad):
-        # ONE aggregation — the sorted bucket array yields both the
-        # interpolated median and the MAD inside a nested-reduce
-        # expression, the facade's exact single-pass plan (the two-pass
-        # join formulation measured 691 s at 1B rows)
-        f"""CREATE OR REPLACE TEMPORARY FUNCTION {p}mad(dur BIGINT)
-            RETURNS TABLE (key STRING, ts BIGINT, med DOUBLE, mad DOUBLE)
-            RETURN WITH m AS (
-              SELECT key, {b} AS __b, {mm_sql} AS mm
-              FROM {p}samples WHERE {nn}
-              GROUP BY key, {b})
-            SELECT key, __b AS ts, mm.med AS med, mm.mad AS mad FROM m""",
-        # per-sample Hampel robust-z outlier flags (ts_outlier_mad):
-        # the {p}mad stats joined back to the samples; flags from the
-        # 6dp-rounded score, mad=0 buckets flag nothing
-        f"""CREATE OR REPLACE TEMPORARY FUNCTION {p}outlier_mad(
-                dur BIGINT, k DOUBLE)
-            RETURNS TABLE (key STRING, ts BIGINT, value DOUBLE,
-                           score DOUBLE, is_outlier BOOLEAN)
-            RETURN WITH s AS (
-              SELECT key, ts, {b} AS __b, value
-              FROM {p}samples WHERE {nn}),
-            m AS (SELECT key, __b, {mm_sql} AS mm
-                  FROM s GROUP BY key, __b),
-            st AS (SELECT key, __b, mm.med AS med, mm.mad AS mad FROM m)
-            SELECT s.key, s.ts, s.value,
-                   round(abs(s.value - st.med)
-                         / (1.4826 * nullif(st.mad, 0.0)), 6) AS score,
-                   coalesce(round(abs(s.value - st.med)
-                            / (1.4826 * nullif(st.mad, 0.0)), 6) > k,
-                            false) AS is_outlier
-            FROM s JOIN st ON s.key = st.key AND s.__b = st.__b""",
-        # PromQL histogram_quantile composed over the value histogram
-        # (percentiles.ts_histogram_quantile): rank q*total, first
-        # crossing bin, uniform interpolation inside it.  q outside
-        # [0, 1] raises (the facade's ValueError; the guard lives in the
-        # source CTE because an out-of-range q otherwise yields an EMPTY
-        # crossing set — silently no rows — and the TVF inlines q as a
-        # literal, so Catalyst folds the valid-q case to true and the
-        # invalid case to a plan-time error, the {p}topk pattern)
-        f"""CREATE OR REPLACE TEMPORARY FUNCTION {p}hist_quantile(
-                bin_width DOUBLE, q DOUBLE)
-            RETURNS TABLE (key STRING, qv DOUBLE)
-            RETURN WITH h AS (
-              SELECT key, floor(value / bin_width) * bin_width AS bin_lo,
-                     count(1) AS n
-              FROM {p}samples
-              WHERE {nn} AND (CASE WHEN q BETWEEN 0 AND 1 THEN true
-                              ELSE CAST(raise_error(concat(
-                                '{p}hist_quantile: q must lie in [0, 1],'
-                                ' got ', q)) AS BOOLEAN) END)
-              GROUP BY 1, 2),
-            c AS (SELECT key, bin_lo, n,
-                         sum(n) OVER (PARTITION BY key) AS tot,
-                         sum(n) OVER (PARTITION BY key ORDER BY bin_lo
-                           ROWS UNBOUNDED PRECEDING) AS cum
-                  FROM h),
-            x AS (SELECT key, bin_lo, n, cum, q * tot AS r,
-                         row_number() OVER
-                           (PARTITION BY key ORDER BY bin_lo) AS rn
-                  FROM c WHERE cum >= q * tot)
-            SELECT key, bin_lo + bin_width * (r - (cum - n)) / n AS qv
-            FROM x WHERE rn = 1""",
-        # fixed-width value histogram (percentiles.ts_value_histogram)
-        f"""CREATE OR REPLACE TEMPORARY FUNCTION {p}value_hist(
-                bin_width DOUBLE, lo DOUBLE)
-            RETURNS TABLE (key STRING, bin_lo DOUBLE, n BIGINT)
-            RETURN SELECT key,
-                          lo + floor((value - lo) / bin_width) * bin_width AS bin_lo,
-                          count(1) AS n
-            FROM {p}samples WHERE {nn}
-            GROUP BY 1, 2""",
         # regular-grid resampling, locf or linear (resample.ts_resample)
         f"""CREATE OR REPLACE TEMPORARY FUNCTION {p}resample(
                 step BIGINT, method STRING)
@@ -835,120 +737,11 @@ def _ts_tvf_sql(p: str) -> list[str]:
               FROM x)
             SELECT ka AS key_a, kb AS key_b, w.lag, w.corr, w.n
             FROM b WHERE w IS NOT NULL""",
-        # autocorrelation sweep (correlate.ts_acf): the {p}xcorr shape
-        # with the key as its own pair — no pair argument, every series
-        # sweeps against itself on the dur grid; same twice-placed
-        # guard (source-CTE WHERE + sequence step) so an invalid call
-        # raises even on an empty match
-        f"""CREATE OR REPLACE TEMPORARY FUNCTION {p}acf(
-                dur BIGINT, max_lag INT)
-            RETURNS TABLE (key STRING, lag_n INT, lag_ms BIGINT,
-                           acf DOUBLE, n BIGINT)
-            RETURN WITH g AS (
-              SELECT key, greatest(ts - pmod(ts, dur), 0) AS b,
-                     avg(value) AS v
-              FROM {p}samples
-              WHERE {nn} AND (CASE WHEN dur > 0 AND max_lag >= 1
-                                     AND max_lag <= 128 THEN true
-                              ELSE CAST(raise_error(concat(
-                                '{p}acf: need dur > 0 and max_lag in',
-                                ' [1, 128], got dur=',
-                                CAST(dur AS STRING), ' max_lag=',
-                                CAST(max_lag AS STRING))) AS BOOLEAN)
-                              END)
-              GROUP BY 1, 2),
-            l AS (SELECT explode(sequence(
-                    CASE WHEN dur > 0 AND max_lag >= 1
-                           AND max_lag <= 128 THEN 1
-                         ELSE CAST(raise_error(concat(
-                           '{p}acf: need dur > 0 and max_lag in',
-                           ' [1, 128], got dur=',
-                           CAST(dur AS STRING), ' max_lag=',
-                           CAST(max_lag AS STRING))) AS INT) END,
-                    max_lag)) AS lag_n),
-            m AS (
-              SELECT g.key, l.lag_n, g.v AS va, b.v AS vb
-              FROM g CROSS JOIN l
-              JOIN g b ON b.key = g.key
-                      AND b.b = g.b + CAST(l.lag_n AS BIGINT) * dur),
-            a AS (
-              SELECT key, lag_n,
-                     covar_samp(va, vb) AS cov,
-                     stddev_samp(va) AS sa, stddev_samp(vb) AS sb,
-                     count(1) AS n
-              FROM m GROUP BY 1, 2)
-            SELECT key, lag_n, CAST(lag_n AS BIGINT) * dur AS lag_ms,
-                   cov / (sa * sb) AS acf, n
-            FROM a WHERE sa > 0 AND sb > 0""",
         # seasonality detection (correlate.ts_detect_period): the
-        # always-detrended chain — per-key OLS on the bucket index,
-        # fleet feature extraction (features.ts_features): one grid
-        # hash agg, one per-key window pass, one final agg — the whole
-        # per-key feature vector declaratively; dur guard in the
-        # source CTE (TVF args inline as literals, so Catalyst folds
-        # the valid case to true and the invalid case to a plan-time
-        # error even on an empty match — the {p}hist_quantile pattern)
-        f"""CREATE OR REPLACE TEMPORARY FUNCTION {p}features(dur BIGINT)
-            RETURNS TABLE (key STRING, n_samples BIGINT,
-                           n_buckets BIGINT, mean DOUBLE, std DOUBLE,
-                           cv DOUBLE, vmin DOUBLE, vmax DOUBLE,
-                           trend_slope DOUBLE, trend_r2 DOUBLE,
-                           acf1 DOUBLE, crossing_rate DOUBLE,
-                           flat_rate DOUBLE, spikiness DOUBLE)
-            RETURN WITH g AS (
-              SELECT key, greatest(ts - pmod(ts, dur), 0) AS b,
-                     avg(value) AS v, count(1) AS c
-              FROM {p}samples
-              WHERE {nn} AND (CASE WHEN dur > 0 THEN true
-                              ELSE CAST(raise_error(concat(
-                                '{p}features: dur must be positive,',
-                                ' got ', CAST(dur AS STRING)))
-                                AS BOOLEAN) END)
-              GROUP BY 1, 2),
-            d AS (SELECT *, avg(v) OVER (PARTITION BY key) AS mu,
-                         min(b) OVER (PARTITION BY key) AS minb,
-                         lead(v) OVER (PARTITION BY key ORDER BY b)
-                           AS vn,
-                         lead(b) OVER (PARTITION BY key ORDER BY b)
-                           AS bn
-                  FROM g),
-            e AS (SELECT *, CAST(b - minb AS DOUBLE) / dur AS x,
-                         coalesce(bn = b + dur, false) AS adj
-                  FROM d),
-            a AS (SELECT key, sum(c) AS n_samples,
-                         count(1) AS n_buckets, avg(v) AS mean,
-                         stddev_samp(v) AS std, min(v) AS vmin,
-                         max(v) AS vmax, regr_slope(v, x) AS sl,
-                         regr_r2(v, x) AS r2,
-                         covar_samp(CASE WHEN adj THEN v END,
-                                    CASE WHEN adj THEN vn END) AS cov,
-                         stddev_samp(CASE WHEN adj THEN v END) AS sa,
-                         stddev_samp(CASE WHEN adj THEN vn END) AS sb,
-                         sum(CASE WHEN adj THEN 1 ELSE 0 END) AS adjn,
-                         sum(CASE WHEN adj
-                                   AND (v - mu) * (vn - mu) < 0
-                                  THEN 1 ELSE 0 END) AS crossings,
-                         sum(CASE WHEN adj AND vn = v
-                                  THEN 1 ELSE 0 END) AS flats,
-                         max(abs(v - mu)) AS maxdev
-                  FROM e GROUP BY 1)
-            SELECT key, n_samples, n_buckets, mean, std,
-                   CASE WHEN std IS NOT NULL AND mean <> 0
-                        THEN std / abs(mean) END AS cv,
-                   vmin, vmax, sl AS trend_slope,
-                   CASE WHEN std > 0 THEN r2 END AS trend_r2,
-                   CASE WHEN sa > 0 AND sb > 0
-                        THEN cov / (sa * sb) END AS acf1,
-                   CASE WHEN adjn > 0
-                        THEN crossings / adjn END AS crossing_rate,
-                   CASE WHEN adjn > 0
-                        THEN flats / adjn END AS flat_rate,
-                   CASE WHEN std > 0
-                        THEN maxdev / std END AS spikiness
-            FROM a""",
+        # always-detrended chain — per-key OLS on the bucket index, then
         # the {p}acf sweep over the residual, 9dp-rounded local-peak
-        # scan, argmax, divisor-descent fundamental pick (facade
-        # covers detrend=False)
+        # scan, argmax, divisor-descent fundamental pick (facade covers
+        # detrend=False)
         f"""CREATE OR REPLACE TEMPORARY FUNCTION {p}detect_period(
                 dur BIGINT, max_p INT, min_strength DOUBLE,
                 min_n BIGINT, tol DOUBLE)
@@ -1074,14 +867,8 @@ def _ts_tvf_sql(p: str) -> list[str]:
                      sort_array(collect_list(value)) AS arr
               FROM c GROUP BY 1, 2)
             SELECT w.key, w.ts, w.value, g.n,
-              CASE WHEN g.n >= win THEN
-                element_at(g.arr,
-                  CAST(floor((g.n - 1) * q) AS INT) + 1)
-                + ((g.n - 1) * q - floor((g.n - 1) * q))
-                  * (element_at(g.arr,
-                       CAST(ceil((g.n - 1) * q) AS INT) + 1)
-                     - element_at(g.arr,
-                         CAST(floor((g.n - 1) * q) AS INT) + 1))
+              CASE WHEN g.n >= win
+                   THEN {quantile_cont_sql("g.arr", "(g.n - 1) * q")}
               END AS rq
             FROM w JOIN g ON g.key = w.key AND g.rn2 = w.rn""",
         # two-sided tabular CUSUM (correlate.ts_cusum): the closed form
@@ -1258,7 +1045,7 @@ def register_sql(spark: SparkSession, store: TSStore, prefix: str = "ts_") -> No
     store.labels.createOrReplaceTempView(f"{prefix}labels")
     spark.sql(_TS_BUCKET_SQL)
     spark.sql(_TS_REPORT_SQL)
-    for stmt in _ts_tvf_sql(prefix):
+    for stmt in _ts_tvf_sql(prefix) + _operator_tvf_sql(prefix):
         spark.sql(stmt)
 
 

@@ -1219,26 +1219,27 @@ def test_irate_last_two_samples(spark):
 
 
 def test_bucket_chain_vs_key_window_differential(spark):
-    """The skew-safe bucket-local chain (`_bucket_chain`) is pinned equal
-    to its pre-round-8 key-window twin (`_key_window_chain`) across the
-    whole family (increase / changes / resets indicators), random NaNs,
+    """The skew-safe bucket-local chain (`rate._CHAIN_SQL`) is pinned
+    equal to its pre-round-8 key-window twin (`_key_window_chain`) across
+    the whole family (ts_increase / ts_changes / ts_resets), random NaNs,
     resets, duplicate-bucket boundaries, and BOTH range cuts + align —
     the rewrite's semantics contract."""
     import math
     import random as _random
 
-    from pyspark.sql import functions as F
-
     from redistimeseries_spark.operators.rate import (
-        _bucket_chain,
         _increase_step,
         _key_window_chain,
+        ts_changes,
+        ts_increase,
+        ts_resets,
     )
 
+    # member: (operator, its output column, the key-window step)
     steps = {
-        "increase": (_increase_step, "double"),
-        "changes": (lambda v, p: (v != p).cast("int"), "bigint"),
-        "resets": (lambda v, p: (v < p).cast("int"), "bigint"),
+        "increase": (ts_increase, "increase", _increase_step),
+        "changes": (ts_changes, "changes", lambda v, p: (v != p).cast("int")),
+        "resets": (ts_resets, "resets", lambda v, p: (v < p).cast("int")),
     }
     rng = _random.Random(0xB00C)
     for trial in range(8):
@@ -1261,12 +1262,10 @@ def test_bucket_chain_vs_key_window_differential(spark):
         lo = rng.choice([0, rng.randrange(0, 25_000)])
         hi = rng.choice([2**63 - 1, rng.randrange(lo + 1, 60_000)])
         align = rng.choice(["0", "137"])
-        name, (fn, st) = rng.choice(sorted(steps.items()))
+        name, (op, col, fn) = rng.choice(sorted(steps.items()))
         got = {
-            (r["key"], r["ts"]): r["__v"]
-            for r in _bucket_chain(
-                sdf, dur, fn, None, lo, hi, align, st
-            ).collect()
+            (r["key"], r["ts"]): r[col]
+            for r in op(sdf, dur, None, lo, hi, align).collect()
         }
         want = {
             (r["key"], r["ts"]): r["__v"]

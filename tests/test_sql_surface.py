@@ -289,6 +289,79 @@ def test_sql_table_functions_match_operators(spark, samples_df):
         spark.sql("SELECT * FROM ts_resample(20000, 'cubic')").collect()
 
 
+def test_operator_table_functions_run_the_operator_plan(spark, samples_df):
+    """Each table function built from its operator's SQL text optimizes
+    to the operator's own plan below its final sort (expression ids
+    normalized) and gives its rows, here with duplicate timestamps in
+    series `c`: a key-window `lag` ordered by ts alone gave increase 8.0
+    and resets 1 on it, where the operator's (ts, value) order gives 13.0
+    and 2."""
+    import re
+
+    from redistimeseries_spark.operators import (
+        correlate,
+        features,
+        percentiles,
+        rate,
+    )
+
+    rows = [("a", 10_000 * i + 500, v) for i, v in enumerate(
+        [1.0, 1.0, 2.0, float("nan"), 2.0, 5.0, 3.0, 3.0])]
+    rows += [("b", 15_000 * i + 100, v) for i, v in enumerate(
+        [0.0, 10.0, 3.0, 8.0, 1.0, 2.0])]
+    rows += [("c", 1000, 5.0), ("c", 2000, 9.0), ("c", 2000, 3.0),
+             ("c", 3000, 4.0), ("c", 4000, 4.0)]
+    st = TSStore.from_dataframes(samples_df(rows))
+    register_sql(spark, st, prefix="op_")
+    s, dur = st.samples, 10_000
+    cases = [
+        (f"op_deriv({dur})", rate.ts_deriv(s, dur)),
+        (f"op_predict_linear({dur}, 60000)",
+         rate.ts_predict_linear(s, dur, 60_000)),
+        (f"op_delta({dur})", rate.ts_delta(s, dur)),
+        (f"op_increase({dur})", rate.ts_increase(s, dur)),
+        (f"op_rate({dur})", rate.ts_rate(s, dur)),
+        (f"op_changes({dur})", rate.ts_changes(s, dur)),
+        (f"op_resets({dur})", rate.ts_resets(s, dur)),
+        ("op_idelta()", rate.ts_idelta(s)),
+        ("op_irate()", rate.ts_irate(s)),
+        ("op_value_hist(2.0, 0.5)", percentiles.ts_value_histogram(s, 2.0, 0.5)),
+        ("op_hist_quantile(2.0, 0.9)", percentiles.ts_histogram_quantile(
+            spark.sql("SELECT * FROM op_value_hist(2.0, 0.0)"), 0.9, 2.0)),
+        (f"op_mad({dur})", percentiles.ts_mad(s, dur)),
+        (f"op_outlier_mad({dur}, 2.0)",
+         percentiles.ts_outlier_mad(s, dur, k=2.0)),
+        ("op_features(2000)", features.ts_features(s, 2000)),
+    ]
+
+    def plan(df):
+        p = df._jdf.queryExecution().optimizedPlan()
+        return re.sub(r"@[0-9a-f]+|#\d+", "#", p.toString())
+
+    def below_sort(df):
+        p = df._jdf.queryExecution().optimizedPlan()
+        assert p.getClass().getSimpleName() == "Sort"
+        return re.sub(r"@[0-9a-f]+|#\d+", "#", p.child().toString())
+
+    def rnd(df):
+        return sorted(
+            tuple(round(x, 9) if isinstance(x, float) else x for x in r)
+            for r in df.collect()
+        )
+
+    for q, op_df in cases:
+        tvf = spark.sql("SELECT * FROM " + q)
+        assert plan(tvf) == below_sort(op_df), q
+        assert rnd(tvf) == rnd(op_df), q
+    # the acf operator checkpoints its grid between its two texts, where
+    # the function reads the grid text inline: same rows, another plan
+    acf = spark.sql("SELECT * FROM op_acf(2000, 5)")
+    assert rnd(acf) == rnd(correlate.ts_acf(s, 2000, 5))
+    c = {r.ts: r for r in rate.ts_increase(s, dur, keys="c").collect()}
+    assert c[0].increase == 13.0
+    assert rate.ts_resets(s, dur, keys="c").collect()[0].resets == 2
+
+
 def test_sql_corr_cusum_tvfs(spark, samples_df):
     """Round-10 TVFs: {p}corr / {p}cusum answer identically to the
     correlate operators — aligned cadence for corr (the documented
