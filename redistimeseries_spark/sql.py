@@ -1040,7 +1040,10 @@ def _ts_tvf_sql(p: str) -> list[str]:
 def register_sql(spark: SparkSession, store: TSStore, prefix: str = "ts_") -> None:
     """Create temp views `<prefix>samples` / `<prefix>labels`, the
     ts_bucket / ts_bucket_report scalar SQL functions, and the TS
-    companion TABLE functions (`_ts_tvf_sql`) in the session catalog."""
+    companion TABLE functions in the session catalog: the SQL twins of
+    `_ts_tvf_sql`, then those `_operator_tvf_sql` builds from their
+    DataFrame operators' own SQL texts.  Each CREATE FUNCTION analyses
+    its body; no Spark job runs."""
     store.samples.createOrReplaceTempView(f"{prefix}samples")
     store.labels.createOrReplaceTempView(f"{prefix}labels")
     spark.sql(_TS_BUCKET_SQL)
