@@ -366,7 +366,7 @@ def ts_acf(
     if not 1 <= max_lag_n <= 128:
         raise ValueError("max_lag_n must be in [1, 128]")
     g = _acf_grid(samples, bucket_dur, keys, start, end, align)
-    return _acf_sweep(g, bucket_dur, max_lag_n)
+    return _acf_sweep(g, bucket_dur, max_lag_n).orderBy("key", "lag_n")
 
 
 def _acf_grid(samples, bucket_dur, keys, start, end, align):
@@ -397,10 +397,12 @@ FROM {src} GROUP BY key, __b
 
 def _acf_sweep(g, bucket_dur, max_lag_n):
     """The lag sweep over a gridded (key, __b, __v) frame — the
-    ts_xcorr join/aggregate shape with the key as its own pair."""
+    ts_xcorr join/aggregate shape with the key as its own pair.
+    Unordered: `ts_acf` sorts its answer, `ts_detect_period` consumes
+    the sweep mid-plan through a per-key window."""
     return run_sql(
         ACF_SWEEP_SQL, g, dur=bigint_sql(bucket_dur), max_lag=str(int(max_lag_n))
-    ).orderBy("key", "lag_n")
+    )
 
 
 # the b leg explodes the 1..max_lag lag vector with its bucket timestamps

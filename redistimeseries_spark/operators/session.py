@@ -5,7 +5,7 @@ first event-stream question users ask after range aggregation: split each
 series into sessions separated by silence > gap, then aggregate per
 session.
 
-Batch shape, SKEW-SAFE (late round 9 — the `_bucket_chain` discipline):
+Batch shape, SKEW-SAFE (late round 9 — the `rate._chain` discipline):
 session starts are a lag predicate and session ids a running sum of
 starts, both LINEAR in the per-key scan — so each (key, ~4.7h
 time-chunk) computes its starts locally (the chunk's first row reads

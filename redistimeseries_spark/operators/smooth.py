@@ -6,9 +6,9 @@ EWMA is the standard dashboard/alerting smoother).  The recurrence
     y_0 = x_0;   y_t = alpha * x_t + (1 - alpha) * y_{t-1}
 
 is sequential per key — but it is a LINEAR recurrence, so it is NOT a
-single-task funnel (round 9, the `_bucket_chain` discipline applied to
-state machines): every chunk of a series folds, independently and in
-parallel, to the AFFINE MAP it applies to whatever state enters it
+single-task funnel (round 9, the discipline of `rate._chain`, which runs
+`rate.chain_sql`, applied to state machines): every chunk of a series
+folds, independently and in parallel, to the AFFINE MAP it applies to whatever state enters it
 (exit = A * entry + B with A = (1-alpha)^n), a tiny per-key scan over
 the one-row-per-chunk frame composes the entry states, and the per-row
 values come back as pure expressions (pow * entry + local).  Holt is
@@ -356,9 +356,9 @@ def ts_anomalies(
     variance get zscore NULL / anomaly false — there is no baseline to
     deviate from.
 
-    SKEW-SAFE plan (round 9 — the `_bucket_chain` discipline generalized
-    to BOUNDED-WINDOW state): the rolling frame partitions by (key,
-    chunk_ms time-chunk), and each chunk's first rows get their missing
+    SKEW-SAFE plan (round 9 — the discipline of `rate._chain`, which runs
+    `rate.chain_sql`, generalized to BOUNDED-WINDOW state): the rolling
+    frame partitions by (key, chunk_ms time-chunk), and each chunk's first rows get their missing
     predecessors as CONTEXT ROWS — every chunk folds to the array of its
     last <=window_n samples (one conditional aggregate), a tiny per-key
     scan over the one-row-per-chunk frame computes each chunk's incoming

@@ -19,13 +19,28 @@ store also maintains:
     `latest()` folds the deltas on read — the same merge-on-read as the
     log, so the duplicate policy decides ties at a key's newest ts.
     `compact()` folds the deltas back into one file;
-  * each compaction rule's dest table, recomputing ONLY the (key, bucket)
-    pairs the batch touched (src/tsdb.c:622-660 SeriesCalcRange recompute)
-    — out-of-order and in-bucket upserts repair the right buckets.  The
+  * each compaction rule's dest table, recomputing ONLY the buckets the
+    batch touched (src/tsdb.c:622-660 SeriesCalcRange recompute) —
+    out-of-order and in-bucket upserts repair the right buckets.  The
     recomputed buckets come from `compaction.materialize_rule`, the same
     aggregation the engine facade runs, applied to the pruned slice behind
     the touched buckets; only the EWM rules keep their own carried-state
-    forward repair (`_ewm_recompute`).
+    forward repair (`_ewm_recompute`).  A bucket-local rule (every
+    per-bucket aggregator) learns its touched buckets from an
+    observation on the log append's own job — Structured Streaming's
+    per-trigger observed metrics — and recomputes EVERY key's row in
+    them (`_bucket_recompute`).  That is exact because a bucket's value
+    depends only on its own samples: an untouched (key, bucket)
+    recomputes to its stored row, or to none when it holds no emitting
+    sample, and the same bucket literal drops every old row.  The
+    cross-bucket rules (twa, increase/rate) widen exact (key, bucket)
+    pairs and probe boundary samples, so they keep a touched frame;
+  * the dest day partitions are rewritten by dynamic partition
+    overwrite straight from the plan that reads them, with no
+    checkpoint: the writer stages its files and replaces the partitions
+    only at job commit, after every task has read the old ones.  With
+    one `avg` rule a warm batch runs 5 Spark jobs: the log append, the
+    `latest` delta (2) and the dest rewrite (2).
 
 At 100 TB scale: the log is written partitioned by SAMPLE-TIME day
 (`__day = ts div 86400000`), so every maintenance read is partition-pruned:
@@ -59,11 +74,10 @@ before it writes.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 from dataclasses import dataclass, field, replace
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from redistimeseries_spark.functions.buckets import bucket_start
@@ -139,6 +153,14 @@ def _newest(df: DataFrame) -> DataFrame:
         .filter(F.col("ts") == F.col("__max"))
         .drop("__max")
     )
+
+
+def _source_bucket(rule: CompactionRule):
+    """The rule's bucket start of a row, NULL outside its source keys."""
+    b = bucket_start(F.col("ts"), rule.bucket_ms, rule.align_ts)
+    if rule.src_key_pattern is None:
+        return b
+    return F.when(F.col("key").rlike(rule.src_key_pattern), b)
 
 
 def _rule_sub(rule: CompactionRule) -> str:
@@ -226,8 +248,9 @@ class StreamingStore:
 
     def _pruned(self, days: list[int]) -> DataFrame:
         """Dup-resolved samples from ONLY the given day partitions — the
-        partition-pruned slice every per-batch maintenance read goes
-        through.  resolve_duplicates groups by (key, ts) and all rows of a
+        partition-pruned slice the cross-bucket and EWM repairs read
+        through (`_bucket_recompute` prunes the same way, with its own
+        exchange).  resolve_duplicates groups by (key, ts) and all rows of a
         given ts live in one day partition, so folding the slice alone is
         exact."""
         if not days:
@@ -237,14 +260,31 @@ class StreamingStore:
             sl.select("key", "ts", "value", "seq"), self.duplicate_policy
         )
 
-    def _append_log(self, batch: DataFrame):
-        (
-            batch.select("key", "ts", "value", "seq")
-            .withColumn("__day", F.expr(f"ts div {DAY_MS}").cast("int"))
-            .write.mode("append")
-            .partitionBy("__day")
-            .parquet(self.log_dir)
+    def _append_log(self, batch: DataFrame, rules=()) -> list[list[int]]:
+        """Append the batch to the day-partitioned log.  For each of
+        `rules` (bucket-local ones, see `_bucket_recompute`) the same job
+        observes the distinct bucket starts the batch touches among the
+        rule's source keys: one `collect_set` per rule on a
+        `pyspark.sql.Observation` — Structured Streaming's per-trigger
+        observed metrics — so no touched frame is materialized or
+        collected.  Returns the sorted buckets, one list per rule."""
+        out = batch.select("key", "ts", "value", "seq").withColumn(
+            "__day", F.expr(f"ts div {DAY_MS}").cast("int")
         )
+        obs = Observation()
+        if rules:
+            out = out.observe(
+                obs,
+                *(
+                    F.collect_set(_source_bucket(r)).alias(f"r{i}")
+                    for i, r in enumerate(rules)
+                ),
+            )
+        out.write.mode("append").partitionBy("__day").parquet(self.log_dir)
+        if not rules:
+            return []
+        seen = obs.get
+        return [sorted(seen[f"r{i}"]) for i in range(len(rules))]
 
     def _append_latest(self, batch: DataFrame):
         """One `latest` delta: the batch's rows at each key's newest ts,
@@ -326,6 +366,48 @@ class StreamingStore:
         return materialize_rule(
             sl, replace(rule, dest_suffix=""), include_open=True
         ).select("key", F.col("ts").alias("__bucket"), "value")
+
+    def _dest_days(self, rule: CompactionRule, buckets: list[int]) -> DataFrame:
+        """The rule dest's stored rows as (key, __bucket, value), read
+        from the day partitions of `buckets` only (dests are
+        day-partitioned by bucket ts, and a micro-batch's buckets cluster
+        in recent days)."""
+        return (
+            read_state(self.spark, self.root, _rule_sub(rule), DEST_SCHEMA)
+            .filter(F.col("__day").isin(sorted({_day(b) for b in buckets})))
+            .select("key", F.col("ts").alias("__bucket"), "value")
+        )
+
+    def _bucket_recompute(self, rule: CompactionRule, buckets: list[int]) -> DataFrame:
+        """Rows of a bucket-local rule (every per-bucket aggregator) for
+        EVERY key in the touched `buckets`: the touched days' log rows
+        whose bucket is in the literal, folded and aggregated.  Exact
+        because a bucket's value depends only on its own samples (the
+        reference recomputes from the bucket's samples,
+        src/tsdb.c:622-660): a (key, bucket) the batch did not touch
+        recomputes to its stored row, or to no row when it holds no
+        emitting sample — and the caller's `NOT IN` on the dest drops its old row
+        either way.  The extra keys cost no extra read: the touched days
+        are scanned whole for the fold regardless.  One exchange on `key`
+        serves both the (key, ts) duplicate fold and the
+        (key, `__bucket`) aggregation."""
+        days = sorted(
+            {
+                d
+                for b in buckets
+                for d in range(_day(b), _day(b + rule.bucket_ms - 1) + 1)
+            }
+        )
+        sl = (
+            self._log()
+            .filter(
+                F.col("__day").isin(days)
+                & bucket_start(F.col("ts"), rule.bucket_ms, rule.align_ts).isin(buckets)
+            )
+            .select("key", "ts", "value", "seq")
+            .repartition("key")
+        )
+        return self._materialize(rule, resolve_duplicates(sl, self.duplicate_policy))
 
     def _ewm_recompute(self, rule: CompactionRule, touched: DataFrame):
         """Incremental repair for the EWM smoothing rules (ewma_<alpha>,
@@ -687,95 +769,74 @@ class StreamingStore:
             ).persist()
         # 1. append to the log, partitioned by sample-time day (arrival
         # order preserved via seq) — the partitioning every later
-        # maintenance read prunes on
-        self._append_log(batch)
+        # maintenance read prunes on.  The same job observes each
+        # bucket-local rule's touched buckets
+        local = [
+            r
+            for r in self.rules
+            if r.agg not in CROSS_BUCKET_AGGS and parse_ewm_rule(r.agg) is None
+        ]
+        observed = dict(zip(map(id, local), self._append_log(batch, local)))
         # 2. latest: append this batch's newest rows per key as one delta
         # — no read of the stored table, no partition rewrite
         self._append_latest(batch)
-        # 3. per-rule dest recompute, touched buckets only
+        # 3. per-rule dest recompute, touched buckets only.  The source is
+        # NEVER the whole log: each slice is pruned to the day partitions
+        # the touched buckets cover, so per-batch cost tracks the batch's
+        # time locality, not history length (the reference recomputes
+        # from chunk-local data, src/tsdb.c:622-660)
         for rule in self.rules:
-            src = batch
-            if rule.src_key_pattern is not None:
-                src = batch.filter(F.col("key").rlike(rule.src_key_pattern))
-            # the touched (key, bucket) set, materialized once: it feeds
-            # the slice's semi-join and the dest anti-join, and one collect
-            # gives the driver its buckets (hence the day lists)
-            touched = (
-                src.select(
-                    "key",
-                    bucket_start(F.col("ts"), rule.bucket_ms, rule.align_ts).alias("__bucket"),
+            if id(rule) in observed:
+                # bucket-local: every key's row in the observed buckets,
+                # replacing every stored row there (`_bucket_recompute`)
+                buckets = observed[id(rule)]
+                if not buckets:
+                    continue  # nothing of this rule's source in the batch
+                recomputed = self._bucket_recompute(rule, buckets)
+                kept = self._dest_days(rule, buckets).filter(
+                    ~F.col("__bucket").isin(buckets)
                 )
-                .distinct()
-                .persist()
-            )
-            self._batch_cached.append(touched)
-            buckets = self._buckets(touched)
-            if not buckets:
-                continue  # nothing of this rule's source in the batch
-            # recompute source: NEVER the whole log.  The slice is pruned
-            # to the day partitions the touched buckets cover, so per-batch
-            # cost tracks the batch's time locality, not history length
-            # (the reference recomputes from chunk-local data,
-            # src/tsdb.c:622-660 — it never re-reads the series' history).
-            if rule.agg in CROSS_BUCKET_AGGS:
-                touched, recomputed = self._window_recompute(rule, touched)
-                buckets = self._buckets(touched)
-            elif parse_ewm_rule(rule.agg) is not None:
-                # EWM smoothing rules repair FORWARD from the earliest
-                # touched bucket, seeded by the carried moment state —
-                # no ±1 widening (a sample never changes earlier
-                # buckets; later ones are regenerated wholesale)
-                touched, recomputed = self._ewm_recompute(rule, touched)
-                buckets = self._buckets(touched)
             else:
-                # bucket-local aggs need exactly the samples inside each
-                # touched bucket: per-bucket day coverage, exact for sparse
-                # sets, semi-joined to the touched buckets BEFORE the
-                # aggregation (its emission rule drops an all-NaN bucket,
-                # and the kept anti-join below then deletes its old row)
-                src_days = sorted(
-                    {
-                        d
-                        for b in buckets
-                        for d in range(_day(b), _day(b + rule.bucket_ms - 1) + 1)
-                    }
+                # cross-bucket and EWM repairs widen or extend exact
+                # (key, bucket) pairs, so they take the touched frame
+                touched = (
+                    batch.select("key", _source_bucket(rule).alias("__bucket"))
+                    .filter(F.col("__bucket").isNotNull())
+                    .distinct()
+                    .persist()
                 )
-                sl = (
-                    self._pruned(src_days)
-                    .withColumn(
-                        "__bucket", bucket_start(F.col("ts"), rule.bucket_ms, rule.align_ts)
-                    )
-                    .join(F.broadcast(touched), ["key", "__bucket"], "left_semi")
-                    .drop("__bucket")
+                self._batch_cached.append(touched)
+                if not self._buckets(touched):
+                    continue
+                if rule.agg in CROSS_BUCKET_AGGS:
+                    touched, recomputed = self._window_recompute(rule, touched)
+                else:
+                    # EWM smoothing rules repair FORWARD from the earliest
+                    # touched bucket, seeded by the carried moment state —
+                    # no ±1 widening (a sample never changes earlier
+                    # buckets; later ones are regenerated wholesale)
+                    touched, recomputed = self._ewm_recompute(rule, touched)
+                buckets = self._buckets(touched)
+                kept = self._dest_days(rule, buckets).join(
+                    F.broadcast(touched), ["key", "__bucket"], "left_anti"
                 )
-                recomputed = self._materialize(rule, sl)
-            # PARTITION-SCOPED dest upsert: dests are day-partitioned by
-            # bucket ts; a micro-batch's touched buckets cluster in recent
-            # days, so only those day partitions are read (isin pruning),
-            # repaired, and dynamically overwritten — historical days are
-            # never rewritten.
+            # PARTITION-SCOPED dest upsert (`_dest_days`): only the touched
+            # buckets' day partitions are read, repaired and dynamically
+            # overwritten — historical days are never rewritten.  No
+            # checkpoint before the write: dynamic overwrite stages the
+            # new files and replaces the day partitions only at job
+            # commit, after every task has read the old ones.
             days = sorted({_day(b) for b in buckets})
-            old_dest = read_state(self.spark, self.root, _rule_sub(rule), DEST_SCHEMA)
-            # (keyed on __bucket like the slice's semi-join, so the plan
-            # broadcasts `touched` once)
-            kept = (
-                old_dest.filter(F.col("__day").isin(days))
-                .select("key", F.col("ts").alias("__bucket"), "value")
-                .join(F.broadcast(touched), ["key", "__bucket"], "left_anti")
-            )
             new_part = (
                 kept.unionByName(recomputed.select("key", "__bucket", "value"))
                 .withColumnRenamed("__bucket", "ts")
                 .withColumn("__day", F.expr(f"ts div {DAY_MS}"))
-                # materialized before the write replaces the day
-                # partitions it was read from (touched-day slice, small)
-                .localCheckpoint()
             )
             rdir = self.rule_dir(rule)
             before = {
-                d: sorted(os.listdir(p))
+                d: files
                 for d in days
-                if os.path.isdir(p := os.path.join(rdir, f"__day={d}"))
+                if (files := sorted(_ls(self.spark, f"{rdir}/__day={d}")))
             }
             (
                 new_part.write.mode("overwrite")
@@ -792,12 +853,12 @@ class StreamingStore:
             # touched day dirs the write left as they were (a rewritten
             # partition holds only new, job-uniquely named files).
             # (Delta's replaceWhere expresses this natively; on parquet
-            # it's a partition-dir delete — same op an object-store
-            # deployment would issue.)
+            # it's a partition-dir delete through the Hadoop FS, so URI
+            # roots — file://, s3://, hdfs:// — clear too.)
             for d, files in before.items():
-                gone = os.path.join(rdir, f"__day={d}")
-                if sorted(os.listdir(gone)) == files:
-                    shutil.rmtree(gone)
+                gone = f"{rdir}/__day={d}"
+                if sorted(_ls(self.spark, gone)) == files:
+                    _rm(self.spark, gone)
         batch.unpersist()
         for df in self._batch_cached:
             df.unpersist()

@@ -4,8 +4,9 @@ ONE series, N rows (default 100M): the pathological shape for the
 full-history chain family — under the pre-round-8 plan
 (`_key_window_chain`: lag window partitioned by bare key) the entire
 history sorts and lags inside a single task; the round-8 bucket-local
-plan (`_bucket_chain`) parallelizes across (key, bucket) and touches the
-bare-key axis only on the per-bucket aggregated frame (#buckets rows).
+plan (`rate._chain`, which runs `rate.chain_sql`) parallelizes across
+(key, bucket) and touches the bare-key axis only on the per-bucket
+aggregated frame (#buckets rows).
 
 Synthetic counter: ts = i*1000 ms, value = i mod 100_000 (a reset every
 100k samples), 1h buckets -> ~27.8k buckets at 100M rows.  Both arms

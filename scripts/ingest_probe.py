@@ -4,7 +4,7 @@ touched-day-pruned rule recompute, streaming/ingest.py).
 
 Seeds a StreamingStore log with H days of history (same per-day density),
 then times ONE process_batch of fresh same-day samples with an avg rule and
-a twa rule attached.  Before the fix the recompute re-read + dup-resolved
+a twa rule attached, and counts its Spark jobs through a job group.  Before the fix the recompute re-read + dup-resolved
 the WHOLE log every batch (O(history)); after it, wall should be flat in H.
 
 Run: python scripts/ingest_probe.py [--days 10 100] [--keys 50] [--per-day 20000]
@@ -60,9 +60,16 @@ def one_batch(spark, store, days, keys, batch_rows, batch_id):
         (base + F.col("id") * 7).alias("ts"),
         F.col("id").cast("double").alias("value"),
     )
+    # the batch's Spark jobs, counted through a job group
+    sc = spark.sparkContext
+    group = f"ingest_probe_{batch_id}"
+    sc.setJobGroup(group, group)
     t0 = time.monotonic()
-    store.process_batch(batch, batch_id=batch_id)
-    return time.monotonic() - t0
+    try:
+        store.process_batch(batch, batch_id=batch_id)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return time.monotonic() - t0, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def auto_compact_probe(spark, keys, batch_rows, n_batches, every):
@@ -183,11 +190,11 @@ def main():
             # warm once (JIT/scheduler), measure the second batch; ids
             # above the seeded seqs, and distinct (a re-sent id is a no-op)
             one_batch(spark, store, days, a.keys, a.batch_rows, 10_000)
-            wall = one_batch(spark, store, days, a.keys, a.batch_rows, 10_001)
+            wall, jobs = one_batch(spark, store, days, a.keys, a.batch_rows, 10_001)
             results[days] = wall
             print(
                 f"history={days}d ({days * a.per_day:,} rows) "
-                f"one-batch wall = {wall:.2f}s",
+                f"one-batch wall = {wall:.2f}s, {jobs} Spark jobs",
                 flush=True,
             )
         finally:

@@ -496,6 +496,36 @@ def test_acf_recovers_known_period(spark):
     assert praw[0].acf == pytest.approx(a[12], abs=1e-12)
 
 
+
+def test_detect_period_sorts_only_its_answer(spark):
+    """ts_detect_period consumes the acf sweep through a per-key window,
+    so the sweep stays unsorted there: the optimized plan holds one Sort,
+    the answer's `key` order (ts_acf alone sorts its sweep)."""
+    from redistimeseries_spark.operators.correlate import (
+        ts_acf,
+        ts_detect_period,
+    )
+
+    rows = [
+        (k, t * 1000, math.sin(2 * math.pi * t / per) + 0.01 * t)
+        for k, per in (("s12", 12), ("s7", 7))
+        for t in range(200)
+    ]
+    sdf = spark.createDataFrame(rows, "key string, ts long, value double")
+
+    def sorts(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return sum(1 for ln in plan.splitlines() if ln.lstrip(" :+-").startswith("Sort "))
+
+    for detrend in (True, False):
+        p = ts_detect_period(sdf, 1000, 20, detrend=detrend)
+        assert sorts(p) == 1
+        assert [(r.key, r.period_n) for r in p.collect()] == [("s12", 12), ("s7", 7)]
+    a = ts_acf(sdf, 1000, 16)
+    assert sorts(a) == 1
+    got = [(r.key, r.lag_n) for r in a.collect()]
+    assert got == sorted(got)
+
 def test_acf_buckets_gaps_nan_dups(spark):
     """Bucketing averages within the bucket; NaN rows drop first; empty
     buckets are ABSENT (gaps shrink n, never inject samples)."""

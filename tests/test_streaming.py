@@ -129,13 +129,16 @@ def test_all_nan_bucket_follows_agg_validity(spark, dirs):
     )
 
 
-def test_vanished_bucket_clears_sole_day_partition(spark, dirs):
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "file_uri"])
+def test_vanished_bucket_clears_sole_day_partition(spark, dirs, uri):
     """Dynamic partitionOverwriteMode only rewrites day partitions present
     in the written frame — if a touched bucket's emission vanishes and it
     was the ONLY dest row in its __day partition, the stale row must
     still be deleted (the overwrite set derives from the touched days,
     not the written rows).  Reached here by pre-seeding a dest row whose
-    bucket the log's samples no longer justify (an all-NaN bucket)."""
+    bucket the log's samples no longer justify (an all-NaN bucket).  The
+    store root is a plain path or a `file://` URI: the partition clear
+    goes through the Hadoop FS, so a URI root clears too."""
     import math
 
     from pyspark.sql import functions as F
@@ -144,7 +147,8 @@ def test_vanished_bucket_clears_sole_day_partition(spark, dirs):
 
     nan = float("nan")
     rule = CompactionRule(None, "_avg_1s", "avg", 1000)
-    store = StreamingStore(spark, os.path.join(dirs, "store"), "last", [rule])
+    root = os.path.join(dirs, "store")
+    store = StreamingStore(spark, "file://" + root if uri else root, "last", [rule])
     # stale dest row: bucket 0 of day 0, the only row in that partition
     (
         spark.createDataFrame([("k", 0, 99.0)], SCHEMA)
@@ -667,11 +671,13 @@ def test_compact_folds_latest_deltas(spark, dirs):
 
 
 def test_process_batch_job_budget(spark, dirs):
-    """One warm micro-batch into a store with an `avg` 1m rule runs a
-    bounded number of Spark jobs (counted through a job group): the
-    `latest` delta is a plain append — no read of the stored table, no
-    partition rewrite, no hash-bucket (`pk=`) directories — and the
-    touched (key, bucket) set is materialized and collected once."""
+    """One warm micro-batch into a store with an `avg` 1m rule runs at
+    most 5 Spark jobs (counted through a job group): the log append, the
+    `latest` delta — a plain append, no read of the stored table, no
+    partition rewrite, no hash-bucket (`pk=`) directories — and the dest
+    rewrite.  The rule's touched buckets come from the log append's
+    observation: no touched frame is materialized or collected, and no
+    checkpoint runs before the dest overwrite."""
     rule = CompactionRule(None, "_avg_1m", "avg", 60_000)
     store = StreamingStore(spark, os.path.join(dirs, "store"), "last", [rule])
     keys = [f"k{i}" for i in range(20)]
@@ -692,8 +698,95 @@ def test_process_batch_job_budget(spark, dirs):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 12, len(jobs)
+    assert 0 < len(jobs) <= 5, len(jobs)
     assert not [n for n in os.listdir(store.latest_dir) if n.startswith("pk=")]
+
+
+
+def test_bucket_local_rules_match_batch_materialization(spark, dirs):
+    """Incremental maintenance of bucket-local rules equals the batch
+    materialization after every micro-batch.  A batch recomputes every
+    key's row in the buckets it touches, so the batches carry late
+    samples into stored buckets, duplicate timestamps within and across
+    batches, NaN re-sends and an all-NaN bucket, one rule has a
+    `src_key_pattern`, and key c is silent in a batch that touches its
+    stored bucket through key a.  The aggregators and the duplicate
+    policy come from a seeded RNG; count_nan, count_all and a p-name
+    always run.  The buckets straddle a day boundary, so the dest
+    rewrite spans two day partitions."""
+    import math
+    import random
+    from dataclasses import replace
+
+    from redistimeseries_spark.streaming.compaction import materialize_rule
+    from redistimeseries_spark.streaming.ingest import DAY_MS
+
+    rng = random.Random(20261021)
+    nan = float("nan")
+    policy = rng.choice(["last", "first", "block", "min", "max", "sum"])
+    B = 1000
+    base = DAY_MS - 3 * B
+    aggs = ["avg", "sum", "min", "max", "range", "count", "first", "last",
+            "std.s", "var.p", "count_nan", "count_all", "p50", "p99.9"]
+    rules = [
+        CompactionRule(None, "_r", rng.choice(aggs), B),
+        CompactionRule(None, "_cn", "count_nan", B),
+        CompactionRule(None, "_ca", "count_all", B, align_ts=250),
+        CompactionRule("^[ab]$", "_p", rng.choice(["p50", "p90", "p99.9"]), B),
+    ]
+
+    def val():
+        return nan if rng.random() < 0.15 else round(rng.uniform(-10, 10), 3)
+
+    def ts(bucket):
+        return base + bucket * B + rng.randrange(B)
+
+    first = [(k, ts(b), val()) for k in "abc" for b in range(6) for _ in range(2)]
+    first += [("c", base + B + 7, 4.0)]  # c's stored row in bucket 1
+    dup = first[0]
+    c_b1 = [r for r in first if r[0] == "c" and base + B <= r[1] < base + 2 * B]
+    batches = [
+        first,
+        # late into stored buckets, a cross-batch re-send and an in-batch
+        # duplicate; c is silent while a touches c's bucket 1
+        [(dup[0], dup[1], 7.5), ("a", base + B + 11, 1.0),
+         ("a", base + B + 11, 2.0), ("a", ts(0), val()), ("b", ts(6), val())],
+        # NaN re-sends of c's bucket-1 samples, and an all-NaN bucket
+        [(k, t, nan) for k, t, _ in c_b1]
+        + [("c", base + 8 * B + 5, nan), ("c", base + 8 * B + 500, nan)],
+        # a valid re-send over the all-NaN bucket, more late samples
+        [("c", base + 8 * B + 5, 3.0), ("b", ts(2), val()), ("a", ts(7), val())],
+    ]
+    batches += [
+        [(rng.choice("abc"), ts(rng.randrange(9)), val()) for _ in range(6)]
+        for _ in range(rng.randint(0, 2))
+    ]
+    store = StreamingStore(spark, os.path.join(dirs, "store"), policy, rules)
+
+    def rows(df):
+        out = [((r.key, r.ts), float(r.value)) for r in df.collect()]
+        assert len(dict(out)) == len(out), out  # one row per (key, bucket)
+        return dict(out)
+
+    def same(x, y):
+        return (math.isnan(x) and math.isnan(y)) or math.isclose(
+            x, y, rel_tol=1e-9, abs_tol=1e-9
+        )
+
+    for i, b in enumerate(batches):
+        store.process_batch(spark.createDataFrame(b, SCHEMA), i)
+        samples = store.samples().localCheckpoint()
+        for rule in rules:
+            got = rows(store.rule_table(rule, include_open=True))
+            want = rows(
+                materialize_rule(
+                    samples, replace(rule, dest_suffix=""), include_open=True
+                )
+            )
+            ctx = (policy, rule.agg, i)
+            assert got.keys() == want.keys(), (ctx, got, want)
+            bad = {k: (got[k], want[k]) for k in want if not same(got[k], want[k])}
+            assert not bad, (ctx, bad)
 
 
 def test_recompute_scan_is_partition_pruned(spark, dirs):
