@@ -26,10 +26,9 @@ store also maintains:
     aggregation the engine facade runs, applied to the pruned slice behind
     the touched buckets; only the EWM rules keep their own carried-state
     forward repair (`_ewm_recompute`).  A bucket-local rule (every
-    per-bucket aggregator) learns its touched buckets from an
-    observation on the log append's own job — Structured Streaming's
-    per-trigger observed metrics — and recomputes EVERY key's row in
-    them (`_bucket_recompute`).  That is exact because a bucket's value
+    per-bucket aggregator) collects its touched buckets to the driver
+    (one job for all such rules, `_touched_buckets`) and recomputes
+    EVERY key's row in them (`_bucket_recompute`).  That is exact because a bucket's value
     depends only on its own samples: an untouched (key, bucket)
     recomputes to its stored row, or to none when it holds no emitting
     sample, and the same bucket literal drops every old row.  The
@@ -39,8 +38,8 @@ store also maintains:
     overwrite straight from the plan that reads them, with no
     checkpoint: the writer stages its files and replaces the partitions
     only at job commit, after every task has read the old ones.  With
-    one `avg` rule a warm batch runs 5 Spark jobs: the log append, the
-    `latest` delta (2) and the dest rewrite (2).
+    one `avg` rule a warm batch runs 6 Spark jobs: the log append, the
+    touched buckets, the `latest` delta (2) and the dest rewrite (2).
 
 At 100 TB scale: the log is written partitioned by SAMPLE-TIME day
 (`__day = ts div 86400000`), so every maintenance read is partition-pruned:
@@ -77,7 +76,7 @@ import os
 import time
 from dataclasses import dataclass, field, replace
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from redistimeseries_spark.functions.buckets import bucket_start
@@ -260,31 +259,31 @@ class StreamingStore:
             sl.select("key", "ts", "value", "seq"), self.duplicate_policy
         )
 
-    def _append_log(self, batch: DataFrame, rules=()) -> list[list[int]]:
-        """Append the batch to the day-partitioned log.  For each of
-        `rules` (bucket-local ones, see `_bucket_recompute`) the same job
-        observes the distinct bucket starts the batch touches among the
-        rule's source keys: one `collect_set` per rule on a
-        `pyspark.sql.Observation` — Structured Streaming's per-trigger
-        observed metrics — so no touched frame is materialized or
-        collected.  Returns the sorted buckets, one list per rule."""
-        out = batch.select("key", "ts", "value", "seq").withColumn(
-            "__day", F.expr(f"ts div {DAY_MS}").cast("int")
+    def _append_log(self, batch: DataFrame):
+        (
+            batch.select("key", "ts", "value", "seq")
+            .withColumn("__day", F.expr(f"ts div {DAY_MS}").cast("int"))
+            .write.mode("append")
+            .partitionBy("__day")
+            .parquet(self.log_dir)
         )
-        obs = Observation()
-        if rules:
-            out = out.observe(
-                obs,
-                *(
-                    F.collect_set(_source_bucket(r)).alias(f"r{i}")
-                    for i, r in enumerate(rules)
-                ),
-            )
-        out.write.mode("append").partitionBy("__day").parquet(self.log_dir)
+
+    @staticmethod
+    def _touched_buckets(batch: DataFrame, rules) -> list[list[int]]:
+        """Each rule's distinct bucket starts among the batch's rows of its
+        source keys, sorted — one `collect_set` per rule in ONE Spark job
+        over the persisted batch (one partition, so no exchange).  No
+        touched (key, bucket) frame is built.  (A `pyspark.sql.Observation`
+        on the log append would save this job, but it leaves the session's
+        ObservationManager set, and Spark then fails to serialize any
+        closure that captures the SparkSession — MLlib's logistic
+        regression summary does.)"""
         if not rules:
             return []
-        seen = obs.get
-        return [sorted(seen[f"r{i}"]) for i in range(len(rules))]
+        row = batch.coalesce(1).agg(
+            *(F.collect_set(_source_bucket(r)).alias(f"r{i}") for i, r in enumerate(rules))
+        ).first()
+        return [sorted(row[f"r{i}"]) for i in range(len(rules))]
 
     def _append_latest(self, batch: DataFrame):
         """One `latest` delta: the batch's rows at each key's newest ts,
@@ -769,14 +768,15 @@ class StreamingStore:
             ).persist()
         # 1. append to the log, partitioned by sample-time day (arrival
         # order preserved via seq) — the partitioning every later
-        # maintenance read prunes on.  The same job observes each
-        # bucket-local rule's touched buckets
+        # maintenance read prunes on
+        self._append_log(batch)
+        # 1.5 the bucket-local rules' touched buckets, one job for all
         local = [
             r
             for r in self.rules
             if r.agg not in CROSS_BUCKET_AGGS and parse_ewm_rule(r.agg) is None
         ]
-        observed = dict(zip(map(id, local), self._append_log(batch, local)))
+        local_buckets = dict(zip(map(id, local), self._touched_buckets(batch, local)))
         # 2. latest: append this batch's newest rows per key as one delta
         # — no read of the stored table, no partition rewrite
         self._append_latest(batch)
@@ -786,10 +786,10 @@ class StreamingStore:
         # time locality, not history length (the reference recomputes
         # from chunk-local data, src/tsdb.c:622-660)
         for rule in self.rules:
-            if id(rule) in observed:
-                # bucket-local: every key's row in the observed buckets,
+            if id(rule) in local_buckets:
+                # bucket-local: every key's row in the touched buckets,
                 # replacing every stored row there (`_bucket_recompute`)
-                buckets = observed[id(rule)]
+                buckets = local_buckets[id(rule)]
                 if not buckets:
                     continue  # nothing of this rule's source in the batch
                 recomputed = self._bucket_recompute(rule, buckets)
