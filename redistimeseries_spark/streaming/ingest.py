@@ -28,10 +28,11 @@ store also maintains:
     forward repair (`_ewm_recompute`).  A bucket-local rule (every
     per-bucket aggregator) collects its touched buckets to the driver
     (one job for all such rules, `_touched_buckets`) and recomputes
-    EVERY key's row in them (`_bucket_recompute`).  That is exact because a bucket's value
-    depends only on its own samples: an untouched (key, bucket)
-    recomputes to its stored row, or to none when it holds no emitting
-    sample, and the same bucket literal drops every old row.  The
+    EVERY key's row in them (`_bucket_recompute`).  That is exact
+    because a bucket's value depends only on its own samples: an
+    untouched (key, bucket) recomputes to its stored row, or to none
+    when it holds no emitting sample, and the same bucket literal drops
+    every old row.  The
     cross-bucket rules (twa, increase/rate) widen exact (key, bucket)
     pairs and probe boundary samples, so they keep a touched frame;
   * the dest day partitions are rewritten by dynamic partition
